@@ -6,8 +6,9 @@ embed → FAISS index → top-k retrieval → rerank → score fusion → span
 clustering → report) as an idiomatic Spark stack:
 
 * code-aware tokenization (vectorized pandas/Arrow UDFs)
-* inverted-index build: (term, docID, tf) postings, salt-partitioned
-  for hot-term skew, delta-gap + varint compressed segments with
+* inverted-index build: (term, docID, tf) postings sharded by docID
+  hash, two-stage salted document-frequency aggregation against
+  hot-term skew, segments of plain parquet docID/tf arrays with
   block-max metadata, hierarchical merge waves with per-partition
   lineage manifests (resumable)
 * Okapi BM25 (k1=1.2, b=0.75) top-k querying — a pure-DataFrame

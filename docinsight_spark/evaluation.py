@@ -125,8 +125,6 @@ def oracle_from_index(
         # so parquet row-group min/max stats skip non-matching groups).
         # The join alone cannot do this: its build side is unknown to
         # the scan.  Guard the literal list like the phrase path does.
-        from pyspark.sql import functions as F
-
         # (neg_terms excludes docs via their OWN postings rows — the
         # filter would drop them, so only the pure-positive shapes
         # take it; require_all intersects the same positive terms.)

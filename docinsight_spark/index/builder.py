@@ -23,8 +23,9 @@ and the driver only moves manifests:
    skips completed waves.
 3. **finalize** — doc/term statistics (document-frequency aggregation
    is two-stage salted against hot-term skew), then a streaming
-   ``mapInPandas`` encoder turns the sorted postings into delta-gap +
-   varint segments with per-block skip data and block maxima.
+   ``mapInPandas`` encoder turns the sorted postings into segments of
+   plain parquet arrays (docIDs, tfs) with per-block sizes and block
+   maxima (layout in :mod:`docinsight_spark.index.codec`).
    The block maxima are **idf-independent** — the encoder stores
    ``max(tf·(k1+1) / (tf + k1·(1−b+b·dl/avgdl)))`` per block and the
    query path multiplies by idf (from ``term_stats`` pruned to the
@@ -42,9 +43,10 @@ shard-locally (block-max pruning per shard) and only ``shards × k``
 candidate rows shuffle for the global merge.  Hot terms spread evenly
 across shards by construction — the doc hash, not the term, picks the
 partition — so the worst skew a hot term can cause is bounded by shard
-size.  Shards are range-partitioned (equal keys stay whole; hash-
-partitioning B values into B partitions leaves ~1/e of slots empty and
-2-3× stragglers).
+size.  Every shard lands whole in its own partition through a per-shard
+probe hash key (:meth:`IndexBuilder._shard_partitioned`; plain hash-
+partitioning of B values into B partitions leaves ~1/e of slots empty
+and 2-3× stragglers).
 
 Lineage: every unit writes ``manifests/<unit>.json`` atomically
 (tmp + rename) with per-partition counters (postings, docs, segments
@@ -68,21 +70,16 @@ from pyspark.sql import functions as F
 
 from docinsight_spark import BM25_B, BM25_K1
 from docinsight_spark.index import fsio
-from docinsight_spark.index.codec import BLOCK_SIZE, encode_postings
+from docinsight_spark.index.codec import (
+    BLOCK_SIZE,
+    SEGMENT_SCHEMA,
+    encode_postings,
+)
 from docinsight_spark.operators.postings import (
     build_postings,
     term_stats,
     with_doc_id,
 )
-
-SEGMENT_SCHEMA = (
-    "doc_bucket int, doc_sub int, term string, n long, "
-    "first_doc array<long>, last_doc array<long>, bn array<int>, "
-    "offsets array<long>, doc_bytes array<int>, max_score array<float>, "
-    "tf_max array<long>, dl_min array<long>, "
-    "payload binary"
-)
-
 
 def _atomic_write_json(path: str, payload: dict) -> None:
     fsio.write_json_atomic(path, payload)
@@ -281,20 +278,21 @@ def _footer_rows(
 
 
 def _seg_footer_stats(md) -> tuple[int, int]:
-    """(rows, compressed payload bytes) from one parquet footer."""
+    """(rows, compressed posting bytes) from one parquet footer: the
+    ``docs`` + ``tfs`` array columns."""
     pay = 0
     for rg in range(md.num_row_groups):
         g = md.row_group(rg)
         for ci in range(g.num_columns):
             col = g.column(ci)
-            if col.path_in_schema == "payload":
+            if col.path_in_schema.split(".")[0] in ("docs", "tfs"):
                 pay += col.total_compressed_size
     return md.num_rows, pay
 
 
 def _segment_lineage(path: str, spark: SparkSession | None = None) -> dict:
     """Per-bucket segment counters from parquet footers: row counts and
-    the compressed size of the ``payload`` column — no full-data Spark
+    the compressed size of the ``docs`` + ``tfs`` columns — no full-data Spark
     job; past ``FOOTER_DRIVER_MAX`` files the footer reads themselves fan
     out as a Spark job (the driver receives two ints per file)."""
     import pyarrow.parquet as pq
@@ -1343,7 +1341,7 @@ class IndexBuilder:
             # see operators/postings.build_postings); zstd artifacts
             **({"positions_codec": "array"} if self.positions else {}),
             "query_lang": self._majority_lang(set(base_runs) or None),
-            "version": 4,
+            "version": 5,
             # the base segment set's encode-time stats: generations added
             # later shift the global avgdl, and the query side needs the
             # per-set encode avgdl to keep stored block maxima admissible
@@ -1444,8 +1442,8 @@ class IndexBuilder:
                     # idf-independent tf-normalization: the block max is
                     # multiplied by idf at query time (wand.py)
                     score = t * (k1 + 1.0) / (t + k1 * (1 - b + b * dl / avgdl))
-                    payload, m = encode_postings(
-                        d, t.astype(np.int64), score.astype(np.float32),
+                    seg_docs, seg_tfs, m = encode_postings(
+                        d, t, score.astype(np.float32),
                         block_size, dls=dl.astype(np.int64),
                     )
                     rows.append(
@@ -1454,15 +1452,12 @@ class IndexBuilder:
                             "doc_sub": int(subs[s]),
                             "term": str(terms[s]),
                             "n": int(e - s),
-                            "first_doc": m.first_doc.tolist(),
-                            "last_doc": m.last_doc.tolist(),
-                            "bn": m.n.tolist(),
-                            "offsets": m.offset.tolist(),
-                            "doc_bytes": m.doc_bytes.tolist(),
-                            "max_score": m.max_score.tolist(),
-                            "tf_max": m.tf_max.tolist(),
-                            "dl_min": m.dl_min.tolist(),
-                            "payload": payload,
+                            "docs": seg_docs,
+                            "tfs": seg_tfs,
+                            "bn": m.n,
+                            "max_score": m.max_score,
+                            "tf_max": m.tf_max,
+                            "dl_min": m.dl_min,
                         }
                     )
                 return pd.DataFrame(rows) if rows else None

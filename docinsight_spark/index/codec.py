@@ -1,22 +1,24 @@
-"""Posting-segment codec: delta-gap + VByte varint + block-max metadata.
+"""Posting-segment layout: the block split and the block maxima.
 
 The physical index analog of the reference's FAISS flat index file
 (``/root/reference/index/faiss_index.py:121-160`` persists raw float32
-vectors; we persist compressed posting blocks).  All encode/decode is
-**numpy-vectorized** — these kernels run inside Arrow-batched
-``applyInPandas`` / ``mapInPandas``, never per-row Python in the plan.
+vectors; we persist posting blocks).  All work is **numpy-vectorized** —
+it runs inside Arrow-batched ``mapInPandas``, never per-row Python in
+the plan.
 
-Layout per (doc_bucket, term) segment row:
+Layout per (doc_bucket, doc_sub, term) segment row (``SEGMENT_SCHEMA``):
 
-* ``payload`` (binary): per block of ≤ ``block_size`` postings,
-  ``varint(delta(docID))ⁿ ‖ varint(tf)ⁿ``
-* ``block_meta``: parallel arrays ``first_doc, last_doc, n, offset,
-  doc_bytes, max_score`` — ``max_score`` is the block's maximum full
-  BM25 term-doc contribution (block-max WAND metadata), the rest are
-  skip data.
+* ``docs`` / ``tfs``: the term's shard-local docIDs (ascending, signed
+  int64) and their term frequencies, as plain parquet arrays.
+* ``bn``: postings per block of ≤ ``block_size``; block ``bi`` is
+  ``docs[s[bi]:s[bi + 1]]`` with ``s = block_starts(bn)``, and its skip
+  range is ``[docs[s[bi]], docs[s[bi + 1] - 1]]``.
+* ``max_score`` / ``tf_max`` / ``dl_min``: per-block maxima (block-max
+  WAND metadata, see :class:`BlockMeta`).
 
-docIDs are signed int64 (xxhash64); deltas use uint64 wraparound so any
-consecutive pair is representable.
+The arrays carry no delta-gap or varint packing: docIDs are xxhash64
+values, so the gaps within a shard average about 2^64 / shard size and
+a VByte encoding saved nothing over parquet's own encodings.
 """
 
 from __future__ import annotations
@@ -27,57 +29,16 @@ import numpy as np
 
 BLOCK_SIZE = 128
 
-_U64 = np.uint64
-_SEVEN = _U64(7)
-_MASK7 = _U64(0x7F)
-_CONT = np.uint8(0x80)
-
-
-def varint_encode(vals: np.ndarray) -> np.ndarray:
-    """VByte-encode a uint64 array → uint8 array (vectorized)."""
-    vals = vals.astype(np.uint64, copy=False)
-    n = len(vals)
-    if n == 0:
-        return np.empty(0, dtype=np.uint8)
-    # 7-bit groups, little-endian: shape (n, 10)
-    shifts = (np.arange(10, dtype=np.uint64) * _SEVEN)[None, :]
-    groups = ((vals[:, None] >> shifts) & _MASK7).astype(np.uint8)
-    # bytes needed per value: position of highest non-zero group + 1
-    nz = groups != 0
-    nbytes = np.where(nz.any(axis=1), 10 - np.argmax(nz[:, ::-1], axis=1), 1)
-    keep = np.arange(10)[None, :] < nbytes[:, None]
-    cont = np.arange(10)[None, :] < (nbytes - 1)[:, None]
-    groups = np.where(cont, groups | _CONT, groups)
-    return groups[keep]
-
-
-def varint_decode(buf: np.ndarray, count: int) -> np.ndarray:
-    """Decode ``count`` VByte values from a uint8 array (vectorized)."""
-    if count == 0:
-        return np.empty(0, dtype=np.uint64)
-    buf = np.frombuffer(buf, dtype=np.uint8) if isinstance(buf, (bytes, bytearray)) else buf
-    is_last = (buf & 0x80) == 0
-    # value index per byte: 0-based running count of completed values
-    vidx = np.zeros(len(buf), dtype=np.int64)
-    vidx[1:] = np.cumsum(is_last)[:-1]
-    # byte position within its value
-    first_of_value = np.ones(len(buf), dtype=bool)
-    first_of_value[1:] = is_last[:-1]
-    start_pos = np.flatnonzero(first_of_value)
-    pos_in_value = np.arange(len(buf)) - start_pos[vidx]
-    vals = np.zeros(count, dtype=np.uint64)
-    contrib = (buf & 0x7F).astype(np.uint64) << (pos_in_value.astype(np.uint64) * _SEVEN)
-    np.add.at(vals, vidx, contrib)
-    return vals
+SEGMENT_SCHEMA = (
+    "doc_bucket int, doc_sub int, term string, n long, "
+    "docs array<long>, tfs array<int>, bn array<int>, "
+    "max_score array<float>, tf_max array<long>, dl_min array<long>"
+)
 
 
 @dataclass
 class BlockMeta:
-    first_doc: np.ndarray   # int64 per block
-    last_doc: np.ndarray    # int64 per block
     n: np.ndarray           # int32 postings per block
-    offset: np.ndarray      # int64 payload byte offset of block start
-    doc_bytes: np.ndarray   # int32 length of the docID section
     max_score: np.ndarray   # float32 block-max BM25 contribution
     # Drift-safe bound inputs (incremental generations): the stored
     # max_score bakes in encode-time avgdl, which goes stale as the
@@ -85,9 +46,17 @@ class BlockMeta:
     # admissible block bound under the CURRENT avgdl — the tf-normalized
     # score is increasing in tf and decreasing in dl, so
     # s(tf_max, dl_min, avgdl_now) upper-bounds every posting in the
-    # block at any avgdl.  None on indexes encoded before v4.
-    tf_max: np.ndarray | None = None   # int64 per block
-    dl_min: np.ndarray | None = None   # int64 per block
+    # block at any avgdl.
+    tf_max: np.ndarray      # int64 per block
+    dl_min: np.ndarray      # int64 per block
+
+
+def block_starts(bn: np.ndarray) -> np.ndarray:
+    """Start offsets of every block plus the end: ``len(bn) + 1``
+    entries, block ``bi`` spans ``[s[bi], s[bi + 1])``."""
+    s = np.zeros(len(bn) + 1, dtype=np.int64)
+    np.cumsum(bn, out=s[1:])
+    return s
 
 
 def encode_postings(
@@ -96,88 +65,22 @@ def encode_postings(
     scores: np.ndarray,
     block_size: int = BLOCK_SIZE,
     dls: np.ndarray | None = None,
-) -> tuple[bytes, BlockMeta]:
-    """Encode one term's posting list (sorted by docID ascending).
+) -> tuple[np.ndarray, np.ndarray, BlockMeta]:
+    """Sort one term's posting list by docID and split it into blocks →
+    (docs int64, tfs int32, block metadata).
 
     ``dls`` (per-posting document lengths, same order as ``doc_ids``)
-    feeds the per-block ``dl_min`` drift-safe bound; omitted → the
-    block bound arrays are zero-length-safe defaults (dl_min=1)."""
+    feeds the per-block ``dl_min`` drift-safe bound; omitted → 1."""
     order = np.argsort(doc_ids, kind="stable")
-    doc_ids = doc_ids[order].astype(np.int64)
-    tfs = tfs[order].astype(np.uint64)
-    scores = scores[order].astype(np.float32)
-    dl_sorted = dls[order].astype(np.int64) if dls is not None else None
-    n = len(doc_ids)
-    n_blocks = (n + block_size - 1) // block_size
-    chunks: list[np.ndarray] = []
-    first, last, bn, off, dbytes, mx = [], [], [], [], [], []
-    tfm, dlm = [], []
-    pos = 0
-    u = doc_ids.view(np.uint64)
-    for bi in range(n_blocks):
-        lo, hi = bi * block_size, min((bi + 1) * block_size, n)
-        block_docs = u[lo:hi]
-        deltas = np.empty(hi - lo, dtype=np.uint64)
-        deltas[0] = _U64(0)  # first docID carried in meta
-        deltas[1:] = block_docs[1:] - block_docs[:-1]  # uint64 wraparound-safe
-        db = varint_encode(deltas[1:])
-        tb = varint_encode(tfs[lo:hi])
-        first.append(doc_ids[lo])
-        last.append(doc_ids[hi - 1])
-        bn.append(hi - lo)
-        off.append(pos)
-        dbytes.append(len(db))
-        mx.append(scores[lo:hi].max())
-        tfm.append(int(tfs[lo:hi].max()))
-        dlm.append(int(dl_sorted[lo:hi].min()) if dl_sorted is not None else 1)
-        chunks.append(db)
-        chunks.append(tb)
-        pos += len(db) + len(tb)
-    payload = np.concatenate(chunks).tobytes() if chunks else b""
+    docs = doc_ids[order].astype(np.int64)
+    tf_sorted = tfs[order].astype(np.int32)
+    sc = scores[order].astype(np.float32)
+    dl = dls[order].astype(np.int64) if dls is not None else np.ones(len(docs), np.int64)
+    bounds = np.arange(0, len(docs), block_size)
     meta = BlockMeta(
-        first_doc=np.asarray(first, dtype=np.int64),
-        last_doc=np.asarray(last, dtype=np.int64),
-        n=np.asarray(bn, dtype=np.int32),
-        offset=np.asarray(off, dtype=np.int64),
-        doc_bytes=np.asarray(dbytes, dtype=np.int32),
-        max_score=np.asarray(mx, dtype=np.float32),
-        tf_max=np.asarray(tfm, dtype=np.int64),
-        dl_min=np.asarray(dlm, dtype=np.int64),
+        n=np.diff(np.append(bounds, len(docs))).astype(np.int32),
+        max_score=np.maximum.reduceat(sc, bounds),
+        tf_max=np.maximum.reduceat(tf_sorted, bounds).astype(np.int64),
+        dl_min=np.minimum.reduceat(dl, bounds),
     )
-    return payload, meta
-
-
-def decode_block(
-    payload: bytes | np.ndarray,
-    meta: BlockMeta,
-    bi: int,
-) -> tuple[np.ndarray, np.ndarray]:
-    """Decode block ``bi`` → (docIDs int64, tfs int64)."""
-    buf = np.frombuffer(payload, dtype=np.uint8)
-    n = int(meta.n[bi])
-    o = int(meta.offset[bi])
-    db = int(meta.doc_bytes[bi])
-    deltas = varint_decode(buf[o : o + db], n - 1)
-    docs = np.empty(n, dtype=np.uint64)
-    docs[0] = np.int64(meta.first_doc[bi]).view(np.uint64)
-    if n > 1:
-        docs[1:] = deltas
-        docs = np.cumsum(docs, dtype=np.uint64)
-    # tf section ends at next block's offset (or payload end)
-    end = int(meta.offset[bi + 1]) if bi + 1 < len(meta.offset) else len(buf)
-    tfs = varint_decode(buf[o + db : end], n)
-    return docs.view(np.int64), tfs.astype(np.int64)
-
-
-def decode_postings(
-    payload: bytes | np.ndarray, meta: BlockMeta, blocks: np.ndarray | None = None
-) -> tuple[np.ndarray, np.ndarray]:
-    """Decode selected ``blocks`` (default: all) → (docIDs, tfs)."""
-    idx = range(len(meta.n)) if blocks is None else blocks
-    parts = [decode_block(payload, meta, int(b)) for b in idx]
-    if not parts:
-        return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int64)
-    return (
-        np.concatenate([p[0] for p in parts]),
-        np.concatenate([p[1] for p in parts]),
-    )
+    return docs, tf_sorted, meta

@@ -1,4 +1,4 @@
-"""Fast BM25 top-k over compressed segments: block-max pruning in
+"""Fast BM25 top-k over posting segments: block-max pruning in
 ``mapInPandas`` with a bounded top-k selection.
 
 The distributed shape (document-partitioned search, the classic
@@ -8,10 +8,10 @@ shard-per-bucket design):
    partition dirs narrow the file listing, and the ``term IN (…)``
    predicate prunes parquet row groups because segments are written
    sorted by ``term`` (min/max stats per row group).
-2. One task per shard ``(doc_bucket, doc_sub)`` via
-   ``repartitionByRange`` of the *matched rows only* — equal keys stay
-   whole, task sizes balance, and every shard holds the complete
-   postings of its documents, so scoring is shard-local.
+2. One task per shard ``(doc_bucket, doc_sub)`` via a hash
+   ``repartition`` of the *matched rows only* — equal keys stay whole,
+   and every shard holds the complete postings of its documents, so
+   scoring is shard-local.
 3. Inside the task, a vectorized MaxScore/block-max kernel scores each
    query against the shard's matched posting lists:
 
@@ -21,11 +21,11 @@ shard-per-bucket design):
      bound of the k-th best final score) exceeds the remaining terms'
      upper-bound sum, docs outside the accumulator can no longer reach
      the top-k, so remaining lists are pruned: only blocks whose
-     ``[first_doc, last_doc]`` range intersects the accumulated
-     candidate set are decoded (skip metadata), and decoded postings
-     are filtered to accumulated docs;
-   * decoded blocks and block scores are cached per shard across the
-     query batch — a term is decoded at most once per block per task;
+     ``[first_doc, last_doc]`` range (the block's first and last
+     docID) intersects the accumulated candidate set are scored, and
+     their postings are filtered to accumulated docs;
+   * block scores are cached per shard across the query batch — a
+     term's block is scored at most once per task;
    * a bounded selection (``np.partition`` / ``np.lexsort``) maintains
      θ and the final top-k — the min-heap analog, vectorized.
 
@@ -35,9 +35,9 @@ shard-per-bucket design):
 Boolean shapes (round 6) run through the SAME kernel: conjunctive AND
 (``require_all=True``) replaces the MaxScore loop with a mandatory-term
 intersection — the shard-locally rarest term seeds the candidate set,
-every further term only decodes blocks overlapping it, and the set can
+every further term only reads blocks overlapping it, and the set can
 only shrink (skipping strictly stronger than the OR bound).  Boolean
-NOT (``neg_queries`` / ``_neg_qmap``) decodes the negative terms'
+NOT (``neg_queries`` / ``_neg_qmap``) reads the negative terms'
 shard-local postings once (cached) and excludes banned docs BEFORE
 accumulation, keeping the top-k threshold θ admissible.
 
@@ -76,7 +76,7 @@ from docinsight_spark.index.builder import (
     strict_dl_enabled,
     tombstone_root_dirs,
 )
-from docinsight_spark.index.codec import BlockMeta, decode_block
+from docinsight_spark.index.codec import block_starts
 
 
 def _load_meta(index_dir: str) -> dict:
@@ -86,48 +86,47 @@ def _load_meta(index_dir: str) -> dict:
 
 
 class _SegRow:
-    """One (shard, term) posting segment: lazy per-block decode + score,
-    cached across the query batch.
+    """One (shard, term) posting segment: block slices of the stored
+    ``docs`` / ``tfs`` arrays, scored lazily and cached across the query
+    batch.
 
-    Two cache tiers: per-block (selective queries decode only blocks
-    overlapping the accumulated candidate set) and fully-concatenated
-    (once any query touches every block, later queries reuse ONE array
-    pair — per-block python loops per (query, term) were the kernel's
-    hotspot on hot terms: ~100 blocks × 200 queries of dict hits and
-    per-block searchsorted)."""
+    Two score tiers: per-block (selective queries score only blocks
+    overlapping the accumulated candidate set) and whole-row (once any
+    query touches every block, later queries reuse ONE array pair —
+    per-block python loops per (query, term) were the kernel's hotspot
+    on hot terms: ~100 blocks × 200 queries of dict hits and per-block
+    searchsorted)."""
 
-    __slots__ = ("term", "df", "meta", "payload", "upper", "root",
-                 "_blocks", "_scores", "_full")
+    __slots__ = ("term", "df", "docs", "tfs", "bn", "starts", "upper",
+                 "root", "_scores", "_full")
 
-    def __init__(self, term, df, meta: BlockMeta, payload, upper,
-                 root: str = "base"):
+    def __init__(self, term, df, docs, tfs, bn, upper, root: str = "base"):
         self.term = term
         self.df = float(df)
-        self.meta = meta
-        self.payload = payload
+        self.docs = np.asarray(docs, np.int64)
+        self.tfs = np.asarray(tfs)
+        self.bn = np.asarray(bn)
+        self.starts = block_starts(self.bn)
         self.upper = upper
         # physical root (base / generation id) this segment row belongs
         # to — tombstone exclusion is ROOT-scoped so a doc re-ingested
         # after a delete (live copy in a newer root) still scores
         self.root = root
-        self._blocks: dict[int, tuple[np.ndarray, np.ndarray]] = {}
         self._scores: dict[int, np.ndarray] = {}
         self._full: tuple[np.ndarray, np.ndarray] | None = None
 
     def blocks_overlapping(self, doc_filter: np.ndarray | None) -> np.ndarray:
-        nb = len(self.meta.n)
+        nb = len(self.bn)
         if doc_filter is None or nb == 0:
             return np.arange(nb)
-        lo = np.searchsorted(doc_filter, self.meta.first_doc, side="left")
-        hi = np.searchsorted(doc_filter, self.meta.last_doc, side="right")
+        # skip ranges [first_doc, last_doc] straight from the sorted docs
+        lo = np.searchsorted(doc_filter, self.docs[self.starts[:-1]], side="left")
+        hi = np.searchsorted(doc_filter, self.docs[self.starts[1:] - 1], side="right")
         return np.flatnonzero(hi > lo)
 
     def decode(self, bi: int) -> tuple[np.ndarray, np.ndarray]:
-        got = self._blocks.get(bi)
-        if got is None:
-            got = decode_block(self.payload, self.meta, bi)
-            self._blocks[bi] = got
-        return got
+        s, e = self.starts[bi], self.starts[bi + 1]
+        return self.docs[s:e], self.tfs[s:e]
 
     def scores(self, bi: int, scorer) -> tuple[np.ndarray, np.ndarray]:
         docs, tfs = self.decode(bi)
@@ -138,20 +137,11 @@ class _SegRow:
         return docs, sc
 
     def full_scores(self, scorer) -> tuple[np.ndarray, np.ndarray]:
-        """(all docs, all scores) concatenated — built once, then block
-        caches are dropped (the full arrays supersede them)."""
+        """(all docs, all scores) — built once, then the block score
+        cache is dropped (the full arrays supersede it)."""
         if self._full is None:
-            nb = len(self.meta.n)
-            if nb == 0:
-                self._full = (np.empty(0, np.int64), np.empty(0, np.float64))
-            else:
-                parts = [self.scores(bi, scorer) for bi in range(nb)]
-                self._full = (
-                    np.concatenate([p[0] for p in parts]),
-                    np.concatenate([p[1] for p in parts]),
-                )
-                self._blocks.clear()
-                self._scores.clear()
+            self._full = (self.docs, scorer(self.docs, self.tfs, self.df))
+            self._scores.clear()
         return self._full
 
 
@@ -177,7 +167,7 @@ def _score_shard(
     ``require_all`` (boolean AND): conjunctive retrieval with
     mandatory-term skipping — per query, the shard-locally RAREST
     term's postings seed the candidate set, every further term only
-    decodes blocks overlapping it (skip metadata), and the set can
+    reads blocks overlapping it (skip ranges), and the set can
     only shrink; docs of the index are never touched beyond the
     rarest term's df.  Shard-local conjunction is globally correct
     because a document's postings live wholly inside its shard.  A
@@ -189,7 +179,7 @@ def _score_shard(
     (not post-filtered), so the top-k threshold θ never inflates on a
     doc that is about to be banned (which would wrongly prune
     legitimate candidates).  Cost is bounded by the negative terms'
-    shard-local df; decoded blocks are cached across the batch like
+    shard-local df; block scores are cached across the batch like
     any other term's."""
     term_rows: dict[str, list[_SegRow]] = {}
     for r in rows:
@@ -215,7 +205,7 @@ def _score_shard(
             if doc_filter is None or r._full is not None:
                 d, s = r.full_scores(scorer)
             else:
-                # selective path: decode only blocks overlapping the
+                # selective path: score only blocks overlapping the
                 # accumulated candidate set (the block-skip win)
                 parts = [
                     r.scores(int(bi), scorer)
@@ -280,7 +270,7 @@ def _score_shard(
             # rarest-first by shard-local posting count: the first list
             # bounds everything after it
             terms.sort(
-                key=lambda t: sum(int(r.meta.n.sum()) for r in term_rows[t])
+                key=lambda t: sum(len(r.docs) for r in term_rows[t])
             )
             d0, s0 = gather(terms[0], None)
             if banned is not None and len(d0):
@@ -676,11 +666,11 @@ def wand_search(
     if query_chunk_size is None:
         query_chunk_size = QUERY_CHUNK_SIZE
     meta = _meta or _load_meta(index_dir)
-    if int(meta.get("version", 0)) < 4:
+    if int(meta.get("version", 0)) < 5:
         raise ValueError(
             "index was built by an older engine version (segments lack the "
-            "drift-safe (tf_max, dl_min) block bounds and/or carried "
-            "idf-baked block maxima); rebuild the index"
+            "plain docs/tfs arrays, the drift-safe (tf_max, dl_min) block "
+            "bounds and/or carried idf-baked block maxima); rebuild the index"
         )
     if code_aware is None:
         code_aware = bool(meta.get("code_aware", True))
@@ -845,11 +835,9 @@ def _wave_local_topk(
             dfs = pdf["df"].to_numpy()
             encs = pdf["_avgdl_enc"].to_numpy()
             rts = pdf["_root"].to_numpy()
-            fdoc, ldoc = pdf["first_doc"].values, pdf["last_doc"].values
-            bns, offs = pdf["bn"].values, pdf["offsets"].values
-            dbs, mxs = pdf["doc_bytes"].values, pdf["max_score"].values
+            docs, tfs = pdf["docs"].values, pdf["tfs"].values
+            bns, mxs = pdf["bn"].values, pdf["max_score"].values
             tfms, dlms = pdf["tf_max"].values, pdf["dl_min"].values
-            pays = pdf["payload"].values
             for i in range(len(pdf)):
                 mx = np.asarray(mxs[i], np.float32)
                 df_i = float(dfs[i])
@@ -874,16 +862,9 @@ def _wave_local_topk(
                     upper_i = idf_i * float(bound.max())
                 else:
                     upper_i = 0.0
-                meta_i = BlockMeta(
-                    first_doc=np.asarray(fdoc[i], np.int64),
-                    last_doc=np.asarray(ldoc[i], np.int64),
-                    n=np.asarray(bns[i], np.int32),
-                    offset=np.asarray(offs[i], np.int64),
-                    doc_bytes=np.asarray(dbs[i], np.int32),
-                    max_score=mx,
-                )
                 row = _SegRow(
-                    terms[i], df_i, meta_i, pays[i], upper_i, root=rts[i]
+                    terms[i], df_i, docs[i], tfs[i], bns[i], upper_i,
+                    root=rts[i],
                 )
                 by_shard.setdefault((int(bks[i]), int(subs[i])), []).append(row)
 

@@ -12,7 +12,7 @@ compaction — the numbers that justify the compaction policy's
 Usage: python scripts/generation_bench.py [base_files] [delta_files] [n_deltas]
 → JSON on stdout.  Host-gated like every bench in this repo.
 Env ``GEN_BENCH_POSITIONS=1`` runs the WHOLE life-cycle with
-``positions=True`` (packed delta-gap VByte payloads riding every
+``positions=True`` (``array<int>`` position lists riding every
 merge/fold) — the positional generation-overhead record.
 """
 

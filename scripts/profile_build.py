@@ -80,7 +80,7 @@ def main() -> None:
                 "n_buckets": b.n_buckets, "n_subs": b.n_subs,
                 "block_size": b.block_size, "k1": b.k1, "b": b.b,
                 "code_aware": b.code_aware, "positions": b.positions,
-                "query_lang": "java", "version": 4,
+                "query_lang": "java", "version": 5,
                 "base": {"avgdl_enc": avgdl, "n_docs": n_docs,
                          "sum_dl": sum_dl, "runs": final.get("runs", [])},
                 "generations": [],

@@ -21,6 +21,9 @@ import shutil
 import sys
 import tempfile
 
+USAGE = "usage: python scripts/r07_plans.py <repo_root> <before|after> [out_root]"
+if len(sys.argv) < 3 or sys.argv[2] not in ("before", "after"):
+    sys.exit(USAGE)
 REPO = os.path.abspath(sys.argv[1])
 TAG = sys.argv[2]
 OUT = os.path.join(
@@ -127,6 +130,7 @@ def main() -> None:
             n = 2 + (i % 2)
             st = (i * 13) % (len(ts) - n)
             phrases.append((len(phrases), " ".join(ts[st : st + n])))
+        assert phrases, "no corpus doc yielded a phrase to capture"
 
         save("phrase_topk", grab(phrase_search(spark, pos_dir, phrases, k=10)))
         save("proximity_topk", grab(

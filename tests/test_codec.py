@@ -1,36 +1,15 @@
-"""Codec round-trip tests incl. property-based (SURVEY §5 item 1)."""
+"""Segment layout tests incl. property-based (SURVEY §5 item 1)."""
 
 import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from docinsight_spark.index.codec import (
-    decode_block,
-    decode_postings,
-    encode_postings,
-    varint_decode,
-    varint_encode,
-)
+from docinsight_spark.index.codec import block_starts, encode_postings
+from docinsight_spark.index.wand import _SegRow
 
 
-def test_varint_roundtrip_known():
-    vals = np.array([0, 1, 127, 128, 300, 2**35, 2**63, 2**64 - 1], dtype=np.uint64)
-    enc = varint_encode(vals)
-    assert varint_decode(enc, len(vals)).tolist() == vals.tolist()
-
-
-def test_varint_sizes():
-    assert len(varint_encode(np.array([0], dtype=np.uint64))) == 1
-    assert len(varint_encode(np.array([127], dtype=np.uint64))) == 1
-    assert len(varint_encode(np.array([128], dtype=np.uint64))) == 2
-    assert len(varint_encode(np.array([2**64 - 1], dtype=np.uint64))) == 10
-
-
-@settings(max_examples=200, deadline=None)
-@given(st.lists(st.integers(min_value=0, max_value=2**64 - 1), max_size=400))
-def test_varint_roundtrip_property(xs):
-    vals = np.array(xs, dtype=np.uint64)
-    assert varint_decode(varint_encode(vals), len(vals)).tolist() == xs
+def _seg_row(docs, tfs, meta):
+    return _SegRow("t", len(docs), docs, tfs, meta.n, 1.0)
 
 
 @settings(max_examples=100, deadline=None)
@@ -49,11 +28,15 @@ def test_postings_roundtrip_property(pairs):
     docs = np.array([p[0] for p in pairs], dtype=np.int64)
     tfs = np.array([p[1] for p in pairs], dtype=np.int64)
     scores = (tfs * 0.5).astype(np.float32)
-    payload, meta = encode_postings(docs, tfs, scores, block_size=64)
-    got_docs, got_tfs = decode_postings(payload, meta)
+    seg_docs, seg_tfs, meta = encode_postings(docs, tfs, scores, block_size=64)
+    row = _seg_row(seg_docs, seg_tfs, meta)
+    parts = [row.decode(bi) for bi in range(len(meta.n))]
+    got_docs = np.concatenate([p[0] for p in parts])
+    got_tfs = np.concatenate([p[1] for p in parts])
     order = np.argsort(docs, kind="stable")
     assert got_docs.tolist() == docs[order].tolist()
     assert got_tfs.tolist() == tfs[order].tolist()
+    assert int(meta.n.sum()) == len(docs) and (meta.n <= 64).all()
 
 
 def test_block_meta_and_selective_decode():
@@ -62,32 +45,29 @@ def test_block_meta_and_selective_decode():
     docs = np.cumsum(rng.randint(1, 2**30, size=n).astype(np.int64))
     tfs = rng.randint(1, 50, size=n).astype(np.int64)
     scores = (tfs / (tfs + 1.5)).astype(np.float32)
-    payload, meta = encode_postings(docs, tfs, scores, block_size=128)
+    seg_docs, seg_tfs, meta = encode_postings(docs, tfs, scores, block_size=128)
     assert len(meta.n) == 8  # ceil(1000/128)
-    assert meta.first_doc[0] == docs[0] and meta.last_doc[-1] == docs[-1]
+    assert block_starts(meta.n).tolist() == [0, 128, 256, 384, 512, 640, 768, 896, 1000]
     # block-max correctness
     for bi in range(8):
         lo, hi = bi * 128, min((bi + 1) * 128, n)
         assert abs(meta.max_score[bi] - scores[lo:hi].max()) < 1e-7
+    row = _seg_row(seg_docs, seg_tfs, meta)
+    # skip ranges: a filter inside blocks 2 and 3 selects only those
+    assert row.blocks_overlapping(docs[[300, 400]]).tolist() == [2, 3]
+    assert row.blocks_overlapping(np.array([docs[0] - 1])).tolist() == []
     # selective decode of middle blocks only
-    d, t = decode_postings(payload, meta, blocks=np.array([2, 3]))
+    d = np.concatenate([row.decode(2)[0], row.decode(3)[0]])
+    t = np.concatenate([row.decode(2)[1], row.decode(3)[1]])
     assert d.tolist() == docs[256:512].tolist()
     assert t.tolist() == tfs[256:512].tolist()
     # single block decode
-    d0, t0 = decode_block(payload, meta, 0)
+    d0, t0 = row.decode(0)
     assert d0.tolist() == docs[:128].tolist()
 
 
-def test_compression_beats_raw():
-    n = 10_000
-    docs = np.cumsum(np.random.RandomState(3).randint(1, 2**17, size=n).astype(np.int64))
-    tfs = np.ones(n, dtype=np.int64)
-    payload, _ = encode_postings(docs, tfs, tfs.astype(np.float32))
-    assert len(payload) < n * 16 * 0.5  # ≥2× smaller than raw (docID,tf) int64 pairs
-
-
 def test_block_tf_max_dl_min_fields():
-    """v4 drift-bound inputs: per-block tf_max / dl_min must be exact
+    """Drift-bound inputs: per-block tf_max / dl_min must be exact
     maxima/minima over the docID-sorted block membership."""
     n = 700
     rng = np.random.RandomState(11)
@@ -95,7 +75,7 @@ def test_block_tf_max_dl_min_fields():
     tfs = rng.randint(1, 400, size=n).astype(np.int64)
     dls = rng.randint(1, 5000, size=n).astype(np.int64)
     scores = (tfs / (tfs + 1.5)).astype(np.float32)
-    payload, meta = encode_postings(docs, tfs, scores, block_size=128, dls=dls)
+    _, _, meta = encode_postings(docs, tfs, scores, block_size=128, dls=dls)
     order = np.argsort(docs, kind="stable")
     ts, ds = tfs[order], dls[order]
     for bi in range(len(meta.n)):

@@ -237,6 +237,35 @@ def test_segment_files_partitioned_by_bucket(built_index):
     assert meta["n_docs"] == 200 and meta["n_buckets"] == 8
 
 
+def test_segment_rows_hold_the_merged_postings(spark, built_index):
+    """On disk, every segment row's docs/tfs arrays are the term's
+    shard-local postings: docIDs strictly ascending, arrays aligned with
+    ``n`` and the block sizes, block maxima per block — and together the
+    rows hold exactly the merged (term, docID, tf) triples."""
+    from docinsight_spark.index.codec import block_starts
+
+    seg = spark.read.parquet(f"{built_index.dir}/segments")
+    pdf = seg.toPandas()
+    assert len(pdf) > 0
+    for r in pdf.itertuples():
+        docs, tfs, bn = r.docs, r.tfs, r.bn
+        assert len(docs) == len(tfs) == r.n == bn.sum()
+        assert (docs[1:] > docs[:-1]).all()
+        assert (bn[:-1] == built_index.block_size).all()
+        assert len(r.max_score) == len(r.tf_max) == len(r.dl_min) == len(bn)
+        s = block_starts(bn)
+        assert r.tf_max.tolist() == [tfs[a:e].max() for a, e in zip(s[:-1], s[1:])]
+    final = [m for m in built_index.manifests() if m["unit"] == "merged-final"][0]
+    merged = spark.read.parquet(f"{final['source']}/postings").select(
+        "term", "docID", F.col("tf").cast("int").alias("tf")
+    )
+    stored = seg.select(
+        "term", F.inline(F.arrays_zip(F.col("docs").alias("docID"), "tfs"))
+    ).select("term", "docID", F.col("tfs").alias("tf"))
+    assert stored.count() == merged.count()
+    assert stored.exceptAll(merged).count() == 0
+
+
 def test_footer_counts_distributed_matches_threaded(spark, built_index, monkeypatch):
     """Past FOOTER_DRIVER_MAX files, footer counters run as a Spark job;
     both paths must agree exactly (and per-dir splits too)."""

@@ -48,11 +48,13 @@ def test_segment_scan_prunes_terms_and_columns(spark, small_index):
     # term IN (...) must reach the parquet scan (row-group skipping via
     # min/max stats — segments are written sorted by term)
     assert_pushed_filter(seg, "term")
-    # a projection that drops the payload must not read it
+    # a projection that drops the posting arrays must not read them
     slim = seg.select("term", "n")
     p = plan_text(slim)
     read_lines = [l for l in p.splitlines() if "ReadSchema" in l]
-    assert read_lines and all("payload" not in l for l in read_lines), p
+    assert read_lines and all(
+        "docs:" not in l and "tfs:" not in l for l in read_lines
+    ), p
 
 
 def test_generation_union_keeps_pushdown(spark, small_index, tmp_path_factory):
@@ -240,6 +242,29 @@ def test_phrase_single_pass_plan(spark, pos_index, real_bigram):
     main = p.split("Subqueries")[0]
     reads = [l for l in main.splitlines() if "ReadSchema" in l and "term" in l]
     assert len(reads) == 1 and "positions" in reads[0], "\n".join(reads)
+
+
+def test_snippet_windows_single_postings_scan(spark, pos_index, tiny_corpus):
+    """The snippet plan self-joins the candidates' matched positions; the
+    executed plan must scan the postings ONCE (the second join side is a
+    reused exchange), so a planner change cannot double the scan."""
+    from docinsight_spark.functions.tokenizer import tokenize_code_pandas
+    from docinsight_spark.index.phrase import snippet_windows
+
+    pdf = with_doc_id(tiny_corpus).limit(1).toPandas()
+    toks = sorted(set(tokenize_code_pandas(pdf["content"], pdf["lang"])[0][4:8]))
+    cand = spark.createDataFrame(
+        [(0, int(pdf["docID"][0]))], "query_id long, docID long"
+    )
+    qterms = spark.createDataFrame(
+        [(0, t) for t in toks], "query_id long, term string"
+    )
+    sn = snippet_windows(spark, pos_index, cand, qterms, window=8)
+    assert len(sn.collect()) == 1  # the executed plan is the one pinned
+    p = plan_text(sn)
+    final = p.split("== Final Plan ==")[1].split("== Initial Plan ==")[0]
+    assert final.count("Scan parquet") == 1, final
+    assert "ReusedExchange" in final, final
 
 
 def test_phrase_absent_term_short_circuits(spark, pos_index):

@@ -270,11 +270,11 @@ def test_score_shard_root_scoped_exclusion():
         tf = np.asarray(tfs, np.float64)
         dl = np.full(len(docs), avgdl)
         sc = tf * (k1 + 1.0) / (tf + k1 * (1.0 - b + b * dl / avgdl))
-        payload, meta = encode_postings(
+        seg_docs, seg_tfs, meta = encode_postings(
             docs, np.asarray(tfs, np.int64), sc.astype(np.float32),
             block_size=4, dls=dl.astype(np.int64),
         )
-        return _SegRow("t", 3.0, meta, payload, 10.0, root=root)
+        return _SegRow("t", 3.0, seg_docs, seg_tfs, meta.n, 10.0, root=root)
 
     rows = [seg_row("base", [1, 2], [3, 1]), seg_row("gen0002", [2], [5])]
 

@@ -178,3 +178,30 @@ def test_wand_query_batch_chunking_identical(spark, small_idx):
         )
     )
     assert whole == waved and len(whole) > 0
+
+
+@pytest.mark.parametrize("entry", ["wand_search", "searcher"])
+def test_refuses_pre_array_segment_index(spark, small_idx, tmp_path, entry):
+    """A version-4 index stores VByte segment payloads, not the docs/tfs
+    arrays: the query gate refuses it up front with the rebuild message
+    instead of failing later inside a Python worker — on the one-shot
+    call and on the serving ``Searcher`` alike."""
+    import json
+    import shutil
+
+    from docinsight_spark.index.wand import Searcher
+
+    d = str(tmp_path / "v4idx")
+    shutil.copytree(small_idx, d)
+    with open(f"{d}/_meta.json") as f:
+        meta = json.load(f)
+    assert meta["version"] == 5
+    meta["version"] = 4
+    with open(f"{d}/_meta.json", "w") as f:
+        json.dump(meta, f)
+    q = _q(spark, "return int")
+    with pytest.raises(ValueError, match="rebuild the index"):
+        if entry == "searcher":
+            Searcher(spark, d).search(q, k=5)
+        else:
+            wand_search(spark, d, q, k=5)

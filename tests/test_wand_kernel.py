@@ -5,7 +5,7 @@ import math
 
 import numpy as np
 
-from docinsight_spark.index.codec import BlockMeta, encode_postings
+from docinsight_spark.index.codec import encode_postings
 from docinsight_spark.index.wand import _SegRow, _score_shard
 
 K1, B = 1.2, 0.75
@@ -22,8 +22,8 @@ def make_row(term, doc_tf: dict[int, int], df=None, block_size=4):
     tfs = np.array([doc_tf[d] for d in docs], dtype=np.int64)
     df = df if df is not None else len(docs)
     scores = np.array([bm25(t, df, AVGDL) for t in tfs], dtype=np.float32)
-    payload, m = encode_postings(docs, tfs, scores, block_size=block_size)
-    return _SegRow(term, df, m, payload, float(scores.max()))
+    seg_docs, seg_tfs, m = encode_postings(docs, tfs, scores, block_size=block_size)
+    return _SegRow(term, df, seg_docs, seg_tfs, m.n, float(scores.max()))
 
 
 def dl_of(docs):
@@ -37,10 +37,7 @@ def brute_force(rows, terms, k):
         by_term.setdefault(r.term, []).append(r)
     for t in set(terms):
         for r in by_term.get(t, []):
-            from docinsight_spark.index.codec import decode_postings
-
-            d, tf = decode_postings(r.payload, r.meta)
-            for doc, f in zip(d, tf):
+            for doc, f in zip(r.docs, r.tfs):
                 acc[doc] = acc.get(doc, 0.0) + bm25(f, r.df, AVGDL)
     ranked = sorted(acc.items(), key=lambda x: (-x[1], x[0]))[:k]
     return ranked
@@ -64,15 +61,15 @@ def test_pruning_triggers_and_is_exact():
         (d, round(s, 9)) for d, s in want
     ]
     # block-skip effectiveness: only blocks containing accumulated docs
-    # (10, 20, 30) were decoded from the hot list
-    decoded_hot_blocks = set(hot._blocks)
+    # (10, 20, 30) were scored from the hot list
+    assert hot._full is None
+    scored_hot_blocks = set(hot._scores)
     overlapping = {
-        bi for bi in range(len(hot.meta.n))
-        if any(hot.meta.first_doc[bi] <= d <= hot.meta.last_doc[bi]
-               for d in (10, 20, 30))
+        bi for bi, blk in enumerate(np.split(hot.docs, hot.starts[1:-1]))
+        if any(blk[0] <= d <= blk[-1] for d in (10, 20, 30))
     }
-    assert decoded_hot_blocks == overlapping
-    assert len(decoded_hot_blocks) < len(hot.meta.n)  # skipping happened
+    assert scored_hot_blocks == overlapping
+    assert len(scored_hot_blocks) < len(hot.bn)  # skipping happened
 
 
 def test_no_pruning_small_theta_still_exact():
