@@ -109,7 +109,7 @@ def cmd_compact(args) -> int:
     spark = _spark("docinsight_compact")
     b = IndexBuilder.for_index(spark, args.index)
     gid = b.compact(
-        max_generations=args.max_generations, fanin=args.fanin,
+        max_generations=args.max_generations,
         force=args.force, delete_victims=args.inline_delete_victims,
     )
     reclaimed = (
@@ -503,7 +503,6 @@ def main(argv: list[str] | None = None) -> int:
     )
     c.add_argument("--index", required=True)
     c.add_argument("--max-generations", type=int, default=8)
-    c.add_argument("--fanin", type=int, default=8)
     c.add_argument("--force", action="store_true")
     c.add_argument(
         "--inline-delete-victims", action="store_true",

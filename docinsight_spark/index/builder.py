@@ -15,12 +15,12 @@ and the driver only moves manifests:
    ``WHERE embedding IS NULL`` incremental resume,
    ``embeddings/embedder.py:147-158``, and its SHA-256 dedup gate,
    ``pipeline_ingest.py:265-269``).
-2. **merge_all** — hierarchical merge waves: fan-in groups of runs are
-   **repartitioned by shard and sorted within partitions**
-   (repartition-and-sort-within-partitions), halving the run count per
-   wave; the terminal wave yields the global shard-sorted posting
-   layout.  Each wave step is manifest-guarded → a restarted build
-   skips completed waves.
+2. **merge_all** — merge waves: groups of up to ``merge_max_width()``
+   runs (default 32, at least ``fanin``) are **repartitioned by shard
+   and sorted within partitions** (repartition-and-sort-within-
+   partitions); the terminal wave yields the global shard-sorted
+   posting layout.  Each wave step is manifest-guarded → a restarted
+   build skips completed waves.
 3. **finalize** — doc/term statistics (document-frequency aggregation
    is two-stage salted against hot-term skew), then a streaming
    ``mapInPandas`` encoder turns the sorted postings into segments of
@@ -36,6 +36,14 @@ and the driver only moves manifests:
    order the streaming encoder depends on.  The encoder consumes the
    merge output's file order directly — no shuffle, no join; document
    length is read bucket-locally inside the kernel.
+
+   Commit order, the same for the base set and every generation
+   (``refresh_delta``, ``compact``): :meth:`IndexBuilder._write_set`
+   writes the set's stats, segments and lineage under its root, and
+   only then :meth:`IndexBuilder._publish` writes ``_meta.json`` (the
+   atomic commit point readers flip on), the unit manifest, and the
+   ledger fold.  A crash before the meta write leaves readers on the
+   previous meta (or none) and a rerun rewrites the set.
 
 **Why document-partitioned (not term-partitioned):** each shard holds
 the *complete* posting lists for its documents, so top-k scoring runs
@@ -228,52 +236,55 @@ def merge_max_width() -> int:
     return int(os.environ.get("DOCINSIGHT_MERGE_MAX_WIDTH", "32"))
 
 
-def _footer_counts_distributed(spark: SparkSession, files: list[str]) -> list[int]:
-    """Per-file parquet footer row counts as a Spark job (executor-side
-    pyarrow reads, ~256 files per task); order matches ``files``."""
-    def part(it):
-        import pyarrow.parquet as pq
+def _read_footers(path: str, read, spark: SparkSession | None = None) -> list:
+    """``[(file, read(footer))]`` for every parquet file under ``path`` —
+    no full-data Spark job.  DFS-safe: footers are read through the
+    path's filesystem (local, file://, s3://, hdfs://).  Footer reads are
+    tiny but latency-bound (one round trip per file), so they overlap on
+    driver threads; past ``FOOTER_DRIVER_MAX`` files (the 10^5-10^6-shard
+    geometry) they run as a Spark job when a session is provided — the
+    driver then receives only ``read``'s small result per file."""
+    import pyarrow.parquet as pq
 
-        for f in it:
-            fs, _ = fsio.resolve(f)
-            yield (f, pq.read_metadata(f, filesystem=fs).num_rows)
+    files = fsio.glob_parquet(path)
 
-    slices = max(1, min(len(files) // 256 + 1, 512))
-    got = dict(spark.sparkContext.parallelize(files, slices).mapPartitions(part).collect())
-    return [got[f] for f in files]
+    def read_all(it):
+        fs, _ = fsio.resolve(path)
+        return (read(pq.read_metadata(f, filesystem=fs)) for f in it)
+
+    if spark is not None and len(files) > FOOTER_DRIVER_MAX:
+        slices = max(1, min(len(files) // 256 + 1, 512))
+        vals = spark.sparkContext.parallelize(files, slices).mapPartitions(
+            read_all
+        ).collect()
+    else:
+        from concurrent.futures import ThreadPoolExecutor
+
+        fs, _ = fsio.resolve(path)
+        with ThreadPoolExecutor(max_workers=min(32, max(len(files), 1))) as ex:
+            vals = list(ex.map(
+                lambda f: read(pq.read_metadata(f, filesystem=fs)), files
+            ))
+    return list(zip(files, vals))
+
+
+def _dir_value(file: str, key: str) -> str | None:
+    """The ``key=<value>`` partition dir value in a file path."""
+    part = [p for p in file.split("/") if p.startswith(f"{key}=")]
+    return part[0].split("=", 1)[1] if part else None
 
 
 def _footer_rows(
     path: str, per_dir_key: str | None = None, spark: SparkSession | None = None
 ) -> tuple[int, dict]:
     """Dataset row count (and per-partition-dir counts) from parquet
-    footers — no full-data Spark job.  DFS-safe: footers are read through
-    the path's filesystem (local, file://, s3://, hdfs://).  At high file
-    counts (``> FOOTER_DRIVER_MAX``, the 10^5-10^6-shard geometry) the
-    reads run as a Spark job when a session is provided."""
-    import pyarrow.parquet as pq
-
-    fs, _ = fsio.resolve(path)
-    files = fsio.glob_parquet(path)
+    footers (:func:`_read_footers`)."""
     total, per = 0, {}
-    if spark is not None and len(files) > FOOTER_DRIVER_MAX:
-        counts = _footer_counts_distributed(spark, files)
-    else:
-        # footer reads are tiny but latency-bound (driver-side, one round
-        # trip per file on a DFS / contended disk) — overlap them
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=min(32, max(len(files), 1))) as ex:
-            counts = list(ex.map(
-                lambda f: pq.read_metadata(f, filesystem=fs).num_rows, files
-            ))
-    for f, n in zip(files, counts):
+    for f, n in _read_footers(path, lambda md: md.num_rows, spark):
         total += n
-        if per_dir_key:
-            part = [p for p in f.split("/") if p.startswith(f"{per_dir_key}=")]
-            if part:
-                key = part[0].split("=", 1)[1]
-                per[key] = per.get(key, 0) + n
+        key = _dir_value(f, per_dir_key) if per_dir_key else None
+        if key is not None:
+            per[key] = per.get(key, 0) + n
     return total, per
 
 
@@ -291,39 +302,13 @@ def _seg_footer_stats(md) -> tuple[int, int]:
 
 
 def _segment_lineage(path: str, spark: SparkSession | None = None) -> dict:
-    """Per-bucket segment counters from parquet footers: row counts and
-    the compressed size of the ``docs`` + ``tfs`` columns — no full-data Spark
-    job; past ``FOOTER_DRIVER_MAX`` files the footer reads themselves fan
-    out as a Spark job (the driver receives two ints per file)."""
-    import pyarrow.parquet as pq
-
-    fs, _ = fsio.resolve(path)
-    files = fsio.glob_parquet(path)
+    """Per-bucket segment counters from parquet footers
+    (:func:`_read_footers`): row counts and the compressed size of the
+    ``docs`` + ``tfs`` columns."""
     per: dict[str, dict] = {}
     total_rows, total_bytes = 0, 0
-    if spark is not None and len(files) > FOOTER_DRIVER_MAX:
-        def part(it):
-            import pyarrow.parquet as pq
-
-            for f in it:
-                pfs, _ = fsio.resolve(f)
-                yield (f, _seg_footer_stats(pq.read_metadata(f, filesystem=pfs)))
-
-        slices = max(1, min(len(files) // 256 + 1, 512))
-        got = dict(
-            spark.sparkContext.parallelize(files, slices).mapPartitions(part).collect()
-        )
-        stats = [got[f] for f in files]
-    else:
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=min(32, max(len(files), 1))) as ex:
-            stats = list(ex.map(
-                lambda f: _seg_footer_stats(pq.read_metadata(f, filesystem=fs)), files
-            ))
-    for f, (rows, pay) in zip(files, stats):
-        part = [p for p in f.split("/") if p.startswith("doc_bucket=")]
-        key = part[0].split("=", 1)[1] if part else "?"
+    for f, (rows, pay) in _read_footers(path, _seg_footer_stats, spark):
+        key = _dir_value(f, "doc_bucket") or "?"
         d = per.setdefault(key, {"segments_built": 0, "bytes_compressed": 0})
         d["segments_built"] += rows
         d["bytes_compressed"] += pay
@@ -743,17 +728,6 @@ class IndexBuilder:
                     fsio.remove(f"{self.dir}/manifests/{fn}")
         return folded
 
-    def _read_union(self, paths: list[str]) -> DataFrame:
-        """Union several (possibly PARTITIONED) parquet datasets — separate
-        loads avoid CONFLICTING_DIRECTORY_STRUCTURES on sibling roots.
-        Only for partitioned roots (merge-wave outputs); plain dirs go
-        through :meth:`_read_plain`."""
-        dfs = [self.spark.read.parquet(p) for p in paths]
-        out = dfs[0]
-        for d in dfs[1:]:
-            out = out.unionByName(d)
-        return out
-
     def _read_plain(self, paths: list[str]) -> DataFrame:
         """One multi-path scan over UNPARTITIONED sibling dirs (run docs /
         run postings).  A per-path unionByName would grow the logical
@@ -806,19 +780,7 @@ class IndexBuilder:
         docs = with_doc_id(corpus)
         if dedup_within_run:
             docs = self._dedup_by_doc_id(docs)
-        priors = [m for m in self.manifests() if m["unit"].startswith("run-")]
-        if priors:
-            seen = self._read_plain(
-                [f"{self.dir}/runs/{m['run_id']}/docs" for m in priors]
-            ).select("docID")
-            seen_total = sum(int(m.get("docs", 0)) for m in priors)
-            rez = self._resurrectable_ids(seen)
-            if rez is not None:
-                # resurrection: docIDs whose every past copy is dead may
-                # re-ingest — they leave the seen set, and the new copy
-                # lands in a newer root no tombstone marker covers
-                seen = seen.join(F.broadcast(rez), "docID", "left_anti")
-            docs = self._gate_new_docs(docs, seen, seen_total)
+        docs = self._gate_prior_runs(docs)
         if neardup_store is not None:
             docs = neardup_store.gate(
                 docs, unit=run_id, threshold=neardup_threshold
@@ -879,12 +841,7 @@ class IndexBuilder:
                 f"{base}/docs"
             )
         finally:
-            # unpersist even when a write fails mid-run: a MEMORY_AND_DISK
-            # gate frame must not outlive its run attempt (it would leak
-            # for the session and across resumed builds)
-            for cached in self._gate_cache:
-                cached.unpersist()
-            self._gate_cache.clear()
+            self._drop_gate_cache()
         n_postings, _ = _footer_rows(f"{base}/postings", spark=self.spark)
         n_docs, _ = _footer_rows(f"{base}/docs", spark=self.spark)
         lang_row = dict(lang_obs.get)  # PySpark 4 returns a plain dict
@@ -977,6 +934,34 @@ class IndexBuilder:
             .filter(F.col("_n_copies") == F.col("_n_dead"))
             .select("docID")
         )
+
+    def _gate_prior_runs(self, docs: DataFrame) -> DataFrame:
+        """The cross-run admission rule, shared by :meth:`add_run` and
+        :meth:`_ingest_runs`: drop docs whose docID a committed run
+        already holds — unless every past copy is dead (resurrection)."""
+        priors = [m for m in self.manifests() if m["unit"].startswith("run-")]
+        if not priors:
+            return docs
+        seen = self._read_plain(
+            [f"{self.dir}/runs/{m['run_id']}/docs" for m in priors]
+        ).select("docID")
+        seen_total = sum(int(m.get("docs", 0)) for m in priors)
+        rez = self._resurrectable_ids(seen)
+        if rez is not None:
+            # resurrection: docIDs whose every past copy is dead may
+            # re-ingest — they leave the seen set, and the new copy
+            # lands in a newer root no tombstone marker covers
+            seen = seen.join(F.broadcast(rez), "docID", "left_anti")
+        return self._gate_new_docs(docs, seen, seen_total)
+
+    def _drop_gate_cache(self) -> None:
+        """Unpersist the gate's cached frames — in a ``finally``, so even
+        when a write fails mid-run: a MEMORY_AND_DISK gate frame must not
+        outlive its run attempt (it would leak for the session and across
+        resumed builds)."""
+        for cached in self._gate_cache:
+            cached.unpersist()
+        self._gate_cache.clear()
 
     def _gate_new_docs(
         self, docs: DataFrame, seen: DataFrame, seen_total: int
@@ -1175,7 +1160,14 @@ class IndexBuilder:
                     prior.get("status") != "complete"
                     or prior.get("covers") != grp_covers
                 ):
-                    self._merge_group(grp, out, unit, covers=grp_covers)
+                    # one load per root: a multi-path read of sibling
+                    # partitioned roots trips CONFLICTING_DIRECTORY_STRUCTURES
+                    self._merge_group(
+                        _union_frames([
+                            self.spark.read.parquet(f"{s}/postings") for s in grp
+                        ]),
+                        out, unit, inputs=grp, covers=grp_covers,
+                    )
                 covers[out] = grp_covers
                 nxt.append(out)
             sources = nxt
@@ -1207,21 +1199,22 @@ class IndexBuilder:
         )
 
     def _merge_group(
-        self, grp: list[str], out: str, unit: str, covers: list[str] | None = None
+        self, postings: DataFrame, out: str, unit: str, **fields
     ) -> None:
-        """One merge step: repartition-and-sort-within-partitions by shard.
+        """One full-posting rewrite — a merge-wave step or a compaction
+        fold: repartition-and-sort-within-partitions by shard.
 
         Output: one file per shard inside its bucket dir, rows sorted by
         (term, docID) — the layout the segment encoder and parquet
-        row-group pruning rely on.  ``covers`` (the transitive leaf
-        source set) rides in the manifest for crash-rerun validation."""
-        postings = self._read_union([f"{s}/postings" for s in grp])
+        row-group pruning rely on.  ``fields`` (the inputs, the
+        transitive leaf source set ``covers``, a fold's ``tomb_fp``) ride
+        in the manifest for crash-rerun validation."""
         (
             self._shard_partitioned(postings)
             .sortWithinPartitions("doc_bucket", "doc_sub", "term", "docID")
             .write.mode("overwrite")
-            # merge-wave outputs are intermediates too (read once by the
-            # next wave or by finalize) — snappy, same rationale as runs;
+            # merge outputs are intermediates too (read once by the next
+            # wave or by the set writer) — snappy, same rationale as runs;
             # positional merges take zstd (the terminal one is long-lived
             # and the positions bytes dominate the write volume)
             .option("compression", self._postings_codec())
@@ -1229,16 +1222,16 @@ class IndexBuilder:
             .parquet(f"{out}/postings")
         )
         n, per_bucket = _footer_rows(f"{out}/postings", "doc_bucket", spark=self.spark)
-        self._commit(unit, inputs=grp, covers=covers or grp, postings_merged=n,
-                     postings_per_bucket=per_bucket)
+        self._commit(unit, postings_merged=n, postings_per_bucket=per_bucket,
+                     **fields)
 
     # -- stage 3: finalize (stats + segment encode) -------------------------
 
     def _write_doc_term_stats(
         self, postings: DataFrame, out_root: str
-    ) -> tuple[int, float, int]:
+    ) -> tuple[int, int]:
         """Write ``doc_stats`` + ``term_stats`` under ``out_root`` and
-        return exact (n_docs, avgdl, sum_dl) for the posting set.
+        return exact (n_docs, sum_dl) for the posting set.
 
         doc_stats: (docID, dl) per bucket — the kernel-side dl source.
         Hash repartition, NOT repartitionByRange: range partitioning
@@ -1246,7 +1239,7 @@ class IndexBuilder:
         (range directly on an unmaterialized aggregate = double agg).
         The key domain is tiny (n_buckets ints), so hash clustering is
         enough to keep file counts bounded per partition dir.
-        N / avgdl / Σdl ride along as observed metrics of the SAME write
+        N / Σdl ride along as observed metrics of the SAME write
         job (no read-back aggregation job)."""
         from concurrent.futures import ThreadPoolExecutor
 
@@ -1261,7 +1254,6 @@ class IndexBuilder:
                 .observe(
                     obs,
                     F.count(F.lit(1)).alias("n"),
-                    F.avg("dl").alias("avgdl"),
                     F.sum("dl").alias("sum_dl"),
                 )
                 .repartition(self.n_buckets, "doc_bucket")
@@ -1289,53 +1281,76 @@ class IndexBuilder:
             ts_future = pool.submit(_write_term_stats)
             _write_doc_stats()
             ts_future.result()
-        stats_row = obs.get
-        n_docs, avgdl = int(stats_row["n"]), float(stats_row["avgdl"] or 0.0)
-        sum_dl = int(stats_row["sum_dl"] or 0)
+        row = obs.get
         # observed metrics can over-count under stage resubmission /
         # speculative execution; the parquet footers of the just-written
         # doc_stats are exact and free — cross-check, and recompute with
         # an exact read-back aggregation on mismatch (rare path).
         footer_n, _ = _footer_rows(f"{out_root}/doc_stats", spark=self.spark)
-        if footer_n != n_docs:
+        if footer_n != int(row["n"]):
             row = (
                 self.spark.read.parquet(f"{out_root}/doc_stats")
-                .agg(
-                    F.count(F.lit(1)).alias("n"),
-                    F.avg("dl").alias("avgdl"),
-                    F.sum("dl").alias("sum_dl"),
-                )
+                .agg(F.count(F.lit(1)).alias("n"), F.sum("dl").alias("sum_dl"))
                 .first()
             )
-            n_docs, avgdl = int(row["n"]), float(row["avgdl"] or 0.0)
-            sum_dl = int(row["sum_dl"] or 0)
-        return n_docs, avgdl, sum_dl
+        return int(row["n"]), int(row["sum_dl"] or 0)
+
+    def _write_set(self, postings: str, root: str, encode_avgdl) -> dict:
+        """Write one segment set under ``root`` from the shard-sorted
+        merge output at ``postings`` (a dataset dir): doc/term stats,
+        then the segment encode, then the footer lineage
+        (``root/lineage_segments.json``).  The ONE writer behind the base
+        set (:meth:`finalize`), delta generations (:meth:`refresh_delta`)
+        and compaction folds (:meth:`compact`); it touches nothing a
+        reader sees — the caller then :meth:`_publish`-es.
+
+        ``encode_avgdl(n_docs, sum_dl)`` maps the set's own stats to the
+        avgdl its block maxima are encoded at.  Returns the set's
+        counters: ``n_docs``, ``sum_dl``, ``avgdl_enc``,
+        ``postings_merged``, ``segments_built``, ``bytes_compressed``."""
+        df = self.spark.read.parquet(postings)
+        n_docs, sum_dl = self._write_doc_term_stats(df, root)
+        avgdl_enc = encode_avgdl(n_docs, sum_dl)
+        self._encode_segments(df, root, avgdl_enc)
+        lineage = _segment_lineage(f"{root}/segments", spark=self.spark)
+        lineage["postings_merged"], _ = _footer_rows(postings, spark=self.spark)
+        _atomic_write_json(f"{root}/lineage_segments.json", lineage)
+        return {
+            "n_docs": n_docs,
+            "sum_dl": sum_dl,
+            "avgdl_enc": avgdl_enc,
+            **{k: lineage[k] for k in (
+                "postings_merged", "segments_built", "bytes_compressed"
+            )},
+        }
+
+    def _publish(self, meta: dict, unit: str, **counters) -> None:
+        """Commit a write: ``_meta.json`` (atomic tmp+rename — the commit
+        point readers flip on), then the unit's manifest (lineage), then
+        the ledger fold.  Data always lands before this runs, so a crash
+        anywhere earlier leaves readers on the previous meta."""
+        _atomic_write_json(f"{self.dir}/_meta.json", meta)
+        self._commit(unit, **counters)
+        self.fold_ledger()
 
     @_leased
     def finalize(self, merged_dir: str | None = None) -> None:
         if self._done("finalize"):
             return
+        final = [m for m in self.manifests() if m["unit"] == "merged-final"]
         if merged_dir is None:
-            final = [m for m in self.manifests() if m["unit"] == "merged-final"]
             if not final:
                 raise ValueError("run merge_all() before finalize()")
             merged_dir = final[0]["source"]
-        final = [m for m in self.manifests() if m["unit"] == "merged-final"]
         base_runs = final[0].get("runs", []) if final else []
-
-        postings = self.spark.read.parquet(f"{merged_dir}/postings")
-        n_docs, avgdl, sum_dl = self._write_doc_term_stats(postings, self.dir)
+        c = self._write_set(
+            f"{merged_dir}/postings", self.dir, lambda n, s: s / max(n, 1)
+        )
         meta = {
-            "n_docs": n_docs,
-            "avgdl": avgdl,
-            "sum_dl": sum_dl,
-            "n_buckets": self.n_buckets,
-            "n_subs": self.n_subs,
-            "block_size": self.block_size,
-            "k1": self.k1,
-            "b": self.b,
-            "code_aware": self.code_aware,
-            "positions": self.positions,
+            "n_docs": c["n_docs"],
+            "avgdl": c["avgdl_enc"],
+            "sum_dl": c["sum_dl"],
+            **self._settings(),
             # positional layout: array<int> riding parquet's native int
             # encodings (a VByte binary packing was measured LARGER —
             # see operators/postings.build_postings); zstd artifacts
@@ -1346,45 +1361,24 @@ class IndexBuilder:
             # later shift the global avgdl, and the query side needs the
             # per-set encode avgdl to keep stored block maxima admissible
             "base": {
-                "avgdl_enc": avgdl,
-                "n_docs": n_docs,
-                "sum_dl": sum_dl,
+                "avgdl_enc": c["avgdl_enc"],
+                "n_docs": c["n_docs"],
+                "sum_dl": c["sum_dl"],
                 "runs": base_runs,
             },
             "generations": [],
         }
-        _atomic_write_json(f"{self.dir}/_meta.json", meta)
-
-        lineage = self._encode_segments(
-            postings, f"{self.dir}/segments", avgdl, [self.dir]
-        )
-        n_postings, _ = _footer_rows(f"{merged_dir}/postings", spark=self.spark)
-        lineage["postings_merged"] = n_postings
-        _atomic_write_json(f"{self.dir}/lineage_segments.json", lineage)
-        self._commit(
-            "finalize",
-            segments_built=lineage["segments_built"],
-            postings_merged=n_postings,
-            bytes_compressed=lineage["bytes_compressed"],
-            per_bucket=lineage["per_bucket"],
-            n_docs=n_docs,
-            avgdl=avgdl,
-        )
-        self.fold_ledger()
+        self._publish(meta, "finalize", **c)
 
     def _encode_segments(
-        self,
-        postings: DataFrame,
-        seg_out: str,
-        avgdl: float,
-        dl_roots: list[str],
-    ) -> dict:
-        """Segment encode straight off a merge output: the scan preserves
-        within-file (shard, term, docID) order; dl is read bucket-
-        locally in the kernel from ``dl_roots``.  No join and no shuffle
-        touch the posting stream (block maxima are idf-independent, so
-        the full-vocabulary term_stats never broadcasts here).  Returns
-        the footer-derived segment lineage counters."""
+        self, postings: DataFrame, root: str, avgdl: float
+    ) -> None:
+        """Segment encode straight off a merge output into
+        ``root/segments``: the scan preserves within-file (shard, term,
+        docID) order; dl is read bucket-locally in the kernel from the
+        set's own ``root/doc_stats``.  No join and no shuffle touch the
+        posting stream (block maxima are idf-independent, so the
+        full-vocabulary term_stats never broadcasts here)."""
         enc_input = self._encode_input(postings)
         k1, b, block_size = self.k1, self.b, self.block_size
         strict = strict_dl_enabled()
@@ -1396,7 +1390,7 @@ class IndexBuilder:
             def dl_for(bucket: int, doc_ids: np.ndarray) -> np.ndarray:
                 m = dl_cache.get(bucket)
                 if m is None:
-                    m = read_doc_stats_bucket_multi(dl_roots, bucket) or {
+                    m = read_doc_stats_bucket(root, bucket) or {
                         "docID": np.empty(0, np.int64),
                         "dl": np.empty(0, np.int64),
                     }
@@ -1480,11 +1474,8 @@ class IndexBuilder:
         (
             segments.write.mode("overwrite")
             .partitionBy("doc_bucket")
-            .parquet(seg_out)
+            .parquet(f"{root}/segments")
         )
-        # Per-partition lineage from parquet footers — counters without a
-        # Spark job (segments built, postings merged, compressed bytes).
-        return _segment_lineage(seg_out, spark=self.spark)
 
     def _encode_input(self, postings: DataFrame) -> DataFrame:
         """The segment encoder's input: a pure projection of the merged
@@ -1575,57 +1566,54 @@ class IndexBuilder:
         dedup_within_run: bool = True,
     ) -> None:
         """Full build. ``n_runs > 1`` splits the corpus to exercise the
-        merge-wave machinery (and models incremental ingest batches).
-
-        On a FRESH index the multi-run split runs as a single-pass fused
-        ingest (:meth:`_ingest_runs`): all runs' postings in one tokenize
-        job and all docs tables in one job, instead of 2·k jobs and 2·k
-        corpus content scans.  With prior runs present (resume, append)
-        the per-slice path with its cross-run gate applies unchanged."""
+        merge-wave machinery (and models incremental ingest batches):
+        :meth:`_ingest_runs` slices it by ``pmod(xxhash64(docID), k)`` —
+        the same key on a fresh build and on a resumed one."""
         if n_runs == 1:
             self.add_run(corpus, "run00000", dedup_within_run)
-        elif not self._ingest_runs(corpus, n_runs, dedup_within_run):
-            slices = corpus.randomSplit([1.0] * n_runs, seed=42)
-            for i, sl in enumerate(slices):
-                self.add_run(sl, f"run{i:05d}", dedup_within_run)
+        else:
+            self._ingest_runs(corpus, n_runs, dedup_within_run)
         self.merge_all(fanin=fanin)
         self.finalize()
 
     @_leased
     def _ingest_runs(
         self, corpus: DataFrame, n_runs: int, dedup_within_run: bool = True
-    ) -> bool:
-        """Single-pass fused multi-run ingest for a FRESH index (round 7).
+    ) -> None:
+        """Single-pass fused multi-run ingest (round 7).
 
-        The per-slice path costs 2 jobs and 2 full corpus content scans
-        PER RUN, plus a cross-run anti-join gate per slice that is pure
-        overhead when the index is empty and slices are disjoint by
-        construction.  Here ALL runs' postings are written in ONE
-        tokenize job and all docs tables in ONE job — partitioned writes
-        on a deterministic run key (``pmod(xxhash64(docID), k)``, unlike
-        randomSplit's positional rand it is derivable on both sides of
-        the tokenize kernel), whose partition dirs then move into the
-        canonical ``runs/<id>/`` layout.  Content scans drop 2·k → 2 and
-        Spark jobs 2·k → 3 (plus one tiny columnar lang-count job).  Run
-        slicing differs from the randomSplit path, but the merged index
-        content is identical: same doc set, postings and stats.  The
-        global docID dedup here equals the old within-run dedup +
-        cross-run gate composition for a fresh index (both keep one
-        arbitrary copy per docID).
+        Run ``run<i>`` holds the docs with ``pmod(xxhash64(docID), k) ==
+        i``.  ALL pending runs' postings are written in ONE tokenize job
+        and all their docs tables in ONE job — partitioned writes on the
+        run key (derivable on both sides of the tokenize kernel), whose
+        partition dirs then move into the canonical ``runs/<id>/``
+        layout and commit one run manifest each.  Content scans are 2,
+        not 2·k as with one :meth:`add_run` per slice.  The global docID
+        dedup equals add_run's within-run dedup + cross-run gate
+        composition (both keep one arbitrary copy per docID).
 
-        Returns False (caller falls back to per-slice add_run) when any
-        run has already been ingested — resume of a partially fused
-        ingest included: un-manifested moved dirs are simply overwritten
-        by the fallback's own writes, and merge reads only manifested
-        runs."""
-        if any(m["unit"].startswith("run-") for m in self.manifests()):
-            return False
+        Resume: run keys that already have a manifest are skipped; only
+        the pending keys' docs are re-sliced (same key, so they are
+        exactly the docs those runs should hold) and pass the cross-run
+        gate :meth:`add_run` applies against every committed run.  A
+        crash between per-run commits therefore loses no document.
+        Un-manifested moved dirs are overwritten; merge reads only
+        manifested runs."""
+        done = {
+            m["run_id"] for m in self.manifests() if m["unit"].startswith("run-")
+        }
+        pending = [i for i in range(n_runs) if f"run{i:05d}" not in done]
+        if not pending:
+            return
         self._check_meta_compat()
+        self._check_run_compat()
+        run_col = F.pmod(F.xxhash64("docID"), F.lit(n_runs)).cast("int")
         docs = with_doc_id(corpus)
         if dedup_within_run:
             docs = self._dedup_by_doc_id(docs)
-        run_ids = [f"run{i:05d}" for i in range(n_runs)]
-        run_col = F.pmod(F.xxhash64("docID"), F.lit(n_runs)).cast("int")
+        if len(pending) < n_runs:
+            docs = docs.filter(run_col.isin(pending))
+        docs = self._gate_prior_runs(docs)
         tmp = f"{self.dir}/_ingest_tmp"
         fsio.rmtree(tmp)
         postings = self._sharded(
@@ -1633,22 +1621,25 @@ class IndexBuilder:
                 docs, code_aware=self.code_aware, with_positions=self.positions
             )
         )
-        (
-            postings.withColumn("_run", run_col)
-            .write.mode("overwrite")
-            .option("compression", self._postings_codec())
-            .partitionBy("_run")
-            .parquet(f"{tmp}/postings")
-        )
-        (
-            docs.select(
-                "docID", "repo", "path", "commit", "lang", "content_sha"
+        try:
+            (
+                postings.withColumn("_run", run_col)
+                .write.mode("overwrite")
+                .option("compression", self._postings_codec())
+                .partitionBy("_run")
+                .parquet(f"{tmp}/postings")
             )
-            .withColumn("_run", run_col)
-            .write.mode("overwrite")
-            .partitionBy("_run")
-            .parquet(f"{tmp}/docs")
-        )
+            (
+                docs.select(
+                    "docID", "repo", "path", "commit", "lang", "content_sha"
+                )
+                .withColumn("_run", run_col)
+                .write.mode("overwrite")
+                .partitionBy("_run")
+                .parquet(f"{tmp}/docs")
+            )
+        finally:
+            self._drop_gate_cache()
         # per-run language mix (majority-vote input for the query-side
         # tokenizer): one tiny columnar scan of the just-written docs —
         # the fused write cannot carry per-run observed metrics
@@ -1675,7 +1666,8 @@ class IndexBuilder:
             "docID long, repo string, path string, commit string, "
             "lang string, content_sha string"
         )
-        for i, rid in enumerate(run_ids):
+        for i in pending:
+            rid = f"run{i:05d}"
             base = f"{self.dir}/runs/{rid}"
             fsio.rmtree(base)
             for sub, schema in (
@@ -1699,7 +1691,6 @@ class IndexBuilder:
                 langs=langs_per_run.get(i, {}), settings=self._settings(),
             )
         fsio.rmtree(tmp)
-        return True
 
     def meta(self) -> dict:
         return fsio.read_json(f"{self.dir}/_meta.json")
@@ -1890,12 +1881,10 @@ class IndexBuilder:
             avgdl=g_sum / max(g_n, 1),
             tombstones=tombs,
         )
-        _atomic_write_json(f"{self.dir}/_meta.json", meta)
-        self._commit(
-            unit, del_id=did, n_docs=n_vic, sum_dl=sum_vic,
+        self._publish(
+            meta, unit, del_id=did, n_docs=n_vic, sum_dl=sum_vic,
             per_root=per_root,
         )
-        self.fold_ledger()
         if neardup_store is not None:
             # disable the victims' near-dup signatures too: content
             # similar to a deleted doc must not be gated against it
@@ -1941,14 +1930,7 @@ class IndexBuilder:
         meta = self.meta()
         gens = meta.get("generations", [])
         tombs = meta.get("tombstones", [])
-        exp_n = (
-            meta["base"]["n_docs"] + sum(g["n_docs"] for g in gens)
-            - sum(t["n_docs"] for t in tombs)
-        )
-        exp_sum = (
-            meta["base"]["sum_dl"] + sum(g["sum_dl"] for g in gens)
-            - sum(t["sum_dl"] for t in tombs)
-        )
+        exp_n, exp_sum = _global_identity(meta, gens)
         rec(
             "stats_identity",
             meta["n_docs"] == exp_n and meta["sum_dl"] == exp_sum
@@ -2107,8 +2089,9 @@ class IndexBuilder:
         admissible through the per-block (tf_max, dl_min) bound the
         query side recomputes under the CURRENT avgdl (codec.BlockMeta).
 
-        Commit protocol: generation dirs → ``_meta.json`` update (the
-        commit point readers see) → generation manifest (lineage).  Every
+        Commit protocol: merge waves → :meth:`_write_set` (generation
+        dirs) → :meth:`_publish` (``_meta.json`` update, the commit point
+        readers see → generation manifest → ledger fold).  Every
         step is idempotent; a rerun after any crash converges without
         double-counting.  Returns the new generation id, ``"base"`` for
         an initial build, or ``None`` when no new runs exist."""
@@ -2141,62 +2124,29 @@ class IndexBuilder:
             )
             self.fold_ledger()
             return gid
-        postings = self.spark.read.parquet(f"{src}/postings")
-        n_new, _avg_new, sum_new = self._write_doc_term_stats(postings, groot)
         meta = self.meta()
         gens = [g for g in meta.get("generations", []) if g["id"] != gid]
-        # the global identity: base + generations − live tombstones
-        # (per-set encode stats are PRE-delete; deletions are carried by
-        # the tombstone entries until physical reclaim)
-        tombs = meta.get("tombstones", [])
-        t_n = sum(int(t["n_docs"]) for t in tombs)
-        t_sum = sum(int(t["sum_dl"]) for t in tombs)
-        g_n = (
-            meta["base"]["n_docs"] + sum(g["n_docs"] for g in gens)
-            + n_new - t_n
-        )
-        g_sum = (
-            meta["base"]["sum_dl"] + sum(g["sum_dl"] for g in gens)
-            + sum_new - t_sum
-        )
-        g_avg = g_sum / max(g_n, 1)
+        n_prev, sum_prev = _global_identity(meta, gens)
         # encode the delta at the NEW global avgdl: the freshest
         # generation gets tight bounds; older sets fall back to the
         # drift-safe (tf_max, dl_min) bound as avgdl moves
-        lineage = self._encode_segments(postings, f"{groot}/segments", g_avg, [groot])
-        gens.append(
-            {
-                "id": gid,
-                "avgdl_enc": g_avg,
-                "n_docs": n_new,
-                "sum_dl": sum_new,
-                "runs": new,
-                "merged_source": src,
-            }
+        c = self._write_set(
+            f"{src}/postings", groot,
+            lambda n, s: (sum_prev + s) / max(n_prev + n, 1),
         )
+        gens.append(_gen_entry(gid, c, new, src))
+        g_n, g_sum = _global_identity(meta, gens)
         covered_ids = set(meta["base"].get("runs", [])) | {
             r for g in gens for r in g["runs"]
         }
         meta.update(
             n_docs=g_n,
-            avgdl=g_avg,
+            avgdl=g_sum / max(g_n, 1),
             sum_dl=g_sum,
             generations=gens,
             query_lang=self._majority_lang(covered_ids or None),
         )
-        _atomic_write_json(f"{self.dir}/_meta.json", meta)
-        self._commit(
-            f"generation-{gid}",
-            gen_id=gid,
-            runs=new,
-            n_docs=n_new,
-            sum_dl=sum_new,
-            avgdl_enc=g_avg,
-            postings_merged=n_rows,
-            segments_built=lineage["segments_built"],
-            bytes_compressed=lineage["bytes_compressed"],
-        )
-        self.fold_ledger()
+        self._publish(meta, f"generation-{gid}", gen_id=gid, runs=new, **c)
         return gid
 
     @_leased
@@ -2204,7 +2154,6 @@ class IndexBuilder:
         self,
         max_generations: int = 8,
         max_avgdl_drift: float = 0.25,
-        fanin: int = 8,
         force: bool = False,
         delete_victims: bool = True,
     ) -> str | None:
@@ -2219,11 +2168,17 @@ class IndexBuilder:
         generation plus the smallest generations (by Σdl) until at most
         ``max_generations // 2`` survive.
 
-        The fold reads the victims' ``merged_source`` outputs — few,
-        large, already shard-sorted inputs — NOT the original run dirs:
-        a generation covering many streaming micro-batch runs folds in
-        one balanced pass, and covered runs' postings become dead
-        storage reclaimable by :meth:`gc_runs` (L0 GC).  Tombstoned
+        The fold is ONE :meth:`_merge_group` pass over the victims'
+        ``merged_source`` outputs — few, large, already shard-sorted
+        inputs — NOT the original run dirs: a generation covering many
+        streaming micro-batch runs folds in one balanced pass, and
+        covered runs' postings become dead storage reclaimable by
+        :meth:`gc_runs` (L0 GC).  The fold's manifest records the victim
+        sources and a fingerprint of their tombstone state; a rerun
+        re-folds when either changed.  The new generation is then written
+        by :meth:`_write_set` (encoded at the current global avgdl) and
+        committed by :meth:`_publish`; victims are reclaimed after that
+        commit (or tombstoned for :meth:`gc_generations`).  Tombstoned
         docs whose home root is a victim are dropped from the merge —
         compaction is the PHYSICAL reclaim of doc-level deletes: the
         new generation's postings/stats/segments exclude them, and the
@@ -2231,9 +2186,7 @@ class IndexBuilder:
         ``_meta.json`` commit, so df corrections never double-apply.
         The base segment set only rewrites on an explicit full rebuild.
         Returns the new generation id or ``None`` when nothing
-        triggered.  (``fanin`` is retained for API compatibility; the
-        fold has been a single balanced pass over the victims' merged
-        outputs since round 5.)"""
+        triggered."""
         self._check_meta_compat()
         meta = self.meta()
         gens = meta.get("generations", [])
@@ -2289,6 +2242,11 @@ class IndexBuilder:
             or prior.get("covers") != vsrcs
             or prior.get("tomb_fp", []) != tomb_fp
         ):
+            postings_in = _union_frames([
+                self.spark.read.parquet(f"{s}/postings")
+                .withColumn("_vroot", F.lit(gid_v))
+                for s, gid_v in vpairs
+            ])
             tomb = self._tombstone_docs_for_roots(victims)
             if tomb is not None:
                 # physical delete reclaim: victims' tombstoned COPIES do
@@ -2297,36 +2255,14 @@ class IndexBuilder:
                 # join is (docID, root)-scoped: when a dead copy and its
                 # resurrected live copy fold in the same pass, a
                 # docID-only anti-join would drop both.
-                postings_in = _union_frames([
-                    self.spark.read.parquet(f"{s}/postings")
-                    .withColumn("_vroot", F.lit(gid_v))
-                    for s, gid_v in vpairs
-                ]).join(
+                postings_in = postings_in.join(
                     F.broadcast(tomb.withColumnRenamed("root", "_vroot")),
                     ["docID", "_vroot"],
                     "left_anti",
-                ).drop("_vroot")
-            else:
-                postings_in = self._read_union(
-                    [f"{s}/postings" for s in vsrcs]
                 )
-            (
-                # probe-partitioned like every merge wave (round 7): the
-                # fold is the same full-posting rewrite, so it sheds the
-                # same per-fold input sampling pass
-                self._shard_partitioned(postings_in)
-                .sortWithinPartitions("doc_bucket", "doc_sub", "term", "docID")
-                .write.mode("overwrite")
-                .option("compression", self._postings_codec())
-                .partitionBy("doc_bucket")
-                .parquet(f"{src}/postings")
-            )
-            n_fold, per_bucket = _footer_rows(
-                f"{src}/postings", "doc_bucket", spark=self.spark
-            )
-            self._commit(
-                unit, inputs=vsrcs, covers=vsrcs, postings_merged=n_fold,
-                postings_per_bucket=per_bucket, tomb_fp=tomb_fp,
+            self._merge_group(
+                postings_in.drop("_vroot"), src, unit,
+                inputs=vsrcs, covers=vsrcs, tomb_fp=tomb_fp,
             )
         survivors = [g for g in gens if g["id"] not in victims]
         empty_fold = (
@@ -2341,24 +2277,13 @@ class IndexBuilder:
             # generation and −1 to a tombstone), so dropping both sides
             # together preserves the global identity.  The generation
             # manifest below still records vruns as covered.
-            n_new = sum_new = 0
-            lineage = {"segments_built": 0, "bytes_compressed": 0}
+            c = {"n_docs": 0, "sum_dl": 0, "avgdl_enc": avgdl_now,
+                 "segments_built": 0, "bytes_compressed": 0, "empty": True}
         else:
-            postings = self.spark.read.parquet(f"{src}/postings")
-            n_new, _avg, sum_new = self._write_doc_term_stats(postings, groot)
-            lineage = self._encode_segments(
-                postings, f"{groot}/segments", avgdl_now, [groot]
+            c = self._write_set(
+                f"{src}/postings", groot, lambda n, s: avgdl_now
             )
-            survivors.append(
-                {
-                    "id": gid,
-                    "avgdl_enc": avgdl_now,
-                    "n_docs": n_new,
-                    "sum_dl": sum_new,
-                    "runs": vruns,
-                    "merged_source": src,
-                }
-            )
+            survivors.append(_gen_entry(gid, c, vruns, src))
         # Shrink tombstones in the SAME meta commit as the generation
         # swap: the new generation's stats already exclude the reclaimed
         # docs, so their df/N corrections must stop applying atomically
@@ -2429,18 +2354,9 @@ class IndexBuilder:
         meta.update(
             generations=survivors, tombstones=new_tombs, graveyard=gy_live
         )
-        _atomic_write_json(f"{self.dir}/_meta.json", meta)
-        self._commit(
-            f"generation-{gid}",
-            gen_id=gid,
-            runs=vruns,
-            n_docs=n_new,
-            sum_dl=sum_new,
-            avgdl_enc=avgdl_now,
-            compacted_from=sorted(victims),
-            segments_built=lineage["segments_built"],
-            bytes_compressed=lineage["bytes_compressed"],
-            **({"empty": True} if empty_fold else {}),
+        self._publish(
+            meta, f"generation-{gid}", gen_id=gid, runs=vruns,
+            compacted_from=sorted(victims), **c,
         )
         if empty_fold:
             # remove the (unreadable) empty fold output after the commit
@@ -2476,7 +2392,6 @@ class IndexBuilder:
                      "paths": tomb_cleanup + gy_stale_paths,
                      "ts": time.time()},
                 )
-        self.fold_ledger()
         return gid
 
     def _tombstone_docs_for_roots(self, roots: set[str]) -> DataFrame | None:
@@ -2572,6 +2487,29 @@ class IndexBuilder:
                 fsio.rmtree(p)
             fsio.remove(f"{self.dir}/manifests/{fn}")
         return removed
+
+
+def _global_identity(meta: dict, gens: list[dict]) -> tuple[int, int]:
+    """The global (n_docs, sum_dl): base + Σ``gens`` − Σlive tombstones.
+    Per-set counts are PRE-delete encode counts; deletions are carried
+    by the tombstone entries until compaction physically reclaims them."""
+    tombs = meta.get("tombstones", [])
+    return tuple(
+        int(meta["base"][k]) + sum(int(g[k]) for g in gens)
+        - sum(int(t[k]) for t in tombs)
+        for k in ("n_docs", "sum_dl")
+    )
+
+
+def _gen_entry(gid: str, counters: dict, runs: list[str], src: str) -> dict:
+    """A ``_meta.json`` generation entry from :meth:`IndexBuilder._write_set`
+    counters."""
+    return {
+        "id": gid,
+        **{k: counters[k] for k in ("avgdl_enc", "n_docs", "sum_dl")},
+        "runs": runs,
+        "merged_source": src,
+    }
 
 
 # -- generation-aware readers (query side) ----------------------------------

@@ -84,7 +84,7 @@ def main() -> None:
             refresh_secs.append(round(time.time() - t0, 2))
             query_by_gens[i + 1] = qtime()
         t0 = time.time()
-        gid = b.compact(force=True, fanin=2)
+        gid = b.compact(force=True)
         compact_s = round(time.time() - t0, 2)
         q_after_compact = qtime()
         print(

@@ -3,8 +3,9 @@
 
 Replicates exactly what bench.py's ``index_build`` / ``positional_build``
 stages do (build(corpus, n_runs=4, fanin=2)) but times every phase:
-per-run add_run, merge_all, finalize split into stats vs encode.  Writes
-one JSON line.  Not part of the driver contract — measurement only.
+the fused multi-run ingest, merge_all, and finalize with its stats and
+encode phases.  Writes one JSON line.  Not part of the driver contract
+— measurement only.
 
 Usage: python scripts/profile_build.py [n_files] [--positions]
 """
@@ -46,6 +47,9 @@ def main() -> None:
         sc.setJobDescription(None)
         return out
 
+    def timed(name, fn):
+        return lambda *a: clock(name, lambda: fn(*a))
+
     corpus_dir = tempfile.mkdtemp(prefix="prof_corpus_", dir=scratch)
     idx_dir = tempfile.mkdtemp(prefix="prof_idx_", dir=scratch)
     try:
@@ -61,37 +65,15 @@ def main() -> None:
             b = IndexBuilder(spark, idx_dir, n_buckets=32, positions=POSITIONS)
 
             t0_all = time.time()
-            clock("add_runs", lambda: _add_runs(b, corpus))
+            clock("add_runs", lambda: b._ingest_runs(corpus, 4, True))
             clock("merge_all", lambda: b.merge_all(fanin=2))
-
-            # finalize, split into its internal phases (mirrors finalize())
-            final = [m for m in b.manifests() if m["unit"] == "merged-final"][0]
-            merged_dir = final["source"]
-            postings = spark.read.parquet(f"{merged_dir}/postings")
-            stats = clock(
-                "fin_doc_term_stats",
-                lambda: b._write_doc_term_stats(postings, b.dir),
+            # finalize's stats and encode phases, timed inside the
+            # builder's own finalize() call
+            b._write_doc_term_stats = timed(
+                "fin_doc_term_stats", b._write_doc_term_stats
             )
-            n_docs, avgdl, sum_dl = stats
-            from docinsight_spark.index.builder import _atomic_write_json
-
-            meta = {
-                "n_docs": n_docs, "avgdl": avgdl, "sum_dl": sum_dl,
-                "n_buckets": b.n_buckets, "n_subs": b.n_subs,
-                "block_size": b.block_size, "k1": b.k1, "b": b.b,
-                "code_aware": b.code_aware, "positions": b.positions,
-                "query_lang": "java", "version": 5,
-                "base": {"avgdl_enc": avgdl, "n_docs": n_docs,
-                         "sum_dl": sum_dl, "runs": final.get("runs", [])},
-                "generations": [],
-            }
-            _atomic_write_json(f"{b.dir}/_meta.json", meta)
-            clock(
-                "fin_encode_segments",
-                lambda: b._encode_segments(
-                    postings, f"{b.dir}/segments", avgdl, [b.dir]
-                ),
-            )
+            b._encode_segments = timed("fin_encode_segments", b._encode_segments)
+            clock("finalize", b.finalize)
             t["build_total"] = round(time.time() - t0_all, 3)
             print(json.dumps({
                 "round": rnd, "n_files": N_FILES, "positions": POSITIONS,
@@ -101,16 +83,6 @@ def main() -> None:
         shutil.rmtree(idx_dir, ignore_errors=True)
         shutil.rmtree(corpus_dir, ignore_errors=True)
         spark.stop()
-
-
-def _add_runs(b, corpus) -> None:
-    """Mirror IndexBuilder.build()'s multi-run ingest phase."""
-    if hasattr(b, "_ingest_runs"):
-        b._ingest_runs(corpus, 4, True)
-        return
-    slices = corpus.randomSplit([1.0] * 4, seed=42)
-    for i, sl in enumerate(slices):
-        b.add_run(sl, f"run{i:05d}", True)
 
 
 if __name__ == "__main__":

@@ -93,7 +93,7 @@ def main() -> None:
         run_postings = sorted(
             f"{runs_root}/{r}/postings" for r in os.listdir(runs_root)
         )
-        postings = b._read_union(run_postings)
+        postings = b._read_plain(run_postings)
         if hasattr(b, "_shard_partitioned"):
             part = b._shard_partitioned(postings)
         else:

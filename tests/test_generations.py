@@ -177,7 +177,7 @@ def test_compact_triggers_on_avgdl_drift(spark, tmp_path):
     assert meta["avgdl"] > float(g1["avgdl_enc"]) * 1.25  # in the drift regime
     q = make_queries(spark, corpus_n=150, n_queries=8)
     before = _res(wand_search(spark, d, q, k=5))
-    gid = b.compact(max_generations=8, max_avgdl_drift=0.25, fanin=2)
+    gid = b.compact(max_generations=8, max_avgdl_drift=0.25)
     assert gid is not None  # triggered by drift, not by count
     enc = {g["id"]: g["avgdl_enc"] for g in b.meta()["generations"]}
     assert enc[gid] == pytest.approx(b.meta()["avgdl"])  # re-encoded fresh
@@ -424,11 +424,12 @@ def test_crashed_fold_with_changed_inputs_remerges(spark, tmp_path):
     assert sorted(meta["generations"][0]["runs"]) == ["r1", "r2"]
 
 
-def test_crashed_multiwave_fold_remerges_downstream(spark, tmp_path):
+def test_crashed_multiwave_fold_remerges_downstream(spark, tmp_path, monkeypatch):
     """Past wave 0, path equality of direct inputs cannot detect that an
     upstream output was re-merged with different content — reuse must
     compare the transitively covered source set, re-merging downstream
     waves while still reusing untouched sibling groups."""
+    monkeypatch.setenv("DOCINSIGHT_MERGE_MAX_WIDTH", "2")
     d = str(tmp_path / "crashmw")
     b = IndexBuilder(spark, d, n_buckets=4)
     b.build(make_corpus(spark, 150, seed=95, partitions=2))
@@ -436,17 +437,28 @@ def test_crashed_multiwave_fold_remerges_downstream(spark, tmp_path):
         b.add_run(make_corpus(spark, 60, seed=seed, partitions=2), f"r{i}")
     groot = f"{d}/generations/gen0001"
     # crash after ALL merge waves of a 3-run fold committed (2 waves at
-    # fanin=2), before stats/meta/manifest
-    b._merge_waves(
+    # merge width 2), before stats/meta/manifest
+    _src, waves = b._merge_waves(
         [f"{d}/runs/r{i}" for i in (1, 2, 3)],
         f"{groot}/merged", "genmerge-gen0001", 2,
     )
+    assert waves == 2
+    steps = ("w0-g0", "w0-g1", "w1-g0")
+
+    def step_ts():
+        return {s: b._manifest(f"genmerge-gen0001-{s}")["ts"] for s in steps}
+
+    ts_before = step_ts()
     b.add_run(make_corpus(spark, 60, seed=99, partitions=2), "r4")
     gid = b.refresh_delta(fanin=2)
     assert gid == "gen0001"
     meta = b.meta()
     assert meta["n_docs"] == 150 + 4 * 60  # r4 indexed, nothing doubled
     assert sorted(meta["generations"][0]["runs"]) == ["r1", "r2", "r3", "r4"]
+    ts_after = step_ts()
+    assert ts_after["w0-g0"] == ts_before["w0-g0"]  # [r1, r2] reused
+    assert ts_after["w0-g1"] != ts_before["w0-g1"]  # [r3] -> [r3, r4]
+    assert ts_after["w1-g0"] != ts_before["w1-g0"]  # downstream re-merged
 
 
 def test_refresh_crash_between_meta_and_manifest_converges(spark, tmp_path):
@@ -535,7 +547,7 @@ def test_compact_folds_generations_same_results(spark, gen_setup):
     q = make_queries(spark, corpus_n=300, n_queries=12)
     before = _res(wand_search(spark, gen_setup["inc"], q, k=10))
     assert b.compact(max_generations=8) is None  # 2 gens, no drift: no-op
-    gid = b.compact(force=True, fanin=2)
+    gid = b.compact(force=True)
     assert gid == "gen0003"
     meta = b.meta()
     assert [g["id"] for g in meta["generations"]] == [gid]
