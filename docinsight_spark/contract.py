@@ -1783,7 +1783,18 @@ def proximity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     b.build(docs)
     res = proximity_search(
         spark, idx, PROX_QUERIES, k=_PROX_OVERFETCH, window=_PROX_W
+    ).localCheckpoint()
+    # a query that fills the over-fetch may have lost rows to the cut,
+    # and its oracle comparison would then be meaningless
+    full = (
+        res.groupBy("query_id").count()
+        .filter(F.col("count") >= _PROX_OVERFETCH).collect()
     )
+    if full:
+        raise RuntimeError(
+            f"proximity over-fetch saturated ({_PROX_OVERFETCH} rows) for "
+            f"queries {sorted(r.query_id for r in full)}; raise _PROX_OVERFETCH"
+        )
     dim = b.docs_dim().select(
         "docID", F.expr("CAST(substr(path, 5) AS LONG)").alias("doc_id")
     )

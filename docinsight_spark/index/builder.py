@@ -161,10 +161,15 @@ def read_manifests(index_dir: str) -> list[dict]:
     for fn in fsio.listdir(f"{index_dir}/manifests"):
         if not fn.endswith(".json") or fn == _LEDGER:
             continue
+        path = f"{index_dir}/manifests/{fn}"
         try:
-            m = fsio.read_json(f"{index_dir}/manifests/{fn}")
-        except (FileNotFoundError, OSError):
-            raced = True  # folded away mid-read; its ledger copy exists
+            m = fsio.read_json(path)
+        except OSError as e:
+            # folded away mid-read (its ledger copy exists); any other
+            # IO error on a file that is still there is a real fault
+            if not isinstance(e, FileNotFoundError) and fsio.exists(path):
+                raise
+            raced = True
             continue
         loose[m.get("unit", fn[: -len(".json")])] = m
     if raced:
@@ -1014,21 +1019,31 @@ class IndexBuilder:
         when no duplicate exists.  Instead: find duplicated docIDs from
         a column-pruned aggregation (docID is xxhash64(repo,path,commit),
         so the scan never touches ``content``; map-side partial agg
-        keeps the shuffle to 8-byte keys), broadcast that tiny set, and
-        only rows of duplicated docIDs pay a content shuffle.  In the
-        common all-unique case the whole input passes through a
-        broadcast anti-join with ZERO content shuffled.  Contract
+        keeps the shuffle to 8-byte keys), computed once and counted,
+        and only rows of duplicated docIDs pay a content shuffle.  In the
+        common all-unique case the input passes through untouched.  The
+        key set is broadcast when it has at most ``broadcast_seen_max``
+        keys, else both joins are plain shuffle joins.  Contract
         unchanged: one arbitrary surviving copy per docID."""
+        from pyspark import StorageLevel
+
         dups = (
             docs.groupBy("docID")
             .agg(F.count(F.lit(1)).alias("_n"))
             .filter(F.col("_n") > 1)
             .select("docID")
+            .persist(StorageLevel.MEMORY_AND_DISK)
         )
-        clean = docs.join(F.broadcast(dups), "docID", "left_anti")
-        picked = docs.join(F.broadcast(dups), "docID", "left_semi").dropDuplicates(
-            ["docID"]
-        )
+        self._gate_cache.append(dups)
+        n_dups = dups.count()
+        if n_dups == 0:
+            return docs
+        if n_dups <= self.broadcast_seen_max:
+            dups = F.broadcast(dups)
+        else:  # over the cap: stop the planner auto-broadcasting it
+            dups = dups.hint("shuffle_hash")
+        clean = docs.join(dups, "docID", "left_anti")
+        picked = docs.join(dups, "docID", "left_semi").dropDuplicates(["docID"])
         return clean.unionByName(picked)
 
     def _postings_codec(self) -> str:

@@ -3,7 +3,8 @@
 Local-mode defaults mirror what we would set on a real cluster:
 AQE on (runtime coalesce + skew-join), Arrow on (every custom kernel
 is a vectorized pandas UDF), shuffle partitions sized to cores rather
-than the 200 default, UTC timezone pinned for oracle comparison.
+than the 200 default, UTC timezone pinned for oracle comparison, and
+the engine's own Python daemon (``pyworker``) for cheap task start-up.
 """
 
 from __future__ import annotations
@@ -11,6 +12,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -51,6 +54,11 @@ def get_spark(
         # many small files that serial tail dominates and caps scaling
         .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
         .config("spark.sql.parquet.compression.codec", "zstd")
+        # Python workers fork from the engine's daemon, which stops each
+        # task re-reading pyspark.zip's directory (see pyworker.py); the
+        # workers (local, same filesystem) import this package from here
+        .config("spark.python.daemon.module", "docinsight_spark.pyworker")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
     )
     # shuffle-spill scratch: honor $SPARK_LOCAL_SCRATCH (the benchmark
     # points it at tmpfs so a contended shared disk doesn't poison

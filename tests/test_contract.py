@@ -76,3 +76,13 @@ def test_rows_only_entries_return_rows(spark, name):
     """Entries without SQL oracles still get the driver's rows-only
     check — assert they produce rows locally too."""
     assert entrymod.queries()[name](spark, SF_DIR).count() > 0
+
+
+def test_proximity_entry_fails_on_saturated_overfetch(spark, monkeypatch):
+    """An over-fetch that a query fills may have cut rows, so the
+    proximity entry must refuse to produce a comparison."""
+    from docinsight_spark import contract
+
+    monkeypatch.setattr(contract, "_PROX_OVERFETCH", 1)
+    with pytest.raises(RuntimeError, match="over-fetch saturated"):
+        contract.proximity_topk(spark, SF_DIR)

@@ -558,3 +558,42 @@ def test_compact_folds_generations_same_results(spark, gen_setup):
     _assert_same_results(before, after)
     # base still untouched through the whole lifecycle
     assert _seg_state(gen_setup["inc"]) == gen_setup["base_files"]
+
+
+def test_read_manifests_raises_io_errors_on_present_files(spark, tmp_path, monkeypatch):
+    """Only a manifest that is GONE counts as a fold race: an OSError on
+    a file that is still there (disk, permission) propagates, while an
+    OSError on a vanished file is served from the ledger like a
+    FileNotFoundError."""
+    from docinsight_spark.index import builder as B
+    from docinsight_spark.index import fsio as FS
+
+    d = str(tmp_path / "ioerr")
+    b = IndexBuilder(spark, d, n_buckets=2)
+    b._commit("run-base", run_id="base", postings=1, docs=1, langs={},
+              settings=b._settings())
+    loose = f"{d}/manifests/run-base.json"
+    real_read = FS.read_json
+
+    def denied(path):
+        if path == loose:
+            raise PermissionError(path)
+        return real_read(path)
+
+    monkeypatch.setattr(B.fsio, "read_json", denied)
+    with pytest.raises(PermissionError):
+        B.read_manifests(d)
+
+    state = {"raced": False}
+
+    def vanished(path):
+        if path == loose and not state["raced"]:
+            state["raced"] = True
+            b.fold_ledger()  # ledger gains the unit, then the file goes
+            raise OSError(f"cannot open {path}")
+        return real_read(path)
+
+    monkeypatch.setattr(B.fsio, "read_json", vanished)
+    got = {m["unit"]: m for m in B.read_manifests(d)}
+    assert state["raced"] and not FS.exists(loose)
+    assert got["run-base"]["run_id"] == "base"

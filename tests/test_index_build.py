@@ -147,6 +147,29 @@ def test_incremental_bloom_gate_matches_broadcast_gate(spark, tmp_path, tiny_cor
     assert b.meta()["n_docs"] == 250
 
 
+@pytest.mark.parametrize("cap,broadcast", [(1, False), (2_000_000, True)])
+def test_dedup_by_doc_id_broadcasts_only_under_the_cap(spark, tmp_path, cap, broadcast):
+    """Majority-duplicate input: one copy per docID either way; the
+    duplicated-key set is broadcast only when it has at most
+    ``broadcast_seen_max`` keys, else both joins shuffle."""
+    from docinsight_spark.plans.checks import plan_text
+
+    base = make_corpus(spark, 30, seed=5)
+    dup = base.limit(20)
+    docs = with_doc_id(base.unionByName(dup).unionByName(dup))
+    b = IndexBuilder(spark, str(tmp_path / "dedup"), n_buckets=2,
+                     broadcast_seen_max=cap)
+    try:
+        out = b._dedup_by_doc_id(docs)
+        per_doc = out.groupBy("docID").count()
+        assert per_doc.count() == 30
+        assert per_doc.agg(F.max("count")).first()[0] == 1
+        out.collect()
+        assert ("BroadcastExchange" in plan_text(out)) is broadcast
+    finally:
+        b._drop_gate_cache()
+
+
 def test_bloom_filter_has_no_false_negatives():
     import numpy as np
 
