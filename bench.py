@@ -189,7 +189,7 @@ def main() -> None:
             shutil.rmtree(idx_dir, ignore_errors=True)
             os.makedirs(idx_dir, exist_ok=True)
             b = IndexBuilder(spark, idx_dir, n_buckets=32)
-            b.build(corpus, n_runs=4, fanin=2)
+            b.build(corpus)
 
         bench("index_build", _build)
         extras["index_build_files_per_sec"] = round(
@@ -266,7 +266,7 @@ def main() -> None:
                 ),
                 f"bdelta{refresh_attempt['i']}", dedup_within_run=False,
             )
-            b.refresh_delta(fanin=2)
+            b.refresh_delta()
 
         bench("refresh_delta", _refresh, repeats=1)
         extras["refresh_delta_files"] = delta_n
@@ -363,7 +363,7 @@ def main() -> None:
             os.makedirs(pos_dir, exist_ok=True)
             IndexBuilder(
                 spark, pos_dir, n_buckets=32, positions=True
-            ).build(corpus, n_runs=4, fanin=2)
+            ).build(corpus)
 
         bench("positional_build", _pos_build, repeats=1)
         extras["positional_vs_build"] = round(

@@ -3,7 +3,7 @@
 Ship with::
 
     spark-submit --py-files docinsight_spark.zip -m docinsight_spark.cli build \
-        --corpus <parquet-or-iceberg:tbl> --index /path/idx --runs 4
+        --corpus <parquet-or-iceberg:tbl> --index /path/idx
     ... ingest  --corpus delta.parquet --index /path/idx --run-id d1   # O(delta)
     ... delete  --index /path/idx --where "repo = 'org/retired'"       # no rebuild
     ... compact --index /path/idx [--force] [--gc-grace 3600]
@@ -46,7 +46,7 @@ def cmd_build(args) -> int:
         spark, args.index, n_buckets=args.buckets, n_subs=args.subs,
         code_aware=not args.simple_tokens, positions=args.positions,
     )
-    b.build(corpus, n_runs=args.runs, fanin=args.fanin)
+    b.build(corpus)
     print(json.dumps({"status": "built", "meta": b.meta(),
                       "units": [m["unit"] for m in b.manifests()]}))
     return 0
@@ -86,7 +86,7 @@ def cmd_ingest(args) -> int:
     b.add_run(read_corpus(spark, args.corpus), args.run_id,
               neardup_store=nds,
               neardup_threshold=args.neardup_threshold)
-    gid = b.refresh_delta(fanin=args.fanin) if not args.no_refresh else None
+    gid = b.refresh_delta() if not args.no_refresh else None
     print(json.dumps({"status": "ingested", "run_id": args.run_id,
                       "generation": gid}))
     return 0
@@ -464,8 +464,6 @@ def main(argv: list[str] | None = None) -> int:
     b = sub.add_parser("build", help="build the inverted index")
     b.add_argument("--corpus", required=True)
     b.add_argument("--index", required=True)
-    b.add_argument("--runs", type=int, default=1)
-    b.add_argument("--fanin", type=int, default=8)
     b.add_argument("--buckets", type=int, default=32)
     b.add_argument("--subs", type=int, default=2)
     b.add_argument("--simple-tokens", action="store_true")
@@ -479,7 +477,6 @@ def main(argv: list[str] | None = None) -> int:
     i.add_argument("--corpus", required=True)
     i.add_argument("--index", required=True)
     i.add_argument("--run-id", required=True)
-    i.add_argument("--fanin", type=int, default=8)
     i.add_argument("--buckets", type=int, default=32)
     i.add_argument("--subs", type=int, default=2)
     i.add_argument("--simple-tokens", action="store_true")

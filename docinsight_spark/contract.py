@@ -1407,7 +1407,7 @@ def wand_topk_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = IndexBuilder(spark, idx, n_buckets=8, code_aware=False)
     b.build(docs.filter(F.col("doc_id") % 2 == 0).drop("doc_id"))
     b.add_run(docs.filter(F.col("doc_id") % 2 == 1).drop("doc_id"), "delta")
-    b.refresh_delta(fanin=2)
+    b.refresh_delta()
     queries = spark.createDataFrame(
         _WANDINC_QUERIES, "query_id long, query_text string"
     )
@@ -1546,7 +1546,7 @@ def wand_topk_resurrected(spark: SparkSession, sf_dir: str) -> DataFrame:
         dim.filter(F.col("doc_id") % 3 == 0).select("docID")
     ) is not None
     b.add_run(docs.filter(F.col("doc_id") % 3 == 0).drop("doc_id"), "rez")
-    assert b.refresh_delta(fanin=2) is not None
+    assert b.refresh_delta() is not None
     queries = spark.createDataFrame(
         _WANDREZ_QUERIES, "query_id long, query_text string"
     )

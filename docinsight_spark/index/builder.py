@@ -15,12 +15,13 @@ and the driver only moves manifests:
    ``WHERE embedding IS NULL`` incremental resume,
    ``embeddings/embedder.py:147-158``, and its SHA-256 dedup gate,
    ``pipeline_ingest.py:265-269``).
-2. **merge_all** — merge waves: groups of up to ``merge_max_width()``
-   runs (default 32, at least ``fanin``) are **repartitioned by shard
-   and sorted within partitions** (repartition-and-sort-within-
-   partitions); the terminal wave yields the global shard-sorted
-   posting layout.  Each wave step is manifest-guarded → a restarted
-   build skips completed waves.
+2. **merge_all** — merge waves: groups of up to ``MERGE_MAX_WIDTH``
+   runs are **repartitioned by shard and sorted within partitions**;
+   the terminal wave yields the global shard-sorted posting layout.
+   Each wave step is manifest-guarded → a restarted build skips
+   completed waves.  :meth:`IndexBuilder.build` is exactly one
+   ``add_run`` → ``merge_all`` → ``finalize``; several runs come from
+   several ``add_run`` calls (incremental ingest).
 3. **finalize** — doc/term statistics (document-frequency aggregation
    is two-stage salted against hot-term skew), then a streaming
    ``mapInPandas`` encoder turns the sorted postings into segments of
@@ -192,17 +193,18 @@ FOOTER_DRIVER_MAX = 4096
 # once per process per shard count (one tiny Spark job over a constant
 # range), then reused by every merge wave.  Lets the merge assign each
 # shard its own partition EXACTLY via hash repartition on the probe
-# column: the balance of repartitionByRange with NONE of its per-wave
+# column: the balance of range partitioning with NONE of its per-wave
 # input sampling pass (the shard key domain is fully known — sampling
 # learns nothing).
 _SHARD_PROBE_CACHE: dict[int, dict[int, int]] = {}
 
 
-def _shard_probes(spark: SparkSession, n_shards: int) -> dict[int, int] | None:
+def _shard_probes(spark: SparkSession, n_shards: int) -> dict[int, int]:
     """{shard -> probe int} such that ``pmod(hash(probe), n_shards) ==
     shard`` under Spark's own Murmur3 (computed BY Spark, so it can
-    never drift from the engine's hash); ``None`` if a shard found no
-    probe in the search range (fall back to range partitioning)."""
+    never drift from the engine's hash).  The search draws at least 64
+    ints per shard, so a shard with no probe (odds below 1e-20 even at
+    10^6 shards) raises instead of partitioning wrongly."""
     got = _SHARD_PROBE_CACHE.get(n_shards)
     if got is not None:
         return got
@@ -219,26 +221,22 @@ def _shard_probes(spark: SparkSession, n_shards: int) -> dict[int, int] | None:
         .collect()
     )
     probes = {int(r["s"]): int(r["x"]) for r in rows}
-    if len(probes) != n_shards:
-        return None  # astronomically unlikely; range partitioning still works
+    missing = [s for s in range(n_shards) if s not in probes]
+    if missing:
+        raise RuntimeError(
+            f"no partition probe found for shard {missing[0]} of {n_shards}"
+        )
     _SHARD_PROBE_CACHE[n_shards] = probes
     return probes
 
 
-def merge_max_width() -> int:
-    """Upper bound on how many run/merge outputs one merge job consumes.
-
-    Every merge wave is a FULL rewrite of all bytes that pass through
-    it, so the minimum-wave plan is the cheapest plan; hierarchical
-    waves exist only to bound per-job input width (plan size, file
-    listing, scheduler state) — a Spark shuffle handles dozens of
-    input dirs in one job just fine.  ``fanin`` therefore acts as a
-    LOWER bound on group width and this cap as the upper bound; the
-    planner widens groups up to it so that e.g. 4 runs merge in ONE
-    wave (one shuffle+sort+write) instead of two full rewrites at
-    fanin=2.  Parameterised for clusters whose driver can plan wider
-    unions (raise) or whose run dirs are huge in count (lower)."""
-    return int(os.environ.get("DOCINSIGHT_MERGE_MAX_WIDTH", "32"))
+# Upper bound on how many run/merge outputs one merge job consumes.
+# Every merge wave is a FULL rewrite of all bytes that pass through it,
+# so the minimum-wave plan is the cheapest plan: up to this many runs
+# merge in ONE wave (one shuffle+sort+write).  Hierarchical waves exist
+# only to bound per-job input width (plan size, file listing, scheduler
+# state) at 10^4+ streaming runs.
+MERGE_MAX_WIDTH = 32
 
 
 def _read_footers(path: str, read, spark: SparkSession | None = None) -> list:
@@ -941,9 +939,9 @@ class IndexBuilder:
         )
 
     def _gate_prior_runs(self, docs: DataFrame) -> DataFrame:
-        """The cross-run admission rule, shared by :meth:`add_run` and
-        :meth:`_ingest_runs`: drop docs whose docID a committed run
-        already holds — unless every past copy is dead (resurrection)."""
+        """The cross-run admission rule of :meth:`add_run`: drop docs
+        whose docID a committed run already holds — unless every past
+        copy is dead (resurrection)."""
         priors = [m for m in self.manifests() if m["unit"].startswith("run-")]
         if not priors:
             return docs
@@ -1093,7 +1091,7 @@ class IndexBuilder:
         return f"gen{max(nums, default=0) + 1:04d}"
 
     @_leased
-    def merge_all(self, fanin: int = 8) -> str:
+    def merge_all(self) -> str:
         """Repartition-and-sort merge waves until one shard-sorted layout
         remains; resumable per wave step.
 
@@ -1130,18 +1128,18 @@ class IndexBuilder:
                 )
             return final["source"]
         sources = [f"{self.dir}/runs/{r}" for r in runs]
-        source, waves = self._merge_waves(
-            sources, f"{self.dir}/merged", "merge", fanin
-        )
+        source, waves = self._merge_waves(sources, f"{self.dir}/merged", "merge")
         self._commit("merged-final", source=source, waves=waves, runs=runs)
         return source
 
     def _merge_waves(
-        self, sources: list[str], out_root: str, unit_prefix: str, fanin: int
+        self, sources: list[str], out_root: str, unit_prefix: str
     ) -> tuple[str, int]:
         """Hierarchical merge of run dirs into one shard-sorted layout
         under ``out_root``; every wave step is manifest-guarded with
         ``unit_prefix``-scoped names.  Returns (final source dir, waves).
+        Groups are ``MERGE_MAX_WIDTH`` wide, so up to that many runs
+        merge in one wave; past it, waves tier ``MERGE_MAX_WIDTH``-ary.
 
         A completed wave step is reused ONLY when its manifest's recorded
         *transitively covered source set* equals the current group's:
@@ -1154,13 +1152,7 @@ class IndexBuilder:
         it covers and reuse compares THAT."""
         covers: dict[str, list[str]] = {s: [s] for s in sources}
         wave = 0
-        # Wave plan (round 7): every wave rewrites all bytes, so use the
-        # widest group one merge job can safely consume — ``fanin`` is
-        # the caller's floor, ``merge_max_width()`` the planner's cap.
-        # 4 runs at fanin=2 now merge in ONE wave (one shuffle+sort+
-        # write) instead of two full rewrites; at 10^4 runs waves still
-        # tier, just ``width``-ary instead of ``fanin``-ary.
-        width = max(int(fanin), min(max(len(sources), 1), merge_max_width()))
+        width = min(len(sources), MERGE_MAX_WIDTH)
         while len(sources) > 1 or sources[0].startswith(f"{self.dir}/runs/"):
             groups = [sources[i : i + width] for i in range(0, len(sources), width)]
             nxt = []
@@ -1194,14 +1186,9 @@ class IndexBuilder:
         a per-shard PROBE int chosen so ``pmod(hash(probe), n) == shard``
         — every shard whole in its own partition (the balance range
         partitioning gave) with NO per-wave input sampling pass (the
-        key domain is fully known; sampling learned nothing).  Falls
-        back to range partitioning only if probe search failed.  Shared
-        by every full-posting rewrite: merge waves AND generation folds."""
+        key domain is fully known; sampling learned nothing).  Shared by
+        every full-posting rewrite: merge waves AND generation folds."""
         probes = _shard_probes(self.spark, self.n_shards)
-        if probes is None:
-            return postings.repartitionByRange(
-                self.n_shards, "doc_bucket", "doc_sub"
-            )
         probe_map = F.create_map(
             *[F.lit(v) for s in range(self.n_shards)
               for v in (s, probes[s])]
@@ -1249,7 +1236,7 @@ class IndexBuilder:
         return exact (n_docs, sum_dl) for the posting set.
 
         doc_stats: (docID, dl) per bucket — the kernel-side dl source.
-        Hash repartition, NOT repartitionByRange: range partitioning
+        Hash repartition, NOT range partitioning: range partitioning
         samples its input, which would run the whole groupBy twice
         (range directly on an unmaterialized aggregate = double agg).
         The key domain is tiny (n_buckets ints), so hash clustering is
@@ -1573,139 +1560,13 @@ class IndexBuilder:
         )
         return clean.unionByName(newest)
 
-    def build(
-        self,
-        corpus: DataFrame,
-        n_runs: int = 1,
-        fanin: int = 8,
-        dedup_within_run: bool = True,
-    ) -> None:
-        """Full build. ``n_runs > 1`` splits the corpus to exercise the
-        merge-wave machinery (and models incremental ingest batches):
-        :meth:`_ingest_runs` slices it by ``pmod(xxhash64(docID), k)`` —
-        the same key on a fresh build and on a resumed one."""
-        if n_runs == 1:
-            self.add_run(corpus, "run00000", dedup_within_run)
-        else:
-            self._ingest_runs(corpus, n_runs, dedup_within_run)
-        self.merge_all(fanin=fanin)
+    def build(self, corpus: DataFrame, dedup_within_run: bool = True) -> None:
+        """Full build: :meth:`add_run` as ``run00000`` → :meth:`merge_all`
+        → :meth:`finalize`.  Every step is manifest-guarded, so a rerun
+        after a crash resumes from the first unfinished one."""
+        self.add_run(corpus, "run00000", dedup_within_run)
+        self.merge_all()
         self.finalize()
-
-    @_leased
-    def _ingest_runs(
-        self, corpus: DataFrame, n_runs: int, dedup_within_run: bool = True
-    ) -> None:
-        """Single-pass fused multi-run ingest (round 7).
-
-        Run ``run<i>`` holds the docs with ``pmod(xxhash64(docID), k) ==
-        i``.  ALL pending runs' postings are written in ONE tokenize job
-        and all their docs tables in ONE job — partitioned writes on the
-        run key (derivable on both sides of the tokenize kernel), whose
-        partition dirs then move into the canonical ``runs/<id>/``
-        layout and commit one run manifest each.  Content scans are 2,
-        not 2·k as with one :meth:`add_run` per slice.  The global docID
-        dedup equals add_run's within-run dedup + cross-run gate
-        composition (both keep one arbitrary copy per docID).
-
-        Resume: run keys that already have a manifest are skipped; only
-        the pending keys' docs are re-sliced (same key, so they are
-        exactly the docs those runs should hold) and pass the cross-run
-        gate :meth:`add_run` applies against every committed run.  A
-        crash between per-run commits therefore loses no document.
-        Un-manifested moved dirs are overwritten; merge reads only
-        manifested runs."""
-        done = {
-            m["run_id"] for m in self.manifests() if m["unit"].startswith("run-")
-        }
-        pending = [i for i in range(n_runs) if f"run{i:05d}" not in done]
-        if not pending:
-            return
-        self._check_meta_compat()
-        self._check_run_compat()
-        run_col = F.pmod(F.xxhash64("docID"), F.lit(n_runs)).cast("int")
-        docs = with_doc_id(corpus)
-        if dedup_within_run:
-            docs = self._dedup_by_doc_id(docs)
-        if len(pending) < n_runs:
-            docs = docs.filter(run_col.isin(pending))
-        docs = self._gate_prior_runs(docs)
-        tmp = f"{self.dir}/_ingest_tmp"
-        fsio.rmtree(tmp)
-        postings = self._sharded(
-            build_postings(
-                docs, code_aware=self.code_aware, with_positions=self.positions
-            )
-        )
-        try:
-            (
-                postings.withColumn("_run", run_col)
-                .write.mode("overwrite")
-                .option("compression", self._postings_codec())
-                .partitionBy("_run")
-                .parquet(f"{tmp}/postings")
-            )
-            (
-                docs.select(
-                    "docID", "repo", "path", "commit", "lang", "content_sha"
-                )
-                .withColumn("_run", run_col)
-                .write.mode("overwrite")
-                .partitionBy("_run")
-                .parquet(f"{tmp}/docs")
-            )
-        finally:
-            self._drop_gate_cache()
-        # per-run language mix (majority-vote input for the query-side
-        # tokenizer): one tiny columnar scan of the just-written docs —
-        # the fused write cannot carry per-run observed metrics
-        lang_rows = (
-            self.spark.read.parquet(f"{tmp}/docs")
-            .groupBy("_run", F.lower("lang").alias("_lg"))
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .collect()
-        )
-        from docinsight_spark.functions.tokenizer import _MASKS
-
-        langs_per_run: dict[int, dict[str, int]] = {}
-        for r in lang_rows:
-            if r["_lg"] in _MASKS:
-                langs_per_run.setdefault(int(r["_run"]), {})[r["_lg"]] = int(
-                    r["_n"]
-                )
-        empty_posts_schema = (
-            "term string, docID long, tf long"
-            + (", positions array<int>" if self.positions else "")
-            + ", doc_bucket int, doc_sub int"
-        )
-        empty_docs_schema = (
-            "docID long, repo string, path string, commit string, "
-            "lang string, content_sha string"
-        )
-        for i in pending:
-            rid = f"run{i:05d}"
-            base = f"{self.dir}/runs/{rid}"
-            fsio.rmtree(base)
-            for sub, schema in (
-                ("postings", empty_posts_schema),
-                ("docs", empty_docs_schema),
-            ):
-                src = f"{tmp}/{sub}/_run={i}"
-                if fsio.exists(src):
-                    fsio.move(src, f"{base}/{sub}")
-                else:
-                    # a run key with no rows (tiny corpora): materialise
-                    # an empty-but-readable dataset so merge/gate scans
-                    # never trip on a missing path
-                    self.spark.createDataFrame([], schema).repartition(
-                        1
-                    ).write.mode("overwrite").parquet(f"{base}/{sub}")
-            n_postings, _ = _footer_rows(f"{base}/postings", spark=self.spark)
-            n_docs, _ = _footer_rows(f"{base}/docs", spark=self.spark)
-            self._commit(
-                f"run-{rid}", run_id=rid, postings=n_postings, docs=n_docs,
-                langs=langs_per_run.get(i, {}), settings=self._settings(),
-            )
-        fsio.rmtree(tmp)
 
     def meta(self) -> dict:
         return fsio.read_json(f"{self.dir}/_meta.json")
@@ -2088,7 +1949,7 @@ class IndexBuilder:
     # -- incremental generations (O(delta) refresh + compaction) -------------
 
     @_leased
-    def refresh_delta(self, fanin: int = 8) -> str | None:
+    def refresh_delta(self) -> str | None:
         """O(delta) incremental refresh: fold runs not yet covered by the
         base index or an existing generation into a NEW segment
         generation — only the delta is merged and encoded; the base
@@ -2111,7 +1972,7 @@ class IndexBuilder:
         double-counting.  Returns the new generation id, ``"base"`` for
         an initial build, or ``None`` when no new runs exist."""
         if not self._done("merged-final"):
-            self.merge_all(fanin=fanin)
+            self.merge_all()
             self.finalize()
             return "base"
         if not self._done("finalize"):
@@ -2128,7 +1989,7 @@ class IndexBuilder:
         groot = f"{self.dir}/generations/{gid}"
         src, _ = self._merge_waves(
             [f"{self.dir}/runs/{r}" for r in new],
-            f"{groot}/merged", f"genmerge-{gid}", fanin,
+            f"{groot}/merged", f"genmerge-{gid}",
         )
         n_rows, _ = _footer_rows(f"{src}/postings", spark=self.spark)
         if n_rows == 0:

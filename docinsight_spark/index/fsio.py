@@ -114,20 +114,6 @@ def glob_parquet(path: str) -> list[str]:
     )
 
 
-def move(src: str, dst: str) -> None:
-    """Rename ``src`` (file or directory) to ``dst``, creating the
-    destination's parent.  On local filesystems this is an atomic
-    rename; pyarrow maps it to the store's native move elsewhere
-    (object stores without directory rename copy per object — callers
-    on such stores should prefer layouts that avoid directory moves)."""
-    fs, s = resolve(src)
-    _, d = resolve(dst)
-    parent = d.rsplit("/", 1)[0]
-    if parent:
-        fs.create_dir(parent, recursive=True)
-    fs.move(s, d)
-
-
 def remove(path: str) -> None:
     fs, p = resolve(path)
     fs.delete_file(p)

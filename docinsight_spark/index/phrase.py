@@ -58,6 +58,7 @@ cheap.
 from __future__ import annotations
 
 import re
+from collections import Counter
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -91,22 +92,31 @@ CAND_COLLECT_MAX = 200_000
 TERM_INLIST_MAX = 1024
 
 
-def phrase_single_pass_max_rows() -> int:
-    """Cost gate for the single-pass positional plan (round 7).
+# Cost gate for the single-pass positional plan (round 7).  The
+# candidate pre-pass (docs containing ALL the phrase's terms, bounded
+# collect, bucket pruning) exists to keep a hot-term phrase from reading
+# positions of every partial match — but for selective batches it is
+# pure overhead: an extra scan + aggregation + driver round-trip that
+# prunes nothing.  When the batch's total postings volume
+# Σ_(query,offset) df(term) — known exactly from term_stats, one tiny
+# pushed-down probe — is at most this many rows, the kernel reads the
+# matched rows directly and its completeness check (groups with fewer
+# rows than offsets never score) does the filtering.  Hot-term batches
+# above the bound keep the pre-pass.
+SINGLE_PASS_MAX_ROWS = 2_000_000
 
-    The candidate pre-pass (docs containing ALL the phrase's terms,
-    bounded collect, bucket pruning) exists to keep a hot-term phrase
-    from reading positions of every partial match — but for selective
-    batches it is pure overhead: an extra scan + aggregation + driver
-    round-trip that prunes nothing.  When the batch's total postings
-    volume Σ_(query,offset) df(term) — known exactly from term_stats,
-    one tiny pushed-down probe — is at most this many rows, the kernel
-    reads the matched rows directly and its completeness check (groups
-    with fewer rows than offsets never score) does the filtering.
-    Hot-term batches above the bound keep the pre-pass."""
-    import os
 
-    return int(os.environ.get("DOCINSIGHT_PHRASE_SINGLE_PASS_MAX", "2000000"))
+def _alive_queries(
+    offsets: list[tuple[int, int, str]], df_map: dict[str, int]
+) -> set[int]:
+    """Query ids whose every term occurs in the corpus — one pass: a
+    query with an absent term can never match."""
+    qids, dead = set(), set()
+    for q, _, t in offsets:
+        qids.add(q)
+        if df_map.get(t, 0) <= 0:
+            dead.add(q)
+    return qids - dead
 
 
 def _restrict_terms(df: DataFrame, terms: list[str]) -> DataFrame:
@@ -280,11 +290,7 @@ def _positional_search(
     all_terms = sorted({t for _, _, t in offsets})
     offs = spark.createDataFrame(offsets, "query_id long, off int, term string")
     noff = spark.createDataFrame(
-        [
-            (qid, sum(1 for q, _, _ in offsets if q == qid))
-            for qid in sorted({q for q, _, _ in offsets})
-        ],
-        "query_id long, n int",
+        sorted(Counter(q for q, _, _ in offsets).items()), "query_id long, n int"
     )
 
     roots = merged_roots(index_dir, meta)
@@ -318,14 +324,9 @@ def _positional_search(
     df_rows = _restrict_terms(tstats, all_terms).collect()
     df_map = {r["term"]: int(r["df"]) for r in df_rows}
     cost_single = sum(df_map.get(t, 0) for _, _, t in offsets)
-    if cost_single <= phrase_single_pass_max_rows():
-        # a query with a term absent from the corpus can never match —
-        # and an entirely dead batch returns without any heavy job
-        alive = {
-            qid for qid in {q for q, _, _ in offsets}
-            if all(df_map.get(t, 0) > 0 for q, _, t in offsets if q == qid)
-        }
-        if not alive:
+    if cost_single <= SINGLE_PASS_MAX_ROWS:
+        # an entirely dead batch returns without any heavy job
+        if not _alive_queries(offsets, df_map):
             return empty
         return _score_phrase_hits(
             spark, index_dir, meta, roots, scan, offs, noff, None, None,

@@ -98,7 +98,7 @@ def stream_ingest(
     return writer.start()
 
 
-def refresh(builder: IndexBuilder, fanin: int = 8) -> str | None:
+def refresh(builder: IndexBuilder) -> str | None:
     """Fold accumulated stream runs into the queryable index — O(delta).
 
     First call (no finalized base yet) performs the full base build;
@@ -108,4 +108,4 @@ def refresh(builder: IndexBuilder, fanin: int = 8) -> str | None:
     re-merged or re-encoded, so refresh cost tracks the delta size, not
     the corpus size.  Periodically call :meth:`IndexBuilder.compact` to
     fold small/drifted generations."""
-    return builder.refresh_delta(fanin=fanin)
+    return builder.refresh_delta()

@@ -56,7 +56,7 @@ def main() -> None:
         corpus = spark.read.parquet(cdir)
         t0 = time.time()
         IndexBuilder(spark, idx, n_buckets=32).build(
-            corpus, n_runs=2, fanin=2, dedup_within_run=False
+            corpus, dedup_within_run=False
         )
         build_s = time.time() - t0
 

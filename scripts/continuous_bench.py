@@ -88,9 +88,9 @@ def main() -> None:
     orig_refresh = b.refresh_delta
     orig_compact = b.compact
 
-    def timed_refresh(fanin: int = 8):
+    def timed_refresh():
         t = time.time()
-        gid = orig_refresh(fanin=fanin)
+        gid = orig_refresh()
         dt = time.time() - t
         loose = sum(
             1 for f in os.listdir(f"{idx}/manifests")

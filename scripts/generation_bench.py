@@ -66,7 +66,7 @@ def main() -> None:
         t0 = time.time()
         b.build(
             make_corpus(spark, BASE_FILES, seed=1, partitions=cores * 2),
-            n_runs=2, fanin=2, dedup_within_run=False,
+            dedup_within_run=False,
         )
         base_s = round(time.time() - t0, 2)
         query_by_gens = {0: qtime()}
@@ -80,7 +80,7 @@ def main() -> None:
                 f"delta{i}", dedup_within_run=False,
             )
             t0 = time.time()
-            b.refresh_delta(fanin=2)
+            b.refresh_delta()
             refresh_secs.append(round(time.time() - t0, 2))
             query_by_gens[i + 1] = qtime()
         t0 = time.time()

@@ -70,7 +70,7 @@ try:
     t0 = time.time()
     # identical job across levels: only resources change
     b = IndexBuilder(spark, idx, n_buckets=32, positions=True)
-    b.build(corpus, n_runs=2, fanin=2, dedup_within_run=False)
+    b.build(corpus, dedup_within_run=False)
     build_s = time.time() - t0
     # deterministic phrase set straight from the corpus GENERATOR (not a
     # limit() sample — limit is partitioning-dependent, which would give

@@ -2,9 +2,8 @@
 """Phase-level profiling of the index build (guide §1: measure first).
 
 Replicates exactly what bench.py's ``index_build`` / ``positional_build``
-stages do (build(corpus, n_runs=4, fanin=2)) but times every phase:
-the fused multi-run ingest, merge_all, and finalize with its stats and
-encode phases.  Writes one JSON line.  Not part of the driver contract
+stages do (build(corpus)) but times every phase: add_run, merge_all,
+and finalize with its stats and encode phases.  Writes one JSON line.  Not part of the driver contract
 — measurement only.
 
 Usage: python scripts/profile_build.py [n_files] [--positions]
@@ -65,8 +64,8 @@ def main() -> None:
             b = IndexBuilder(spark, idx_dir, n_buckets=32, positions=POSITIONS)
 
             t0_all = time.time()
-            clock("add_runs", lambda: b._ingest_runs(corpus, 4, True))
-            clock("merge_all", lambda: b.merge_all(fanin=2))
+            clock("add_run", lambda: b.add_run(corpus, "run00000"))
+            clock("merge_all", b.merge_all)
             # finalize's stats and encode phases, timed inside the
             # builder's own finalize() call
             b._write_doc_term_stats = timed(

@@ -85,7 +85,7 @@ def main() -> None:
             deduped = docs.dropDuplicates(["docID"])
         save("ingest_dedup", grab(deduped))
 
-        b.build(corpus, n_runs=4, fanin=2)
+        b.build(corpus)
 
         # merge-wave plan: the repartition feeding one merge write
         # (round 7: probe-int hash repartition vs repartitionByRange)
@@ -115,9 +115,7 @@ def main() -> None:
         ))
 
         # positional index for phrase/NEAR plans (bench geometry)
-        IndexBuilder(spark, pos_dir, n_buckets=32, positions=True).build(
-            corpus, n_runs=4, fanin=2
-        )
+        IndexBuilder(spark, pos_dir, n_buckets=32, positions=True).build(corpus)
         pdf_s = corpus.limit(30).toPandas()
         toks_s = tokenize_code_pandas(pdf_s["content"], pdf_s["lang"])
         phrases: list[tuple[int, str]] = []

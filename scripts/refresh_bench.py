@@ -62,17 +62,17 @@ def main() -> None:
 
         t0 = time.time()
         b = IndexBuilder(spark, inc, n_buckets=32)
-        b.build(base, n_runs=2, fanin=2, dedup_within_run=False)
+        b.build(base, dedup_within_run=False)
         base_s = time.time() - t0
 
         b.add_run(delta, "delta", dedup_within_run=False)
         t0 = time.time()
-        gid = b.refresh_delta(fanin=2)
+        gid = b.refresh_delta()
         refresh_s = time.time() - t0
 
         t0 = time.time()
         IndexBuilder(spark, full, n_buckets=32).build(
-            base.unionByName(delta), n_runs=2, fanin=2, dedup_within_run=False
+            base.unionByName(delta), dedup_within_run=False
         )
         full_s = time.time() - t0
 

@@ -76,7 +76,7 @@ try:
     # n_buckets fixed across parallelism levels: the JOB must be identical,
     # only the resources change (the north-rule scaling criterion).
     b = IndexBuilder(spark, idx, n_buckets=32)
-    b.build(corpus, n_runs=2, fanin=2, dedup_within_run=False)
+    b.build(corpus, dedup_within_run=False)
     build_s = time.time() - t0
     queries = make_queries(spark, corpus_n=n_files, n_queries=N_QUERIES)
     t0 = time.time()

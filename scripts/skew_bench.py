@@ -114,7 +114,7 @@ def main() -> None:
 
         t0 = time.time()
         b = IndexBuilder(spark, idx, n_buckets=32)
-        b.build(corpus, n_runs=2, fanin=2, dedup_within_run=False)
+        b.build(corpus, dedup_within_run=False)
         build_s = time.time() - t0
 
         # hot-term query + mixed query against the skewed index

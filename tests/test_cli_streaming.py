@@ -29,7 +29,7 @@ def test_cli_build_query_report(spark, cli_env, capsys):
     idx = f"{cli_env['root']}/idx"
     assert cli_main([
         "build", "--corpus", cli_env["corpus"], "--index", idx,
-        "--runs", "2", "--fanin", "2", "--buckets", "4",
+        "--buckets", "4",
     ]) == 0
     out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert out["status"] == "built" and out["meta"]["n_docs"] == 200
@@ -73,14 +73,14 @@ def test_cli_ingest_and_compact(spark, cli_env, capsys):
     idx = f"{cli_env['root']}/idx_inc"
     assert cli_main([
         "build", "--corpus", cli_env["corpus"], "--index", idx,
-        "--runs", "1", "--buckets", "4",
+        "--buckets", "4",
     ]) == 0
     capsys.readouterr()
     delta = f"{cli_env['root']}/delta"
     make_corpus(spark, 100, seed=77).write.mode("overwrite").parquet(delta)
     assert cli_main([
         "ingest", "--corpus", delta, "--index", idx,
-        "--run-id", "d1", "--fanin", "2", "--buckets", "4",
+        "--run-id", "d1", "--buckets", "4",
     ]) == 0
     out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert out["status"] == "ingested" and out["generation"] == "gen0001"
@@ -139,7 +139,7 @@ def test_streaming_incremental_ingest(spark, tmp_path):
     # so indexed docs < 60 + drop2 rows
     total_docs = sum(m["docs"] for m in runs2)
 
-    refresh(b, fanin=2)  # first refresh = full base build
+    refresh(b)  # first refresh = full base build
     assert b.meta()["n_docs"] == total_docs
     queries = make_queries(spark, corpus_n=60, n_queries=4)
     res = wand_search(spark, idx, queries, k=5)
@@ -152,7 +152,7 @@ def test_streaming_incremental_ingest(spark, tmp_path):
     ).write.mode("append").parquet(inbox)
     q = stream_ingest(spark, b, inbox, ckpt, available_now=True)
     q.awaitTermination(120)
-    gid = refresh(b, fanin=2)
+    gid = refresh(b)
     assert gid is not None and gid != "base"
     meta = b.meta()
     assert [g["id"] for g in meta["generations"]] == [gid]
@@ -354,7 +354,7 @@ def test_cli_ingest_with_neardup_store(spark, tmp_path, capsys):
     base.write.mode("overwrite").parquet(c0)
     assert cli_main([
         "ingest", "--corpus", c0, "--index", idx, "--run-id", "r0",
-        "--fanin", "2", "--buckets", "4", "--neardup-store", nd,
+        "--buckets", "4", "--neardup-store", nd,
     ]) == 0
     capsys.readouterr()
     # delta: 10 fresh + 5 near-identical mirrors of base docs
@@ -367,7 +367,7 @@ def test_cli_ingest_with_neardup_store(spark, tmp_path, capsys):
     fresh.unionByName(mirror).write.mode("overwrite").parquet(c1)
     assert cli_main([
         "ingest", "--corpus", c1, "--index", idx, "--run-id", "r1",
-        "--fanin", "2", "--neardup-store", nd,
+        "--neardup-store", nd,
         "--neardup-threshold", "0.5",
     ]) == 0
     capsys.readouterr()

@@ -6,8 +6,8 @@ indexed).
   ``refresh_delta`` and ``compact`` lands all data before ``_meta.json``
   moves: a crash in the segment encode leaves the meta untouched, and a
   rerun converges to the uncrashed index.
-* The fused multi-run ingest resumes on the same ``pmod(xxhash64(docID),
-  k)`` run key: a crash at any per-run commit loses no document.
+* A multi-run ``add_run`` ingest that crashes inside a run resumes from
+  its first uncommitted run: no document is lost or admitted twice.
 """
 
 from __future__ import annotations
@@ -16,6 +16,7 @@ from pathlib import Path
 
 import numpy as np
 import pytest
+from conftest import add_runs
 
 from docinsight_spark.corpus import make_corpus, make_queries
 from docinsight_spark.index.builder import IndexBuilder, load_doc_stats
@@ -37,23 +38,23 @@ def _advance(b: IndexBuilder, corpora, stage: str) -> None:
     """Drive ``b`` through the life-cycle up to (not including) ``stage``."""
     base, d1, d2 = corpora
     b.add_run(base, "run00000")
-    b.merge_all(fanin=2)
+    b.merge_all()
     if stage == "finalize":
         return
     b.finalize()
     b.add_run(d1, "d1")
     if stage == "refresh_delta":
         return
-    b.refresh_delta(fanin=2)
+    b.refresh_delta()
     b.add_run(d2, "d2")
-    b.refresh_delta(fanin=2)
+    b.refresh_delta()
 
 
 def _run_stage(b: IndexBuilder, stage: str) -> None:
     if stage == "finalize":
         b.finalize()
     elif stage == "refresh_delta":
-        assert b.refresh_delta(fanin=2) == "gen0001"
+        assert b.refresh_delta() == "gen0001"
     else:
         assert b.compact(force=True) == "gen0003"
 
@@ -75,14 +76,14 @@ def uncrashed(spark, tmp_path_factory):
     b = IndexBuilder(spark, d, n_buckets=4)
     base, d1, d2 = _corpora(spark)
     b.add_run(base, "run00000")
-    b.merge_all(fanin=2)
+    b.merge_all()
     b.finalize()
     out = {"finalize": _state(spark, d)}
     b.add_run(d1, "d1")
-    b.refresh_delta(fanin=2)
+    b.refresh_delta()
     out["refresh_delta"] = _state(spark, d)
     b.add_run(d2, "d2")
-    b.refresh_delta(fanin=2)
+    b.refresh_delta()
     b.compact(force=True)
     out["compact"] = _state(spark, d)
     return out
@@ -118,34 +119,47 @@ def test_set_writer_crash_leaves_meta_and_converges(
     assert IndexBuilder(spark, d, n_buckets=4).fsck()["ok"]
 
 
-N_RUNS = 4
+N_RUNS = 3
 
 
-@pytest.mark.parametrize("crash_at", range(1, N_RUNS + 1))
-def test_ingest_resume_after_run_commit_crash_loses_no_docs(
-    spark, tmp_path, monkeypatch, tiny_corpus, crash_at
+@pytest.mark.parametrize("crash_in", ["commit", "docs_write"])
+def test_add_runs_resume_after_crash_loses_no_docs(
+    spark, tmp_path, monkeypatch, tiny_corpus, crash_in
 ):
-    """Crash at the ``crash_at``-th per-run commit of a fused
-    ``build(n_runs=4)``, rerun with a fresh builder: the indexed docID
-    set is the corpus docID set, each doc admitted exactly once."""
+    """Crash in run 2 of a 3-run ingest — at its manifest commit, or in
+    its docs write after its postings landed — then rerun the ingest,
+    ``merge_all`` and ``finalize`` with a fresh builder: the indexed
+    docID set is the corpus docID set, each doc admitted exactly once."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
     d = str(tmp_path / "idx")
-    orig = IndexBuilder._commit
-    seen = []
+    if crash_in == "commit":
+        orig = IndexBuilder._commit
 
-    def crashing_commit(self, unit, **counters):
-        if unit.startswith("run-"):
-            seen.append(unit)
-            if len(seen) == crash_at:
+        def crashing(self, unit, **counters):
+            if unit == "run-run00001":
                 raise RuntimeError(f"injected crash at {unit}")
-        return orig(self, unit, **counters)
+            return orig(self, unit, **counters)
 
-    monkeypatch.setattr(IndexBuilder, "_commit", crashing_commit)
+        monkeypatch.setattr(IndexBuilder, "_commit", crashing)
+    else:
+        orig = DataFrameWriter.parquet
+
+        def crashing(self, path, *a, **k):
+            if path.endswith("/runs/run00001/docs"):
+                assert Path(path).with_name("postings").is_dir()
+                raise RuntimeError(f"injected crash writing {path}")
+            return orig(self, path, *a, **k)
+
+        monkeypatch.setattr(DataFrameWriter, "parquet", crashing)
     with pytest.raises(RuntimeError, match="injected crash"):
-        IndexBuilder(spark, d, n_buckets=4).build(tiny_corpus, n_runs=N_RUNS)
+        add_runs(IndexBuilder(spark, d, n_buckets=4), tiny_corpus, N_RUNS)
     monkeypatch.undo()
 
     b = IndexBuilder(spark, d, n_buckets=4)
-    b.build(tiny_corpus, n_runs=N_RUNS)
+    add_runs(b, tiny_corpus, N_RUNS)
+    b.merge_all()
+    b.finalize()
     want = {
         int(r["docID"])
         for r in with_doc_id(tiny_corpus).select("docID").distinct().collect()

@@ -16,6 +16,7 @@ import os
 
 import numpy as np
 import pytest
+from conftest import add_runs
 from pyspark.sql import functions as F
 
 from docinsight_spark.corpus import make_corpus, make_queries
@@ -66,9 +67,11 @@ def del_setup(spark, tmp_path_factory):
 
     d = str(root / "idx")
     b = IndexBuilder(spark, d, n_buckets=4)
-    b.build(base, n_runs=2, fanin=2)
+    add_runs(b, base, 2)
+    b.merge_all()
+    b.finalize()
     b.add_run(delta, "delta1")
-    b.refresh_delta(fanin=2)
+    b.refresh_delta()
     pre_meta = b.meta()
 
     did = b.delete_matching(F.xxhash64("content_sha") % 3 == 0)
@@ -77,7 +80,7 @@ def del_setup(spark, tmp_path_factory):
     full = str(root / "rebuild")
     corpus = base.unionByName(delta)
     IndexBuilder(spark, full, n_buckets=4).build(
-        _survivor_corpus(spark, b, corpus), n_runs=2, fanin=2
+        _survivor_corpus(spark, b, corpus)
     )
     q = make_queries(spark, corpus_n=200, n_queries=6)
     return {
@@ -301,7 +304,7 @@ def test_compact_refold_sees_tombstones_added_after_crash(
     b = IndexBuilder(spark, d, n_buckets=2)
     b.build(make_corpus(spark, 120, seed=21, partitions=2))
     b.add_run(make_corpus(spark, 80, seed=22, partitions=2), "delta1")
-    assert b.refresh_delta(fanin=2) == "gen0001"
+    assert b.refresh_delta() == "gen0001"
 
     orig = IndexBuilder._write_doc_term_stats
 
@@ -367,7 +370,7 @@ def test_fsck_detects_corruption(spark, tmp_path):
     b = IndexBuilder(spark, d, n_buckets=4)
     b.build(make_corpus(spark, 120, seed=91, partitions=2))
     b.add_run(make_corpus(spark, 60, seed=92, partitions=2), "d1")
-    b.refresh_delta(fanin=2)
+    b.refresh_delta()
     assert b.fsck()["ok"]
 
     meta = b.meta()
@@ -399,7 +402,7 @@ def test_gc_runs_after_compaction(spark, del_setup):
     _assert_same(before, _res(wand_search(spark, b.dir, q, k=5)))
     # further incremental work functions without raw run postings
     b.add_run(make_corpus(spark, 60, seed=15, partitions=2), "late1")
-    gid = b.refresh_delta(fanin=2)
+    gid = b.refresh_delta()
     assert gid is not None
     assert wand_search(spark, b.dir, q, k=5).count() > 0
     gid2 = b.compact(force=True)

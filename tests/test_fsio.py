@@ -5,6 +5,7 @@ index dir is a filesystem URI (``file://`` stands in for s3://hdfs://
 from __future__ import annotations
 
 import pytest
+from conftest import add_runs
 from pyarrow import fs as pafs
 
 from docinsight_spark.corpus import make_corpus, make_queries
@@ -40,7 +41,9 @@ def test_full_build_and_query_on_file_uri(spark, tmp_path, tiny_corpus):
     doc-stats reads inside kernels, query — all against file://."""
     idx = f"file://{tmp_path}/idx_uri"
     b = IndexBuilder(spark, idx, n_buckets=4)
-    b.build(tiny_corpus, n_runs=2, fanin=2)
+    add_runs(b, tiny_corpus, 2)
+    b.merge_all()
+    b.finalize()
     units = {m["unit"] for m in b.manifests()}
     assert "merged-final" in units and "finalize" in units
     assert b.meta()["n_docs"] == 200
@@ -49,7 +52,9 @@ def test_full_build_and_query_on_file_uri(spark, tmp_path, tiny_corpus):
     assert res.count() > 0
     # resume still short-circuits through the URI
     b2 = IndexBuilder(spark, idx, n_buckets=4)
-    b2.build(tiny_corpus, n_runs=2, fanin=2)
+    add_runs(b2, tiny_corpus, 2)
+    b2.merge_all()
+    b2.finalize()
     purge_index(idx)
     assert not fsio.exists(f"{idx}/segments")
 

@@ -17,6 +17,7 @@ import os
 
 import numpy as np
 import pytest
+from conftest import add_runs
 
 from docinsight_spark.corpus import make_corpus, make_queries
 from docinsight_spark.evaluation import oracle_from_index
@@ -53,17 +54,19 @@ def gen_setup(spark, tmp_path_factory):
 
     inc_dir = str(root / "inc")
     b = IndexBuilder(spark, inc_dir, n_buckets=4)
-    b.build(base, n_runs=2, fanin=2)
+    add_runs(b, base, 2)
+    b.merge_all()
+    b.finalize()
     base_files = _seg_state(inc_dir)
 
     b.add_run(d1, "delta1")
-    gid1 = b.refresh_delta(fanin=2)
+    gid1 = b.refresh_delta()
     b.add_run(d2, "delta2")
-    gid2 = b.refresh_delta(fanin=2)
+    gid2 = b.refresh_delta()
 
     full_dir = str(root / "full")
     IndexBuilder(spark, full_dir, n_buckets=4).build(
-        base.unionByName(d1).unionByName(d2), n_runs=2, fanin=2
+        base.unionByName(d1).unionByName(d2)
     )
     return {
         "builder": b,
@@ -111,10 +114,10 @@ def test_refresh_matches_exact_oracle(spark, gen_setup):
 def test_refresh_noop_when_covered(spark, gen_setup):
     b = gen_setup["builder"]
     before = b.meta()
-    assert b.refresh_delta(fanin=2) is None
+    assert b.refresh_delta() is None
     assert b.meta() == before
     # merge_all sees generation-covered runs — no stale-run-set error
-    b.merge_all(fanin=2)
+    b.merge_all()
 
 
 def test_empty_delta_records_coverage(spark, tmp_path, tiny_corpus):
@@ -125,12 +128,12 @@ def test_empty_delta_records_coverage(spark, tmp_path, tiny_corpus):
     b.build(tiny_corpus)
     before = b.meta()
     b.add_run(tiny_corpus, "dupe")  # 100% overlap → gate removes all
-    gid = b.refresh_delta(fanin=2)
+    gid = b.refresh_delta()
     assert gid == "gen0001"
     assert b.meta() == before
     assert not os.path.isdir(f"{d}/generations/{gid}")
-    assert b.refresh_delta(fanin=2) is None
-    b.merge_all(fanin=2)  # covered → no error
+    assert b.refresh_delta() is None
+    b.merge_all()  # covered → no error
 
 
 def test_drift_safe_bounds_when_avgdl_grows(spark, tmp_path):
@@ -143,9 +146,11 @@ def test_drift_safe_bounds_when_avgdl_grows(spark, tmp_path):
     b = IndexBuilder(spark, d, n_buckets=4)
     short = make_corpus(spark, 250, seed=11, partitions=4, stmts_range=(3, 6))
     long = make_corpus(spark, 250, seed=12, partitions=4, stmts_range=(40, 60))
-    b.build(short, n_runs=2, fanin=2)
+    add_runs(b, short, 2)
+    b.merge_all()
+    b.finalize()
     b.add_run(long, "longdocs")
-    b.refresh_delta(fanin=2)
+    b.refresh_delta()
     meta = b.meta()
     # the test only means something if we really are in the drift regime
     assert meta["avgdl"] > meta["base"]["avgdl_enc"] * 1.5
@@ -166,12 +171,12 @@ def test_compact_triggers_on_avgdl_drift(spark, tmp_path):
     b.add_run(
         make_corpus(spark, 60, seed=72, partitions=2, stmts_range=(3, 6)), "d1"
     )
-    b.refresh_delta(fanin=2)  # gen0001 encoded at the short-docs avgdl
+    b.refresh_delta()  # gen0001 encoded at the short-docs avgdl
     b.add_run(
         make_corpus(spark, 150, seed=73, partitions=2, stmts_range=(50, 70)),
         "d2",
     )
-    b.refresh_delta(fanin=2)  # long docs push global avgdl far up
+    b.refresh_delta()  # long docs push global avgdl far up
     meta = b.meta()
     g1 = [g for g in meta["generations"] if g["id"] == "gen0001"][0]
     assert meta["avgdl"] > float(g1["avgdl_enc"]) * 1.25  # in the drift regime
@@ -205,7 +210,7 @@ def test_mismatched_builder_geometry_refused(spark, tmp_path):
     right = IndexBuilder.for_index(spark, d)
     assert right.n_buckets == 4 and right.code_aware is True
     right.add_run(make_corpus(spark, 50, seed=42, partitions=2), "d1")
-    assert right.refresh_delta(fanin=2) == "gen0001"
+    assert right.refresh_delta() == "gen0001"
 
 
 def test_writer_lease_second_writer_refused(spark, tmp_path):
@@ -243,7 +248,7 @@ def test_writer_lease_second_writer_refused(spark, tmp_path):
     assert not os.path.exists(f"{d}/_writer.lock")  # released at op end
 
     # normal sequential ops keep working
-    b1.merge_all(fanin=2)
+    b1.merge_all()
     b1.finalize()
     assert b1.meta()["n_docs"] == 60
 
@@ -344,15 +349,15 @@ def test_ledger_survives_build_refresh_cycle(spark, tmp_path):
              if f.endswith(".json") and f != "_ledger.json"]
     assert loose == []
     b.add_run(make_corpus(spark, 60, seed=72, partitions=2), "d1")
-    gid = b.refresh_delta(fanin=2)
+    gid = b.refresh_delta()
     assert gid == "gen0001"
-    assert b.refresh_delta(fanin=2) is None  # covered via ledger lineage
+    assert b.refresh_delta() is None  # covered via ledger lineage
     q = make_queries(spark, corpus_n=120, n_queries=4)
     assert wand_search(spark, d, q, k=5).count() > 0
     # a fresh builder resumes entirely off the ledger
     b2 = IndexBuilder(spark, d, n_buckets=4)
     assert b2._done("finalize") and b2._done("merged-final")
-    assert b2.refresh_delta(fanin=2) is None
+    assert b2.refresh_delta() is None
 
 
 def test_pre_meta_run_settings_refused(spark, tmp_path):
@@ -376,7 +381,7 @@ def test_pre_meta_run_settings_refused(spark, tmp_path):
     IndexBuilder(spark, d, n_buckets=4).add_run(
         make_corpus(spark, 40, seed=62, partitions=2), "r1"
     )
-    b.merge_all(fanin=2)
+    b.merge_all()
     b.finalize()
     assert b.meta()["n_buckets"] == 4
 
@@ -390,13 +395,13 @@ def test_purge_run_clears_generations(spark, tmp_path):
     b = IndexBuilder(spark, d, n_buckets=4)
     b.build(make_corpus(spark, 120, seed=51, partitions=2))
     b.add_run(make_corpus(spark, 60, seed=52, partitions=2), "d1")
-    b.refresh_delta(fanin=2)
+    b.refresh_delta()
     purge_run(d, "d1")
     assert not os.path.isdir(f"{d}/generations")
     assert not os.path.exists(f"{d}/_meta.json")
     units = {m["unit"] for m in b.manifests()}
     assert not any(u.startswith(("generation-", "genmerge-", "merge")) for u in units)
-    b.merge_all(fanin=2)
+    b.merge_all()
     b.finalize()
     assert b.meta()["n_docs"] == 120 and b.meta()["generations"] == []
     q = make_queries(spark, corpus_n=120, n_queries=4)
@@ -415,9 +420,9 @@ def test_crashed_fold_with_changed_inputs_remerges(spark, tmp_path):
     # simulate a refresh that crashed after its merge wave committed but
     # before doc/term stats, meta, and the generation manifest
     groot = f"{d}/generations/gen0001"
-    b._merge_waves([f"{d}/runs/r1"], f"{groot}/merged", "genmerge-gen0001", 2)
+    b._merge_waves([f"{d}/runs/r1"], f"{groot}/merged", "genmerge-gen0001")
     b.add_run(make_corpus(spark, 60, seed=93, partitions=2), "r2")
-    gid = b.refresh_delta(fanin=2)
+    gid = b.refresh_delta()
     assert gid == "gen0001"  # id reused — with inputs now [r1, r2]
     meta = b.meta()
     assert meta["n_docs"] == 150 + 60 + 60  # r2 indexed, r1 not doubled
@@ -429,7 +434,9 @@ def test_crashed_multiwave_fold_remerges_downstream(spark, tmp_path, monkeypatch
     upstream output was re-merged with different content — reuse must
     compare the transitively covered source set, re-merging downstream
     waves while still reusing untouched sibling groups."""
-    monkeypatch.setenv("DOCINSIGHT_MERGE_MAX_WIDTH", "2")
+    from docinsight_spark.index import builder as B
+
+    monkeypatch.setattr(B, "MERGE_MAX_WIDTH", 2)
     d = str(tmp_path / "crashmw")
     b = IndexBuilder(spark, d, n_buckets=4)
     b.build(make_corpus(spark, 150, seed=95, partitions=2))
@@ -440,7 +447,7 @@ def test_crashed_multiwave_fold_remerges_downstream(spark, tmp_path, monkeypatch
     # merge width 2), before stats/meta/manifest
     _src, waves = b._merge_waves(
         [f"{d}/runs/r{i}" for i in (1, 2, 3)],
-        f"{groot}/merged", "genmerge-gen0001", 2,
+        f"{groot}/merged", "genmerge-gen0001",
     )
     assert waves == 2
     steps = ("w0-g0", "w0-g1", "w1-g0")
@@ -450,7 +457,7 @@ def test_crashed_multiwave_fold_remerges_downstream(spark, tmp_path, monkeypatch
 
     ts_before = step_ts()
     b.add_run(make_corpus(spark, 60, seed=99, partitions=2), "r4")
-    gid = b.refresh_delta(fanin=2)
+    gid = b.refresh_delta()
     assert gid == "gen0001"
     meta = b.meta()
     assert meta["n_docs"] == 150 + 4 * 60  # r4 indexed, nothing doubled
@@ -472,7 +479,7 @@ def test_refresh_crash_between_meta_and_manifest_converges(spark, tmp_path):
     b = IndexBuilder(spark, d, n_buckets=4)
     b.build(make_corpus(spark, 150, seed=31, partitions=2))
     b.add_run(make_corpus(spark, 100, seed=32, partitions=2), "d1")
-    gid = b.refresh_delta(fanin=2)
+    gid = b.refresh_delta()
     n_docs = b.meta()["n_docs"]
     # simulate the crash window: generation manifest lost, meta committed
     # (the manifest may be loose OR already rolled into the ledger —
@@ -482,9 +489,9 @@ def test_refresh_crash_between_meta_and_manifest_converges(spark, tmp_path):
     if fsio.exists(f"{d}/manifests/generation-{gid}.json"):
         fsio.remove(f"{d}/manifests/generation-{gid}.json")
     _ledger_strip(d, lambda u: u == f"generation-{gid}")
-    assert b.refresh_delta(fanin=2) is None  # runs covered via meta
+    assert b.refresh_delta() is None  # runs covered via meta
     assert b.meta()["n_docs"] == n_docs      # no double count
-    b.merge_all(fanin=2)                     # coverage guard satisfied
+    b.merge_all()                     # coverage guard satisfied
     # and the index still answers, generation included
     q = make_queries(spark, corpus_n=150, n_queries=4)
     assert wand_search(spark, d, q, k=5).count() > 0
@@ -504,7 +511,7 @@ def test_searcher_reloads_after_refresh(spark, tmp_path):
     before = _res(s.search(q, k=5))
     assert len(before) > 0
     b.add_run(make_corpus(spark, 200, seed=22, partitions=2), "d1")
-    b.refresh_delta(fanin=2)
+    b.refresh_delta()
     served = _res(s.search(q, k=5))        # same resident Searcher
     fresh = _res(wand_search(spark, d, q, k=5))
     _assert_same_results(served, fresh)
@@ -523,7 +530,7 @@ def test_strict_dl_covers_generation_doc_stats(spark, tmp_path, monkeypatch):
     b = IndexBuilder(spark, d, n_buckets=2)
     b.build(make_corpus(spark, 120, seed=44, partitions=2))
     b.add_run(make_corpus(spark, 80, seed=45, partitions=2), "d1")
-    b.refresh_delta(fanin=2)
+    b.refresh_delta()
     for f in _glob.glob(
         f"{d}/generations/gen0001/doc_stats/doc_bucket=*/*.parquet"
     ):

@@ -8,6 +8,7 @@ import json
 import os
 
 import pytest
+from conftest import add_runs
 from pyspark.sql import functions as F
 
 from docinsight_spark.corpus import make_corpus, make_queries
@@ -27,7 +28,9 @@ from docinsight_spark.operators.query import search
 def built_index(spark, tmp_path_factory, tiny_corpus):
     d = str(tmp_path_factory.mktemp("idx"))
     b = IndexBuilder(spark, d, n_buckets=8)
-    b.build(tiny_corpus, n_runs=3, fanin=2)
+    add_runs(b, tiny_corpus, 3)
+    b.merge_all()
+    b.finalize()
     return b
 
 
@@ -92,14 +95,12 @@ def test_resume_skips_completed_units(spark, built_index, tiny_corpus, tmp_path)
     final stats are byte-identical."""
     d = str(tmp_path / "idx2")
     b1 = IndexBuilder(spark, d, n_buckets=8)
-    slices = tiny_corpus.randomSplit([1.0, 1.0, 1.0], seed=42)
-    for i, sl in enumerate(slices):
-        b1.add_run(sl, f"run{i:05d}")
-    b1.merge_all(fanin=2)
+    add_runs(b1, tiny_corpus, 3)
+    b1.merge_all()
     # simulate a crash before finalize: restart with a fresh builder
     b2 = IndexBuilder(spark, d, n_buckets=8)
     pre = {m["unit"]: m.get("ts") for m in b2.manifests()}
-    b2.build(tiny_corpus, n_runs=3, fanin=2)  # must skip all completed units
+    b2.build(tiny_corpus)  # must skip all completed units
     post = {m["unit"]: m.get("ts") for m in b2.manifests()}
     for unit, ts in pre.items():
         assert post[unit] == ts, f"unit {unit} was recomputed on resume"
@@ -121,7 +122,7 @@ def test_incremental_add_run_dedups_prior_docs(spark, tmp_path, tiny_corpus):
     b.add_run(extra, "delta")
     m = {x["unit"]: x for x in b.manifests()}
     assert m["run-delta"]["docs"] == 50
-    b.merge_all(fanin=2)
+    b.merge_all()
     b.finalize()
     assert b.meta()["n_docs"] == 250
 
@@ -142,7 +143,7 @@ def test_incremental_bloom_gate_matches_broadcast_gate(spark, tmp_path, tiny_cor
     b.add_run(extra, "delta")
     m = {x["unit"]: x for x in b.manifests()}
     assert m["run-delta"]["docs"] == 50
-    b.merge_all(fanin=2)
+    b.merge_all()
     b.finalize()
     assert b.meta()["n_docs"] == 250
 
@@ -204,12 +205,12 @@ def test_merge_all_refuses_stale_run_set(spark, tmp_path, tiny_corpus):
     d = str(tmp_path / "idx_stale")
     b = IndexBuilder(spark, d, n_buckets=4)
     b.add_run(tiny_corpus, "base")
-    b.merge_all(fanin=2)
-    b.merge_all(fanin=2)  # same run set: short-circuit, no error
+    b.merge_all()
+    b.merge_all()  # same run set: short-circuit, no error
     b.add_run(make_corpus(spark, 250, seed=42), "delta")
     with pytest.raises(ValueError, match="refresh"):
-        b.merge_all(fanin=2)
-    refresh(b, fanin=2)
+        b.merge_all()
+    refresh(b)
     assert b.meta()["n_docs"] == 250
 
 
@@ -311,7 +312,7 @@ def test_stale_merge_guard_missing_runs_key(spark, tmp_path, tiny_corpus):
 
     d = str(tmp_path / "staleidx")
     b = IndexBuilder(spark, d, n_buckets=4)
-    b.build(tiny_corpus.limit(50), n_runs=1, fanin=2)
+    b.build(tiny_corpus.limit(50))
     # the manifest may live in the rolled-up ledger by now; a loose
     # per-unit file overrides it, so write the corrupted copy loose
     m = b._manifest("merged-final")

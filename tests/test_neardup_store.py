@@ -166,7 +166,7 @@ def test_builder_add_run_with_neardup_gate(spark, tmp_path):
               neardup_threshold=0.5)
     m1 = b._manifest("run-r1")
     assert m1["docs"] == 20  # the near-dup was gated out
-    b.merge_all(fanin=2)
+    b.merge_all()
     b.finalize()
     assert b.meta()["n_docs"] == 80
 
@@ -340,7 +340,7 @@ def test_builder_delete_forgets_in_store(spark, tmp_path):
     b = IndexBuilder(spark, d, n_buckets=4)
     base = make_corpus(spark, 40, seed=31, partitions=2)
     b.add_run(base, "r0", neardup_store=store)
-    b.merge_all(fanin=2)
+    b.merge_all()
     b.finalize()
 
     victim_repo = base.limit(1).collect()[0]["repo"]

@@ -202,7 +202,7 @@ def test_phrase_across_generations(spark, tmp_path):
     b = IndexBuilder(spark, idx, n_buckets=4, positions=True)
     b.build(base)
     b.add_run(delta, "d1")
-    assert b.refresh_delta(fanin=2) is not None
+    assert b.refresh_delta() is not None
 
     union_pdf = base.unionByName(delta).toPandas()
     dpdf = delta.toPandas().reset_index(drop=True)
@@ -226,7 +226,7 @@ def test_phrase_delete_resurrect_compact(spark, tmp_path):
     b = IndexBuilder(spark, idx, n_buckets=4, positions=True)
     b.build(base)
     b.add_run(delta, "d1")
-    assert b.refresh_delta(fanin=2) is not None
+    assert b.refresh_delta() is not None
 
     dpdf = delta.toPandas().reset_index(drop=True)
     victim_path = dpdf["path"][4]
@@ -248,7 +248,7 @@ def test_phrase_delete_resurrect_compact(spark, tmp_path):
     # resurrection: re-ingest the victim row, fold a new generation
     victim_rows = delta.filter(F.col("path") == victim_path)
     b.add_run(victim_rows, "rez")
-    assert b.refresh_delta(fanin=2) is not None
+    assert b.refresh_delta() is not None
     got2 = _engine_scores(spark, b, idx, phrase)
     full_pdf = base.unionByName(delta).toPandas()
     _assert_same_scores(got2, _oracle_scores(full_pdf, phrase))
@@ -401,7 +401,7 @@ def test_proximity_delete_resurrect(spark, tmp_path):
     _assert_same_scores(got1, _prox_oracle_scores(surv, q, w))
 
     b.add_run(base.filter(F.col("path") == victim_path), "rez")
-    assert b.refresh_delta(fanin=2) is not None
+    assert b.refresh_delta() is not None
     got2 = _prox_engine_scores(spark, b, idx, q, w)
     _assert_same_scores(got2, _prox_oracle_scores(pdf, q, w))
 
@@ -556,7 +556,7 @@ def test_searcher_phrase_prefix_refresh_transparent(spark, tmp_path):
     assert via0 == direct0
 
     b.add_run(delta, "d1")
-    assert b.refresh_delta(fanin=2) is not None
+    assert b.refresh_delta() is not None
     # same Searcher now sees the generation
     direct1 = {
         (r["docID"], round(r["score"], 9))
@@ -634,3 +634,61 @@ def test_near_anchor_tf_matches_per_group_reference():
                 ok &= hi > lo
             want[g] = int(ok.sum())
         assert (got == want).all(), (trial, got.tolist(), want.tolist())
+
+
+def test_alive_queries_at_the_batch_cap():
+    """``_alive_queries`` (queries whose every term occurs) over a
+    batch at ``MAX_PHRASE_BATCH``: one pass over the offsets, equal to
+    a per-query scan on sampled ids."""
+    import random
+
+    from docinsight_spark.index.phrase import MAX_PHRASE_BATCH, _alive_queries
+
+    rng = random.Random(7)
+    offsets = [
+        (q, off, f"t{rng.randrange(500)}")
+        for q in range(MAX_PHRASE_BATCH)
+        for off in range(rng.randint(1, 4))
+    ]
+    df_map = {f"t{i}": i % 7 for i in range(500)}  # every 7th term absent
+    alive = _alive_queries(offsets, df_map)
+    assert 0 < len(alive) < MAX_PHRASE_BATCH
+    for qid in rng.sample(range(MAX_PHRASE_BATCH), 50):
+        mine = [t for q, _, t in offsets if q == qid]
+        assert (qid in alive) == all(df_map.get(t, 0) > 0 for t in mine)
+
+
+def test_large_phrase_batch_matches_single_calls(spark, ph_setup):
+    """A 5,000-phrase batch returns, for sampled ids, the rows of the
+    same phrase searched alone (incl. phrases with an unknown term)."""
+    import random
+
+    pdf = ph_setup["pdf"]
+    toks = [list(t) for t in _doc_tokens(pdf)]
+    rng = random.Random(11)
+    batch = []
+    for qid in range(5000):
+        ts = toks[rng.randrange(len(toks))]
+        n = rng.randint(2, 3)
+        start = rng.randrange(max(len(ts) - n, 1))
+        phrase = " ".join(ts[start : start + n])
+        if qid % 10 == 0:
+            phrase += " zzznope"
+        batch.append((qid, phrase))
+    res = phrase_search(spark, ph_setup["idx"], batch, k=5)
+    got = {}
+    for r in res.collect():
+        got.setdefault(int(r["query_id"]), []).append(
+            (int(r["rank"]), int(r["docID"]), round(float(r["score"]), 9))
+        )
+    assert len(got) > 4000
+    sample = rng.sample(range(5000), 6) + [0, 10]
+    for qid in sample:
+        one = sorted(
+            (int(r["rank"]), int(r["docID"]), round(float(r["score"]), 9))
+            for r in phrase_search(
+                spark, ph_setup["idx"], [(qid, batch[qid][1])], k=5
+            ).collect()
+        )
+        assert sorted(got.get(qid, [])) == one, (qid, batch[qid][1])
+        assert bool(one) == (qid % 10 != 0)

@@ -73,7 +73,7 @@ def test_generation_union_keeps_pushdown(spark, small_index, tmp_path_factory):
     b = IndexBuilder(spark, d, n_buckets=4)
     b.build(make_corpus(spark, 150, seed=81, partitions=2))
     b.add_run(make_corpus(spark, 80, seed=82, partitions=2), "d1")
-    b.refresh_delta(fanin=2)
+    b.refresh_delta()
     meta = b.meta()
     assert len(meta["generations"]) == 1
 
@@ -214,7 +214,7 @@ def test_phrase_term_pushdown_and_positions_pruning(spark, pos_index, monkeypatc
     from docinsight_spark.index import phrase as P
 
     monkeypatch.setattr(P, "CAND_COLLECT_MAX", -1)
-    monkeypatch.setenv("DOCINSIGHT_PHRASE_SINGLE_PASS_MAX", "-1")
+    monkeypatch.setattr(P, "SINGLE_PASS_MAX_ROWS", -1)
     res = P.phrase_search(spark, pos_index, [(0, "public static")], k=5)
     p = plan_text(res)
     pushed = [l for l in p.splitlines() if "PushedFilters" in l]
@@ -286,10 +286,10 @@ def test_phrase_collected_candidates_prune_buckets(
     here by zeroing the round-7 single-pass bound) the heavy positions
     scan must carry a doc_bucket partition filter — the positions read
     only lists buckets that can produce a match."""
-    from docinsight_spark.index.phrase import phrase_search
+    from docinsight_spark.index import phrase as P
 
-    monkeypatch.setenv("DOCINSIGHT_PHRASE_SINGLE_PASS_MAX", "-1")
-    res = phrase_search(spark, pos_index, [(0, real_bigram)], k=5)
+    monkeypatch.setattr(P, "SINGLE_PASS_MAX_ROWS", -1)
+    res = P.phrase_search(spark, pos_index, [(0, real_bigram)], k=5)
     p = plan_text(res)
     part = [
         l for l in p.splitlines()

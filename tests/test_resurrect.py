@@ -18,6 +18,7 @@ import os
 
 import numpy as np
 import pytest
+from conftest import add_runs
 from pyspark.sql import functions as F
 
 from docinsight_spark.corpus import make_corpus, make_queries
@@ -52,7 +53,9 @@ def rez_setup(spark, tmp_path_factory):
     corpus = make_corpus(spark, 200, seed=21, partitions=4)
     d = str(root / "idx")
     b = IndexBuilder(spark, d, n_buckets=4)
-    b.build(corpus, n_runs=2, fanin=2)
+    add_runs(b, corpus, 2)
+    b.merge_all()
+    b.finalize()
     n0 = b.meta()["n_docs"]
 
     did = b.delete_matching(VICTIM_COND())
@@ -64,11 +67,11 @@ def rez_setup(spark, tmp_path_factory):
         "repo", "path", "commit", "lang", "content"
     )
     b.add_run(victims, "rez1")
-    gid = b.refresh_delta(fanin=2)
+    gid = b.refresh_delta()
     assert gid is not None
 
     full = str(root / "rebuild")
-    IndexBuilder(spark, full, n_buckets=4).build(corpus, n_runs=2, fanin=2)
+    IndexBuilder(spark, full, n_buckets=4).build(corpus)
     q = make_queries(spark, corpus_n=200, n_queries=6)
     return {
         "builder": b, "idx": d, "rebuild": full, "queries": q,
@@ -116,7 +119,7 @@ def test_reingest_while_live_is_still_gated(spark, rez_setup):
     b.add_run(rez_setup["victims"], "rez2")
     runs = {m["run_id"]: m for m in b.manifests() if m["unit"].startswith("run-")}
     assert runs["rez2"]["docs"] == 0
-    gid = b.refresh_delta(fanin=2)
+    gid = b.refresh_delta()
     assert b.meta()["n_docs"] == pre
     assert gid is None or any(
         m.get("empty") for m in b.manifests()
@@ -163,7 +166,7 @@ def test_compact_folds_dead_and_live_copies(spark, rez_setup):
     b = rez_setup["builder"]
     q = rez_setup["queries"]
     b.add_run(rez_setup["victims"], "rez3")
-    assert b.refresh_delta(fanin=2) is not None
+    assert b.refresh_delta() is not None
     assert b.meta()["n_docs"] == rez_setup["n_full"]
 
     gid = b.compact(force=True)
@@ -201,7 +204,7 @@ def test_resurrect_after_physical_reclaim(spark, rez_setup):
     b.add_run(rez_setup["victims"], "rez4")
     runs = {m["run_id"]: m for m in b.manifests() if m["unit"].startswith("run-")}
     assert runs["rez4"]["docs"] == rez_setup["n_vic"]
-    assert b.refresh_delta(fanin=2) is not None
+    assert b.refresh_delta() is not None
     assert b.meta()["n_docs"] == rez_setup["n_full"]
     a = _res(wand_search(spark, b.dir, q, k=5))
     _assert_same(a, _res(wand_search(spark, rez_setup["rebuild"], q, k=5)))
@@ -217,7 +220,9 @@ def test_resurrection_with_changed_content(spark, tmp_path):
     corpus = make_corpus(spark, 80, seed=31, partitions=2)
     d = str(tmp_path / "edit_idx")
     b = IndexBuilder(spark, d, n_buckets=4)
-    b.build(corpus, n_runs=2, fanin=2)
+    add_runs(b, corpus, 2)
+    b.merge_all()
+    b.finalize()
 
     cond = F.xxhash64("content_sha") % 5 == 0
     assert b.delete_matching(cond) is not None
@@ -232,7 +237,7 @@ def test_resurrection_with_changed_content(spark, tmp_path):
         )
     )
     b.add_run(edited, "edit1")
-    assert b.refresh_delta(fanin=2) is not None
+    assert b.refresh_delta() is not None
 
     full = str(tmp_path / "edit_rebuild")
     rebuilt_corpus = (
@@ -242,7 +247,7 @@ def test_resurrection_with_changed_content(spark, tmp_path):
             "left_anti",
         ).unionByName(edited)
     )
-    IndexBuilder(spark, full, n_buckets=4).build(rebuilt_corpus, n_runs=2, fanin=2)
+    IndexBuilder(spark, full, n_buckets=4).build(rebuilt_corpus)
 
     q = make_queries(spark, corpus_n=80, n_queries=6)
     a = _res(wand_search(spark, d, q, k=5))
@@ -323,7 +328,7 @@ def test_graveyard_rollup_bounds_ingest_reads(spark, tmp_path, monkeypatch):
         newdocs = make_corpus(spark, 5, seed=100 + i, partitions=1,
                               start=60 + 5 * i)
         b.add_run(newdocs, f"d{i}")
-        assert b.refresh_delta(fanin=2) is not None
+        assert b.refresh_delta() is not None
         vp = newdocs.toPandas().sort_values("path")["path"].iloc[0]
         deleted_paths.append(vp)
         assert b.delete_docs(
@@ -355,5 +360,5 @@ def test_graveyard_rollup_bounds_ingest_reads(spark, tmp_path, monkeypatch):
         .filter(F.col("path") == rez_path),
         "rez",
     )
-    assert b.refresh_delta(fanin=2) is not None
+    assert b.refresh_delta() is not None
     assert b.docs_dim().filter(F.col("path") == rez_path).count() == 1

@@ -3,6 +3,7 @@
 import os
 
 import pytest
+from conftest import add_runs
 from pyspark.sql import functions as F
 
 from docinsight_spark.index.builder import IndexBuilder, purge_index, purge_run
@@ -90,7 +91,9 @@ def test_confidence_estimate(spark):
 def test_purge_run_and_index(spark, tmp_path, tiny_corpus):
     d = str(tmp_path / "pidx")
     b = IndexBuilder(spark, d, n_buckets=4)
-    b.build(tiny_corpus, n_runs=2, fanin=2)
+    add_runs(b, tiny_corpus, 2)
+    b.merge_all()
+    b.finalize()
     assert os.path.exists(f"{d}/_meta.json")
     purge_run(d, "run00001")
     units = {m["unit"] for m in b.manifests()}
@@ -98,7 +101,7 @@ def test_purge_run_and_index(spark, tmp_path, tiny_corpus):
     assert not any(u.startswith("merge") for u in units)  # downstream invalidated
     assert "run-run00000" in units  # sibling run intact
     # rebuild from the surviving run works
-    b.merge_all(fanin=2)
+    b.merge_all()
     b.finalize()
     assert b.meta()["n_docs"] < 200
     purge_index(d)
