@@ -269,9 +269,13 @@ def cmd_fsck(args) -> int:
 
 
 def cmd_query(args) -> int:
+    from docinsight_spark.index.wand import _batch_terms, _load_meta
+
     spark = _spark("docinsight_query")
     queries = spark.read.parquet(args.queries)
     mode = getattr(args, "mode", "or")
+    meta = _load_meta(args.index)
+    qterms = None
     if mode == "phrase":
         from docinsight_spark.index.phrase import phrase_search
 
@@ -325,19 +329,20 @@ def cmd_query(args) -> int:
                 if neg_rows
                 else None
             )
-            res = wand_search(
-                spark, args.index, pos_df, k=args.k,
-                require_all=(mode == "and"), neg_queries=neg_df,
-            )
         else:
-            res = wand_search(spark, args.index, queries, k=args.k)
+            pos_df, neg_df = queries, None
+        # tokenize once: the snippet terms below are the terms scored
+        qterms = _batch_terms(pos_df, meta)
+        res = wand_search(
+            spark, args.index, None, k=args.k, _meta=meta, _qmap=qterms,
+            require_all=(mode == "and"), neg_queries=neg_df,
+        )
     if getattr(args, "snippet_window", 0):
         # evidence spans: best matched-term window per result (needs a
         # positions=True index)
         from docinsight_spark.index.phrase import snippet_windows
-        from docinsight_spark.index.wand import _load_meta, _query_term_map
+        from docinsight_spark.index.wand import _pairs_frame
 
-        meta = _load_meta(args.index)
         if mode in ("prefix", "contains", "regex"):
             # the literal patterns ("fi", "a.e") are not index terms —
             # snippet qterms must be the expanded dictionary terms the
@@ -349,14 +354,9 @@ def cmd_query(args) -> int:
                 max_expansions=args.max_expansions, mode=mode, _meta=meta,
             ).select("query_id", "term")
         else:
-            qm = _query_term_map(
-                queries, bool(meta.get("code_aware", True)), 100_000,
-                str(meta.get("query_lang", "java")),
-            ) or {}
-            qt = spark.createDataFrame(
-                [(q, t) for q, ts in qm.items() for t in ts],
-                "query_id long, term string",
-            )
+            qt = qterms if qterms is not None else _batch_terms(queries, meta)
+            if isinstance(qt, dict):
+                qt = _pairs_frame(spark, qt)
         sn = snippet_windows(
             spark, args.index, res.select("query_id", "docID"), qt,
             window=args.snippet_window,

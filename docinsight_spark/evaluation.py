@@ -96,7 +96,9 @@ def oracle_from_index(
         load_doc_stats,
         load_merged_postings,
         load_term_stats,
+        restrict_terms,
     )
+    from docinsight_spark.index.wand import _batch_terms, _pairs_frame
     from docinsight_spark.operators.postings import CorpusStats
     from docinsight_spark.operators.query import search
 
@@ -105,34 +107,24 @@ def oracle_from_index(
     tstats = load_term_stats(spark, index_dir, meta)
     dstats = load_doc_stats(spark, index_dir, meta)
     stats = CorpusStats(n_docs=int(meta["n_docs"]), avgdl=float(meta["avgdl"]))
-    code_aware = bool(meta.get("code_aware", True))
-    qlang = str(meta.get("query_lang", "java"))
-    # small batches tokenize driver-side (round 7): same budget and
-    # tokenizer-parity path as the WAND fast path, turning the per-call
-    # tokenize-UDF job + distinct exchange into a literal frame
-    from docinsight_spark.index.wand import DRIVER_TOKENIZE_MAX, _query_term_map
-
-    qterms = None
-    qmap = _query_term_map(queries, code_aware, DRIVER_TOKENIZE_MAX, qlang)
-    if qmap is not None:
-        qterms = spark.createDataFrame(
-            [(qid, t) for qid, ts in qmap.items() for t in ts],
-            "query_id long, term string",
-        )
+    # small batches tokenize driver-side (round 7): the WAND fast path's
+    # budget and tokenizer, turning the per-call tokenize-UDF job +
+    # distinct exchange into a literal frame
+    qterms = _batch_terms(queries, meta)
+    if isinstance(qterms, dict):
         # the batch's term set is known at PLAN time — push it into the
-        # postings scan as an IN-list (identity under the inner term
-        # join; the merged layout is term-sorted within each shard file,
-        # so parquet row-group min/max stats skip non-matching groups).
-        # The join alone cannot do this: its build side is unknown to
-        # the scan.  Guard the literal list like the phrase path does.
+        # postings scan (identity under the inner term join; the merged
+        # layout is term-sorted within each shard file, so parquet
+        # row-group min/max stats skip non-matching groups).  The join
+        # alone cannot do this: its build side is unknown to the scan.
         # (neg_terms excludes docs via their OWN postings rows — the
         # filter would drop them, so only the pure-positive shapes
         # take it; require_all intersects the same positive terms.)
-        terms = sorted({t for ts in qmap.values() for t in ts})
-        if neg_terms is None and 0 < len(terms) <= 1024:
-            postings = postings.filter(F.col("term").isin(terms))
+        terms = sorted({t for ts in qterms.values() for t in ts})
+        if neg_terms is None and terms:
+            postings = restrict_terms(postings, terms)
+        qterms = _pairs_frame(spark, qterms)
     return search(
         queries, postings, tstats, dstats, stats, k=k,
-        code_aware=code_aware, lang=qlang,
         require_all=require_all, neg_terms=neg_terms, _qterms=qterms,
     )

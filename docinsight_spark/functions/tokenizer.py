@@ -16,6 +16,19 @@ Two tokenizers are exposed:
   DuckDB oracle must reproduce tokenization exactly.
 * :func:`code_tokens_udf` — the code-aware pandas UDF (the engine's
   production tokenizer).
+
+Query text becomes index terms here and nowhere else.  An index records
+its tokenizer in ``_meta.json`` (``code_aware`` + ``query_lang``);
+:func:`query_tokenizer` reads that choice, and two forms apply it:
+
+* :func:`query_tokens` — driver form: texts → ordered token lists;
+* :func:`query_terms` — column form: ``(query_id, query_text)`` →
+  distinct ``(query_id, term)``; :func:`query_token_col` is its
+  per-row token array.
+
+Both forms give the same terms for the same text (pinned by
+``tests/test_tokenizer.py``), so a batch tokenizes identically on the
+driver, in executors, and at index build.
 """
 
 from __future__ import annotations
@@ -23,7 +36,7 @@ from __future__ import annotations
 import re
 
 import pandas as pd
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -118,6 +131,57 @@ def tokenize_code_pandas(content: pd.Series, lang: pd.Series | None = None) -> p
 def code_tokens_udf(content: pd.Series, lang: pd.Series) -> pd.Series:
     """pandas UDF wrapper: ``code_tokens_udf(content, lang) -> array<string>``."""
     return tokenize_code_pandas(content, lang)
+
+
+# ---------------------------------------------------------------------------
+# Query tokenization: the index's tokenizer, driver form and column form
+# ---------------------------------------------------------------------------
+
+# Java's regex \s, which ``simple_tokens_col`` splits on in the JVM, is
+# the ASCII class below; Python's \s is Unicode-aware (NBSP, \x1c,
+# U+2028 …), so Python code matching the JVM spells the class out
+JAVA_WS = " \t\n\x0b\f\r"
+_JAVA_WS_RUN = re.compile(f"[{JAVA_WS}]+")
+
+
+def query_tokenizer(meta: dict) -> dict:
+    """The tokenizer an index was built with, as the ``code_aware`` /
+    ``lang`` arguments of :func:`query_tokens` and :func:`query_terms`.
+    ``lang`` is the corpus-majority lang the build recorded
+    (``query_lang``): a Python-majority corpus masks ``#`` comments, so
+    its queries must too."""
+    return {
+        "code_aware": bool(meta.get("code_aware", True)),
+        "lang": str(meta.get("query_lang", "java")),
+    }
+
+
+def query_tokens(
+    texts: list[str | None], code_aware: bool = True, lang: str = "java"
+) -> list[list[str]]:
+    """Driver form: each text's tokens, in order, duplicates kept (a
+    phrase may repeat a term).  No Spark job."""
+    if code_aware:
+        return list(tokenize_code_pandas(
+            pd.Series(texts, dtype=object),
+            pd.Series([lang] * len(texts), dtype=object),
+        ))
+    return [[t for t in _JAVA_WS_RUN.split((x or "").lower()) if t] for x in texts]
+
+
+def query_token_col(col: str, code_aware: bool = True, lang: str = "java") -> Column:
+    """Column form, per row: ``array<string>`` of column ``col``'s tokens."""
+    return code_tokens_udf(F.col(col), F.lit(lang)) if code_aware else simple_tokens_col(col)
+
+
+def query_terms(
+    queries: DataFrame, code_aware: bool = True, lang: str = "java"
+) -> DataFrame:
+    """Column form: ``(query_id, query_text)`` → distinct
+    ``(query_id, term)`` (bag-of-words retrieval: a repeated query term
+    counts once; rows sharing a query_id union their terms)."""
+    tok = query_token_col("query_text", code_aware, lang)
+    return queries.select("query_id", F.explode(tok).alias("term")).distinct()
 
 
 # ---------------------------------------------------------------------------

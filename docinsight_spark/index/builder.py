@@ -324,38 +324,26 @@ def _segment_lineage(path: str, spark: SparkSession | None = None) -> dict:
     }
 
 
-def strict_dl_enabled() -> bool:
-    """Debug flag: verify every docID resolves to an exact doc_stats row.
-    Read driver-side and captured into kernel closures (executor env is
-    not reliably inherited once worker daemons exist)."""
-    return os.environ.get("DOCINSIGHT_STRICT_DL", "") == "1"
-
-
 def lookup_dl(
-    sorted_docs: np.ndarray,
-    dls: np.ndarray,
-    doc_ids: np.ndarray,
-    strict: bool = False,
+    sorted_docs: np.ndarray, dls: np.ndarray, doc_ids: np.ndarray
 ) -> np.ndarray:
     """Binary-search doc lengths for ``doc_ids`` in a docID-sorted map.
 
-    Default mode clamps out-of-range probes (a docID absent from
-    doc_stats silently reuses a neighbor's length — cheap, but hides
-    index corruption as subtly wrong BM25 scores).  ``strict`` asserts
-    exact membership and fails loudly instead."""
+    Every probe must hit an exact doc_stats row: a docID the map lacks
+    means postings and doc_stats disagree (index corruption), and
+    raises instead of borrowing a neighbour's length."""
     if len(sorted_docs) == 0:
-        if strict and len(doc_ids):
+        if len(doc_ids):
             raise ValueError("doc_stats bucket is empty but postings reference docs")
-        return np.ones(len(doc_ids), np.int64)
+        return np.ones(0, np.int64)
     pos = np.clip(np.searchsorted(sorted_docs, doc_ids), 0, len(sorted_docs) - 1)
-    if strict:
-        bad = sorted_docs[pos] != doc_ids
-        if bad.any():
-            missing = np.asarray(doc_ids)[bad][:5].tolist()
-            raise ValueError(
-                f"postings/doc_stats inconsistency: {int(bad.sum())} docIDs "
-                f"missing from doc_stats (first: {missing})"
-            )
+    bad = sorted_docs[pos] != doc_ids
+    if bad.any():
+        missing = np.asarray(doc_ids)[bad][:5].tolist()
+        raise ValueError(
+            f"postings/doc_stats inconsistency: {int(bad.sum())} docIDs "
+            f"missing from doc_stats (first: {missing})"
+        )
     return dls[pos]
 
 
@@ -1383,7 +1371,6 @@ class IndexBuilder:
         full-vocabulary term_stats never broadcasts here)."""
         enc_input = self._encode_input(postings)
         k1, b, block_size = self.k1, self.b, self.block_size
-        strict = strict_dl_enabled()
 
         def encode_stream(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             carry: pd.DataFrame | None = None
@@ -1399,7 +1386,7 @@ class IndexBuilder:
                     o = np.argsort(m["docID"], kind="stable")
                     m = {"docID": m["docID"][o], "dl": m["dl"][o]}
                     dl_cache[bucket] = m
-                return lookup_dl(m["docID"], m["dl"], doc_ids, strict)
+                return lookup_dl(m["docID"], m["dl"], doc_ids)
 
             def encode_groups(pdf: pd.DataFrame, hold_last: bool):
                 nonlocal carry
@@ -2500,6 +2487,23 @@ def _union_frames(frames: list[DataFrame]) -> DataFrame:
     for f in frames[1:]:
         out = out.unionByName(f)
     return out
+
+
+# Past this many terms a scan's term restriction is a broadcast
+# semi-join, not an IN-list: a 10^5-term IN predicate bloats the plan and
+# the parquet filter evaluation
+TERM_INLIST_MAX = 1024
+
+
+def restrict_terms(df: DataFrame, terms: list[str]) -> DataFrame:
+    """``df`` restricted to rows whose ``term`` is in ``terms``.  Up to
+    :data:`TERM_INLIST_MAX` terms the IN-list pushes down to parquet
+    row-group stats (every term-keyed artifact is term-sorted within
+    each shard file)."""
+    if len(terms) <= TERM_INLIST_MAX:
+        return df.filter(F.col("term").isin(terms))
+    tdf = df.sparkSession.createDataFrame([(t,) for t in terms], "term string")
+    return df.join(F.broadcast(tdf), "term", "left_semi")
 
 
 def load_segments(spark: SparkSession, index_dir: str, meta: dict) -> DataFrame:

@@ -57,7 +57,6 @@ cheap.
 
 from __future__ import annotations
 
-import re
 from collections import Counter
 
 import pandas as pd
@@ -65,15 +64,14 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from docinsight_spark.functions.bm25 import bm25_score_col
+from docinsight_spark.functions.tokenizer import query_tokenizer, query_tokens
 from docinsight_spark.index import fsio
 from docinsight_spark.index.builder import (
     load_tombstone_pairs,
     read_manifests,
+    restrict_terms,
     _union_frames,
 )
-
-# Java-regex \s parity with the build/WAND driver paths (wand.py:_query_term_map)
-_JAVA_WS = re.compile("[ \t\n\x0b\f\r]+")
 
 # phrase query batches collect to the driver (offsets must broadcast);
 # beyond this, split the batch — ~100k phrases × a few terms is tens of
@@ -84,12 +82,6 @@ MAX_PHRASE_BATCH = 100_000
 # the semi-join becomes a literal broadcast and the candidates' buckets
 # partition-prune the positions read; larger sets stay a lazy plan
 CAND_COLLECT_MAX = 200_000
-
-# past this many distinct terms, the postings scan's term restriction
-# switches from an IN-list literal (row-group pruning) to a broadcast
-# semi-join — the same threshold the WAND scan uses (a 10^5-term IN
-# predicate bloats the plan and the parquet filter evaluation)
-TERM_INLIST_MAX = 1024
 
 
 # Cost gate for the single-pass positional plan (round 7).  The
@@ -119,15 +111,6 @@ def _alive_queries(
     return qids - dead
 
 
-def _restrict_terms(df: DataFrame, terms: list[str]) -> DataFrame:
-    if len(terms) <= TERM_INLIST_MAX:
-        return df.filter(F.col("term").isin(terms))
-    tdf = df.sparkSession.createDataFrame(
-        [(t,) for t in terms], "term string"
-    )
-    return df.join(F.broadcast(tdf), "term", "left_semi")
-
-
 def _check_positions_codec(index_dir: str, meta: dict) -> None:
     """Refuse positional layouts this reader cannot decode (the key is
     absent on pre-round-6 indexes — those ARE the array layout)."""
@@ -141,24 +124,13 @@ def _check_positions_codec(index_dir: str, meta: dict) -> None:
 
 
 def _phrase_offsets(
-    rows: list[tuple[int, str]], code_aware: bool, lang: str
+    rows: list[tuple[int, str]], meta: dict
 ) -> list[tuple[int, int, str]]:
     """Tokenize phrases driver-side → (query_id, offset, term) rows,
     order and duplicates preserved (a phrase may repeat a term).  Phrase
     batches are small by nature (human queries); the distributed-wave
     machinery WAND needs for 10^5-query batches is not warranted here."""
-    if code_aware:
-        from docinsight_spark.functions.tokenizer import tokenize_code_pandas
-
-        toks = tokenize_code_pandas(
-            pd.Series([t for _, t in rows], dtype=object),
-            pd.Series([lang] * len(rows), dtype=object),
-        )
-    else:
-        toks = [
-            [t for t in _JAVA_WS.split((txt or "").lower()) if t]
-            for _, txt in rows
-        ]
+    toks = query_tokens([t for _, t in rows], **query_tokenizer(meta))
     out = []
     for (qid, _), ts in zip(rows, toks):
         out.extend((int(qid), off, term) for off, term in enumerate(ts))
@@ -189,7 +161,6 @@ def phrase_search(
     index_dir: str,
     queries: DataFrame | list[tuple[int, str]],
     k: int = 10,
-    code_aware: bool | None = None,
     _meta: dict | None = None,
     _frames: dict[str, DataFrame] | None = None,
     _ds_frames: dict[str, DataFrame] | None = None,
@@ -204,7 +175,7 @@ def phrase_search(
     doc_stats DataFrames (``Searcher`` server mode) — the per-call
     parquet re-read disappears for warm repeat queries."""
     return _positional_search(
-        spark, index_dir, queries, k=k, code_aware=code_aware,
+        spark, index_dir, queries, k=k,
         _meta=_meta, mode="phrase", window=0,
         _frames=_frames, _ds_frames=_ds_frames, _tstats=_tstats,
     )
@@ -216,7 +187,6 @@ def proximity_search(
     queries: DataFrame | list[tuple[int, str]],
     k: int = 10,
     window: int = 8,
-    code_aware: bool | None = None,
     _meta: dict | None = None,
     _frames: dict[str, DataFrame] | None = None,
     _ds_frames: dict[str, DataFrame] | None = None,
@@ -236,7 +206,7 @@ def proximity_search(
     if window < 1:
         raise ValueError("proximity window must be >= 1 token")
     return _positional_search(
-        spark, index_dir, queries, k=k, code_aware=code_aware,
+        spark, index_dir, queries, k=k,
         _meta=_meta, mode="near", window=int(window),
         _frames=_frames, _ds_frames=_ds_frames, _tstats=_tstats,
     )
@@ -247,7 +217,6 @@ def _positional_search(
     index_dir: str,
     queries: DataFrame | list[tuple[int, str]],
     k: int,
-    code_aware: bool | None,
     _meta: dict | None,
     mode: str,
     window: int,
@@ -262,9 +231,6 @@ def _positional_search(
             "phrase/proximity search needs positional postings"
         )
     _check_positions_codec(index_dir, meta)
-    if code_aware is None:
-        code_aware = bool(meta.get("code_aware", True))
-    qlang = str(meta.get("query_lang", "java"))
     if isinstance(queries, DataFrame):
         # phrase batches are driver-resident by design (human-scale query
         # sets); refuse a batch that would flood the driver instead of
@@ -281,7 +247,7 @@ def _positional_search(
         rows = [(int(r["query_id"]), r["query_text"]) for r in head]
     else:
         rows = [(int(q), t) for q, t in queries]
-    offsets = _phrase_offsets(rows, code_aware, qlang)
+    offsets = _phrase_offsets(rows, meta)
     empty = spark.createDataFrame(
         [], "query_id long, rank int, docID long, score double"
     )
@@ -305,7 +271,7 @@ def _positional_search(
             else spark.read.parquet(src)
         )
         return (
-            _restrict_terms(base, all_terms)
+            restrict_terms(base, all_terms)
             .select(*cols)
             .withColumn("_root", F.lit(rid))
         )
@@ -321,7 +287,7 @@ def _positional_search(
         _tstats if _tstats is not None
         else load_term_stats(spark, index_dir, meta)
     )
-    df_rows = _restrict_terms(tstats, all_terms).collect()
+    df_rows = restrict_terms(tstats, all_terms).collect()
     df_map = {r["term"]: int(r["df"]) for r in df_rows}
     cost_single = sum(df_map.get(t, 0) for _, _, t in offsets)
     if cost_single <= SINGLE_PASS_MAX_ROWS:
@@ -724,7 +690,7 @@ def snippet_windows(
             buckets = bset
     rows = _union_frames(
         [
-            _restrict_terms(spark.read.parquet(src), terms)
+            restrict_terms(spark.read.parquet(src), terms)
             .select("term", "docID", "positions", "doc_bucket")
             .withColumn("_root", F.lit(rid))
             for rid, src in roots

@@ -66,6 +66,11 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from docinsight_spark.functions.tokenizer import (
+    query_terms,
+    query_tokenizer,
+    query_tokens,
+)
 from docinsight_spark.index.builder import (
     doc_stats_roots,
     load_segments,
@@ -73,7 +78,7 @@ from docinsight_spark.index.builder import (
     lookup_dl,
     read_doc_stats_bucket_multi,
     read_tombstone_bucket,
-    strict_dl_enabled,
+    restrict_terms,
     tombstone_root_dirs,
 )
 from docinsight_spark.index.codec import block_starts
@@ -435,13 +440,12 @@ class Searcher:
         return self._pos_frames, self._pos_ds_frames
 
     def search(self, queries: DataFrame, k: int = 10,
-               code_aware: bool | None = None,
                require_all: bool = False,
                neg_queries: DataFrame | None = None) -> DataFrame:
         if self.auto_reload:
             self._maybe_reload()
         return wand_search(
-            self.spark, self.index_dir, queries, k=k, code_aware=code_aware,
+            self.spark, self.index_dir, queries, k=k,
             _segments=self.segments, _meta=self.meta, _tstats=self.term_stats,
             require_all=require_all, neg_queries=neg_queries,
         )
@@ -505,80 +509,58 @@ class Searcher:
 
 
 # Query batches up to this many rows tokenize driver-side (saves one
-# Spark job per search call); larger batches — e.g. cmd_report feeding
-# one row per line of every query document — tokenize distributed so
+# Spark job per search call); larger batches tokenize in executors so
 # the driver never becomes the tokenizer.
 DRIVER_TOKENIZE_MAX = 512
 
 
 def _query_term_map(
-    queries: DataFrame, code_aware: bool, driver_max: int, lang: str = "java"
+    queries: DataFrame, meta: dict, driver_max: int
 ) -> dict[int, list[str]] | None:
-    """{query_id: sorted distinct terms} for batches small enough to
-    tokenize on the driver; ``None`` for larger batches — callers then
-    take the distributed per-wave path (:func:`_wave_qmaps`), which never
-    materializes the whole batch's pairs on the driver."""
-    q = queries.select("query_id", "query_text")
-    head = q.limit(driver_max + 1).collect() if driver_max >= 0 else []
-    if driver_max < 0 or len(head) > driver_max:
+    """{query_id: sorted distinct terms} for batches of at most
+    ``driver_max`` rows, tokenized on the driver with the index's own
+    tokenizer; ``None`` for larger batches."""
+    head = queries.select("query_id", "query_text").limit(driver_max + 1).collect()
+    if len(head) > driver_max:
         return None
-    if code_aware:
-        from docinsight_spark.functions.tokenizer import tokenize_code_pandas
-
-        toks = tokenize_code_pandas(
-            pd.Series([r["query_text"] for r in head]),
-            pd.Series([lang] * len(head)),
-        )
-    else:
-        import re as _re
-
-        # replicate Spark/Java regex semantics exactly: Java's \s is
-        # the ASCII class [ \t\n\x0B\f\r], while Python's \s is
-        # Unicode-aware — a query containing e.g. NBSP must tokenize
-        # the same on the driver path, the distributed path, AND the
-        # index build (all Java-regex) or results differ by batch size
-        _ws = _re.compile("[ \t\n\x0b\f\r]+")
-        toks = [
-            [t for t in _ws.split((r["query_text"] or "").lower()) if t]
-            for r in head
-        ]
+    toks = query_tokens([r["query_text"] for r in head], **query_tokenizer(meta))
     qmap: dict[int, list[str]] = {}
     for r, ts in zip(head, toks):
         qmap.setdefault(int(r["query_id"]), []).extend(ts)
     return {qid: sorted(set(ts)) for qid, ts in qmap.items() if ts}
 
 
-def _wave_qmaps(
-    queries: DataFrame,
-    code_aware: bool,
-    chunk: int,
-    stats_out: dict | None = None,
-    lang: str = "java",
-):
-    """Yield per-wave {query_id: terms} dicts for a LARGE query batch.
+def _batch_terms(
+    queries: DataFrame, meta: dict
+) -> dict[int, list[str]] | DataFrame:
+    """A query batch's distinct (query_id, term) pairs in the form
+    :func:`wand_search` takes as ``_qmap``: a driver dict up to
+    :data:`DRIVER_TOKENIZE_MAX` rows, else the column form's frame
+    (tokenized in executors, collected one wave at a time)."""
+    qmap = _query_term_map(queries, meta, DRIVER_TOKENIZE_MAX)
+    if qmap is not None:
+        return qmap
+    return query_terms(queries, **query_tokenizer(meta))
 
-    The batch tokenizes in executors into a distinct (query_id, term)
-    pair frame; each query_id is assigned a wave (row_number over sorted
-    ids / chunk) and the driver collects ONE wave's pairs at a time —
-    driver residency is O(chunk × terms-per-query), never O(batch).
-    The pair frame is persisted so the per-wave filters are cheap
-    re-reads, not re-tokenizations."""
+
+def _pairs_frame(spark: SparkSession, qmap: dict[int, list[str]]) -> DataFrame:
+    """A driver term map as a (query_id, term) frame."""
+    return spark.createDataFrame(
+        [(q, t) for q, ts in qmap.items() for t in ts], "query_id long, term string"
+    )
+
+
+def _wave_qmaps(pairs: DataFrame, chunk: int, stats_out: dict | None = None):
+    """Yield per-wave {query_id: terms} dicts for a LARGE batch of
+    distinct (query_id, term) pairs.
+
+    Each query_id is assigned a wave (row_number over sorted ids /
+    chunk) and the driver collects ONE wave's pairs at a time — driver
+    residency is O(chunk × terms-per-query), never O(batch).  The pair
+    frame is persisted so the per-wave filters are cheap re-reads, not
+    re-tokenizations."""
     from pyspark import StorageLevel
 
-    from docinsight_spark.functions.tokenizer import (
-        code_tokens_udf,
-        simple_tokens_col,
-    )
-
-    tok = (
-        code_tokens_udf(F.col("query_text"), F.lit(lang))
-        if code_aware
-        else simple_tokens_col("query_text")
-    )
-    pairs = (
-        queries.select("query_id", F.explode(F.array_distinct(tok)).alias("term"))
-        .distinct()
-    )
     # wave id per query: ids only cross the shuffle (the single-task
     # window sorts ~8 bytes/query — bounded and cheap even at 10^7)
     wv = Window.orderBy("query_id")
@@ -626,14 +608,11 @@ def wand_search(
     index_dir: str,
     queries: DataFrame,
     k: int = 10,
-    code_aware: bool | None = None,
     _segments: DataFrame | None = None,
     _meta: dict | None = None,
     _tstats: DataFrame | None = None,
-    driver_tokenize_max: int | None = None,
-    query_chunk_size: int | None = None,
     stats_out: dict | None = None,
-    _qmap: dict[int, list[str]] | None = None,
+    _qmap: dict[int, list[str]] | DataFrame | None = None,
     require_all: bool = False,
     neg_queries: DataFrame | None = None,
     _neg_qmap: dict[int, list[str]] | None = None,
@@ -644,10 +623,13 @@ def wand_search(
     distributed-batch path: number of waves and the max driver-resident
     (query_id, term) pair count per wave.
 
-    ``_qmap`` — a prebuilt {query_id: [terms]} of ALREADY-NORMALIZED
-    index terms, bypassing query tokenization entirely (``queries`` may
-    then be None).  Callers that derive terms from the index's own
-    vocabulary use this (:func:`prefix_search`).
+    ``_qmap`` — ALREADY-NORMALIZED index terms, bypassing query
+    tokenization entirely (``queries`` may then be None): a
+    {query_id: [terms]} dict (:func:`prefix_search` derives terms from
+    the index's own vocabulary), or a distinct (query_id, term) frame,
+    served one wave at a time (``analyze_documents`` tokenizes each
+    sentence once and shares the frame with its snippet and idf
+    consumers).
 
     ``require_all`` — boolean AND: only docs containing EVERY query
     term score, served by the kernel's mandatory-term intersection
@@ -661,10 +643,6 @@ def wand_search(
     Negative term sets are driver-resident by design (human-scale
     boolean queries); a neg batch too large to tokenize driver-side is
     refused loudly rather than silently collected."""
-    if driver_tokenize_max is None:
-        driver_tokenize_max = DRIVER_TOKENIZE_MAX
-    if query_chunk_size is None:
-        query_chunk_size = QUERY_CHUNK_SIZE
     meta = _meta or _load_meta(index_dir)
     if int(meta.get("version", 0)) < 5:
         raise ValueError(
@@ -672,24 +650,18 @@ def wand_search(
             "plain docs/tfs arrays, the drift-safe (tf_max, dl_min) block "
             "bounds and/or carried idf-baked block maxima); rebuild the index"
         )
-    if code_aware is None:
-        code_aware = bool(meta.get("code_aware", True))
-    # query-side tokenizer lang parity: a Python-majority corpus masks
-    # `#` comments at build time — queries must mask them the same way
-    # (recorded by finalize/refresh from the runs' lang mix)
-    qlang = str(meta.get("query_lang", "java"))
     empty = spark.createDataFrame(
         [], "query_id long, rank int, docID long, score double"
     )
-    qmap = (
+    if _qmap is None:
+        _qmap = _batch_terms(queries, meta)
+    qmap = None
+    if not isinstance(_qmap, DataFrame):
         # same invariant as _query_term_map: no empty term lists (a
         # prefix with zero expansions simply returns no rows)
-        {int(q): sorted(set(ts)) for q, ts in _qmap.items() if ts}
-        if _qmap is not None
-        else _query_term_map(queries, code_aware, driver_tokenize_max, qlang)
-    )
-    if qmap is not None and not any(qmap.values()):
-        return empty
+        qmap = {int(q): sorted(set(ts)) for q, ts in _qmap.items() if ts}
+        if not qmap:
+            return empty
     neg_qmap = (
         {int(q): sorted(set(ts)) for q, ts in _neg_qmap.items() if ts}
         if _neg_qmap is not None
@@ -698,15 +670,13 @@ def wand_search(
     if neg_queries is not None and neg_qmap is None:
         # negative word sets are tiny per query; cap at the same budget
         # the wave machinery uses per wave rather than the OR path's
-        # driver_tokenize_max (a large POSITIVE batch may still carry a
+        # DRIVER_TOKENIZE_MAX (a large POSITIVE batch may still carry a
         # driver-sized negative map)
-        neg_qmap = _query_term_map(
-            neg_queries, code_aware, query_chunk_size, qlang
-        )
+        neg_qmap = _query_term_map(neg_queries, meta, QUERY_CHUNK_SIZE)
         if neg_qmap is None:
             raise ValueError(
                 "neg_queries batch exceeds the driver tokenize budget "
-                f"({query_chunk_size}); negative term maps are driver-"
+                f"({QUERY_CHUNK_SIZE}); negative term maps are driver-"
                 "resident — split the batch"
             )
     n_docs, avgdl = int(meta["n_docs"]), float(meta["avgdl"])
@@ -726,14 +696,12 @@ def wand_search(
     if qmap is not None:
         qids = sorted(qmap)
         waves = (
-            {qid: qmap[qid] for qid in qids[i : i + query_chunk_size]}
-            for i in range(0, len(qids), query_chunk_size)
+            {qid: qmap[qid] for qid in qids[i : i + QUERY_CHUNK_SIZE]}
+            for i in range(0, len(qids), QUERY_CHUNK_SIZE)
         )
     else:
         # large batch: per-wave driver collection — bounded footprint
-        waves = _wave_qmaps(
-            queries, code_aware, query_chunk_size, stats_out, qlang
-        )
+        waves = _wave_qmaps(_qmap, QUERY_CHUNK_SIZE, stats_out)
     if "_root" not in base.columns:
         base = base.withColumn("_root", F.lit("base"))
     dl_roots = doc_stats_roots(index_dir, meta)
@@ -805,25 +773,16 @@ def _wave_local_topk(
     )
     if not all_terms:
         return spark.createDataFrame([], "query_id long, docID long, score double")
-    if len(all_terms) <= 1024:
-        # IN-list pushes to parquet row-group stats (segments are
-        # term-sorted within each shard file)
-        seg = base.filter(F.col("term").isin(all_terms))
-        tfil = tstats.filter(F.col("term").isin(all_terms))
-    else:
-        # huge term sets would bloat the plan; broadcast semi-join instead
-        terms_df = spark.createDataFrame([(t,) for t in all_terms], "term string")
-        seg = base.join(F.broadcast(terms_df), "term", "left_semi")
-        tfil = tstats.join(F.broadcast(terms_df), "term", "left_semi")
+    seg = restrict_terms(base, all_terms)
+    tfil = restrict_terms(tstats, all_terms)
     # Segments store idf-independent block maxima; df (→ idf) joins back
     # in-plan: tfil is pruned to the query's terms (term-sorted files →
     # row-group skipping), so the broadcast is bounded by |query terms|,
     # never the vocabulary — and no extra driver round-trip job runs per
     # search call.  A segment term absent from term_stats (corruption)
-    # drops out here; DOCINSIGHT_STRICT_DL covers loud detection.
+    # drops out here.
     seg = seg.join(F.broadcast(tfil), "term")
     bc = spark.sparkContext.broadcast((qmap, neg_qmap))
-    strict = strict_dl_enabled()
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         qmap_bc, neg_bc = bc.value
@@ -907,7 +866,7 @@ def _wave_local_topk(
             ds_docs, ds_dl = ds
 
             def dl_of(docs: np.ndarray) -> np.ndarray:
-                return lookup_dl(ds_docs, ds_dl, docs, strict)
+                return lookup_dl(ds_docs, ds_dl, docs)
 
             out.extend(
                 _score_shard(

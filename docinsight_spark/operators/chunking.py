@@ -84,7 +84,7 @@ def sliding_window_chunks(
         tail = F.substring(
             F.col("_t"), F.col("start") + window_chars, snap_max_chars
         )
-        chunk = F.concat(chunk, F.regexp_extract(tail, r"^[^ \t\n\x0B\f\r]*", 0))
+        chunk = F.concat(chunk, F.regexp_extract(tail, r"^\S*", 0))
     return (
         out.withColumn("chunk", chunk)
         .filter(F.length("chunk") > 0)

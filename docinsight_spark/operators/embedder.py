@@ -33,14 +33,12 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# Java-regex \s parity (ASCII class) with the engine's whitespace
-# tokenizer — see functions/tokenizer.simple_tokens_col.
-_WS = "[ \t\n\x0b\f\r]+"
-
+from docinsight_spark.functions.tokenizer import JAVA_WS
 
 # findall of non-ws runs ≡ split-on-\s minus empties, one vectorized
-# pass with nothing to filter (same trick as tokenizer.py)
-_NONWS = "[^ \t\n\x0b\f\r]+"
+# pass with nothing to filter (same trick as tokenizer.py); Java-regex
+# \s parity with the engine's whitespace tokenizer
+_NONWS = f"[^{JAVA_WS}]+"
 
 
 def _embed_batch(texts: pd.Series, dim: int, seed: int) -> list[list[float] | None]:

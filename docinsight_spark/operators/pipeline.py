@@ -10,7 +10,9 @@ Here the whole batch of query documents runs as ONE DataFrame pipeline
 (no per-sentence Python loop — SURVEY §3.1 "→ Spark shape"):
 
 1. chunk query docs into sentences/statements (``split_sentences`` on
-   line boundaries for code);
+   line boundaries for code) and tokenize each chunk ONCE with the
+   index's query tokenizer — its distinct terms feed retrieval, the
+   evidence snippets and the Σidf similarity bound alike;
 2. BM25 top-k per chunk over the segment index (the fast path);
 3. per-chunk min-max normalization (W4) + fusion (A10) against the
    exact rescore (the "rerank" family of the new engine);
@@ -27,8 +29,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from docinsight_spark.functions.tokenizer import query_token_col, query_tokenizer
+from docinsight_spark.index import fsio
+from docinsight_spark.index.builder import load_term_stats
+from docinsight_spark.index.phrase import snippet_windows
 from docinsight_spark.index.wand import wand_search
 from docinsight_spark.operators import scoring as S
+from docinsight_spark.operators.postings import tokenized, with_doc_id
 
 
 def _chunks_of(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -75,11 +82,25 @@ def analyze_documents(
     ``Docs/report.html``).  Cost is bounded: only the DISTINCT
     best-match docs (≤ one per query sentence) are semi-joined out of
     the corpus and re-tokenized."""
-    chunks = _chunks_of(docs, id_col, text_col).withColumn(
-        "query_id", F.xxhash64("doc_id", "idx")
-    ).cache()
-    queries = chunks.select("query_id", F.col("sentence").alias("query_text"))
-    hits = wand_search(spark, index_dir, queries, k=k)
+    meta = fsio.read_json(f"{index_dir}/_meta.json")
+    if evidence_window and not meta.get("positions", False):
+        raise ValueError("evidence_window needs an index built with positions=True")
+    # each sentence tokenizes ONCE, with the index's own query tokenizer;
+    # its distinct terms feed retrieval, the snippet windows and Σidf
+    chunks = (
+        _chunks_of(docs, id_col, text_col)
+        .withColumn("query_id", F.xxhash64("doc_id", "idx"))
+        .withColumn(
+            "terms",
+            F.array_distinct(query_token_col("sentence", **query_tokenizer(meta))),
+        )
+        .cache()
+    )
+    qterms = chunks.select("query_id", F.explode("terms").alias("term"))
+    ts = load_term_stats(spark, index_dir, meta)
+    hits = wand_search(
+        spark, index_dir, None, k=k, _meta=meta, _tstats=ts, _qmap=qterms
+    )
     per_sentence = hits.join(
         F.broadcast(chunks.select("query_id", "doc_id", "idx")), "query_id"
     ).select("query_id", "doc_id", "idx", "rank", "docID", "score")
@@ -97,28 +118,10 @@ def analyze_documents(
         )
     )
     if evidence_window:
-        from docinsight_spark.functions.tokenizer import code_tokens_udf as _tok
-        from docinsight_spark.index import fsio as _fsio
-        from docinsight_spark.index.phrase import snippet_windows
-
-        _m = _fsio.read_json(f"{index_dir}/_meta.json")
-        if not _m.get("positions", False):
-            raise ValueError(
-                "evidence_window needs an index built with positions=True"
-            )
-        ev_qterms = chunks.select(
-            "query_id",
-            F.explode(
-                F.array_distinct(
-                    _tok(F.col("sentence"),
-                         F.lit(str(_m.get("query_lang", "java"))))
-                )
-            ).alias("term"),
-        )
         sn = snippet_windows(
             spark, index_dir,
             best.select("query_id", F.col("_best_id").alias("docID")),
-            ev_qterms, window=evidence_window,
+            qterms, window=evidence_window, _meta=meta,
         ).select(
             "query_id",
             F.col("docID").alias("_best_id"),
@@ -129,23 +132,14 @@ def analyze_documents(
         if corpus is not None:
             # render the matched KWIC text: re-tokenize ONLY the distinct
             # best-match docs (semi-join — never the whole corpus) with
-            # the index's own tokenizer, slice at the snippet offset
-            from docinsight_spark.functions.tokenizer import simple_tokens_col
-            from docinsight_spark.operators.postings import with_doc_id
-
+            # the index's own build tokenizer, slice at the snippet offset
             matched = best.select(
                 F.col("_best_id").alias("docID")
             ).distinct()
-            tokcol = (
-                _tok(F.col("content"), F.col("lang"))
-                if bool(_m.get("code_aware", True))
-                else simple_tokens_col("content")
-            )
-            mt = (
-                with_doc_id(corpus)
-                .join(matched, "docID", "left_semi")
-                .select(F.col("docID").alias("_best_id"), tokcol.alias("_toks"))
-            )
+            mt = tokenized(
+                with_doc_id(corpus).join(matched, "docID", "left_semi"),
+                code_aware=bool(meta.get("code_aware", True)),
+            ).select(F.col("docID").alias("_best_id"), F.col("tokens").alias("_toks"))
             best = (
                 best.join(mt, "_best_id", "left")
                 .withColumn(
@@ -169,7 +163,7 @@ def analyze_documents(
         "best_match", F.col("_best_id").cast("string")
     ).drop("_best_id")
     sent = (
-        chunks.join(best, ["doc_id", "idx"], "left")
+        chunks.drop("terms").join(best, ["doc_id", "idx"], "left")
         .fillna({"semantic_raw": 0.0, "semantic_norm": 0.0, "best_match": ""})
     )
     # fusion: semantic (normalized BM25) + exact-rescore family (the top
@@ -180,33 +174,17 @@ def analyze_documents(
     # normalized BM25 = score / Σ_t idf(t) over the sentence's terms.
     # A verbatim match lands ~0.5-0.8; incidental shared common terms
     # land ≪ 0.35 because unmatched (especially rare) terms still count
-    # in the denominator.
-    from docinsight_spark.functions.tokenizer import code_tokens_udf
-    from docinsight_spark.index import fsio
-
-    from docinsight_spark.index.builder import load_term_stats
-
-    _meta = fsio.read_json(f"{index_dir}/_meta.json")
-    n_docs = int(_meta["n_docs"])
-    ts = load_term_stats(spark, index_dir, _meta)
-    qterms = chunks.select(
-        "doc_id", "idx",
-        F.explode_outer(
-            F.array_distinct(
-                code_tokens_udf(
-                    F.col("sentence"),
-                    F.lit(str(_meta.get("query_lang", "java"))),
-                )
-            )
-        ).alias("term"),
-    )
+    # in the denominator.  A term-less line (`}`) keeps one null-term
+    # row (explode_outer), so its Σ is idf(df=0), not null.
+    n_docs = int(meta["n_docs"])
     idf = F.log(
         (F.lit(float(n_docs)) - F.coalesce(F.col("df"), F.lit(0)) + 0.5)
         / (F.coalesce(F.col("df"), F.lit(0)) + 0.5)
         + 1.0
     )
     qnorm = (
-        qterms.join(ts, "term", "left")
+        chunks.select("doc_id", "idx", F.explode_outer("terms").alias("term"))
+        .join(ts, "term", "left")
         .groupBy("doc_id", "idx")
         .agg(F.sum(idf).alias("idf_sum"))
     )

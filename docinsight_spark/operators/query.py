@@ -24,27 +24,8 @@ from pyspark.sql import functions as F
 
 from docinsight_spark import BM25_B, BM25_K1, DEFAULT_TOP_K
 from docinsight_spark.functions.bm25 import bm25_score_col
-from docinsight_spark.functions.tokenizer import code_tokens_udf, simple_tokens_col
+from docinsight_spark.functions.tokenizer import query_terms
 from docinsight_spark.operators.postings import CorpusStats
-
-
-def query_terms(
-    queries: DataFrame, code_aware: bool = True, lang: str = "java"
-) -> DataFrame:
-    """(query_id, term) — distinct query terms (bag-of-words retrieval;
-    repeated query terms count once, like the reference's sentence-level
-    query embedding collapses repetition).  ``lang`` picks the comment /
-    string masking family — pass the index's recorded corpus-majority
-    lang (``_meta.json: query_lang``) for build/query parity."""
-    tok = (
-        code_tokens_udf(F.col("query_text"), F.lit(lang))
-        if code_aware
-        else simple_tokens_col("query_text")
-    )
-    return (
-        queries.select("query_id", F.explode(tok).alias("term"))
-        .distinct()
-    )
 
 
 def bm25_scores(

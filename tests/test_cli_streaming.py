@@ -415,3 +415,38 @@ def test_cli_report_evidence_snippet_text(spark, cli_env, capsys):
         page = f.read()
     assert "Matched-sentence evidence" in page
     assert _html.escape(with_text[0]["match_snippet_text"][:200]) in page
+
+
+def test_cli_query_snippet_window_counts_scored_terms(spark, cli_env, capsys):
+    """`query --snippet-window W` on a positional index: each printed
+    row's n_matches is what snippet_windows gives over the search's own
+    (query_id, term) pairs."""
+    from docinsight_spark.functions.tokenizer import query_terms, query_tokenizer
+    from docinsight_spark.index import fsio
+    from docinsight_spark.index.phrase import snippet_windows
+
+    idx = f"{cli_env['root']}/idx_snip"
+    assert cli_main([
+        "build", "--corpus", cli_env["corpus"], "--index", idx,
+        "--buckets", "4", "--positions",
+    ]) == 0
+    capsys.readouterr()
+    assert cli_main([
+        "query", "--index", idx, "--queries", cli_env["queries"],
+        "--k", "5", "--snippet-window", "8",
+    ]) == 0
+    rows = [
+        json.loads(line) for line in capsys.readouterr().out.strip().splitlines()
+        if line.startswith("{")
+    ]
+    assert rows and all(r["n_matches"] is not None for r in rows)
+    queries = spark.read.parquet(cli_env["queries"])
+    qt = query_terms(queries, **query_tokenizer(fsio.read_json(f"{idx}/_meta.json")))
+    cand = spark.createDataFrame(
+        [(r["query_id"], r["docID"]) for r in rows], "query_id long, docID long"
+    )
+    want = {
+        (r["query_id"], r["docID"]): r["n_matches"]
+        for r in snippet_windows(spark, idx, cand, qt, window=8).collect()
+    }
+    assert {(r["query_id"], r["docID"]): r["n_matches"] for r in rows} == want

@@ -228,10 +228,9 @@ def test_purge_run_exact_manifest_match(spark, tmp_path, tiny_corpus):
     assert "run-r10" in units and "run-r1" not in units
 
 
-def test_strict_dl_flag_fails_on_corrupt_doc_stats(spark, tmp_path, tiny_corpus,
-                                                   monkeypatch):
-    """With DOCINSIGHT_STRICT_DL=1 a doc_stats/postings inconsistency
-    surfaces as an error instead of silently mis-scoring."""
+def test_strict_dl_flag_fails_on_corrupt_doc_stats(spark, tmp_path, tiny_corpus):
+    """A doc_stats/postings inconsistency surfaces as an error instead
+    of silently mis-scoring (the check always runs)."""
     import pyarrow.parquet as pq
 
     d = str(tmp_path / "idx_corrupt")
@@ -243,14 +242,27 @@ def test_strict_dl_flag_fails_on_corrupt_doc_stats(spark, tmp_path, tiny_corpus,
             pq.write_table(t.slice(0, t.num_rows // 2), f)
             break
     q = make_queries(spark, corpus_n=200, n_queries=10)
-    monkeypatch.setenv("DOCINSIGHT_STRICT_DL", "1")
     from py4j.protocol import Py4JJavaError
 
     with pytest.raises((Py4JJavaError, Exception), match="doc_stats"):
         wand_search(spark, d, q, k=5).count()
-    # default (non-strict) mode still answers
-    monkeypatch.delenv("DOCINSIGHT_STRICT_DL")
-    assert wand_search(spark, d, q, k=5).count() >= 0
+
+
+def test_lookup_dl_raises_on_missing_doc_id():
+    """A docID absent from the doc_stats map raises; it never takes a
+    neighbouring doc's length."""
+    import numpy as np
+
+    from docinsight_spark.index.builder import lookup_dl
+
+    docs, dls = np.array([10, 20, 30], np.int64), np.array([5, 6, 7], np.int64)
+    assert lookup_dl(docs, dls, np.array([30, 10], np.int64)).tolist() == [7, 5]
+    with pytest.raises(ValueError, match="missing from doc_stats"):
+        lookup_dl(docs, dls, np.array([10, 25], np.int64))
+    with pytest.raises(ValueError, match="missing from doc_stats"):
+        lookup_dl(docs, dls, np.array([99], np.int64))  # past the last docID
+    with pytest.raises(ValueError, match="empty"):
+        lookup_dl(docs[:0], dls[:0], np.array([10], np.int64))
 
 
 def test_segment_files_partitioned_by_bucket(built_index):

@@ -61,3 +61,49 @@ def test_analyze_outputs_are_consistent(spark, plag_setup):
             o.loc[doc_id, ["n_high", "n_medium", "n_low"]].sum() == len(grp)
         )
     assert ((o["originality_score"] >= 0) & (o["originality_score"] <= 1)).all()
+
+
+def test_whitespace_index_report_uses_index_tokenizer(spark, tmp_path):
+    """On a ``code_aware=False`` index a verbatim line's terms are its
+    whitespace tokens — the terms retrieval scores — for Σidf and the
+    evidence snippet alike (a code tokenizer would split ``fooBar`` and
+    ``baz_qux(1);`` into terms this index never holds)."""
+    import math
+
+    from docinsight_spark.corpus import make_corpus
+    from docinsight_spark.index import fsio
+
+    line = "int fooBar = baz_qux(1);"
+    holder = spark.createDataFrame(
+        [("holder", "Holder.java", "c0", "java",
+          "class Holder {\n  " + line + "\n}\n")],
+        "repo string, path string, commit string, lang string, content string",
+    )
+    corpus = make_corpus(spark, 20, seed=3).unionByName(holder).cache()
+    idx = str(tmp_path / "wsidx")
+    IndexBuilder(
+        spark, idx, n_buckets=2, code_aware=False, positions=True
+    ).build(corpus)
+    docs = spark.createDataFrame([(1, line)], "doc_id long, content string")
+    sent, _, _ = analyze_documents(
+        spark, idx, docs, k=5, evidence_window=8, corpus=corpus
+    )
+    row = sent.collect()
+    assert len(row) == 1
+    row = row[0]
+
+    n_docs = fsio.read_json(f"{idx}/_meta.json")["n_docs"]
+    terms = ["int", "foobar", "=", "baz_qux(1);"]
+    df = {
+        r["term"]: r["df"]
+        for r in spark.read.parquet(f"{idx}/term_stats")
+        .filter(F.col("term").isin(terms)).collect()
+    }
+    assert set(df) == set(terms)
+    want = sum(math.log((n_docs - df[t] + 0.5) / (df[t] + 0.5) + 1.0) for t in terms)
+    assert row["idf_sum"] == pytest.approx(want, rel=1e-12)
+    holder_id = with_doc_id(holder).select("docID").first()[0]
+    assert row["best_match"] == str(holder_id)
+    assert row["match_snippet_matches"] == 4
+    assert row["match_snippet_text"].startswith("int foobar = baz_qux(1);")
+    assert row["semantic_score"] == pytest.approx(1.0)

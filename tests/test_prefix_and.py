@@ -269,9 +269,12 @@ def test_wand_neg_terms_rank_identical_to_exact(spark, px_setup, bool_queries):
     _assert_same(fast2, exact2)
 
 
-def test_wand_boolean_distributed_wave_path(spark, px_setup, bool_queries):
+def test_wand_boolean_distributed_wave_path(
+    spark, px_setup, bool_queries, monkeypatch
+):
     """AND/NOT also hold on the distributed-wave path (driver tokenize
     budget 0 forces per-wave tokenization in executors)."""
+    from docinsight_spark.index import wand as wand_mod
     from docinsight_spark.index.wand import wand_search
 
     q = spark.createDataFrame(
@@ -286,11 +289,12 @@ def test_wand_boolean_distributed_wave_path(spark, px_setup, bool_queries):
             require_all=True, _neg_qmap=neg_qmap,
         )
     )
+    monkeypatch.setattr(wand_mod, "DRIVER_TOKENIZE_MAX", 0)
+    monkeypatch.setattr(wand_mod, "QUERY_CHUNK_SIZE", 2)
     waved = _res(
         wand_search(
             spark, px_setup["idx"], q, k=8,
             require_all=True, _neg_qmap=neg_qmap,
-            driver_tokenize_max=0, query_chunk_size=2,
         )
     )
     assert len(ref[0]) > 0

@@ -62,16 +62,19 @@ def test_unicode_and_long_query(spark, small_idx):
     assert len(res) == 3
 
 
-def test_distributed_tokenize_matches_driver_path(spark, small_idx):
+def test_distributed_tokenize_matches_driver_path(spark, small_idx, monkeypatch):
     """Above the batch-size threshold queries tokenize in executors;
     results must be identical to the driver-side path."""
     from docinsight_spark.corpus import make_queries
+    from docinsight_spark.index import wand as wand_mod
 
     q = make_queries(spark, corpus_n=200, n_queries=12)
-    a = (
-        wand_search(spark, small_idx, q, k=5, driver_tokenize_max=0)
-        .orderBy("query_id", "rank").toPandas()
-    )
+    with monkeypatch.context() as m:
+        m.setattr(wand_mod, "DRIVER_TOKENIZE_MAX", 0)
+        a = (
+            wand_search(spark, small_idx, q, k=5)
+            .orderBy("query_id", "rank").toPandas()
+        )
     b = wand_search(spark, small_idx, q, k=5).orderBy("query_id", "rank").toPandas()
     assert a[["query_id", "rank", "docID"]].equals(b[["query_id", "rank", "docID"]])
     assert (abs(a["score"] - b["score"]) < 1e-12).all()
@@ -101,7 +104,7 @@ def test_huge_k_hot_term_scores_descend(spark, small_idx):
     assert all(s[i] >= s[i + 1] - 1e-12 for i in range(len(s) - 1))
 
 
-def test_query_side_tokenizer_lang_parity(spark, tmp_path):
+def test_query_side_tokenizer_lang_parity(spark, tmp_path, monkeypatch):
     """A Python-majority corpus masks '#' comments at build time; the
     query side must mask them identically (``_meta.json: query_lang``,
     recorded from the runs' lang mix).  A query whose extra terms sit
@@ -110,6 +113,7 @@ def test_query_side_tokenizer_lang_parity(spark, tmp_path):
     comment would leak into the query and change the top-k."""
     from docinsight_spark.corpus import make_corpus
     from docinsight_spark.index import fsio
+    from docinsight_spark.index import wand as wand_mod
 
     d = str(tmp_path / "pyidx")
     corpus = make_corpus(spark, 250, seed=5).withColumn("lang", F.lit("python"))
@@ -123,24 +127,29 @@ def test_query_side_tokenizer_lang_parity(spark, tmp_path):
                 .select("rank", "docID", "score").collect()))
     assert a == b and len(a) == 5
     # the distributed-tokenize path applies the same lang
-    c = sorted(map(tuple, wand_search(
-        spark, d, with_comment, k=5, driver_tokenize_max=0)
-        .select("rank", "docID", "score").collect()))
+    monkeypatch.setattr(wand_mod, "DRIVER_TOKENIZE_MAX", 0)
+    c = sorted(map(tuple, wand_search(spark, d, with_comment, k=5)
+                .select("rank", "docID", "score").collect()))
     assert c == a
 
 
-def test_per_wave_driver_collect_identical_with_telemetry(spark, small_idx):
+def test_per_wave_driver_collect_identical_with_telemetry(
+    spark, small_idx, monkeypatch
+):
     """Large-batch path: (query_id, term) pairs are collected per WAVE —
     driver residency is O(chunk × terms/query), never O(batch) — and the
     results are identical to the small-batch driver-tokenized path."""
     from docinsight_spark.corpus import make_queries
+    from docinsight_spark.index import wand as wand_mod
 
     q = make_queries(spark, corpus_n=200, n_queries=30)
     stats: dict = {}
-    a = sorted(map(tuple, wand_search(
-        spark, small_idx, q, k=5, driver_tokenize_max=0,
-        query_chunk_size=7, stats_out=stats,
-    ).collect()))
+    with monkeypatch.context() as m:
+        m.setattr(wand_mod, "DRIVER_TOKENIZE_MAX", 0)
+        m.setattr(wand_mod, "QUERY_CHUNK_SIZE", 7)
+        a = sorted(map(tuple, wand_search(
+            spark, small_idx, q, k=5, stats_out=stats,
+        ).collect()))
     b = sorted(map(tuple, wand_search(spark, small_idx, q, k=5).collect()))
     assert a == b and len(a) > 0
     assert stats["n_waves"] == 5  # ceil(30 / 7)
@@ -154,29 +163,25 @@ def test_many_waves_checkpoint_guard_identical(spark, small_idx, monkeypatch):
     from docinsight_spark.corpus import make_queries
     from docinsight_spark.index import wand as wand_mod
 
-    monkeypatch.setattr(wand_mod, "CHECKPOINT_WAVES", 4)
     q = make_queries(spark, corpus_n=200, n_queries=26)
-    many = sorted(map(tuple, wand_search(
-        spark, small_idx, q, k=5, query_chunk_size=2,  # 13 waves → 3 checkpoints
-    ).collect()))
+    with monkeypatch.context() as m:
+        m.setattr(wand_mod, "CHECKPOINT_WAVES", 4)
+        m.setattr(wand_mod, "QUERY_CHUNK_SIZE", 2)  # 13 waves → 3 checkpoints
+        many = sorted(map(tuple, wand_search(spark, small_idx, q, k=5).collect()))
     one = sorted(map(tuple, wand_search(spark, small_idx, q, k=5).collect()))
     assert many == one and len(many) > 0
 
 
-def test_wand_query_batch_chunking_identical(spark, small_idx):
+def test_wand_query_batch_chunking_identical(spark, small_idx, monkeypatch):
     """Large batches split into bounded waves; results must be identical
     to the single-wave path (per-shard work stays O(shards × wave))."""
     from docinsight_spark.corpus import make_queries
-    from docinsight_spark.index.wand import wand_search
+    from docinsight_spark.index import wand as wand_mod
 
     q = make_queries(spark, corpus_n=200, n_queries=24)
     whole = sorted(map(tuple, wand_search(spark, small_idx, q, k=5).collect()))
-    waved = sorted(
-        map(
-            tuple,
-            wand_search(spark, small_idx, q, k=5, query_chunk_size=5).collect(),
-        )
-    )
+    monkeypatch.setattr(wand_mod, "QUERY_CHUNK_SIZE", 5)
+    waved = sorted(map(tuple, wand_search(spark, small_idx, q, k=5).collect()))
     assert whole == waved and len(whole) > 0
 
 
