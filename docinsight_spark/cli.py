@@ -318,24 +318,14 @@ def cmd_query(args) -> int:
             )
             if negs:
                 neg_rows.append((qid, " ".join(negs)))
-        if mode == "and" or neg_rows:
-            pos_df = spark.createDataFrame(
-                pos_rows, "query_id long, query_text string"
-            )
-            neg_df = (
-                spark.createDataFrame(
-                    neg_rows, "query_id long, query_text string"
-                )
-                if neg_rows
-                else None
-            )
-        else:
-            pos_df, neg_df = queries, None
-        # tokenize once: the snippet terms below are the terms scored
-        qterms = _batch_terms(pos_df, meta)
+        # tokenize once: the snippet terms below are the terms scored; a
+        # plain OR batch keeps its frame (large ones tokenize in executors)
+        qterms = _batch_terms(
+            pos_rows if mode == "and" or neg_rows else queries, meta
+        )
         res = wand_search(
             spark, args.index, None, k=args.k, _meta=meta, _qmap=qterms,
-            require_all=(mode == "and"), neg_queries=neg_df,
+            require_all=(mode == "and"), neg_queries=neg_rows or None,
         )
     if getattr(args, "snippet_window", 0):
         # evidence spans: best matched-term window per result (needs a

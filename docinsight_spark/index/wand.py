@@ -1,5 +1,23 @@
-"""Fast BM25 top-k over posting segments: block-max pruning in
-``mapInPandas`` with a bounded top-k selection.
+"""Fast BM25 top-k over posting segments: one block-max kernel
+(:func:`_score_shard`) with a bounded top-k selection, fed one of two
+ways.
+
+* **Driver feed** (:func:`_driver_topk`): a batch of at most
+  :data:`DRIVER_TOKENIZE_MAX` queries whose matched row groups' compressed
+  bytes, times its query count, stay within
+  :data:`DRIVER_FEED_MAX_BYTES` (estimated from the parquet footers,
+  never from the data) is served on the driver with no Spark job.  pyarrow reads the query terms' segment rows of
+  every root, df comes from the same roots' term_stats minus the live
+  tombstone corrections, the kernel scores each shard, and the global
+  top-k comes back as an Arrow-built local frame.
+* **Distributed feed** (:func:`_wave_local_topk`): everything larger,
+  in the shape below.
+
+Both feeds build the same ``_SegRow`` objects (:func:`_seg_rows`) and
+score shards through the same loop (:func:`_score_shards`); they
+differ only in where the rows come from.  Prefix and contains
+expansions follow the same split (:func:`_expand_local`); regex
+expansion always runs on Spark (Java regex semantics).
 
 The distributed shape (document-partitioned search, the classic
 shard-per-bucket design):
@@ -48,7 +66,7 @@ avgdl.  Exact scores always use the CURRENT global stats (N/avgdl from
 ``_meta.json``, df summed lazily across sets), so results are
 rank-identical to a from-scratch rebuild; pruning bounds stay
 admissible under avgdl drift via the per-block (tf_max, dl_min)
-fallback (see the kernel comment in :func:`_wave_local_topk`).
+fallback (see the comment in :func:`_seg_rows`).
 
 Rank-identity contract vs the exact oracle
 (:mod:`docinsight_spark.operators.query`): same formula, same
@@ -59,19 +77,33 @@ reference's FAISS-vs-numpy dual implementation
 
 from __future__ import annotations
 
-from typing import Iterator
+import bisect
+from typing import Iterator, NamedTuple
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    DoubleType,
+    IntegerType,
+    LongType,
+    StructField,
+    StructType,
+)
 
 from docinsight_spark.functions.tokenizer import (
     query_terms,
     query_tokenizer,
     query_tokens,
 )
+from docinsight_spark.index import fsio
 from docinsight_spark.index.builder import (
+    _dir_value,
+    _read_footers,
     doc_stats_roots,
     load_segments,
     load_term_stats,
@@ -85,8 +117,6 @@ from docinsight_spark.index.codec import block_starts
 
 
 def _load_meta(index_dir: str) -> dict:
-    from docinsight_spark.index import fsio
-
     return fsio.read_json(f"{index_dir}/_meta.json")
 
 
@@ -256,7 +286,9 @@ def _score_shard(
     out: list[tuple[int, int, float]] = []
     for qid, qterms in queries.items():
         qset = set(qterms)
-        terms = [t for t in qset if t in term_rows]
+        # sorted, not set order: both feeds then sum a doc's term scores
+        # in one order whatever the process's string hash seed
+        terms = sorted(t for t in qset if t in term_rows)
         if not terms:
             continue
         banned = None
@@ -340,12 +372,125 @@ def _score_shard(
     return out
 
 
+def _seg_rows(
+    cols, n_docs: int, avgdl: float, k1: float, b: float
+) -> Iterator[tuple[tuple[int, int], _SegRow]]:
+    """((doc_bucket, doc_sub), :class:`_SegRow`) per segment row of a
+    batch — a pandas frame or a dict of numpy columns — carrying the
+    segment columns plus ``df``, ``_avgdl_enc`` and ``_root``: the one
+    row builder behind both feeds."""
+    bks, subs, terms, dfs, encs, rts, docs, tfs, bns, mxs, tfms, dlms = (
+        np.asarray(cols[c]) for c in (
+            "doc_bucket", "doc_sub", "term", "df", "_avgdl_enc", "_root",
+            "docs", "tfs", "bn", "max_score", "tf_max", "dl_min",
+        )
+    )
+    for i in range(len(terms)):
+        mx = np.asarray(mxs[i], np.float32)
+        df_i = float(dfs[i])
+        idf_i = float(np.log((n_docs - df_i + 0.5) / (df_i + 0.5) + 1.0))
+        # Drift-safe upper bound: stored block maxima bake in the
+        # segment set's encode-time avgdl.  The tf-normalized score is
+        # increasing in avgdl, so when the corpus has grown past it
+        # (avgdl > _avgdl_enc) the stored maxima may UNDER-bound —
+        # recompute an admissible bound from (tf_max, dl_min) under the
+        # current avgdl (score is increasing in tf, decreasing in dl).
+        # When avgdl ≤ encode-time, stored maxima over-bound (admissible)
+        # and the min of the two bounds keeps pruning tight.
+        if len(mx):
+            tfm = np.asarray(tfms[i], np.float64)
+            dlm = np.asarray(dlms[i], np.float64)
+            bound = tfm * (k1 + 1.0) / (tfm + k1 * (1.0 - b + b * dlm / avgdl))
+            if avgdl <= float(encs[i]) * (1.0 + 1e-12):
+                bound = np.minimum(bound, mx.astype(np.float64))
+            upper_i = idf_i * float(bound.max())
+        else:
+            upper_i = 0.0
+        row = _SegRow(terms[i], df_i, docs[i], tfs[i], bns[i], upper_i, root=rts[i])
+        yield (int(bks[i]), int(subs[i])), row
+
+
+class _ShardStats:
+    """Per-bucket doc lengths and per-(root, bucket) tombstoned docIDs,
+    read with pyarrow on first use and kept: one per kernel task on the
+    distributed feed, one per committed index version on the driver
+    feed (a :class:`Searcher` keeps it across calls)."""
+
+    def __init__(self, dl_roots: list[str], tomb_dirs: dict[str, list[str]]):
+        self.dl_roots, self.tomb_dirs = dl_roots, tomb_dirs
+        self._dl: dict[int, tuple | None] = {}
+        self._excl: dict[tuple[str, int], np.ndarray | None] = {}
+
+    def dl(self, bucket: int) -> tuple[np.ndarray, np.ndarray] | None:
+        """(sorted docIDs, float64 dl) of one bucket, or None."""
+        if bucket not in self._dl:
+            ds = read_doc_stats_bucket_multi(self.dl_roots, bucket)
+            if ds is None:
+                self._dl[bucket] = None
+            else:
+                o = np.argsort(ds["docID"], kind="stable")
+                self._dl[bucket] = (ds["docID"][o], ds["dl"][o].astype(np.float64))
+        return self._dl[bucket]
+
+    def excl_of(self, bucket: int):
+        """root → sorted dead docIDs for (root, bucket), or a plain
+        None when the index has no live tombstones (fast path: the
+        kernel skips per-row exclusion entirely)."""
+        if not self.tomb_dirs:
+            return None
+
+        def of(root: str):
+            key = (root, bucket)
+            if key not in self._excl:
+                dirs = self.tomb_dirs.get(root)
+                self._excl[key] = read_tombstone_bucket(dirs, bucket) if dirs else None
+            return self._excl[key]
+
+        return of
+
+
+def _score_shards(
+    by_shard: dict[tuple[int, int], list[_SegRow]],
+    stats: _ShardStats,
+    qmap: dict[int, list[str]],
+    neg_map: dict[int, list[str]] | None,
+    n_docs: int,
+    avgdl: float,
+    k1: float,
+    b: float,
+    k: int,
+    require_all: bool,
+) -> list[tuple[int, int, float]]:
+    """Shard-local top-k rows (query_id, docID, score) of every shard."""
+    out: list[tuple[int, int, float]] = []
+    for (bucket, _sub), rows in by_shard.items():
+        ds = stats.dl(bucket)
+        if ds is None:
+            continue
+        ds_docs, ds_dl = ds
+
+        def dl_of(docs: np.ndarray) -> np.ndarray:
+            return lookup_dl(ds_docs, ds_dl, docs)
+
+        out.extend(
+            _score_shard(
+                rows, qmap, n_docs, avgdl, k1, b, k, dl_of,
+                excl_of=stats.excl_of(bucket),
+                require_all=require_all, neg_map=neg_map,
+            )
+        )
+    return out
+
+
 class Searcher:
     """Server mode: reuse one (optionally cached) segment scan + metadata
     across many search calls — the repeated-query analog of the
     reference's resident FAISS index (``index_manager.py:64-69`` loads
     once, serves many).  With ``cache=True`` the segment dataset is
-    pinned in executor memory after the first query touches it.
+    pinned in executor memory after the first query touches it.  The
+    driver feed's state (footer index, per-bucket doc lengths and
+    tombstones — :class:`_LocalIndex`) is kept per committed index
+    version, so a warm driver-sized query reads only its terms' rows.
 
     Refresh-transparent: every ``search`` re-reads ``_meta.json`` (one
     tiny driver-side file read — no Spark job) and reloads the segment
@@ -388,6 +533,7 @@ class Searcher:
         # use — a plain-index Searcher never touches them
         self._pos_frames: dict[str, "DataFrame"] | None = None
         self._pos_ds_frames: dict[str, "DataFrame"] | None = None
+        self._local = _LocalIndex(self.index_dir, self.meta)
         if self.cache:
             self.segments = self.segments.cache()
             self.term_stats = self.term_stats.cache()
@@ -439,15 +585,19 @@ class Searcher:
             self._pos_ds_frames = ds_frames
         return self._pos_frames, self._pos_ds_frames
 
-    def search(self, queries: DataFrame, k: int = 10,
+    def search(self, queries: DataFrame | list[tuple[int, str]], k: int = 10,
                require_all: bool = False,
-               neg_queries: DataFrame | None = None) -> DataFrame:
+               neg_queries: DataFrame | list[tuple[int, str]] | None = None,
+               ) -> DataFrame:
+        """:func:`wand_search` in server mode; a list of
+        ``(query_id, text)`` skips the query frame's collect job."""
         if self.auto_reload:
             self._maybe_reload()
         return wand_search(
             self.spark, self.index_dir, queries, k=k,
             _segments=self.segments, _meta=self.meta, _tstats=self.term_stats,
             require_all=require_all, neg_queries=neg_queries,
+            _local=self._local,
         )
 
     def phrase(self, queries: DataFrame | list[tuple[int, str]],
@@ -485,8 +635,7 @@ class Searcher:
 
     def prefix(self, prefixes: list[tuple[int, str]], k: int = 10,
                max_expansions: int = 16) -> DataFrame:
-        """Wildcard top-k in server mode; reuses the cached term_stats
-        and segment frames; refresh-transparent like :meth:`search`."""
+        """Wildcard top-k in server mode (:meth:`dictionary`)."""
         return self.dictionary(prefixes, k=k, max_expansions=max_expansions,
                                mode="prefix")
 
@@ -494,49 +643,58 @@ class Searcher:
                    max_expansions: int = 16,
                    mode: str = "prefix") -> DataFrame:
         """Dictionary-expansion top-k (prefix / contains / regex) in
-        server mode; reuses the cached term_stats and segment frames;
-        refresh-transparent like :meth:`search`.  The contains/regex
-        pre-filter runs on the CACHED dictionary frame, so repeated
-        pattern queries never re-read the term_stats parquet."""
+        server mode, refresh-transparent like :meth:`search`: prefix and
+        contains expand on the driver through the kept footer index; a
+        regex (or an over-budget) expansion pre-filters the CACHED
+        dictionary frame, so it never re-reads the term_stats parquet."""
         if self.auto_reload:
             self._maybe_reload()
         return dictionary_search(
             self.spark, self.index_dir, patterns, k=k,
             max_expansions=max_expansions, mode=mode,
             _meta=self.meta, _tstats=self.term_stats,
-            _segments=self.segments,
+            _segments=self.segments, _local=self._local,
         )
 
 
-# Query batches up to this many rows tokenize driver-side (saves one
-# Spark job per search call); larger batches tokenize in executors so
-# the driver never becomes the tokenizer.
+# Query frames up to this many rows tokenize driver-side (saves one
+# Spark job per search call), and term maps up to this many queries may
+# take the driver feed; larger frames tokenize in executors so the
+# driver never becomes the tokenizer (a list is on the driver already).
 DRIVER_TOKENIZE_MAX = 512
 
 
-def _query_term_map(
-    queries: DataFrame, meta: dict, driver_max: int
-) -> dict[int, list[str]] | None:
-    """{query_id: sorted distinct terms} for batches of at most
-    ``driver_max`` rows, tokenized on the driver with the index's own
-    tokenizer; ``None`` for larger batches."""
-    head = queries.select("query_id", "query_text").limit(driver_max + 1).collect()
-    if len(head) > driver_max:
-        return None
-    toks = query_tokens([r["query_text"] for r in head], **query_tokenizer(meta))
+def _pairs_map(pairs) -> dict[int, list[str]]:
+    """{query_id: sorted distinct terms} from (query_id, term) pairs."""
     qmap: dict[int, list[str]] = {}
-    for r, ts in zip(head, toks):
-        qmap.setdefault(int(r["query_id"]), []).extend(ts)
-    return {qid: sorted(set(ts)) for qid, ts in qmap.items() if ts}
+    for qid, t in pairs:
+        qmap.setdefault(int(qid), []).append(t)
+    return {qid: sorted(set(ts)) for qid, ts in qmap.items()}
+
+
+def _query_term_map(
+    queries: DataFrame | list[tuple[int, str]], meta: dict, driver_max: int
+) -> dict[int, list[str]] | None:
+    """{query_id: sorted distinct terms} tokenized on the driver with
+    the index's own tokenizer: a list always (it is driver-resident
+    already), a frame of at most ``driver_max`` rows (one collect job);
+    ``None`` for a larger frame."""
+    if isinstance(queries, DataFrame):
+        head = queries.select("query_id", "query_text").limit(driver_max + 1).collect()
+        if len(head) > driver_max:
+            return None
+        queries = [(r["query_id"], r["query_text"]) for r in head]
+    toks = query_tokens([t for _, t in queries], **query_tokenizer(meta))
+    return _pairs_map((q, t) for (q, _), ts in zip(queries, toks) for t in ts)
 
 
 def _batch_terms(
-    queries: DataFrame, meta: dict
+    queries: DataFrame | list[tuple[int, str]], meta: dict
 ) -> dict[int, list[str]] | DataFrame:
     """A query batch's distinct (query_id, term) pairs in the form
-    :func:`wand_search` takes as ``_qmap``: a driver dict up to
-    :data:`DRIVER_TOKENIZE_MAX` rows, else the column form's frame
-    (tokenized in executors, collected one wave at a time)."""
+    :func:`wand_search` takes as ``_qmap``: a driver dict for a list or
+    a frame of up to :data:`DRIVER_TOKENIZE_MAX` rows, else the column
+    form's frame (tokenized in executors)."""
     qmap = _query_term_map(queries, meta, DRIVER_TOKENIZE_MAX)
     if qmap is not None:
         return qmap
@@ -548,6 +706,16 @@ def _pairs_frame(spark: SparkSession, qmap: dict[int, list[str]]) -> DataFrame:
     return spark.createDataFrame(
         [(q, t) for q, ts in qmap.items() for t in ts], "query_id long, term string"
     )
+
+
+def _collect_pairs(pairs: DataFrame) -> dict[int, list[str]] | None:
+    """A (query_id, term) frame as a driver term map when it holds at
+    most :data:`QUERY_CHUNK_SIZE` pairs (so at most one wave of
+    queries) — one collect job; ``None`` past that."""
+    rows = pairs.select("query_id", "term").limit(QUERY_CHUNK_SIZE + 1).collect()
+    if len(rows) > QUERY_CHUNK_SIZE:
+        return None
+    return _pairs_map(rows)
 
 
 def _wave_qmaps(pairs: DataFrame, chunk: int, stats_out: dict | None = None):
@@ -578,10 +746,7 @@ def _wave_qmaps(pairs: DataFrame, chunk: int, stats_out: dict | None = None):
         for w in range(int(last) + 1):
             rows = pw.filter(F.col("_wave") == w).select("query_id", "term").collect()
             max_pairs = max(max_pairs, len(rows))
-            qmap: dict[int, list[str]] = {}
-            for r in rows:
-                qmap.setdefault(int(r["query_id"]), []).append(r["term"])
-            yield {qid: sorted(set(ts)) for qid, ts in qmap.items() if ts}
+            yield _pairs_map(rows)
         if stats_out is not None:
             stats_out["n_waves"] = int(last) + 1
             stats_out["driver_pairs_max_wave"] = max_pairs
@@ -602,11 +767,16 @@ QUERY_CHUNK_SIZE = 10_000
 # costs analysis time and driver memory per wave).
 CHECKPOINT_WAVES = 32
 
+_RESULT_SCHEMA = StructType([
+    StructField("query_id", LongType()), StructField("rank", IntegerType()),
+    StructField("docID", LongType()), StructField("score", DoubleType()),
+])
+
 
 def wand_search(
     spark: SparkSession,
     index_dir: str,
-    queries: DataFrame,
+    queries: DataFrame | list[tuple[int, str]] | None,
     k: int = 10,
     _segments: DataFrame | None = None,
     _meta: dict | None = None,
@@ -614,10 +784,21 @@ def wand_search(
     stats_out: dict | None = None,
     _qmap: dict[int, list[str]] | DataFrame | None = None,
     require_all: bool = False,
-    neg_queries: DataFrame | None = None,
+    neg_queries: DataFrame | list[tuple[int, str]] | None = None,
     _neg_qmap: dict[int, list[str]] | None = None,
+    _local: _LocalIndex | None = None,
 ) -> DataFrame:
     """(query_id, rank, docID, score) — fast path over the segment index.
+
+    ``queries``: a (query_id, query_text) frame or list.  A term map of
+    at most :data:`DRIVER_TOKENIZE_MAX` queries within
+    :data:`DRIVER_FEED_MAX_BYTES` takes the driver feed (no Spark job;
+    a list input also skips the query frame's collect); anything else
+    takes the distributed feed.  ``_local`` is the caller's kept
+    :class:`_LocalIndex` (a :class:`Searcher`'s), else one is built;
+    ``_segments`` / ``_tstats`` are the caller's kept
+    :func:`load_segments` / :func:`load_term_stats` frames of the same
+    index — both feeds must read the same rows.
 
     ``stats_out`` (optional dict) receives wave telemetry on the
     distributed-batch path: number of waves and the max driver-resident
@@ -626,23 +807,23 @@ def wand_search(
     ``_qmap`` — ALREADY-NORMALIZED index terms, bypassing query
     tokenization entirely (``queries`` may then be None): a
     {query_id: [terms]} dict (:func:`prefix_search` derives terms from
-    the index's own vocabulary), or a distinct (query_id, term) frame,
-    served one wave at a time (``analyze_documents`` tokenizes each
-    sentence once and shares the frame with its snippet and idf
-    consumers).
+    the index's own vocabulary), or a distinct (query_id, term) frame
+    (``analyze_documents`` tokenizes each sentence once and shares the
+    frame with its snippet and idf consumers).  A frame of at most
+    :data:`QUERY_CHUNK_SIZE` pairs is collected in one job and served
+    like a dict; a larger one is served one wave at a time.
 
     ``require_all`` — boolean AND: only docs containing EVERY query
     term score, served by the kernel's mandatory-term intersection
     (rarest-first candidate shrinking — stronger skipping than the OR
-    MaxScore bound).  Works on both the driver-tokenized and the
-    distributed-wave paths.
+    MaxScore bound).  Works on both feeds.
 
-    ``neg_queries`` — boolean NOT: a (query_id, query_text) frame of
-    words per query whose docs are excluded; tokenized with the same
-    rules as ``queries``.  ``_neg_qmap`` is the prebuilt-terms variant.
-    Negative term sets are driver-resident by design (human-scale
-    boolean queries); a neg batch too large to tokenize driver-side is
-    refused loudly rather than silently collected."""
+    ``neg_queries`` — boolean NOT: a (query_id, query_text) frame or
+    list of words per query whose docs are excluded; tokenized with the
+    same rules as ``queries``.  ``_neg_qmap`` is the prebuilt-terms
+    variant.  Negative term sets are driver-resident by design
+    (human-scale boolean queries); a neg batch too large to tokenize
+    driver-side is refused loudly rather than silently collected."""
     meta = _meta or _load_meta(index_dir)
     if int(meta.get("version", 0)) < 5:
         raise ValueError(
@@ -650,18 +831,19 @@ def wand_search(
             "plain docs/tfs arrays, the drift-safe (tf_max, dl_min) block "
             "bounds and/or carried idf-baked block maxima); rebuild the index"
         )
-    empty = spark.createDataFrame(
-        [], "query_id long, rank int, docID long, score double"
-    )
     if _qmap is None:
         _qmap = _batch_terms(queries, meta)
+    if isinstance(_qmap, DataFrame):
+        collected = _collect_pairs(_qmap)
+        if collected is not None:
+            _qmap = collected
     qmap = None
     if not isinstance(_qmap, DataFrame):
         # same invariant as _query_term_map: no empty term lists (a
         # prefix with zero expansions simply returns no rows)
         qmap = {int(q): sorted(set(ts)) for q, ts in _qmap.items() if ts}
         if not qmap:
-            return empty
+            return _result_frame(spark, [], k)
     neg_qmap = (
         {int(q): sorted(set(ts)) for q, ts in _neg_qmap.items() if ts}
         if _neg_qmap is not None
@@ -683,13 +865,17 @@ def wand_search(
     k1, b = float(meta["k1"]), float(meta["b"])
     n_shards = int(meta["n_buckets"]) * int(meta.get("n_subs", 1))
 
+    if qmap is not None and len(qmap) <= DRIVER_TOKENIZE_MAX:
+        rows = _driver_topk(
+            _local or _LocalIndex(index_dir, meta), qmap, neg_qmap,
+            n_docs, avgdl, k1, b, k, require_all,
+        )
+        if rows is not None:
+            return _result_frame(spark, rows, k)
+
     base = _segments if _segments is not None else load_segments(
         spark, index_dir, meta
     )
-    if "_avgdl_enc" not in base.columns:
-        # caller-supplied raw segment frame: treat as freshly encoded
-        # (exact for a base-only index, where avgdl_now == encode avgdl)
-        base = base.withColumn("_avgdl_enc", F.lit(float(avgdl)))
     tstats = _tstats if _tstats is not None else load_term_stats(
         spark, index_dir, meta
     )
@@ -702,8 +888,6 @@ def wand_search(
     else:
         # large batch: per-wave driver collection — bounded footprint
         waves = _wave_qmaps(_qmap, QUERY_CHUNK_SIZE, stats_out)
-    if "_root" not in base.columns:
-        base = base.withColumn("_root", F.lit("base"))
     dl_roots = doc_stats_roots(index_dir, meta)
     tomb_dirs = tombstone_root_dirs(index_dir, meta)
     local = None
@@ -726,13 +910,50 @@ def wand_search(
                 # per query — tiny relative to the work that produced them
                 local = local.localCheckpoint(eager=True)
     if local is None:
-        return empty
+        return _result_frame(spark, [], k)
     w = Window.partitionBy("query_id").orderBy(F.col("score").desc(), F.col("docID"))
     return (
         local.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("query_id", "rank", "docID", "score")
     )
+
+
+def _result_frame(
+    spark: SparkSession, rows: list[tuple[int, int, float]], k: int
+) -> DataFrame:
+    """The global top-k of shard-local ``(query_id, docID, score)`` rows
+    — rank by (score desc, docID asc) per query — as an Arrow-built
+    local frame: collecting it runs no Spark job."""
+    pdf = pd.DataFrame(rows, columns=["query_id", "docID", "score"]).astype(
+        {"query_id": "int64", "docID": "int64", "score": "float64"}
+    ).sort_values(["query_id", "score", "docID"], ascending=[True, False, True])
+    pdf.insert(1, "rank", (pdf.groupby("query_id").cumcount() + 1).astype("int32"))
+    pdf = pdf[pdf["rank"] <= k]
+    if pdf.empty:
+        # an empty pandas frame leaves the Arrow path (its collect would
+        # run a job); an empty limit of a one-row frame folds to an empty
+        # local relation
+        return _result_frame(spark, [(0, 0, 0.0)], 1).limit(0)
+    return spark.createDataFrame(pdf, _RESULT_SCHEMA)
+
+
+def _terms_to_read(
+    qmap: dict[int, list[str]], neg_qmap: dict[int, list[str]] | None
+) -> tuple[dict[int, list[str]] | None, list[str]]:
+    """(the negative map restricted to ``qmap``'s queries, every term a
+    feed reads for them).  Negative terms join the read (their postings
+    are what defines the exclusion) but never the positive scoring set."""
+    neg_qmap = {
+        qid: sorted(set(ts))
+        for qid, ts in (neg_qmap or {}).items()
+        if qid in qmap and ts
+    } or None
+    all_terms = sorted(
+        {t for ts in qmap.values() for t in ts}
+        | ({t for ts in neg_qmap.values() for t in ts} if neg_qmap else set())
+    )
+    return neg_qmap, all_terms
 
 
 def _wave_local_topk(
@@ -751,7 +972,8 @@ def _wave_local_topk(
     require_all: bool = False,
     neg_qmap: dict[int, list[str]] | None = None,
 ) -> DataFrame:
-    """Per-shard local top-k rows for one wave of queries (pre-merge).
+    """Per-shard local top-k rows for one wave of queries (pre-merge) —
+    the distributed feed.
 
     ``tomb_dirs``: live tombstone docs dirs grouped by root (from
     :func:`tombstone_root_dirs`) — the kernel loads each (root, bucket)
@@ -760,17 +982,7 @@ def _wave_local_topk(
     only, so results match a rebuild without the victims while a
     resurrected doc's live copy (newer root, no marker) keeps
     scoring."""
-    neg_qmap = {
-        qid: sorted(set(ts))
-        for qid, ts in (neg_qmap or {}).items()
-        if qid in qmap and ts
-    } or None
-    # negative terms join the pruned segment scan (their postings are
-    # what defines the exclusion) but never the positive scoring set
-    all_terms = sorted(
-        {t for ts in qmap.values() for t in ts}
-        | ({t for ts in neg_qmap.values() for t in ts} if neg_qmap else set())
-    )
+    neg_qmap, all_terms = _terms_to_read(qmap, neg_qmap)
     if not all_terms:
         return spark.createDataFrame([], "query_id long, docID long, score double")
     seg = restrict_terms(base, all_terms)
@@ -788,93 +1000,12 @@ def _wave_local_topk(
         qmap_bc, neg_bc = bc.value
         by_shard: dict[tuple[int, int], list[_SegRow]] = {}
         for pdf in batches:
-            bks = pdf["doc_bucket"].to_numpy()
-            subs = pdf["doc_sub"].to_numpy()
-            terms = pdf["term"].to_numpy()
-            dfs = pdf["df"].to_numpy()
-            encs = pdf["_avgdl_enc"].to_numpy()
-            rts = pdf["_root"].to_numpy()
-            docs, tfs = pdf["docs"].values, pdf["tfs"].values
-            bns, mxs = pdf["bn"].values, pdf["max_score"].values
-            tfms, dlms = pdf["tf_max"].values, pdf["dl_min"].values
-            for i in range(len(pdf)):
-                mx = np.asarray(mxs[i], np.float32)
-                df_i = float(dfs[i])
-                idf_i = float(np.log((n_docs - df_i + 0.5) / (df_i + 0.5) + 1.0))
-                # Drift-safe upper bound: stored block maxima bake in the
-                # segment set's encode-time avgdl.  The tf-normalized
-                # score is increasing in avgdl, so when the corpus has
-                # grown past it (avgdl > _avgdl_enc) the stored maxima
-                # may UNDER-bound — recompute an admissible bound from
-                # (tf_max, dl_min) under the current avgdl (score is
-                # increasing in tf, decreasing in dl).  When avgdl ≤
-                # encode-time, stored maxima over-bound (admissible) and
-                # the min of the two bounds keeps pruning tight.
-                if len(mx):
-                    tfm = np.asarray(tfms[i], np.float64)
-                    dlm = np.asarray(dlms[i], np.float64)
-                    bound = tfm * (k1 + 1.0) / (
-                        tfm + k1 * (1.0 - b + b * dlm / avgdl)
-                    )
-                    if avgdl <= float(encs[i]) * (1.0 + 1e-12):
-                        bound = np.minimum(bound, mx.astype(np.float64))
-                    upper_i = idf_i * float(bound.max())
-                else:
-                    upper_i = 0.0
-                row = _SegRow(
-                    terms[i], df_i, docs[i], tfs[i], bns[i], upper_i,
-                    root=rts[i],
-                )
-                by_shard.setdefault((int(bks[i]), int(subs[i])), []).append(row)
-
-        dl_cache: dict[int, tuple | None] = {}
-        excl_cache: dict[tuple[str, int], np.ndarray | None] = {}
-
-        def dl_lookup(bucket: int):
-            if bucket not in dl_cache:
-                ds = read_doc_stats_bucket_multi(dl_roots, bucket)
-                if ds is None:
-                    dl_cache[bucket] = None
-                else:
-                    o = np.argsort(ds["docID"], kind="stable")
-                    dl_cache[bucket] = (ds["docID"][o], ds["dl"][o].astype(np.float64))
-            return dl_cache[bucket]
-
-        def excl_lookup(bucket: int):
-            """root → sorted dead docIDs for (root, bucket), or a plain
-            None when the index has no live tombstones (fast path: the
-            kernel skips per-row exclusion entirely)."""
-            if not tomb_dirs:
-                return None
-
-            def of(root: str):
-                key = (root, bucket)
-                if key not in excl_cache:
-                    dirs = tomb_dirs.get(root)
-                    excl_cache[key] = (
-                        read_tombstone_bucket(dirs, bucket) if dirs else None
-                    )
-                return excl_cache[key]
-
-            return of
-
-        out: list[tuple[int, int, float]] = []
-        for (bucket, _sub), rows in by_shard.items():
-            ds = dl_lookup(bucket)
-            if ds is None:
-                continue
-            ds_docs, ds_dl = ds
-
-            def dl_of(docs: np.ndarray) -> np.ndarray:
-                return lookup_dl(ds_docs, ds_dl, docs)
-
-            out.extend(
-                _score_shard(
-                    rows, qmap_bc, n_docs, avgdl, k1, b, k, dl_of,
-                    excl_of=excl_lookup(bucket),
-                    require_all=require_all, neg_map=neg_bc,
-                )
-            )
+            for key, row in _seg_rows(pdf, n_docs, avgdl, k1, b):
+                by_shard.setdefault(key, []).append(row)
+        out = _score_shards(
+            by_shard, _ShardStats(dl_roots, tomb_dirs or {}), qmap_bc, neg_bc,
+            n_docs, avgdl, k1, b, k, require_all,
+        )
         yield pd.DataFrame(out, columns=["query_id", "docID", "score"]).astype(
             {"query_id": "int64", "docID": "int64", "score": "float64"}
         )
@@ -885,6 +1016,227 @@ def _wave_local_topk(
     return seg.repartition(n_shards, "doc_bucket", "doc_sub").mapInPandas(
         run, schema="query_id long, docID long, score double"
     )
+
+
+# ---------------------------------------------------------------------------
+# Driver feed: the query terms' rows read with pyarrow, scored on the driver
+# ---------------------------------------------------------------------------
+
+# The driver feed's budget, in compressed bytes from the parquet footers:
+# the row groups a batch reads (segments + term_stats + df corrections)
+# times its query count.  The kernel walks every query's rows, and with
+# one row group per shard file (the writer's layout below the row-group
+# size) each query's terms hit nearly all of them.  Measured on 4 vCPUs
+# at 4x2 and 32x2 shards, the driver costs about 20 ms per MB of that
+# product (one query over 1 MB: 77 ms; 500 queries over 4 MB: 37 s,
+# against 19 s distributed), so 16 MiB keeps a driver call under the
+# distributed feed's ~0.8 s fixed cost whatever the cluster's size.
+DRIVER_FEED_MAX_BYTES = 16 << 20
+
+_SEG_COLUMNS = ["doc_sub", "term", "docs", "tfs", "bn", "max_score", "tf_max", "dl_min"]
+
+
+class _Part(NamedTuple):
+    """One term-sorted parquet file: its footer, what it holds (``key``)
+    and per row group ``(min term, max term, compressed bytes)`` — the
+    bounds are None when the footer carries no term statistics."""
+
+    path: str
+    md: pq.FileMetaData
+    key: tuple
+    rgs: list[tuple[str | None, str | None, int]]
+
+
+def _term_ranges(md: pq.FileMetaData) -> tuple:
+    """(the footer, ``(min term, max term, compressed bytes)`` per row
+    group) — one file's entry in the footer index."""
+    rgs = []
+    for i in range(md.num_row_groups):
+        g = md.row_group(i)
+        lo = hi = None
+        nbytes = 0
+        for c in range(g.num_columns):
+            col = g.column(c)
+            nbytes += col.total_compressed_size
+            st = col.statistics
+            if col.path_in_schema == "term" and st is not None and st.has_min_max:
+                lo, hi = st.min, st.max
+        rgs.append((lo, hi, nbytes))
+    return md, rgs
+
+
+def _pick(parts: list[_Part], hit) -> tuple[list[tuple[_Part, list[int]]], int]:
+    """([(file, row groups whose term range ``hit(lo, hi)``)], their
+    compressed bytes)."""
+    picked, nbytes = [], 0
+    for p in parts:
+        ids = [i for i, (lo, hi, _) in enumerate(p.rgs) if lo is None or hit(lo, hi)]
+        if ids:
+            picked.append((p, ids))
+            nbytes += sum(p.rgs[i][2] for i in ids)
+    return picked, nbytes
+
+
+class _LocalIndex:
+    """The driver feed's view of one committed index version (one
+    ``_meta.json``): a footer index of its term-keyed parquet files —
+    every root's segments and term_stats, and the df corrections of each
+    tombstone's live roots (:func:`load_term_stats`'s inputs) — read on
+    first use, plus the kernel's :class:`_ShardStats`."""
+
+    def __init__(self, index_dir: str, meta: dict):
+        self.index_dir, self.meta = index_dir, meta
+        self.fs = fsio.resolve(index_dir)[0]
+        self.stats = _ShardStats(
+            doc_stats_roots(index_dir, meta), tombstone_root_dirs(index_dir, meta)
+        )
+        self._parts: tuple[list[_Part], list[_Part]] | None = None
+
+    def parts(self) -> tuple[list[_Part], list[_Part]]:
+        """(segment files keyed ``(doc_bucket, root, avgdl_enc)``, df
+        files keyed ``(df column, sign)``)."""
+        if self._parts is None:
+            d, meta = self.index_dir, self.meta
+            roots = [(d, "base", meta.get("base", {}).get("avgdl_enc", meta["avgdl"]))]
+            roots += [
+                (f"{d}/generations/{g['id']}", g["id"], g["avgdl_enc"])
+                for g in meta.get("generations", [])
+            ]
+            dfs = [(f"{r}/term_stats", ("df", 1)) for r, _, _ in roots] + [
+                (f"{d}/tombstones/{t['id']}/term_stats_neg/root={rid}", ("df_neg", -1))
+                for t in meta.get("tombstones", [])
+                for rid in t.get("per_root", {})
+            ]
+            self._parts = (
+                [
+                    _Part(f, md, (int(_dir_value(f, "doc_bucket")), root, float(enc)), rgs)
+                    for r, root, enc in roots
+                    for f, (md, rgs) in _read_footers(f"{r}/segments", _term_ranges)
+                ],
+                [
+                    _Part(f, md, key, rgs)
+                    for path, key in dfs
+                    for f, (md, rgs) in _read_footers(path, _term_ranges)
+                ],
+            )
+        return self._parts
+
+    def read(self, part: _Part, ids: list[int], columns: list[str], keep) -> pa.Table:
+        """Row groups ``ids`` of one file, rows whose term ``keep`` holds."""
+        pf = pq.ParquetFile(part.path, metadata=part.md, filesystem=self.fs)
+        t = pf.read_row_groups(ids, columns=columns)
+        return t.filter(keep(t["term"]))
+
+    def df(self, picked: list[tuple[_Part, list[int]]], keep) -> dict[str, int]:
+        """{term: df} summed over the picked df files (corrections
+        negative) for the terms ``keep`` holds."""
+        out: dict[str, int] = {}
+        for p, ids in picked:
+            col, sign = p.key
+            t = self.read(p, ids, ["term", col], keep)
+            for term, v in zip(t["term"].to_pylist(), t[col].to_pylist()):
+                out[term] = out.get(term, 0) + sign * v
+        return out
+
+
+def _driver_topk(
+    local: _LocalIndex,
+    qmap: dict[int, list[str]],
+    neg_qmap: dict[int, list[str]] | None,
+    n_docs: int,
+    avgdl: float,
+    k1: float,
+    b: float,
+    k: int,
+    require_all: bool,
+) -> list[tuple[int, int, float]] | None:
+    """Shard-local top-k rows of one batch, read and scored on the
+    driver — the driver feed; ``None`` when the row groups it would read,
+    times its query count, exceed :data:`DRIVER_FEED_MAX_BYTES`."""
+    neg_qmap, terms = _terms_to_read(qmap, neg_qmap)
+    segs, dfs = local.parts()
+
+    def hit(lo: str, hi: str) -> bool:
+        i = bisect.bisect_left(terms, lo)
+        return i < len(terms) and terms[i] <= hi
+
+    seg_rgs, seg_bytes = _pick(segs, hit)
+    df_rgs, df_bytes = _pick(dfs, hit)
+    if (seg_bytes + df_bytes) * len(qmap) > DRIVER_FEED_MAX_BYTES:
+        return None
+    vset = pa.array(terms, pa.string())
+
+    def keep(col):
+        return pc.is_in(col, value_set=vset)
+
+    df = local.df(df_rgs, keep)
+    # as the distributed feed's term_stats join: a segment term absent
+    # from term_stats (corruption) drops out
+    dset = pa.array(sorted(df), pa.string())
+
+    def keep_df(col):
+        return pc.is_in(col, value_set=dset)
+
+    by_shard: dict[tuple[int, int], list[_SegRow]] = {}
+    for p, ids in seg_rgs:
+        t = local.read(p, ids, _SEG_COLUMNS, keep_df)
+        n = t.num_rows
+        bucket, root, enc = p.key
+        cols = {c: t.column(c).to_numpy(zero_copy_only=False) for c in _SEG_COLUMNS}
+        cols.update(
+            doc_bucket=np.full(n, bucket), df=np.array([df[x] for x in cols["term"]]),
+            _avgdl_enc=np.full(n, enc), _root=np.full(n, root, object),
+        )
+        for key, row in _seg_rows(cols, n_docs, avgdl, k1, b):
+            by_shard.setdefault(key, []).append(row)
+    return _score_shards(
+        by_shard, local.stats, qmap, neg_qmap, n_docs, avgdl, k1, b, k, require_all
+    )
+
+
+def _expand_local(
+    local: _LocalIndex,
+    pats: list[tuple[int, str]],
+    mode: str,
+    max_expansions: int,
+) -> dict[int, list[str]] | None:
+    """:func:`expand_dictionary` for ``prefix`` / ``contains`` on the
+    driver: the same rule (df > 0 after the delete corrections, the top
+    ``max_expansions`` per query by df desc then term asc) over the
+    term_stats roots read with pyarrow; ``None`` when the row groups it
+    would read exceed :data:`DRIVER_FEED_MAX_BYTES`.  ``pats`` are
+    normalized (:func:`_dict_patterns`)."""
+    ps = sorted({p for _, p in pats})
+    if mode == "prefix":
+        def hit(lo: str, hi: str) -> bool:
+            # a term starting with p lies in [p, the next prefix); a
+            # group whose min lies past p without starting with it is
+            # wholly above that range
+            return any(hi >= p and (lo <= p or lo.startswith(p)) for p in ps)
+
+        match, test = pc.starts_with, str.startswith
+    else:
+        def hit(lo: str, hi: str) -> bool:
+            return True
+
+        match, test = pc.match_substring, str.__contains__
+    picked, nbytes = _pick(local.parts()[1], hit)
+    if nbytes > DRIVER_FEED_MAX_BYTES:
+        return None
+
+    def keep(col):
+        m = match(col, pattern=ps[0])
+        for p in ps[1:]:
+            m = pc.or_(m, match(col, pattern=p))
+        return m
+
+    df = local.df(picked, keep)
+    cands: dict[int, list[tuple[int, str]]] = {}
+    for q, p in pats:
+        cands.setdefault(q, []).extend(
+            (-v, t) for t, v in df.items() if v > 0 and test(t, p)
+        )
+    return {q: [t for _, t in sorted(c)[:max_expansions]] for q, c in cands.items()}
 
 
 # ---------------------------------------------------------------------------
@@ -906,6 +1258,20 @@ def _dict_predicate(mode: str, col, pat):
     # Column.rlike only takes a literal; the function form accepts a
     # pattern COLUMN (needed for the per-query pairing join)
     return F.rlike(col, pat if not isinstance(pat, str) else F.lit(pat))
+
+
+def _dict_patterns(patterns: list[tuple[int, str]], mode: str) -> list[tuple[int, str]]:
+    """Non-empty ``(query_id, pattern)`` pairs, lowercased except in
+    ``regex`` mode: `\\S` != `\\s`.  Terms are lowercase, so a
+    case-sensitive regex literal simply matches nothing — same contract
+    as grep over a lowercased corpus."""
+    if mode not in _DICT_MODES:
+        raise ValueError(f"mode must be one of {_DICT_MODES}, got {mode!r}")
+    pats = [
+        (int(q), (p or "") if mode == "regex" else (p or "").lower())
+        for q, p in patterns
+    ]
+    return [(q, p) for q, p in pats if p]
 
 
 def expand_dictionary(
@@ -935,17 +1301,8 @@ def expand_dictionary(
     the Zoekt/Lucene wildcard trade-off).  The per-pattern theta-join
     runs on the SURVIVORS only (broadcast of the tiny pattern table).
     Terms whose delete-corrected df reached 0 are excluded."""
-    if mode not in _DICT_MODES:
-        raise ValueError(f"mode must be one of {_DICT_MODES}, got {mode!r}")
+    pats = _dict_patterns(patterns, mode)
     meta = _meta or _load_meta(index_dir)
-    # regex patterns are NOT lowercased: `\S` != `\s`.  Terms are
-    # lowercase, so case-sensitive literals simply match nothing —
-    # same contract as grep over a lowercased corpus.
-    pats = [
-        (int(q), (p or "") if mode == "regex" else (p or "").lower())
-        for q, p in patterns
-    ]
-    pats = [(q, p) for q, p in pats if p]
     if not pats:
         return spark.createDataFrame([], "query_id long, term string, df long")
     ts = _tstats if _tstats is not None else load_term_stats(
@@ -998,29 +1355,37 @@ def dictionary_search(
     _meta: dict | None = None,
     _tstats: DataFrame | None = None,
     _segments: DataFrame | None = None,
+    _local: _LocalIndex | None = None,
 ) -> DataFrame:
     """(query_id, rank, docID, score) — top-k BM25 over each pattern's
     expansion set (score = Σ per-term BM25 over the expanded terms, each
     with its own df), via the block-max fast path.  ``mode`` is any
     :func:`expand_dictionary` mode: prefix / contains / regex.
 
-    The expansion is collected driver-side — bounded by
-    ``len(patterns) × max_expansions`` rows by construction — and fed to
-    :func:`wand_search` as a prebuilt term map (no re-tokenization)."""
+    Prefix and contains patterns expand on the driver
+    (:func:`_expand_local`) when the dictionary slice fits
+    :data:`DRIVER_FEED_MAX_BYTES`; regex patterns, and larger slices,
+    expand on Spark and are collected — bounded by
+    ``len(patterns) × max_expansions`` rows by construction.  The
+    expansion feeds :func:`wand_search` as a prebuilt term map (no
+    re-tokenization)."""
     meta = _meta or _load_meta(index_dir)
-    tstats = _tstats if _tstats is not None else load_term_stats(
-        spark, index_dir, meta
-    )
-    exp = expand_dictionary(
-        spark, index_dir, patterns, max_expansions, mode=mode,
-        _meta=meta, _tstats=tstats,
-    ).collect()
-    qmap: dict[int, list[str]] = {int(q): [] for q, _ in patterns}
-    for r in exp:
-        qmap[int(r["query_id"])].append(r["term"])
+    local = _local or _LocalIndex(index_dir, meta)
+    qmap = None
+    if mode in ("prefix", "contains"):
+        pats = _dict_patterns(patterns, mode)
+        qmap = _expand_local(local, pats, mode, max_expansions) if pats else {}
+    if qmap is None:
+        exp = expand_dictionary(
+            spark, index_dir, patterns, max_expansions, mode=mode,
+            _meta=meta, _tstats=_tstats,
+        ).collect()
+        qmap = {}
+        for r in exp:
+            qmap.setdefault(int(r["query_id"]), []).append(r["term"])
     return wand_search(
-        spark, index_dir, None, k=k, _meta=meta, _tstats=tstats,
-        _segments=_segments, _qmap=qmap,
+        spark, index_dir, None, k=k, _meta=meta, _tstats=_tstats,
+        _segments=_segments, _qmap=qmap, _local=local,
     )
 
 

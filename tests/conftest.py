@@ -35,3 +35,46 @@ def add_runs(b, corpus, k: int) -> None:
     key = F.pmod(F.xxhash64(F.xxhash64(*DOC_KEY)), F.lit(k))
     for i in range(k):
         b.add_run(corpus.filter(key == i), f"run{i:05d}")
+
+
+def result_rows(df) -> list[tuple[int, int, int, float]]:
+    """A (query_id, rank, docID, score) frame as sorted tuples."""
+    return sorted(
+        (int(r["query_id"]), int(r["rank"]), int(r["docID"]), float(r["score"]))
+        for r in df.collect()
+    )
+
+
+def assert_rows_match(got, want, atol: float = 1e-9) -> None:
+    """Rank-identical: the same (query_id, rank, docID) rows, scores
+    within ``atol``."""
+    assert [r[:3] for r in got] == [r[:3] for r in want]
+    assert all(abs(g[3] - w[3]) <= atol for g, w in zip(got, want))
+
+
+def assert_feeds_match(monkeypatch, search, want, atol: float = 1e-9):
+    """Run ``search()`` (a WAND result frame) twice: with the driver feed
+    forced on (budget unbounded) and with its budget at 0 (the
+    distributed feed).  Each run must take the feed it was forced onto —
+    for its term maps and its dictionary expansions alike — and both must
+    be rank-identical to ``want`` (:func:`result_rows` rows)."""
+    from docinsight_spark.index import wand
+
+    for budget, on_driver in ((1 << 62, True), (0, False)):
+        served = []
+
+        def spy(real):
+            def call(*a, **kw):
+                out = real(*a, **kw)
+                served.append(out is not None)
+                return out
+            return call
+
+        with monkeypatch.context() as m:
+            m.setattr(wand, "DRIVER_FEED_MAX_BYTES", budget)
+            m.setattr(wand, "_driver_topk", spy(wand._driver_topk))
+            m.setattr(wand, "_expand_local", spy(wand._expand_local))
+            got = result_rows(search())
+        assert served and all(s == on_driver for s in served), (budget, served)
+        assert got, "the fixture's queries match nothing"
+        assert_rows_match(got, want, atol)

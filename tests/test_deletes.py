@@ -16,7 +16,7 @@ import os
 
 import numpy as np
 import pytest
-from conftest import add_runs
+from conftest import add_runs, assert_feeds_match, result_rows
 from pyspark.sql import functions as F
 
 from docinsight_spark.corpus import make_corpus, make_queries
@@ -120,6 +120,25 @@ def test_delete_matches_exact_oracle(spark, del_setup):
     a = _res(wand_search(spark, del_setup["idx"], q, k=5))
     o = _res(oracle_from_index(spark, del_setup["idx"], q, k=5))
     _assert_same(a, o)
+
+
+@pytest.mark.parametrize("require_all", [False, True], ids=["or", "and"])
+def test_delete_feeds_match_exact_oracle(spark, del_setup, monkeypatch, require_all):
+    """Both feeds apply the root-scoped tombstones and the df
+    corrections of the tombstone's live roots: rank-identical to the
+    exact oracle."""
+    idx = del_setup["idx"]
+    q = del_setup["queries"]
+    if require_all:
+        q = q.withColumn(
+            "query_text", F.array_join(F.slice(F.split("query_text", " "), 1, 2), " ")
+        )
+    want = result_rows(oracle_from_index(spark, idx, q, k=5, require_all=require_all))
+    assert_feeds_match(
+        monkeypatch,
+        lambda: wand_search(spark, idx, q, k=5, require_all=require_all),
+        want,
+    )
 
 
 def test_deleted_docs_never_surface(spark, del_setup):

@@ -17,7 +17,7 @@ import os
 
 import numpy as np
 import pytest
-from conftest import add_runs
+from conftest import add_runs, assert_feeds_match, result_rows
 
 from docinsight_spark.corpus import make_corpus, make_queries
 from docinsight_spark.evaluation import oracle_from_index
@@ -136,7 +136,18 @@ def test_empty_delta_records_coverage(spark, tmp_path, tiny_corpus):
     b.merge_all()  # covered → no error
 
 
-def test_drift_safe_bounds_when_avgdl_grows(spark, tmp_path):
+def test_generation_feeds_match_exact_oracle(spark, gen_setup, monkeypatch):
+    """Both feeds read every root's segments, each with its own
+    encode-time avgdl, and sum df across the roots: rank-identical to
+    the exact oracle."""
+    q = make_queries(spark, corpus_n=300, n_queries=16)
+    want = result_rows(oracle_from_index(spark, gen_setup["inc"], q, k=10))
+    assert_feeds_match(
+        monkeypatch, lambda: wand_search(spark, gen_setup["inc"], q, k=10), want
+    )
+
+
+def test_drift_safe_bounds_when_avgdl_grows(spark, tmp_path, monkeypatch):
     """The admissibility stress: base encoded over SHORT docs, delta adds
     LONG docs → global avgdl rises past the base's encode-time avgdl, so
     the base's stored block maxima under-bound true scores.  The
@@ -155,10 +166,9 @@ def test_drift_safe_bounds_when_avgdl_grows(spark, tmp_path):
     # the test only means something if we really are in the drift regime
     assert meta["avgdl"] > meta["base"]["avgdl_enc"] * 1.5
     q = make_queries(spark, corpus_n=250, n_queries=16)
-    fast = _res(wand_search(spark, d, q, k=10))
     oracle = _res(oracle_from_index(spark, d, q, k=10))
-    assert len(fast) > 0
-    _assert_same_results(fast, oracle)
+    # both feeds: the driver feed and the distributed feed
+    assert_feeds_match(monkeypatch, lambda: wand_search(spark, d, q, k=10), oracle)
 
 
 def test_compact_triggers_on_avgdl_drift(spark, tmp_path):

@@ -63,6 +63,47 @@ def test_analyze_outputs_are_consistent(spark, plag_setup):
     assert ((o["originality_score"] >= 0) & (o["originality_score"] <= 1)).all()
 
 
+def test_small_batch_collects_its_pairs_once(spark, plag_setup, monkeypatch):
+    """A 149-line batch fits one wave: its (query_id, term) pairs are
+    collected in one job and the wave machinery (``_wave_qmaps``) never
+    runs; the rows equal a run forced onto the wave path."""
+    import pandas as pd
+
+    from docinsight_spark.index import wand
+
+    idx, docs = plag_setup
+    copy = docs.filter(F.col("doc_id") == 100).first()["content"]
+    n_copy = sum(1 for line in copy.split("\n") if line.strip())
+    filler = "\n".join(
+        f"filler_{i} = blend_{i % 7}(x, {i});" for i in range(149 - n_copy)
+    )
+    batch = spark.createDataFrame(
+        [(100, copy), (200, filler)], "doc_id long, content string"
+    )
+    waves = []
+    real = wand._wave_qmaps
+    monkeypatch.setattr(
+        wand, "_wave_qmaps", lambda *a, **kw: waves.append(1) or real(*a, **kw)
+    )
+
+    def report():
+        out = analyze_documents(spark, idx, batch, k=5)
+        return [
+            f.toPandas().sort_values(["doc_id", *(["idx"] if "idx" in f.columns else [])])
+            .reset_index(drop=True)
+            for f in out
+        ]
+
+    one = report()
+    assert not waves
+    assert len(one[0]) == 149
+    monkeypatch.setattr(wand, "QUERY_CHUNK_SIZE", 40)
+    waved = report()
+    assert waves
+    for a, b in zip(one, waved):
+        pd.testing.assert_frame_equal(a, b)
+
+
 def test_whitespace_index_report_uses_index_tokenizer(spark, tmp_path):
     """On a ``code_aware=False`` index a verbatim line's terms are its
     whitespace tokens — the terms retrieval scores — for Σidf and the

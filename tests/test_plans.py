@@ -320,3 +320,50 @@ def test_prefix_expansion_pushdown(spark, small_index):
     exp = expand_prefix(spark, small_index, [(0, "re")], max_expansions=4)
     p = assert_pushed_filter(exp, "StringStartsWith(term")
     assert "PushedFilters" in p
+
+
+def _jobs_of(spark, fn) -> tuple[int, object, list]:
+    """(Spark jobs run by ``fn()`` and collecting its frame, the frame,
+    its rows), counted through a job group of its own."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"pin-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        df = fn()
+        rows = df.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group)), df, rows
+
+
+def test_warm_searcher_serves_driver_sized_queries_without_jobs(
+    spark, small_index, monkeypatch
+):
+    """A warm Searcher answers driver-sized OR, AND, NOT and prefix calls
+    given as lists with NO Spark job (the driver feed: pyarrow reads of
+    the terms' rows, the kernel on the driver, an Arrow-built local
+    result).  With the driver-feed budget at 0 the same calls run the
+    distributed mapInPandas plan."""
+    from docinsight_spark.index import wand
+
+    s = wand.Searcher(spark, small_index)
+    calls = {
+        "or": lambda: s.search([(0, "return int value")], k=5),
+        "and": lambda: s.search([(0, "return int")], k=5, require_all=True),
+        "not": lambda: s.search(
+            [(0, "return int")], k=5, neg_queries=[(0, "value")]
+        ),
+        "prefix": lambda: s.prefix([(0, "re")], k=5),
+    }
+    for fn in calls.values():
+        fn().collect()  # warm: footer index, doc lengths
+    for name, fn in calls.items():
+        n, _, rows = _jobs_of(spark, fn)
+        assert rows and n == 0, (name, n)
+    monkeypatch.setattr(wand, "DRIVER_FEED_MAX_BYTES", 0)
+    for name, fn in calls.items():
+        n, df, rows = _jobs_of(spark, fn)
+        assert rows and n > 0, (name, n)
+        assert "MapInPandas" in plan_text(df), name

@@ -10,6 +10,7 @@ from pathlib import Path
 
 import pandas as pd
 import pytest
+from conftest import assert_feeds_match, result_rows
 from pyspark.sql import functions as F
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
@@ -17,7 +18,16 @@ sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 from docinsight_spark.corpus import make_corpus
 from docinsight_spark.functions.tokenizer import tokenize_code_pandas
 from docinsight_spark.index.builder import IndexBuilder
-from docinsight_spark.index.wand import expand_prefix, prefix_search
+from docinsight_spark.index.wand import (
+    _dict_patterns,
+    _expand_local,
+    _LocalIndex,
+    _query_term_map,
+    dictionary_search,
+    expand_dictionary,
+    expand_prefix,
+    prefix_search,
+)
 
 K1, B = 1.2, 0.75
 
@@ -87,9 +97,53 @@ def test_prefix_scores_match_python_oracle(spark, px_setup):
         assert abs(got[p] - want[p]) < 1e-9, (p, got[p], want[p])
 
 
-def test_prefix_excludes_fully_deleted_terms(spark, tmp_path):
+def _expansion_oracle(spark, idx, qmap, k):
+    """Exact top-k of each query's expansion terms: the oracle over their
+    text, once the index's tokenizer is checked to give back exactly
+    those terms."""
+    from docinsight_spark.evaluation import oracle_from_index
+    from docinsight_spark.index import fsio
+
+    texts = [(q, " ".join(ts)) for q, ts in qmap.items() if ts]
+    meta = fsio.read_json(f"{idx}/_meta.json")
+    assert _query_term_map(texts, meta, len(texts)) == {
+        q: sorted(ts) for q, ts in qmap.items() if ts
+    }
+    q = spark.createDataFrame(texts, "query_id long, query_text string")
+    return result_rows(oracle_from_index(spark, idx, q, k=k))
+
+
+@pytest.mark.parametrize(
+    "mode,pats",
+    [
+        ("prefix", [(0, "s"), (1, "re"), (1, "buf"), (2, "zzqx")]),
+        ("contains", [(0, "uff"), (1, "ash"), (1, "ort")]),
+    ],
+)
+def test_expansion_feeds_match_spark_and_oracle(spark, px_setup, monkeypatch, mode, pats):
+    """Prefix and contains patterns expand to the same terms on the
+    driver (pyarrow over the term_stats roots) as on Spark, and both
+    feeds serve the expansions rank-identically to the exact oracle."""
+    idx = px_setup["idx"]
+    spark_exp: dict[int, list[str]] = {}
+    for r in expand_dictionary(spark, idx, pats, 4, mode=mode).collect():
+        spark_exp.setdefault(int(r["query_id"]), []).append(r["term"])
+    local = _LocalIndex(idx, px_setup["b"].meta())
+    driver_exp = _expand_local(local, _dict_patterns(pats, mode), mode, 4)
+    assert {q: sorted(ts) for q, ts in driver_exp.items() if ts} == {
+        q: sorted(ts) for q, ts in spark_exp.items()
+    }
+    assert_feeds_match(
+        monkeypatch,
+        lambda: dictionary_search(spark, idx, pats, k=10, max_expansions=4, mode=mode),
+        _expansion_oracle(spark, idx, spark_exp, 10),
+    )
+
+
+def test_prefix_excludes_fully_deleted_terms(spark, tmp_path, monkeypatch):
     """A term whose every holder is tombstoned reaches df 0 through the
-    lazy corrections and must drop out of the expansion."""
+    lazy corrections and must drop out of the expansion — on Spark and
+    on the driver, whose feeds then agree with the exact oracle."""
     idx = str(tmp_path / "pdel")
     docs = spark.createDataFrame(
         [
@@ -112,6 +166,13 @@ def test_prefix_excludes_fully_deleted_terms(spark, tmp_path):
         for r in expand_prefix(spark, idx, [(0, "alph")], max_expansions=8).collect()
     }
     assert after == {"alpha"}
+    local = _LocalIndex(idx, b.meta())
+    assert _expand_local(local, [(0, "alph")], "prefix", 8) == {0: ["alpha"]}
+    assert_feeds_match(
+        monkeypatch,
+        lambda: prefix_search(spark, idx, [(0, "alph")], k=5, max_expansions=8),
+        _expansion_oracle(spark, idx, {0: ["alpha"]}, 5),
+    )
 
 
 def test_prefix_empty_and_nomatch(spark, px_setup):
@@ -267,6 +328,60 @@ def test_wand_neg_terms_rank_identical_to_exact(spark, px_setup, bool_queries):
         )
     )
     _assert_same(fast2, exact2)
+
+
+@pytest.mark.parametrize(
+    "require_all,neg", [(True, False), (False, True), (True, True)],
+    ids=["and", "not", "and_not"],
+)
+def test_boolean_feeds_rank_identical_to_exact(
+    spark, px_setup, bool_queries, monkeypatch, require_all, neg
+):
+    """AND, NOT and AND+NOT: the driver feed and the distributed feed
+    are rank-identical to the exact path."""
+    from docinsight_spark.evaluation import oracle_from_index
+    from docinsight_spark.index.wand import wand_search
+
+    idx = px_setup["idx"]
+    q = spark.createDataFrame(bool_queries["pos"], "query_id long, query_text string")
+    negs = bool_queries["neg"] if neg else None
+    neg_terms = (
+        spark.createDataFrame(negs, "query_id long, term string") if neg else None
+    )
+    want = result_rows(
+        oracle_from_index(
+            spark, idx, q, k=8, require_all=require_all, neg_terms=neg_terms
+        )
+    )
+    assert_feeds_match(
+        monkeypatch,
+        lambda: wand_search(
+            spark, idx, q, k=8, require_all=require_all, neg_queries=negs
+        ),
+        want,
+    )
+
+
+def test_searcher_list_and_frame_inputs_identical(spark, px_setup, bool_queries):
+    """``Searcher.search`` takes ``(query_id, text)`` lists for the
+    queries and the NOT words as well as frames, with identical rows for
+    OR, AND and NOT."""
+    from docinsight_spark.index.wand import Searcher
+
+    s = Searcher(spark, px_setup["idx"])
+    schema = "query_id long, query_text string"
+    pos, neg = bool_queries["pos"], bool_queries["neg"]
+    for require_all, negs in ((False, None), (True, None), (False, neg)):
+        as_list = result_rows(
+            s.search(pos, k=8, require_all=require_all, neg_queries=negs)
+        )
+        as_frame = result_rows(
+            s.search(
+                spark.createDataFrame(pos, schema), k=8, require_all=require_all,
+                neg_queries=spark.createDataFrame(negs, schema) if negs else None,
+            )
+        )
+        assert as_list and as_list == as_frame, (require_all, negs)
 
 
 def test_wand_boolean_distributed_wave_path(

@@ -18,7 +18,7 @@ import os
 
 import numpy as np
 import pytest
-from conftest import add_runs
+from conftest import add_runs, assert_feeds_match, result_rows
 from pyspark.sql import functions as F
 
 from docinsight_spark.corpus import make_corpus, make_queries
@@ -108,6 +108,15 @@ def test_resurrected_matches_exact_oracle(spark, rez_setup):
     q = rez_setup["queries"]
     a = _res(wand_search(spark, rez_setup["idx"], q, k=5))
     _assert_same(a, _res(oracle_from_index(spark, rez_setup["idx"], q, k=5)))
+
+
+def test_resurrected_feeds_match_exact_oracle(spark, rez_setup, monkeypatch):
+    """Both feeds drop only the dead copies (root-scoped tombstones) and
+    take the live copy's length from its newer root: rank-identical to
+    the exact oracle."""
+    idx, q = rez_setup["idx"], rez_setup["queries"]
+    want = result_rows(oracle_from_index(spark, idx, q, k=5))
+    assert_feeds_match(monkeypatch, lambda: wand_search(spark, idx, q, k=5), want)
 
 
 def test_reingest_while_live_is_still_gated(spark, rez_setup):

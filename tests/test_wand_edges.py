@@ -1,6 +1,7 @@
 """WAND fast-path edge cases (robustness at the query surface)."""
 
 import pytest
+from conftest import assert_feeds_match, result_rows
 from pyspark.sql import functions as F
 
 from docinsight_spark.index.builder import IndexBuilder
@@ -78,6 +79,28 @@ def test_distributed_tokenize_matches_driver_path(spark, small_idx, monkeypatch)
     b = wand_search(spark, small_idx, q, k=5).orderBy("query_id", "rank").toPandas()
     assert a[["query_id", "rank", "docID"]].equals(b[["query_id", "rank", "docID"]])
     assert (abs(a["score"] - b["score"]) < 1e-12).all()
+
+
+@pytest.mark.parametrize("require_all", [False, True], ids=["or", "and"])
+def test_feeds_rank_identical_to_oracle(spark, small_idx, monkeypatch, require_all):
+    """The driver feed and the distributed feed serve one batch
+    rank-identically to the exact oracle."""
+    from docinsight_spark.corpus import make_queries
+    from docinsight_spark.evaluation import oracle_from_index
+
+    q = make_queries(spark, corpus_n=200, n_queries=12)
+    if require_all:
+        q = q.withColumn(
+            "query_text", F.array_join(F.slice(F.split("query_text", " "), 1, 2), " ")
+        )
+    want = result_rows(
+        oracle_from_index(spark, small_idx, q, k=5, require_all=require_all)
+    )
+    assert_feeds_match(
+        monkeypatch,
+        lambda: wand_search(spark, small_idx, q, k=5, require_all=require_all),
+        want,
+    )
 
 
 def test_report_pipeline_large_batch_distributed_tokenize(
@@ -165,6 +188,7 @@ def test_many_waves_checkpoint_guard_identical(spark, small_idx, monkeypatch):
 
     q = make_queries(spark, corpus_n=200, n_queries=26)
     with monkeypatch.context() as m:
+        m.setattr(wand_mod, "DRIVER_FEED_MAX_BYTES", 0)  # the waves' feed
         m.setattr(wand_mod, "CHECKPOINT_WAVES", 4)
         m.setattr(wand_mod, "QUERY_CHUNK_SIZE", 2)  # 13 waves → 3 checkpoints
         many = sorted(map(tuple, wand_search(spark, small_idx, q, k=5).collect()))
@@ -180,6 +204,7 @@ def test_wand_query_batch_chunking_identical(spark, small_idx, monkeypatch):
 
     q = make_queries(spark, corpus_n=200, n_queries=24)
     whole = sorted(map(tuple, wand_search(spark, small_idx, q, k=5).collect()))
+    monkeypatch.setattr(wand_mod, "DRIVER_FEED_MAX_BYTES", 0)  # the waves' feed
     monkeypatch.setattr(wand_mod, "QUERY_CHUNK_SIZE", 5)
     waved = sorted(map(tuple, wand_search(spark, small_idx, q, k=5).collect()))
     assert whole == waved and len(whole) > 0
