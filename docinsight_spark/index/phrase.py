@@ -22,7 +22,21 @@ tf is 1, so parquet's BYTE_ARRAY length prefix dominates while the int
 array rides dictionary/RLE integer pages; the positional write-volume
 fix that wins is zstd on positional artifacts (see
 ``IndexBuilder._postings_codec``).  A positional query needs no second
-index structure:
+index structure, and one offset-intersection kernel (:func:`_flush`)
+serves it, fed one of two ways:
+
+* **Driver feed** (:func:`_driver_phrase`): a batch of at most
+  ``wand.DRIVER_TOKENIZE_MAX`` phrases whose matched merged-postings
+  row groups' compressed bytes (from the footers), times its query
+  count, stay within ``wand.DRIVER_FEED_MAX_BYTES`` runs no Spark job.
+  pyarrow reads the phrase terms' rows of every root, tombstoned
+  copies drop per (root, bucket), the kernel runs on the driver, df
+  and BM25 follow in numpy, and the top-k ranks on Spark's
+  ``round(score, 4)`` (:func:`spark_round4`) into an Arrow-built local
+  frame.
+* **Spark plan**: everything larger, in the shape below.
+
+The Spark plan:
 
 1. scan each live root's merged postings with ``term IN (phrase
    terms)`` — the same row-group-pruned read the segment encoder's
@@ -58,19 +72,31 @@ cheap.
 from __future__ import annotations
 
 from collections import Counter
+from decimal import ROUND_HALF_UP, Decimal
 
+import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from docinsight_spark.functions.bm25 import bm25_score_col
 from docinsight_spark.functions.tokenizer import query_tokenizer, query_tokens
-from docinsight_spark.index import fsio
+from docinsight_spark.index import fsio, wand
 from docinsight_spark.index.builder import (
     load_tombstone_pairs,
+    lookup_dl,
     read_manifests,
     restrict_terms,
     _union_frames,
+)
+from docinsight_spark.index.wand import (
+    DRIVER_TOKENIZE_MAX,
+    _covers,
+    _LocalIndex,
+    _pick,
+    _result_frame,
 )
 
 # phrase query batches collect to the driver (offsets must broadcast);
@@ -165,6 +191,7 @@ def phrase_search(
     _frames: dict[str, DataFrame] | None = None,
     _ds_frames: dict[str, DataFrame] | None = None,
     _tstats: DataFrame | None = None,
+    _local: _LocalIndex | None = None,
 ) -> DataFrame:
     """(query_id, rank, docID, score) — exact phrase top-k.
 
@@ -173,11 +200,14 @@ def phrase_search(
 
     ``_frames`` / ``_ds_frames``: per-root pinned merged-postings /
     doc_stats DataFrames (``Searcher`` server mode) — the per-call
-    parquet re-read disappears for warm repeat queries."""
+    parquet re-read disappears for warm repeat queries on the Spark
+    plan.  ``_local``: the caller's kept :class:`_LocalIndex` for the
+    driver feed (a :class:`Searcher`'s), else one is built."""
     return _positional_search(
         spark, index_dir, queries, k=k,
         _meta=_meta, mode="phrase", window=0,
         _frames=_frames, _ds_frames=_ds_frames, _tstats=_tstats,
+        _local=_local,
     )
 
 
@@ -191,6 +221,7 @@ def proximity_search(
     _frames: dict[str, DataFrame] | None = None,
     _ds_frames: dict[str, DataFrame] | None = None,
     _tstats: DataFrame | None = None,
+    _local: _LocalIndex | None = None,
 ) -> DataFrame:
     """(query_id, rank, docID, score) — NEAR(w) proximity top-k.
 
@@ -209,6 +240,7 @@ def proximity_search(
         spark, index_dir, queries, k=k,
         _meta=_meta, mode="near", window=int(window),
         _frames=_frames, _ds_frames=_ds_frames, _tstats=_tstats,
+        _local=_local,
     )
 
 
@@ -223,6 +255,7 @@ def _positional_search(
     _frames: dict[str, DataFrame] | None = None,
     _ds_frames: dict[str, DataFrame] | None = None,
     _tstats: DataFrame | None = None,
+    _local: _LocalIndex | None = None,
 ) -> DataFrame:
     meta = _meta or fsio.read_json(f"{index_dir}/_meta.json")
     if not meta.get("positions", False):
@@ -248,11 +281,14 @@ def _positional_search(
     else:
         rows = [(int(q), t) for q, t in queries]
     offsets = _phrase_offsets(rows, meta)
-    empty = spark.createDataFrame(
-        [], "query_id long, rank int, docID long, score double"
-    )
     if not offsets:
-        return empty
+        return _result_frame(spark, [], k)
+    if len({q for q, _, _ in offsets}) <= DRIVER_TOKENIZE_MAX:
+        scored = _driver_phrase(
+            _local or _LocalIndex(index_dir, meta), offsets, meta, mode, window
+        )
+        if scored is not None:
+            return _result_frame(spark, scored, k, rank_key=spark_round4)
     all_terms = sorted({t for _, _, t in offsets})
     offs = spark.createDataFrame(offsets, "query_id long, off int, term string")
     noff = spark.createDataFrame(
@@ -293,7 +329,7 @@ def _positional_search(
     if cost_single <= SINGLE_PASS_MAX_ROWS:
         # an entirely dead batch returns without any heavy job
         if not _alive_queries(offsets, df_map):
-            return empty
+            return _result_frame(spark, [], k)
         return _score_phrase_hits(
             spark, index_dir, meta, roots, scan, offs, noff, None, None,
             k, mode, window, _ds_frames=_ds_frames,
@@ -327,7 +363,7 @@ def _positional_search(
     cand_rows = cand.limit(CAND_COLLECT_MAX + 1).collect()
     if len(cand_rows) <= CAND_COLLECT_MAX:
         if not cand_rows:
-            return empty
+            return _result_frame(spark, [], k)
         cand = spark.createDataFrame(
             [(int(r["query_id"]), int(r["docID"])) for r in cand_rows],
             "query_id long, docID long",
@@ -342,6 +378,93 @@ def _positional_search(
         buckets if buckets is not None and len(buckets) < n_buckets else None,
         k, mode, window, _ds_frames=_ds_frames,
     )
+
+
+# ---------------------------------------------------------------------------
+# Driver feed: the phrase terms' rows read with pyarrow, intersected and
+# scored on the driver
+# ---------------------------------------------------------------------------
+
+_Q4 = Decimal("0.0001")
+
+
+def spark_round4(scores: np.ndarray) -> np.ndarray:
+    """``F.round(score, 4)`` on the driver: Spark rounds HALF_UP on the
+    double's decimal string (``BigDecimal.valueOf``), so 0.12345 rounds
+    to 0.1235 and 2.00005 to 2.0001, where ``np.round`` (half-even on
+    the binary value) gives 0.1234 and 2.0.  Python's ``repr`` is the
+    shortest round-tripping string, as Java's ``Double.toString`` is
+    for all but rare doubles on JDKs before 19."""
+    return np.array(
+        [float(Decimal(repr(float(x))).quantize(_Q4, ROUND_HALF_UP)) for x in scores],
+        np.float64,
+    )
+
+
+def _driver_phrase(
+    local: _LocalIndex,
+    offsets: list[tuple[int, int, str]],
+    meta: dict,
+    mode: str,
+    window: int,
+) -> list[tuple[int, int, float]] | None:
+    """(query_id, docID, score) of every matching doc of a phrase batch,
+    read, intersected and scored on the driver — the driver feed;
+    ``None`` when the merged-postings row groups it would read, times
+    its query count, exceed WAND's ``DRIVER_FEED_MAX_BYTES``.  The same
+    plan as the Spark one: tombstoned copies dropped per (root, bucket),
+    rows sorted by (query, doc, root, off) into :func:`_flush`, df =
+    matching copies per query, each copy scored with its own root's doc
+    length (a missing one raises, :func:`lookup_dl`)."""
+    terms = sorted({t for _, _, t in offsets})
+    picked, nbytes = _pick(local.postings(), _covers(terms))
+    if nbytes * len({q for q, _, _ in offsets}) > wand.DRIVER_FEED_MAX_BYTES:
+        return None
+    vset = pa.array(terms, pa.string())
+
+    def keep(col):
+        return pc.is_in(col, value_set=vset)
+
+    tabs = []
+    for p, ids in picked:
+        t = local.read(p, ids, ["term", "docID", "positions"], keep)
+        bucket, root = p.key
+        excl = local.stats.excl_of(bucket)
+        dead = excl(root) if excl is not None else None
+        if dead is not None and t.num_rows:
+            t = t.filter(pc.invert(pc.is_in(t["docID"], value_set=pa.array(dead))))
+        if t.num_rows:
+            tabs.append(t.to_pandas().assign(_root=root))
+    if not tabs:
+        return []
+    offs = pd.DataFrame(offsets, columns=["query_id", "off", "term"])
+    offs["n"] = offs.groupby("query_id")["off"].transform("size")
+    hits = (
+        pd.concat(tabs, ignore_index=True)
+        .merge(offs, on="term")
+        .sort_values(["query_id", "docID", "_root", "off"], ignore_index=True)
+    )
+    ptf = _flush(hits, mode == "near", int(window)) if len(hits) else None
+    if ptf is None:
+        return []
+    qids, dids, rts = (ptf[c].to_numpy() for c in ("query_id", "docID", "_root"))
+    # python-style % with a positive modulus is pmod, as the build's
+    bks = dids % int(meta["n_buckets"])
+    dl = np.empty(len(ptf), np.float64)
+    for root, bucket in set(zip(rts.tolist(), bks.tolist())):
+        sel = (rts == root) & (bks == bucket)
+        ds = local.stats.root_dl(local.root_dirs[root], bucket)
+        docs, dls = ds if ds is not None else (np.empty(0, np.int64), None)
+        dl[sel] = lookup_dl(docs, dls, dids[sel])
+    # bm25_score_col's formula, in its operation order
+    n_docs, avgdl = int(meta["n_docs"]), float(meta["avgdl"])
+    k1, b = float(meta["k1"]), float(meta["b"])
+    _, inv, cnt = np.unique(qids, return_inverse=True, return_counts=True)
+    df = cnt[inv]
+    idf = np.log((n_docs - df + 0.5) / (df + 0.5) + 1.0)
+    tf = ptf["tf"].to_numpy().astype(np.float64)
+    score = idf * tf * (k1 + 1.0) / (tf + k1 * ((1.0 - b) + b * dl / avgdl))
+    return list(zip(qids.tolist(), dids.tolist(), score.tolist()))
 
 
 def _near_anchor_tf(pos_objs, starts, n_req, rows_per_g, lens, near_w: int):
@@ -426,6 +549,72 @@ def _near_anchor_tf(pos_objs, starts, n_req, rows_per_g, lens, near_w: int):
     return tf_g
 
 
+def _flush(pdf: pd.DataFrame, is_near: bool, near_w: int) -> pd.DataFrame | None:
+    """(query_id, docID, _root, tf) of every matching group in ``pdf``
+    — (query_id, docID, _root, off, positions, n) rows sorted by
+    (query_id, docID, _root, off), only whole groups — or None: the
+    offset-intersection kernel both feeds call.  All position-level
+    work is vectorized across the WHOLE frame; per-group python is
+    O(groups) cheap ops.  Phrase: tf = bases ``pos − off`` hit by every
+    offset; NEAR(``near_w``): tf = first-term anchors with every other
+    term within ±``near_w`` (:func:`_near_anchor_tf`)."""
+    qids = pdf["query_id"].to_numpy()
+    dids = pdf["docID"].to_numpy()
+    rts = pdf["_root"].to_numpy()
+    change = np.flatnonzero(
+        (qids[1:] != qids[:-1])
+        | (dids[1:] != dids[:-1])
+        | (rts[1:] != rts[:-1])
+    ) + 1
+    starts = np.concatenate(([0], change))
+    ends = np.concatenate((change, [len(pdf)]))
+    gid = np.zeros(len(pdf), dtype=np.int64)
+    gid[change] = 1
+    gid = np.cumsum(gid)
+    n_groups = len(starts)
+    n_req = pdf["n"].to_numpy()[starts]        # offsets per query
+    rows_per_g = ends - starts
+    offs_a = pdf["off"].to_numpy()
+    pos_objs = pdf["positions"].to_numpy()
+    lens = np.fromiter((len(p) for p in pos_objs), np.int64, len(pdf))
+    if is_near:
+        tf_g = _near_anchor_tf(
+            pos_objs, starts, n_req, rows_per_g, lens, near_w
+        )
+    else:
+        flat = (
+            np.concatenate([np.asarray(p, np.int64) for p in pos_objs])
+            if len(pos_objs)
+            else np.empty(0, np.int64)
+        )
+        bases = flat - np.repeat(offs_a.astype(np.int64), lens)
+        grep = np.repeat(gid, lens)
+        if len(bases):
+            shift = np.int64(bases.min())
+            span = np.int64(bases.max()) - shift + 1
+            key = grep * span + (bases - shift)
+            uq, cnt = np.unique(key, return_counts=True)
+            kg = uq // span
+            # a group with fewer rows than n (live copy lacking a
+            # term) can never reach cnt == n — no special case
+            mask = cnt == n_req[kg]
+            tf_g = np.bincount(kg[mask], minlength=n_groups)
+        else:
+            tf_g = np.zeros(n_groups, dtype=np.int64)
+    hit = tf_g > 0
+    if not hit.any():
+        return None
+    sel = starts[hit]
+    return pd.DataFrame(
+        {
+            "query_id": qids[sel],
+            "docID": dids[sel],
+            "_root": rts[sel],
+            "tf": tf_g[hit].astype(np.int64),
+        }
+    )
+
+
 def _score_phrase_hits(
     spark, index_dir, meta, roots, scan, offs, noff, cand, buckets, k,
     mode: str = "phrase", window: int = 0,
@@ -473,71 +662,9 @@ def _score_phrase_hits(
         .sortWithinPartitions("query_id", "docID", "_root", "off")
     )
 
-    import numpy as np
-
     near_w = int(window)
     is_near = mode == "near"
     out_schema = "query_id long, docID long, _root string, tf long"
-
-    def _flush(pdf: pd.DataFrame) -> pd.DataFrame | None:
-        """Score every complete group in ``pdf`` (rows pre-sorted by the
-        group key).  All position-level work is vectorized across the
-        WHOLE frame; per-group python is O(groups) cheap ops."""
-        qids = pdf["query_id"].to_numpy()
-        dids = pdf["docID"].to_numpy()
-        rts = pdf["_root"].to_numpy()
-        change = np.flatnonzero(
-            (qids[1:] != qids[:-1])
-            | (dids[1:] != dids[:-1])
-            | (rts[1:] != rts[:-1])
-        ) + 1
-        starts = np.concatenate(([0], change))
-        ends = np.concatenate((change, [len(pdf)]))
-        gid = np.zeros(len(pdf), dtype=np.int64)
-        gid[change] = 1
-        gid = np.cumsum(gid)
-        n_groups = len(starts)
-        n_req = pdf["n"].to_numpy()[starts]        # offsets per query
-        rows_per_g = ends - starts
-        offs_a = pdf["off"].to_numpy()
-        pos_objs = pdf["positions"].to_numpy()
-        lens = np.fromiter((len(p) for p in pos_objs), np.int64, len(pdf))
-        if is_near:
-            tf_g = _near_anchor_tf(
-                pos_objs, starts, n_req, rows_per_g, lens, near_w
-            )
-        else:
-            flat = (
-                np.concatenate([np.asarray(p, np.int64) for p in pos_objs])
-                if len(pos_objs)
-                else np.empty(0, np.int64)
-            )
-            bases = flat - np.repeat(offs_a.astype(np.int64), lens)
-            grep = np.repeat(gid, lens)
-            if len(bases):
-                shift = np.int64(bases.min())
-                span = np.int64(bases.max()) - shift + 1
-                key = grep * span + (bases - shift)
-                uq, cnt = np.unique(key, return_counts=True)
-                kg = uq // span
-                # a group with fewer rows than n (live copy lacking a
-                # term) can never reach cnt == n — no special case
-                mask = cnt == n_req[kg]
-                tf_g = np.bincount(kg[mask], minlength=n_groups)
-            else:
-                tf_g = np.zeros(n_groups, dtype=np.int64)
-        hit = tf_g > 0
-        if not hit.any():
-            return None
-        sel = starts[hit]
-        return pd.DataFrame(
-            {
-                "query_id": qids[sel],
-                "docID": dids[sel],
-                "_root": rts[sel],
-                "tf": tf_g[hit].astype(np.int64),
-            }
-        )
 
     def kern(batches):
         carry: pd.DataFrame | None = None
@@ -559,11 +686,11 @@ def _score_phrase_hits(
             carry = pdf.iloc[tail_start:].copy()
             head = pdf.iloc[:tail_start]
             if len(head):
-                out = _flush(head)
+                out = _flush(head, is_near, near_w)
                 if out is not None:
                     yield out
         if carry is not None and len(carry):
-            out = _flush(carry)
+            out = _flush(carry, is_near, near_w)
             if out is not None:
                 yield out
 

@@ -108,6 +108,7 @@ from docinsight_spark.index.builder import (
     load_segments,
     load_term_stats,
     lookup_dl,
+    read_doc_stats_bucket,
     read_doc_stats_bucket_multi,
     read_tombstone_bucket,
     restrict_terms,
@@ -410,6 +411,14 @@ def _seg_rows(
         yield (int(bks[i]), int(subs[i])), row
 
 
+def _sorted_dl(ds: dict | None) -> tuple[np.ndarray, np.ndarray] | None:
+    """A doc_stats read as (sorted docIDs, float64 dl), or None."""
+    if ds is None:
+        return None
+    o = np.argsort(ds["docID"], kind="stable")
+    return ds["docID"][o], ds["dl"][o].astype(np.float64)
+
+
 class _ShardStats:
     """Per-bucket doc lengths and per-(root, bucket) tombstoned docIDs,
     read with pyarrow on first use and kept: one per kernel task on the
@@ -419,18 +428,25 @@ class _ShardStats:
     def __init__(self, dl_roots: list[str], tomb_dirs: dict[str, list[str]]):
         self.dl_roots, self.tomb_dirs = dl_roots, tomb_dirs
         self._dl: dict[int, tuple | None] = {}
+        self._root_dl: dict[tuple[str, int], tuple | None] = {}
         self._excl: dict[tuple[str, int], np.ndarray | None] = {}
 
     def dl(self, bucket: int) -> tuple[np.ndarray, np.ndarray] | None:
-        """(sorted docIDs, float64 dl) of one bucket, or None."""
+        """(sorted docIDs, float64 dl) of one bucket, newest root winning
+        (:func:`read_doc_stats_bucket_multi`), or None."""
         if bucket not in self._dl:
-            ds = read_doc_stats_bucket_multi(self.dl_roots, bucket)
-            if ds is None:
-                self._dl[bucket] = None
-            else:
-                o = np.argsort(ds["docID"], kind="stable")
-                self._dl[bucket] = (ds["docID"][o], ds["dl"][o].astype(np.float64))
+            self._dl[bucket] = _sorted_dl(
+                read_doc_stats_bucket_multi(self.dl_roots, bucket)
+            )
         return self._dl[bucket]
+
+    def root_dl(self, root_dir: str, bucket: int) -> tuple[np.ndarray, np.ndarray] | None:
+        """:meth:`dl` of ONE root's copies — each copy's own length, as
+        a (doc_bucket, docID, _root) join reads it."""
+        key = (root_dir, bucket)
+        if key not in self._root_dl:
+            self._root_dl[key] = _sorted_dl(read_doc_stats_bucket(root_dir, bucket))
+        return self._root_dl[key]
 
     def excl_of(self, bucket: int):
         """root → sorted dead docIDs for (root, bucket), or a plain
@@ -488,9 +504,10 @@ class Searcher:
     reference's resident FAISS index (``index_manager.py:64-69`` loads
     once, serves many).  With ``cache=True`` the segment dataset is
     pinned in executor memory after the first query touches it.  The
-    driver feed's state (footer index, per-bucket doc lengths and
-    tombstones — :class:`_LocalIndex`) is kept per committed index
-    version, so a warm driver-sized query reads only its terms' rows.
+    driver feeds' state (footer indexes of the segments and, on a
+    positional index, the merged postings; doc lengths and tombstones —
+    :class:`_LocalIndex`) is kept per committed index version, so a warm
+    driver-sized WAND, phrase or NEAR query reads only its terms' rows.
 
     Refresh-transparent: every ``search`` re-reads ``_meta.json`` (one
     tiny driver-side file read — no Spark job) and reloads the segment
@@ -603,10 +620,11 @@ class Searcher:
     def phrase(self, queries: DataFrame | list[tuple[int, str]],
                k: int = 10) -> DataFrame:
         """Exact phrase top-k in server mode (needs a positions=True
-        index); refresh-transparent like :meth:`search`.  The per-root
-        merged-postings and doc_stats frames are pinned on first use
-        (round 7), so warm repeat queries skip the parquet re-read that
-        dominated single-phrase latency."""
+        index); refresh-transparent like :meth:`search`.  A driver-sized
+        batch reads through the kept :class:`_LocalIndex` (its merged
+        postings' footer index) with no Spark job; for the Spark plan
+        the per-root merged-postings and doc_stats frames are pinned on
+        first use, so warm repeat queries skip the parquet re-read."""
         from docinsight_spark.index.phrase import phrase_search
 
         if self.auto_reload:
@@ -615,13 +633,14 @@ class Searcher:
         return phrase_search(
             self.spark, self.index_dir, queries, k=k, _meta=self.meta,
             _frames=frames, _ds_frames=ds_frames, _tstats=self.term_stats,
+            _local=self._local,
         )
 
     def proximity(self, queries: DataFrame | list[tuple[int, str]],
                   k: int = 10, window: int = 8) -> DataFrame:
         """NEAR(w) proximity top-k in server mode (needs a
         positions=True index); refresh-transparent like :meth:`search`,
-        positional frames pinned like :meth:`phrase`."""
+        fed like :meth:`phrase`."""
         from docinsight_spark.index.phrase import proximity_search
 
         if self.auto_reload:
@@ -630,7 +649,7 @@ class Searcher:
         return proximity_search(
             self.spark, self.index_dir, queries, k=k, window=window,
             _meta=self.meta, _frames=frames, _ds_frames=ds_frames,
-            _tstats=self.term_stats,
+            _tstats=self.term_stats, _local=self._local,
         )
 
     def prefix(self, prefixes: list[tuple[int, str]], k: int = 10,
@@ -920,14 +939,22 @@ def wand_search(
 
 
 def _result_frame(
-    spark: SparkSession, rows: list[tuple[int, int, float]], k: int
+    spark: SparkSession, rows: list[tuple[int, int, float]], k: int,
+    rank_key=None,
 ) -> DataFrame:
     """The global top-k of shard-local ``(query_id, docID, score)`` rows
-    — rank by (score desc, docID asc) per query — as an Arrow-built
-    local frame: collecting it runs no Spark job."""
+    — rank by (score desc, docID asc) per query, or by
+    ``rank_key(scores)`` desc then docID — as an Arrow-built local
+    frame: collecting it runs no Spark job."""
     pdf = pd.DataFrame(rows, columns=["query_id", "docID", "score"]).astype(
         {"query_id": "int64", "docID": "int64", "score": "float64"}
-    ).sort_values(["query_id", "score", "docID"], ascending=[True, False, True])
+    )
+    key = pdf["score"] if rank_key is None else rank_key(pdf["score"].to_numpy())
+    pdf = (
+        pdf.assign(_key=key)
+        .sort_values(["query_id", "_key", "docID"], ascending=[True, False, True])
+        .drop(columns="_key")
+    )
     pdf.insert(1, "rank", (pdf.groupby("query_id").cumcount() + 1).astype("int32"))
     pdf = pdf[pdf["rank"] <= k]
     if pdf.empty:
@@ -1031,6 +1058,11 @@ def _wave_local_topk(
 # product (one query over 1 MB: 77 ms; 500 queries over 4 MB: 37 s,
 # against 19 s distributed), so 16 MiB keeps a driver call under the
 # distributed feed's ~0.8 s fixed cost whatever the cluster's size.
+# The phrase / NEAR driver feed (``phrase._driver_phrase``) takes the same
+# budget over the merged postings: at 32x2 shards and 20k files every
+# phrase reads all 4.4 MB of them, and the driver cost 17-28 ms per MB of
+# the product beyond one query (1 / 10 / 40 / 200 phrases: 0.43 / 1.24 /
+# 3.6 / 15.4 s, against 1.10 / 1.71 / 3.6 / 22.9 s on the Spark plan).
 DRIVER_FEED_MAX_BYTES = 16 << 20
 
 _SEG_COLUMNS = ["doc_sub", "term", "docs", "tfs", "bn", "max_score", "tf_max", "dl_min"]
@@ -1065,6 +1097,16 @@ def _term_ranges(md: pq.FileMetaData) -> tuple:
     return md, rgs
 
 
+def _covers(terms: list[str]):
+    """``hit(lo, hi)`` for :func:`_pick`: a row group whose term range
+    holds one of the sorted ``terms``."""
+    def hit(lo: str, hi: str) -> bool:
+        i = bisect.bisect_left(terms, lo)
+        return i < len(terms) and terms[i] <= hi
+
+    return hit
+
+
 def _pick(parts: list[_Part], hit) -> tuple[list[tuple[_Part, list[int]]], int]:
     """([(file, row groups whose term range ``hit(lo, hi)``)], their
     compressed bytes)."""
@@ -1078,19 +1120,37 @@ def _pick(parts: list[_Part], hit) -> tuple[list[tuple[_Part, list[int]]], int]:
 
 
 class _LocalIndex:
-    """The driver feed's view of one committed index version (one
+    """The driver feeds' view of one committed index version (one
     ``_meta.json``): a footer index of its term-keyed parquet files —
     every root's segments and term_stats, and the df corrections of each
-    tombstone's live roots (:func:`load_term_stats`'s inputs) — read on
-    first use, plus the kernel's :class:`_ShardStats`."""
+    tombstone's live roots (:func:`load_term_stats`'s inputs); on a
+    positional index also every root's merged postings — each read on
+    first use, plus the kernels' :class:`_ShardStats`."""
 
     def __init__(self, index_dir: str, meta: dict):
         self.index_dir, self.meta = index_dir, meta
         self.fs = fsio.resolve(index_dir)[0]
-        self.stats = _ShardStats(
-            doc_stats_roots(index_dir, meta), tombstone_root_dirs(index_dir, meta)
+        dl_roots = doc_stats_roots(index_dir, meta)
+        self.stats = _ShardStats(dl_roots, tombstone_root_dirs(index_dir, meta))
+        # root id -> its doc_stats root (same order as doc_stats_roots)
+        self.root_dirs = dict(
+            zip(["base"] + [g["id"] for g in meta.get("generations", [])], dl_roots)
         )
         self._parts: tuple[list[_Part], list[_Part]] | None = None
+        self._postings: list[_Part] | None = None
+
+    def postings(self) -> list[_Part]:
+        """Every root's merged-postings files keyed ``(doc_bucket,
+        root)`` — term-sorted within each shard file, like segments."""
+        if self._postings is None:
+            from docinsight_spark.index.phrase import merged_roots
+
+            self._postings = [
+                _Part(f, md, (int(_dir_value(f, "doc_bucket")), rid), rgs)
+                for rid, src in merged_roots(self.index_dir, self.meta)
+                for f, (md, rgs) in _read_footers(src, _term_ranges)
+            ]
+        return self._postings
 
     def parts(self) -> tuple[list[_Part], list[_Part]]:
         """(segment files keyed ``(doc_bucket, root, avgdl_enc)``, df
@@ -1155,11 +1215,7 @@ def _driver_topk(
     times its query count, exceed :data:`DRIVER_FEED_MAX_BYTES`."""
     neg_qmap, terms = _terms_to_read(qmap, neg_qmap)
     segs, dfs = local.parts()
-
-    def hit(lo: str, hi: str) -> bool:
-        i = bisect.bisect_left(terms, lo)
-        return i < len(terms) and terms[i] <= hi
-
+    hit = _covers(terms)
     seg_rgs, seg_bytes = _pick(segs, hit)
     df_rgs, df_bytes = _pick(dfs, hit)
     if (seg_bytes + df_bytes) * len(qmap) > DRIVER_FEED_MAX_BYTES:

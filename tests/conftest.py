@@ -52,12 +52,11 @@ def assert_rows_match(got, want, atol: float = 1e-9) -> None:
     assert all(abs(g[3] - w[3]) <= atol for g, w in zip(got, want))
 
 
-def assert_feeds_match(monkeypatch, search, want, atol: float = 1e-9):
-    """Run ``search()`` (a WAND result frame) twice: with the driver feed
-    forced on (budget unbounded) and with its budget at 0 (the
-    distributed feed).  Each run must take the feed it was forced onto —
-    for its term maps and its dictionary expansions alike — and both must
-    be rank-identical to ``want`` (:func:`result_rows` rows)."""
+def _assert_both_feeds(monkeypatch, search, want, atol, spied) -> None:
+    """Run ``search()`` with the driver-feed budget unbounded, then at 0:
+    every spied driver-feed function (``(module, name)`` pairs; each
+    returns None when it declines) must serve the first run and decline
+    the second, and both runs must be rank-identical to ``want``."""
     from docinsight_spark.index import wand
 
     for budget, on_driver in ((1 << 62, True), (0, False)):
@@ -72,9 +71,32 @@ def assert_feeds_match(monkeypatch, search, want, atol: float = 1e-9):
 
         with monkeypatch.context() as m:
             m.setattr(wand, "DRIVER_FEED_MAX_BYTES", budget)
-            m.setattr(wand, "_driver_topk", spy(wand._driver_topk))
-            m.setattr(wand, "_expand_local", spy(wand._expand_local))
+            for mod, name in spied:
+                m.setattr(mod, name, spy(getattr(mod, name)))
             got = result_rows(search())
         assert served and all(s == on_driver for s in served), (budget, served)
         assert got, "the fixture's queries match nothing"
         assert_rows_match(got, want, atol)
+
+
+def assert_feeds_match(monkeypatch, search, want, atol: float = 1e-9):
+    """Run ``search()`` (a WAND result frame) twice: with the driver feed
+    forced on (budget unbounded) and with its budget at 0 (the
+    distributed feed).  Each run must take the feed it was forced onto —
+    for its term maps and its dictionary expansions alike — and both must
+    be rank-identical to ``want`` (:func:`result_rows` rows)."""
+    from docinsight_spark.index import wand
+
+    _assert_both_feeds(
+        monkeypatch, search, want, atol,
+        [(wand, "_driver_topk"), (wand, "_expand_local")],
+    )
+
+
+def assert_positional_feeds_match(monkeypatch, search, want, atol: float = 1e-9):
+    """:func:`assert_feeds_match` for a phrase / NEAR result frame: the
+    driver feed (``phrase._driver_phrase``) forced on, then the Spark
+    plan (budget 0), both rank-identical to ``want``."""
+    from docinsight_spark.index import phrase
+
+    _assert_both_feeds(monkeypatch, search, want, atol, [(phrase, "_driver_phrase")])

@@ -14,10 +14,11 @@ from pyspark.sql import functions as F
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
+from conftest import assert_positional_feeds_match
 from docinsight_spark.corpus import make_corpus
 from docinsight_spark.functions.tokenizer import tokenize_code_pandas
 from docinsight_spark.index.builder import IndexBuilder
-from docinsight_spark.index.phrase import phrase_search
+from docinsight_spark.index.phrase import phrase_search, proximity_search
 from docinsight_spark.operators.postings import build_postings
 
 K1, B = 1.2, 0.75
@@ -80,6 +81,43 @@ def _engine_scores(spark, b: IndexBuilder, idx: str, phrase: str) -> dict:
 def _pick_phrase(corpus_pdf: pd.DataFrame, doc_i: int, start: int, n: int) -> str:
     toks = list(_doc_tokens(corpus_pdf).iloc[doc_i])
     return " ".join(toks[start : start + n])
+
+
+def _half_up4(x: float) -> float:
+    """Spark's ``round(x, 4)``: HALF_UP on the double's decimal string."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    return float(Decimal(repr(x)).quantize(Decimal("0.0001"), ROUND_HALF_UP))
+
+
+def _want_rows(b: IndexBuilder, scores: dict[int, dict[str, float]], k: int):
+    """Oracle ``{query_id: {path: score}}`` as the engine's top-k rows:
+    rank by 4-dp rounded score desc, then docID."""
+    ids = {
+        r["path"]: int(r["docID"])
+        for r in b.docs_dim().select("path", "docID").collect()
+    }
+    out = []
+    for q, by_path in scores.items():
+        ranked = sorted(
+            ((ids[p], sc) for p, sc in by_path.items()),
+            key=lambda x: (-_half_up4(x[1]), x[0]),
+        )[:k]
+        out.extend((q, r + 1, d, sc) for r, (d, sc) in enumerate(ranked))
+    return sorted(out)
+
+
+def _assert_feeds_oracle(monkeypatch, spark, b, idx, queries, want, w=None, k=10_000):
+    """Phrase (``w`` None) or NEAR(``w``) search of ``queries`` on both
+    feeds, each rank-identical to the oracle's ``want``
+    (``{query_id: {path: score}}``)."""
+    if w is None:
+        def search():
+            return phrase_search(spark, idx, queries, k=k)
+    else:
+        def search():
+            return proximity_search(spark, idx, queries, k=k, window=w)
+    assert_positional_feeds_match(monkeypatch, search, _want_rows(b, want, k))
 
 
 def _assert_same_scores(a: dict, b: dict, atol=1e-9):
@@ -153,7 +191,7 @@ def ph_setup(spark, tmp_path_factory):
     return {"idx": idx, "b": b, "base": base, "pdf": pdf}
 
 
-def test_phrase_matches_python_oracle(spark, ph_setup):
+def test_phrase_matches_python_oracle(spark, ph_setup, monkeypatch):
     pdf = ph_setup["pdf"]
     for doc_i, start, n in [(3, 4, 2), (10, 2, 3), (40, 0, 2)]:
         phrase = _pick_phrase(pdf, doc_i, start, n)
@@ -161,6 +199,10 @@ def test_phrase_matches_python_oracle(spark, ph_setup):
         assert want, f"picked phrase {phrase!r} matches nothing"
         got = _engine_scores(spark, ph_setup["b"], ph_setup["idx"], phrase)
         _assert_same_scores(got, want)
+        _assert_feeds_oracle(
+            monkeypatch, spark, ph_setup["b"], ph_setup["idx"],
+            [(0, phrase)], {0: want},
+        )
 
 
 def test_phrase_unknown_or_empty(spark, ph_setup):
@@ -192,7 +234,7 @@ def test_mixed_positions_setting_refused(spark, ph_setup, tmp_path):
         c.add_run(make_corpus(spark, 10, seed=35, start=10), "r1")
 
 
-def test_phrase_across_generations(spark, tmp_path):
+def test_phrase_across_generations(spark, tmp_path, monkeypatch):
     """A phrase whose only match arrives in a delta generation is found,
     and scores equal a single-shot rebuild over the union (global
     N/avgdl exactness through refresh_delta)."""
@@ -210,12 +252,13 @@ def test_phrase_across_generations(spark, tmp_path):
     want = _oracle_scores(union_pdf, phrase)
     got = _engine_scores(spark, b, idx, phrase)
     _assert_same_scores(got, want)
+    _assert_feeds_oracle(monkeypatch, spark, b, idx, [(0, phrase)], {0: want})
     # at least one match must be a delta doc (the generation is visible)
     delta_paths = set(dpdf["path"])
     assert set(got) & delta_paths
 
 
-def test_phrase_delete_resurrect_compact(spark, tmp_path):
+def test_phrase_delete_resurrect_compact(spark, tmp_path, monkeypatch):
     """Life-cycle under phrase queries: a deleted doc's phrases stop
     matching (root-scoped exclusion), a re-ingested copy matches again,
     and a forced compaction (physical reclaim; positions ride the fold)
@@ -244,19 +287,35 @@ def test_phrase_delete_resurrect_compact(spark, tmp_path):
     got1 = _engine_scores(spark, b, idx, phrase)
     assert victim_path not in got1
     _assert_same_scores(got1, _oracle_scores(surv_pdf, phrase))
+    # the victim's phrase may now match nothing: a second phrase keeps
+    # the feed comparison non-empty
+    other = _pick_phrase(dpdf, 7, 2, 2)
+    _assert_feeds_oracle(
+        monkeypatch, spark, b, idx, [(0, phrase), (1, other)],
+        {0: _oracle_scores(surv_pdf, phrase), 1: _oracle_scores(surv_pdf, other)},
+    )
 
-    # resurrection: re-ingest the victim row, fold a new generation
+    # resurrection: re-ingest the victim row, fold a new generation; the
+    # live copy scores with its own root's doc length on both feeds
     victim_rows = delta.filter(F.col("path") == victim_path)
     b.add_run(victim_rows, "rez")
     assert b.refresh_delta() is not None
     got2 = _engine_scores(spark, b, idx, phrase)
     full_pdf = base.unionByName(delta).toPandas()
     _assert_same_scores(got2, _oracle_scores(full_pdf, phrase))
+    _assert_feeds_oracle(
+        monkeypatch, spark, b, idx, [(0, phrase)],
+        {0: _oracle_scores(full_pdf, phrase)},
+    )
 
     # physical reclaim: force-fold every generation; positions survive
     assert b.compact(force=True, delete_victims=True) is not None
     got3 = _engine_scores(spark, b, idx, phrase)
     _assert_same_scores(got3, _oracle_scores(full_pdf, phrase))
+    _assert_feeds_oracle(
+        monkeypatch, spark, b, idx, [(0, phrase)],
+        {0: _oracle_scores(full_pdf, phrase)},
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -306,8 +365,6 @@ def _prox_oracle_scores(
 
 
 def _prox_engine_scores(spark, b, idx, query: str, w: int) -> dict:
-    from docinsight_spark.index.phrase import proximity_search
-
     res = proximity_search(spark, idx, [(0, query)], k=10_000, window=w)
     dim = b.docs_dim().select("docID", "path")
     return {
@@ -327,7 +384,7 @@ def _pick_near_pair(corpus_pdf: pd.DataFrame, doc_i: int, gap: int) -> str:
     raise AssertionError("fixture doc too short to pick a near pair")
 
 
-def test_proximity_matches_python_oracle(spark, ph_setup):
+def test_proximity_matches_python_oracle(spark, ph_setup, monkeypatch):
     pdf = ph_setup["pdf"]
     for doc_i, gap, w in [(3, 3, 4), (10, 4, 4), (40, 2, 8)]:
         q = _pick_near_pair(pdf, doc_i, gap)
@@ -335,6 +392,32 @@ def test_proximity_matches_python_oracle(spark, ph_setup):
         assert want, f"picked near-pair {q!r} matches nothing"
         got = _prox_engine_scores(spark, ph_setup["b"], ph_setup["idx"], q, w)
         _assert_same_scores(got, want)
+        _assert_feeds_oracle(
+            monkeypatch, spark, ph_setup["b"], ph_setup["idx"],
+            [(0, q)], {0: want}, w=w,
+        )
+
+
+def test_repeated_term_feeds_match_exact_oracle(spark, ph_setup, monkeypatch):
+    """A query repeating a term (``a b a``: one posting row feeds two
+    offsets) is rank-identical to the oracle on both feeds, as a phrase
+    and as NEAR(4)."""
+    pdf = ph_setup["pdf"]
+    q = next(
+        " ".join(ts[i : i + 3])
+        for ts in map(list, _doc_tokens(pdf))
+        for i in range(len(ts) - 2)
+        if ts[i] == ts[i + 2] != ts[i + 1]
+    )
+    want = _oracle_scores(pdf, q)
+    assert want
+    _assert_feeds_oracle(
+        monkeypatch, spark, ph_setup["b"], ph_setup["idx"], [(0, q)], {0: want}
+    )
+    _assert_feeds_oracle(
+        monkeypatch, spark, ph_setup["b"], ph_setup["idx"], [(0, q)],
+        {0: _prox_oracle_scores(pdf, q, 4)}, w=4,
+    )
 
 
 def test_proximity_wider_than_phrase(spark, ph_setup):
@@ -370,13 +453,11 @@ def test_searcher_proximity_matches_direct(spark, ph_setup):
 
 
 def test_proximity_window_validation(spark, ph_setup):
-    from docinsight_spark.index.phrase import proximity_search
-
     with pytest.raises(ValueError, match="window"):
         proximity_search(spark, ph_setup["idx"], [(0, "a b")], window=0)
 
 
-def test_proximity_delete_resurrect(spark, tmp_path):
+def test_proximity_delete_resurrect(spark, tmp_path, monkeypatch):
     """NEAR(w) under the delete life-cycle: a deleted doc stops
     matching (root-scoped exclusion inside the kernel), a re-ingested
     copy matches again — scores oracle-exact at each step."""
@@ -399,11 +480,23 @@ def test_proximity_delete_resurrect(spark, tmp_path):
     got1 = _prox_engine_scores(spark, b, idx, q, w)
     assert victim_path not in got1
     _assert_same_scores(got1, _prox_oracle_scores(surv, q, w))
+    # the victim's pair may now match nothing: a second pair keeps the
+    # feed comparison non-empty
+    q2 = _pick_near_pair(pdf, 9, 3)
+    _assert_feeds_oracle(
+        monkeypatch, spark, b, idx, [(0, q), (1, q2)],
+        {0: _prox_oracle_scores(surv, q, w), 1: _prox_oracle_scores(surv, q2, w)},
+        w=w,
+    )
 
     b.add_run(base.filter(F.col("path") == victim_path), "rez")
     assert b.refresh_delta() is not None
     got2 = _prox_engine_scores(spark, b, idx, q, w)
     _assert_same_scores(got2, _prox_oracle_scores(pdf, q, w))
+    _assert_feeds_oracle(
+        monkeypatch, spark, b, idx, [(0, q)], {0: _prox_oracle_scores(pdf, q, w)},
+        w=w,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -658,6 +751,21 @@ def test_alive_queries_at_the_batch_cap():
         assert (qid in alive) == all(df_map.get(t, 0) > 0 for t in mine)
 
 
+def _phrase_batch(toks: list[list[str]], n_queries: int, rng) -> list[tuple[int, str]]:
+    """Phrases of 2-3 adjacent tokens of random docs; every tenth gets
+    a corpus-absent term appended."""
+    batch = []
+    for qid in range(n_queries):
+        ts = toks[rng.randrange(len(toks))]
+        n = rng.randint(2, 3)
+        start = rng.randrange(max(len(ts) - n, 1))
+        phrase = " ".join(ts[start : start + n])
+        if qid % 10 == 0:
+            phrase += " zzznope"
+        batch.append((qid, phrase))
+    return batch
+
+
 def test_large_phrase_batch_matches_single_calls(spark, ph_setup):
     """A 5,000-phrase batch returns, for sampled ids, the rows of the
     same phrase searched alone (incl. phrases with an unknown term)."""
@@ -666,15 +774,7 @@ def test_large_phrase_batch_matches_single_calls(spark, ph_setup):
     pdf = ph_setup["pdf"]
     toks = [list(t) for t in _doc_tokens(pdf)]
     rng = random.Random(11)
-    batch = []
-    for qid in range(5000):
-        ts = toks[rng.randrange(len(toks))]
-        n = rng.randint(2, 3)
-        start = rng.randrange(max(len(ts) - n, 1))
-        phrase = " ".join(ts[start : start + n])
-        if qid % 10 == 0:
-            phrase += " zzznope"
-        batch.append((qid, phrase))
+    batch = _phrase_batch(toks, 5000, rng)
     res = phrase_search(spark, ph_setup["idx"], batch, k=5)
     got = {}
     for r in res.collect():
@@ -692,3 +792,80 @@ def test_large_phrase_batch_matches_single_calls(spark, ph_setup):
         )
         assert sorted(got.get(qid, [])) == one, (qid, batch[qid][1])
         assert bool(one) == (qid % 10 != 0)
+
+
+def test_phrase_batch_feeds_match_exact_oracle(spark, ph_setup, monkeypatch):
+    """A multi-query batch within the driver feed's query cap (the
+    generator of the 5,000-phrase test, unknown terms included), as
+    phrases and as NEAR(4): both feeds rank-identical to the oracle."""
+    import math
+    import random
+
+    from docinsight_spark.index.wand import DRIVER_TOKENIZE_MAX
+
+    pdf = ph_setup["pdf"]
+    toks = [list(t) for t in _doc_tokens(pdf)]
+    batch = _phrase_batch(toks, 300, random.Random(11))
+    assert len(batch) <= DRIVER_TOKENIZE_MAX
+    dl = [len(ts) for ts in toks]
+    n_docs = sum(1 for d in dl if d)
+    avgdl = sum(dl) / n_docs
+
+    qtoks = tokenize_code_pandas(
+        pd.Series([t for _, t in batch]), pd.Series(["java"] * len(batch))
+    )
+    vocab = [set(ts) for ts in toks]
+    d_of = dict(zip(pdf["path"], dl))
+
+    def oracle(count) -> dict[int, dict[str, float]]:
+        out = {}
+        for (q, _), qt in zip(batch, qtoks):
+            qt = list(qt)
+            tf = {
+                p: count(ts, qt)
+                for p, ts, v in zip(pdf["path"], toks, vocab)
+                if v.issuperset(qt)
+            }
+            tf = {p: t for p, t in tf.items() if t}
+            if not tf:
+                continue
+            idf = math.log((n_docs - len(tf) + 0.5) / (len(tf) + 0.5) + 1.0)
+            out[q] = {
+                p: idf * t * (K1 + 1) / (t + K1 * (1 - B + B * d_of[p] / avgdl))
+                for p, t in tf.items()
+            }
+        return out
+
+    b, idx = ph_setup["b"], ph_setup["idx"]
+    want = oracle(_phrase_counts)
+    assert len(want) > 200
+    _assert_feeds_oracle(monkeypatch, spark, b, idx, batch, want, k=5)
+    _assert_feeds_oracle(
+        monkeypatch, spark, b, idx, batch,
+        oracle(lambda ts, qt: _prox_counts(ts, qt, 4)), w=4, k=5,
+    )
+
+
+def test_spark_round4_matches_spark_round(spark):
+    """The driver feed's rank key equals Spark's ``round(x, 4)`` (HALF_UP
+    on the decimal string) on half-way doubles and their neighbours —
+    where ``np.round`` (half-even on the binary value) differs."""
+    import numpy as np
+
+    from docinsight_spark.index.phrase import spark_round4
+
+    ties = [0.12345, 2.00005, 0.00015, 1.23455, 3.99995, 0.00005, 7.77775, 12.34565]
+    xs = [
+        float(v)
+        for t in ties
+        for v in (t, np.nextafter(t, 0.0), np.nextafter(t, np.inf))
+    ]
+    got = spark.createDataFrame([(x,) for x in xs], "x double").select(
+        F.round("x", 4).alias("r")
+    ).collect()
+    want = np.array([r["r"] for r in got])
+    assert (spark_round4(np.array(xs)) == want).all(), list(
+        zip(xs, spark_round4(np.array(xs)), want)
+    )
+    # the test has teeth: half-even rounding mis-ranks some of these ties
+    assert (np.round(np.array(xs), 4) != want).any()

@@ -210,9 +210,12 @@ def test_phrase_term_pushdown_and_positions_pruning(spark, pos_index, monkeypatc
     one postings scan reads WITHOUT the positions column, and only the
     adjacency branch reads it.  Pinned on the lazy fallback plan
     (CAND_COLLECT_MAX=0) with the round-7 cost probe forced to the
-    pre-pass plan, where both branches are visible in one plan."""
+    pre-pass plan, where both branches are visible in one plan (the
+    driver feed's budget at 0: the Spark plan is the one pinned)."""
     from docinsight_spark.index import phrase as P
+    from docinsight_spark.index import wand
 
+    monkeypatch.setattr(wand, "DRIVER_FEED_MAX_BYTES", 0)
     monkeypatch.setattr(P, "CAND_COLLECT_MAX", -1)
     monkeypatch.setattr(P, "SINGLE_PASS_MAX_ROWS", -1)
     res = P.phrase_search(spark, pos_index, [(0, "public static")], k=5)
@@ -226,12 +229,16 @@ def test_phrase_term_pushdown_and_positions_pruning(spark, pos_index, monkeypatc
     assert heavy, "no scan reads positions at all:\n" + "\n".join(reads)
 
 
-def test_phrase_single_pass_plan(spark, pos_index, real_bigram):
+def test_phrase_single_pass_plan(spark, pos_index, real_bigram, monkeypatch):
     """Round-7 cost-probe fast path: a selective batch (Σ df under the
     single-pass bound — every tiny-corpus phrase qualifies) must skip
     the candidate pre-pass: exactly ONE postings scan, it reads the
-    positions column, and the term IN-list still reaches parquet."""
+    positions column, and the term IN-list still reaches parquet.
+    Pinned on the Spark plan (the driver feed's budget at 0)."""
+    from docinsight_spark.index import wand
     from docinsight_spark.index.phrase import phrase_search
+
+    monkeypatch.setattr(wand, "DRIVER_FEED_MAX_BYTES", 0)
 
     res = phrase_search(spark, pos_index, [(0, real_bigram)], k=5)
     p = plan_text(res)
@@ -267,14 +274,25 @@ def test_snippet_windows_single_postings_scan(spark, pos_index, tiny_corpus):
     assert "ReusedExchange" in final, final
 
 
-def test_phrase_absent_term_short_circuits(spark, pos_index):
+def test_phrase_absent_term_short_circuits(spark, pos_index, monkeypatch):
     """A phrase containing a corpus-absent term can never match: the
-    cost probe answers from term_stats and the returned frame is a
-    literal empty relation — no postings scan in the plan at all."""
+    returned frame is a literal empty relation — no postings scan in the
+    plan at all, and collecting it runs no job.  The driver feed answers
+    with no job at all; on the Spark plan (budget 0) the cost probe
+    answers from term_stats (its one collect)."""
+    from docinsight_spark.index import wand
     from docinsight_spark.index.phrase import phrase_search
 
-    res = phrase_search(spark, pos_index, [(0, "zzz_nonexistent_term qq")], k=5)
-    assert res.count() == 0
+    def call():
+        return phrase_search(spark, pos_index, [(0, "zzz_nonexistent_term qq")], k=5)
+
+    n, res, rows = _jobs_of(spark, call)
+    assert rows == [] and n == 0, n
+    assert "parquet" not in plan_text(res).lower()
+    monkeypatch.setattr(wand, "DRIVER_FEED_MAX_BYTES", 0)
+    res = call()
+    n, _, rows = _jobs_of(spark, lambda: res)
+    assert rows == [] and n == 0, n
     p = plan_text(res)
     assert "parquet" not in p.lower(), p
 
@@ -285,9 +303,12 @@ def test_phrase_collected_candidates_prune_buckets(
     """On the collected-candidates path (the hot-term regime — forced
     here by zeroing the round-7 single-pass bound) the heavy positions
     scan must carry a doc_bucket partition filter — the positions read
-    only lists buckets that can produce a match."""
+    only lists buckets that can produce a match.  Pinned on the Spark
+    plan (the driver feed's budget at 0)."""
     from docinsight_spark.index import phrase as P
+    from docinsight_spark.index import wand
 
+    monkeypatch.setattr(wand, "DRIVER_FEED_MAX_BYTES", 0)
     monkeypatch.setattr(P, "SINGLE_PASS_MAX_ROWS", -1)
     res = P.phrase_search(spark, pos_index, [(0, real_bigram)], k=5)
     p = plan_text(res)
@@ -356,6 +377,33 @@ def test_warm_searcher_serves_driver_sized_queries_without_jobs(
             [(0, "return int")], k=5, neg_queries=[(0, "value")]
         ),
         "prefix": lambda: s.prefix([(0, "re")], k=5),
+    }
+    for fn in calls.values():
+        fn().collect()  # warm: footer index, doc lengths
+    for name, fn in calls.items():
+        n, _, rows = _jobs_of(spark, fn)
+        assert rows and n == 0, (name, n)
+    monkeypatch.setattr(wand, "DRIVER_FEED_MAX_BYTES", 0)
+    for name, fn in calls.items():
+        n, df, rows = _jobs_of(spark, fn)
+        assert rows and n > 0, (name, n)
+        assert "MapInPandas" in plan_text(df), name
+
+
+def test_warm_searcher_serves_driver_sized_phrases_without_jobs(
+    spark, pos_index, real_bigram, monkeypatch
+):
+    """A warm Searcher answers driver-sized phrase and NEAR calls given
+    as lists with NO Spark job (the phrase driver feed: pyarrow reads of
+    the terms' merged-postings rows, the offset-intersection kernel on
+    the driver, an Arrow-built local result).  With the driver-feed
+    budget at 0 the same calls run the mapInPandas plan."""
+    from docinsight_spark.index import wand
+
+    s = wand.Searcher(spark, pos_index)
+    calls = {
+        "phrase": lambda: s.phrase([(0, real_bigram)], k=5),
+        "near": lambda: s.proximity([(0, real_bigram)], k=5, window=4),
     }
     for fn in calls.values():
         fn().collect()  # warm: footer index, doc lengths
