@@ -8,11 +8,11 @@ clustering → report) as an idiomatic Spark stack:
 * code-aware tokenization (vectorized pandas/Arrow UDFs)
 * inverted-index build: (term, docID, tf) postings sharded by docID
   hash, two-stage salted document-frequency aggregation against
-  hot-term skew, segments of plain parquet docID/tf arrays with
-  block-max metadata, hierarchical merge waves with per-partition
+  hot-term skew, segments of plain parquet docID/tf arrays,
+  hierarchical merge waves with per-partition
   lineage manifests (resumable)
 * Okapi BM25 (k1=1.2, b=0.75) top-k querying — a pure-DataFrame
-  oracle path and a block-max WAND fast path in ``mapInPandas``
+  oracle path and a WAND fast path in ``mapInPandas``
 * DocInsight's report semantics re-expressed as DataFrame ops:
   min-max normalization, score fusion, risk gating, repeated-match
   decay, span sessionization, originality aggregation, stylometry

@@ -93,7 +93,7 @@ def cmd_ingest(args) -> int:
 
 
 def cmd_compact(args) -> int:
-    """Fold small/drifted segment generations into one (size-tiered);
+    """Fold small segment generations into one (size-tiered);
     the reference's ``reindex`` analog, but O(folded generations), not
     O(corpus).
 
@@ -300,7 +300,7 @@ def cmd_query(args) -> int:
         )
     else:
         # or|and modes; words prefixed `-` are boolean-NOT exclusions
-        # (`spark join -slow`).  ALL boolean shapes take the block-max
+        # (`spark join -slow`).  ALL boolean shapes take the WAND
         # fast path (round 6): AND via the kernel's mandatory-term
         # intersection, NOT via pre-accumulation exclusion.
         from docinsight_spark.index.wand import wand_search
@@ -559,7 +559,7 @@ def main(argv: list[str] | None = None) -> int:
                             "contains", "regex"],
                    default="or",
                    help="or: BM25 bag-of-words; and: every term required "
-                        "(both on the block-max WAND fast path); phrase: "
+                        "(both on the WAND fast path); phrase: "
                         "exact adjacency; near: every term within "
                         "--near-window tokens of the first (both need a "
                         "positions=True index); prefix/contains/regex: "

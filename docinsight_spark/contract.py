@@ -1311,8 +1311,8 @@ def ivf_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # WAND fast path: the contract index is built with the SQL-expressible
 # whitespace tokenizer (code_aware=False), so the exact BM25 SQL oracle
-# replays the whole compressed-segment path (build → encode → block-max
-# MaxScore → global merge).  Ranks are assigned after 4-dp rounding on
+# replays the whole segment path (build → encode → MaxScore → global
+# merge).  Ranks are assigned after 4-dp rounding on
 # both sides; the fast path over-retrieves so rounded-tie boundaries
 # resolve identically.
 
@@ -1365,10 +1365,10 @@ def wand_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # Incremental O(delta) refresh under the oracle gate (round 4): the
 # index is built over HALF the table, the other half arrives as a later
-# run folded in by refresh_delta() — a separate segment generation with
-# its own encode-time avgdl — and the multi-generation WAND path must
-# reproduce the exact BM25 SQL oracle computed over the FULL table
-# (global N/avgdl/df exactness + drift-safe block maxima, hash-checked).
+# run folded in by refresh_delta() — a separate segment generation — and
+# the multi-generation WAND path must reproduce the exact BM25 SQL oracle
+# computed over the FULL table (global N/avgdl/df exactness + admissible
+# query-time bounds after avgdl moved, hash-checked).
 
 _WANDINC_QUERIES: list[tuple[int, str]] = [
     (0, "scan filter sort"),
@@ -1388,7 +1388,7 @@ def wand_topk_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O(delta) refresh end-to-end: base build over even doc_ids, odd
     doc_ids folded in later as a delta generation (IndexBuilder.
     refresh_delta — the base segments are not re-encoded), then the
-    block-max fast path over BOTH segment sets.  Reference analog:
+    WAND fast path over BOTH segment sets.  Reference analog:
     incremental index update, /root/reference/index/index_manager.py:124-201."""
     import tempfile
 
@@ -2165,7 +2165,7 @@ def bm25_not_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the index's term dictionary — capped to the max_expansions highest-df
 # terms (ties → term asc), the Lucene MultiTermQuery rewrite — then
 # scores as an OR query (Σ per-term BM25, each term's own df) through
-# the block-max fast path.  The expansion runs as a pushed-down
+# the WAND fast path.  The expansion runs as a pushed-down
 # StringStartsWith range scan on the term-sorted term_stats parquet;
 # the oracle replays the same cap ordering in SQL.
 # ---------------------------------------------------------------------------
@@ -2224,7 +2224,7 @@ SELECT query_id, rank, doc_id, score FROM (
 @_register("prefix_topk", _prefix_oracle_sql())
 def prefix_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Wildcard top-10 end-to-end: dictionary expansion (pushed-down
-    prefix range scan, df-capped) → block-max OR retrieval."""
+    prefix range scan, df-capped) → WAND OR retrieval."""
     import tempfile
 
     from docinsight_spark.index.builder import IndexBuilder
@@ -2261,7 +2261,7 @@ def prefix_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Regex top-k (round 6): each pattern expands against the term
 # dictionary under the same df-desc/term-asc cap as prefix_topk, then
-# scores as an OR query through the block-max fast path.  The pattern
+# scores as an OR query through the WAND fast path.  The pattern
 # set sticks to the Java-regex ∩ RE2 common subset with identical
 # partial-match semantics (Spark `rlike` and DuckDB `regexp_matches`
 # both match anywhere unless anchored), so the oracle replays the
@@ -2322,7 +2322,7 @@ SELECT query_id, rank, doc_id, score FROM (
 @_register("regex_topk", _regex_oracle_sql())
 def regex_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Regex top-10 end-to-end: dictionary expansion (O(vocab) scan of
-    the term-stats table, df-capped) → block-max OR retrieval."""
+    the term-stats table, df-capped) → WAND OR retrieval."""
     import tempfile
 
     from docinsight_spark.index.builder import IndexBuilder

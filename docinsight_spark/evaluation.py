@@ -2,7 +2,7 @@
 
 The reference evaluates its models with Spearman/Pearson correlation and
 threshold sweeps (``/root/reference/scripts/evaluate_models.py:80-171``).
-The engine's "model" is the block-max WAND fast path; its quality metric
+The engine's "model" is the WAND fast path; its quality metric
 is the rank correlation against the exact BM25 oracle
 (:mod:`docinsight_spark.operators.query`) over a query set — 1.0 means
 rank-identical, the engine's contract.  Emitted in the bench JSON and
@@ -89,7 +89,7 @@ def oracle_from_index(
     pass costs one scan + the scoring joins.
 
     ``require_all`` / ``neg_terms`` expose boolean AND / NOT retrieval
-    over the index (the block-max kernel serves plain OR; boolean
+    over the index (the WAND kernel serves plain OR; boolean
     shapes take this exact path — still one postings scan)."""
     from docinsight_spark.index import fsio
     from docinsight_spark.index.builder import (

@@ -1,4 +1,4 @@
-"""Physical index build: runs → merge waves → block-max segments.
+"""Physical index build: runs → merge waves → posting segments.
 
 Replaces the reference's index build
 (``/root/reference/index/index_manager.py:44-122``), which embeds every
@@ -24,19 +24,14 @@ and the driver only moves manifests:
    several ``add_run`` calls (incremental ingest).
 3. **finalize** — doc/term statistics (document-frequency aggregation
    is two-stage salted against hot-term skew), then a streaming
-   ``mapInPandas`` encoder turns the sorted postings into segments of
-   plain parquet arrays (docIDs, tfs) with per-block sizes and block
-   maxima (layout in :mod:`docinsight_spark.index.codec`).
-   The block maxima are **idf-independent** — the encoder stores
-   ``max(tf·(k1+1) / (tf + k1·(1−b+b·dl/avgdl)))`` per block and the
-   query path multiplies by idf (from ``term_stats`` pruned to the
-   query's terms).  Document frequency therefore never joins the
-   posting stream at encode time: at corpus scale the vocabulary
-   (billions of distinct identifiers) would not fit a broadcast, and a
-   sort-merge fallback would destroy the (shard, term, docID) file
-   order the streaming encoder depends on.  The encoder consumes the
-   merge output's file order directly — no shuffle, no join; document
-   length is read bucket-locally inside the kernel.
+   ``mapInPandas`` encoder groups the sorted postings into segments:
+   one row per (shard, term) holding the term's shard-local docIDs and
+   tfs as plain parquet arrays (:data:`SEGMENT_SCHEMA`).  Segments hold
+   postings only — no statistic of the corpus — so a set never goes
+   stale as the corpus grows; the query kernel computes its pruning
+   bounds from the postings and the current statistics.  The encoder
+   consumes the merge output's (shard, term, docID) file order
+   directly — no shuffle, no join.
 
    Commit order, the same for the base set and every generation
    (``refresh_delta``, ``compact``): :meth:`IndexBuilder._write_set`
@@ -48,7 +43,7 @@ and the driver only moves manifests:
 
 **Why document-partitioned (not term-partitioned):** each shard holds
 the *complete* posting lists for its documents, so top-k scoring runs
-shard-locally (block-max pruning per shard) and only ``shards × k``
+shard-locally (MaxScore pruning per shard) and only ``shards × k``
 candidate rows shuffle for the global merge.  Hot terms spread evenly
 across shards by construction — the doc hash, not the term, picks the
 partition — so the worst skew a hot term can cause is bounded by shard
@@ -79,16 +74,21 @@ from pyspark.sql import functions as F
 
 from docinsight_spark import BM25_B, BM25_K1
 from docinsight_spark.index import fsio
-from docinsight_spark.index.codec import (
-    BLOCK_SIZE,
-    SEGMENT_SCHEMA,
-    encode_postings,
-)
 from docinsight_spark.operators.postings import (
     build_postings,
     term_stats,
     with_doc_id,
 )
+
+# One row per (shard, term): the term's shard-local docIDs (ascending,
+# signed int64) and their term frequencies.  The arrays carry no
+# delta-gap or varint packing: docIDs are xxhash64 values, so the gaps
+# within a shard average about 2^64 / shard size and a VByte encoding
+# saved nothing over parquet's own encodings.
+SEGMENT_SCHEMA = (
+    "doc_bucket int, doc_sub int, term string, docs array<long>, tfs array<int>"
+)
+
 
 def _atomic_write_json(path: str, payload: dict) -> None:
     fsio.write_json_atomic(path, payload)
@@ -395,7 +395,6 @@ class IndexBuilder:
         index_dir: str,
         n_buckets: int = 32,
         n_subs: int = 2,
-        block_size: int = BLOCK_SIZE,
         k1: float = BM25_K1,
         b: float = BM25_B,
         code_aware: bool = True,
@@ -446,7 +445,6 @@ class IndexBuilder:
         self.dir = index_dir.rstrip("/")
         self.n_buckets = n_buckets
         self.n_subs = n_subs
-        self.block_size = block_size
         self.k1, self.b = k1, b
         self.code_aware = code_aware
         # positions=True stores each term's token offsets alongside the
@@ -472,7 +470,6 @@ class IndexBuilder:
         kw = dict(
             n_buckets=int(meta["n_buckets"]),
             n_subs=int(meta.get("n_subs", 1)),
-            block_size=int(meta.get("block_size", BLOCK_SIZE)),
             k1=float(meta.get("k1", BM25_K1)),
             b=float(meta.get("b", BM25_B)),
             code_aware=bool(meta.get("code_aware", True)),
@@ -498,14 +495,13 @@ class IndexBuilder:
         mine = {
             "n_buckets": self.n_buckets,
             "n_subs": self.n_subs,
-            "block_size": self.block_size,
             "code_aware": self.code_aware,
             # a delta ingested without positions would leave phrase
             # search silently blind to those docs
             "positions": self.positions,
-            # BM25 constants too: a delta encoded at different k1/b
-            # stores block maxima that under-bound query-time scores —
-            # silently wrong pruning, the worst failure class
+            # BM25 constants too: every query scores with the meta's
+            # k1/b, so a writer set up with others would be silently
+            # overruled
             "k1": self.k1,
             "b": self.b,
         }
@@ -515,7 +511,6 @@ class IndexBuilder:
         theirs = {
             "n_buckets": int(meta["n_buckets"]),
             "n_subs": int(meta.get("n_subs", 1)),
-            "block_size": int(meta.get("block_size", BLOCK_SIZE)),
             "code_aware": bool(meta.get("code_aware", True)),
             "positions": bool(meta.get("positions", False)),
             "k1": float(meta.get("k1", BM25_K1)),
@@ -534,7 +529,6 @@ class IndexBuilder:
         return {
             "n_buckets": self.n_buckets,
             "n_subs": self.n_subs,
-            "block_size": self.block_size,
             "code_aware": self.code_aware,
             "positions": self.positions,
             "k1": self.k1,
@@ -1285,7 +1279,7 @@ class IndexBuilder:
             )
         return int(row["n"]), int(row["sum_dl"] or 0)
 
-    def _write_set(self, postings: str, root: str, encode_avgdl) -> dict:
+    def _write_set(self, postings: str, root: str) -> dict:
         """Write one segment set under ``root`` from the shard-sorted
         merge output at ``postings`` (a dataset dir): doc/term stats,
         then the segment encode, then the footer lineage
@@ -1294,21 +1288,17 @@ class IndexBuilder:
         and compaction folds (:meth:`compact`); it touches nothing a
         reader sees — the caller then :meth:`_publish`-es.
 
-        ``encode_avgdl(n_docs, sum_dl)`` maps the set's own stats to the
-        avgdl its block maxima are encoded at.  Returns the set's
-        counters: ``n_docs``, ``sum_dl``, ``avgdl_enc``,
+        Returns the set's counters: ``n_docs``, ``sum_dl``,
         ``postings_merged``, ``segments_built``, ``bytes_compressed``."""
         df = self.spark.read.parquet(postings)
         n_docs, sum_dl = self._write_doc_term_stats(df, root)
-        avgdl_enc = encode_avgdl(n_docs, sum_dl)
-        self._encode_segments(df, root, avgdl_enc)
+        self._encode_segments(df, root)
         lineage = _segment_lineage(f"{root}/segments", spark=self.spark)
         lineage["postings_merged"], _ = _footer_rows(postings, spark=self.spark)
         _atomic_write_json(f"{root}/lineage_segments.json", lineage)
         return {
             "n_docs": n_docs,
             "sum_dl": sum_dl,
-            "avgdl_enc": avgdl_enc,
             **{k: lineage[k] for k in (
                 "postings_merged", "segments_built", "bytes_compressed"
             )},
@@ -1333,12 +1323,10 @@ class IndexBuilder:
                 raise ValueError("run merge_all() before finalize()")
             merged_dir = final[0]["source"]
         base_runs = final[0].get("runs", []) if final else []
-        c = self._write_set(
-            f"{merged_dir}/postings", self.dir, lambda n, s: s / max(n, 1)
-        )
+        c = self._write_set(f"{merged_dir}/postings", self.dir)
         meta = {
             "n_docs": c["n_docs"],
-            "avgdl": c["avgdl_enc"],
+            "avgdl": c["sum_dl"] / max(c["n_docs"], 1),
             "sum_dl": c["sum_dl"],
             **self._settings(),
             # positional layout: array<int> riding parquet's native int
@@ -1347,11 +1335,9 @@ class IndexBuilder:
             **({"positions_codec": "array"} if self.positions else {}),
             "query_lang": self._majority_lang(set(base_runs) or None),
             "version": 5,
-            # the base segment set's encode-time stats: generations added
-            # later shift the global avgdl, and the query side needs the
-            # per-set encode avgdl to keep stored block maxima admissible
+            # the base segment set's own stats: the global ones are base
+            # + generations − tombstones (_global_identity)
             "base": {
-                "avgdl_enc": c["avgdl_enc"],
                 "n_docs": c["n_docs"],
                 "sum_dl": c["sum_dl"],
                 "runs": base_runs,
@@ -1360,106 +1346,54 @@ class IndexBuilder:
         }
         self._publish(meta, "finalize", **c)
 
-    def _encode_segments(
-        self, postings: DataFrame, root: str, avgdl: float
-    ) -> None:
+    def _encode_segments(self, postings: DataFrame, root: str) -> None:
         """Segment encode straight off a merge output into
-        ``root/segments``: the scan preserves within-file (shard, term,
-        docID) order; dl is read bucket-locally in the kernel from the
-        set's own ``root/doc_stats``.  No join and no shuffle touch the
-        posting stream (block maxima are idf-independent, so the
-        full-vocabulary term_stats never broadcasts here)."""
-        enc_input = self._encode_input(postings)
-        k1, b, block_size = self.k1, self.b, self.block_size
+        ``root/segments``: each (shard, term) run of the scan's
+        within-file (shard, term, docID) order becomes one row of
+        ``docs`` / ``tfs`` arrays.  No join and no shuffle touch the
+        posting stream."""
+
+        def run_starts(pdf: pd.DataFrame) -> np.ndarray:
+            """Row offsets where a (shard, term) run begins."""
+            bk, sub, term = (
+                pdf[c].to_numpy() for c in ("doc_bucket", "doc_sub", "term")
+            )
+            change = (
+                (bk[1:] != bk[:-1]) | (sub[1:] != sub[:-1]) | (term[1:] != term[:-1])
+            )
+            return np.concatenate(([0], np.flatnonzero(change) + 1))
+
+        def segment_rows(pdf: pd.DataFrame, bounds: np.ndarray) -> pd.DataFrame:
+            """One segment row per run ``pdf[bounds[i]:bounds[i + 1]]``."""
+            head = pdf.iloc[bounds[:-1]]
+            end, cuts = bounds[-1], bounds[1:-1]
+            return pd.DataFrame({
+                "doc_bucket": head["doc_bucket"].to_numpy(),
+                "doc_sub": head["doc_sub"].to_numpy(),
+                "term": head["term"].to_numpy(),
+                "docs": np.split(pdf["docID"].to_numpy()[:end].astype(np.int64), cuts),
+                "tfs": np.split(pdf["tf"].to_numpy()[:end].astype(np.int32), cuts),
+            })
 
         def encode_stream(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             carry: pd.DataFrame | None = None
-            dl_cache: dict[int, dict] = {}
-
-            def dl_for(bucket: int, doc_ids: np.ndarray) -> np.ndarray:
-                m = dl_cache.get(bucket)
-                if m is None:
-                    m = read_doc_stats_bucket(root, bucket) or {
-                        "docID": np.empty(0, np.int64),
-                        "dl": np.empty(0, np.int64),
-                    }
-                    o = np.argsort(m["docID"], kind="stable")
-                    m = {"docID": m["docID"][o], "dl": m["dl"][o]}
-                    dl_cache[bucket] = m
-                return lookup_dl(m["docID"], m["dl"], doc_ids)
-
-            def encode_groups(pdf: pd.DataFrame, hold_last: bool):
-                nonlocal carry
+            for pdf in batches:
                 if carry is not None:
                     pdf = pd.concat([carry, pdf], ignore_index=True)
-                    carry = None
                 if len(pdf) == 0:
-                    return None
-                bkt_arr = pdf["doc_bucket"].to_numpy()
-                sub_arr = pdf["doc_sub"].to_numpy()
-                term_arr = pdf["term"].to_numpy()
-                change = np.flatnonzero(
-                    (bkt_arr[1:] != bkt_arr[:-1])
-                    | (sub_arr[1:] != sub_arr[:-1])
-                    | (term_arr[1:] != term_arr[:-1])
-                ) + 1
-                bounds = np.concatenate(([0], change, [len(pdf)]))
-                last_start = bounds[-2] if hold_last and len(bounds) > 1 else len(pdf)
-                if hold_last:
-                    carry = pdf.iloc[last_start:].copy()
-                    pdf = pdf.iloc[:last_start]
-                    bounds = bounds[bounds <= last_start]
-                rows = []
-                buckets = pdf["doc_bucket"].to_numpy()
-                subs = pdf["doc_sub"].to_numpy()
-                terms = pdf["term"].to_numpy()
-                docs = pdf["docID"].to_numpy()
-                tfs = pdf["tf"].to_numpy().astype(np.float64)
-                for s, e in zip(bounds[:-1], bounds[1:]):
-                    if e <= s:
-                        continue
-                    bkt = int(buckets[s])
-                    d = docs[s:e]
-                    t = tfs[s:e]
-                    dl = dl_for(bkt, d).astype(np.float64)
-                    # idf-independent tf-normalization: the block max is
-                    # multiplied by idf at query time (wand.py)
-                    score = t * (k1 + 1.0) / (t + k1 * (1 - b + b * dl / avgdl))
-                    seg_docs, seg_tfs, m = encode_postings(
-                        d, t, score.astype(np.float32),
-                        block_size, dls=dl.astype(np.int64),
-                    )
-                    rows.append(
-                        {
-                            "doc_bucket": bkt,
-                            "doc_sub": int(subs[s]),
-                            "term": str(terms[s]),
-                            "n": int(e - s),
-                            "docs": seg_docs,
-                            "tfs": seg_tfs,
-                            "bn": m.n,
-                            "max_score": m.max_score,
-                            "tf_max": m.tf_max,
-                            "dl_min": m.dl_min,
-                        }
-                    )
-                return pd.DataFrame(rows) if rows else None
-
-            for pdf in batches:
-                out = encode_groups(pdf, hold_last=True)
-                if out is not None and len(out):
-                    yield out
+                    continue
+                starts = run_starts(pdf)
+                # a batch boundary can split a run: the batch's last run
+                # waits for the next batch
+                carry = pdf.iloc[starts[-1]:]
+                if len(starts) > 1:
+                    yield segment_rows(pdf, starts)
             if carry is not None:
-                tail = encode_groups(
-                    pd.DataFrame(
-                        columns=["doc_bucket", "doc_sub", "term", "docID", "tf"]
-                    ),
-                    hold_last=False,
-                )
-                if tail is not None and len(tail):
-                    yield tail
+                yield segment_rows(carry, np.array([0, len(carry)]))
 
-        segments = enc_input.mapInPandas(encode_stream, schema=SEGMENT_SCHEMA)
+        segments = self._encode_input(postings).mapInPandas(
+            encode_stream, schema=SEGMENT_SCHEMA
+        )
         (
             segments.write.mode("overwrite")
             .partitionBy("doc_bucket")
@@ -1947,10 +1881,9 @@ class IndexBuilder:
         indexes only chunks ``WHERE embedding IS NULL``; this is the
         segment-generation analog.  Correctness under corpus growth:
         global (N, avgdl, df) are maintained exactly in ``_meta.json`` /
-        via :func:`load_term_stats`, so exact scores never drift — and
-        stale stored block maxima (encoded at an older avgdl) stay
-        admissible through the per-block (tf_max, dl_min) bound the
-        query side recomputes under the CURRENT avgdl (codec.BlockMeta).
+        via :func:`load_term_stats`, so exact scores never drift, and
+        older sets never go stale: segments hold postings only, and the
+        query kernel computes its bounds under the CURRENT stats.
 
         Commit protocol: merge waves → :meth:`_write_set` (generation
         dirs) → :meth:`_publish` (``_meta.json`` update, the commit point
@@ -1989,14 +1922,7 @@ class IndexBuilder:
             return gid
         meta = self.meta()
         gens = [g for g in meta.get("generations", []) if g["id"] != gid]
-        n_prev, sum_prev = _global_identity(meta, gens)
-        # encode the delta at the NEW global avgdl: the freshest
-        # generation gets tight bounds; older sets fall back to the
-        # drift-safe (tf_max, dl_min) bound as avgdl moves
-        c = self._write_set(
-            f"{src}/postings", groot,
-            lambda n, s: (sum_prev + s) / max(n_prev + n, 1),
-        )
+        c = self._write_set(f"{src}/postings", groot)
         gens.append(_gen_entry(gid, c, new, src))
         g_n, g_sum = _global_identity(meta, gens)
         covered_ids = set(meta["base"].get("runs", [])) | {
@@ -2016,20 +1942,15 @@ class IndexBuilder:
     def compact(
         self,
         max_generations: int = 8,
-        max_avgdl_drift: float = 0.25,
         force: bool = False,
         delete_victims: bool = True,
     ) -> str | None:
         """Size-tiered generation compaction.
 
         Triggers when the generation count exceeds ``max_generations``
-        (query-side segment-set fan-out) or when a generation's
-        encode-time avgdl has drifted more than ``max_avgdl_drift`` from
-        the current global avgdl (its stored block maxima are still
-        *admissible* via the (tf_max, dl_min) fallback, but increasingly
-        loose → wasted block decodes).  Victims: every drifted
-        generation plus the smallest generations (by Σdl) until at most
-        ``max_generations // 2`` survive.
+        (query-side segment-set fan-out), or on ``force``.  Victims: the
+        smallest generations (by Σdl) until at most
+        ``max_generations // 2`` survive (every generation on ``force``).
 
         The fold is ONE :meth:`_merge_group` pass over the victims'
         ``merged_source`` outputs — few, large, already shard-sorted
@@ -2039,12 +1960,12 @@ class IndexBuilder:
         :meth:`gc_runs` (L0 GC).  The fold's manifest records the victim
         sources and a fingerprint of their tombstone state; a rerun
         re-folds when either changed.  The new generation is then written
-        by :meth:`_write_set` (encoded at the current global avgdl) and
-        committed by :meth:`_publish`; victims are reclaimed after that
-        commit (or tombstoned for :meth:`gc_generations`).  Tombstoned
-        docs whose home root is a victim are dropped from the merge —
-        compaction is the PHYSICAL reclaim of doc-level deletes: the
-        new generation's postings/stats/segments exclude them, and the
+        by :meth:`_write_set` and committed by :meth:`_publish`; victims
+        are reclaimed after that commit (or tombstoned for
+        :meth:`gc_generations`).  Tombstoned docs whose home root is a
+        victim are dropped from the merge — compaction is the PHYSICAL
+        reclaim of doc-level deletes: the new generation's
+        postings/stats/segments exclude them, and the
         tombstone entries shrink (or disappear) in the same atomic
         ``_meta.json`` commit, so df corrections never double-apply.
         The base segment set only rewrites on an explicit full rebuild.
@@ -2055,24 +1976,18 @@ class IndexBuilder:
         gens = meta.get("generations", [])
         if not gens:
             return None
-        avgdl_now = float(meta["avgdl"])
-        drifted = {
-            g["id"]
-            for g in gens
-            if abs(avgdl_now / float(g["avgdl_enc"]) - 1.0) > max_avgdl_drift
-        }
-        if not force and len(gens) <= max_generations and not drifted:
+        if not force and len(gens) <= max_generations:
             return None
         if force:
             victims = {g["id"] for g in gens}
         else:
-            victims = set(drifted)
+            victims = set()
             keep_budget = max(max_generations // 2, 0)
             for g in sorted(gens, key=lambda g: g["sum_dl"]):
                 if len(gens) - len(victims) <= keep_budget and len(victims) >= 2:
                     break
                 victims.add(g["id"])
-            if len(victims) < 2 and not drifted:
+            if len(victims) < 2:
                 return None
         vruns = sorted(
             r for g in gens if g["id"] in victims for r in g["runs"]
@@ -2140,12 +2055,10 @@ class IndexBuilder:
             # generation and −1 to a tombstone), so dropping both sides
             # together preserves the global identity.  The generation
             # manifest below still records vruns as covered.
-            c = {"n_docs": 0, "sum_dl": 0, "avgdl_enc": avgdl_now,
+            c = {"n_docs": 0, "sum_dl": 0,
                  "segments_built": 0, "bytes_compressed": 0, "empty": True}
         else:
-            c = self._write_set(
-                f"{src}/postings", groot, lambda n, s: avgdl_now
-            )
+            c = self._write_set(f"{src}/postings", groot)
             survivors.append(_gen_entry(gid, c, vruns, src))
         # Shrink tombstones in the SAME meta commit as the generation
         # swap: the new generation's stats already exclude the reclaimed
@@ -2369,7 +2282,7 @@ def _gen_entry(gid: str, counters: dict, runs: list[str], src: str) -> dict:
     counters."""
     return {
         "id": gid,
-        **{k: counters[k] for k in ("avgdl_enc", "n_docs", "sum_dl")},
+        **{k: counters[k] for k in ("n_docs", "sum_dl")},
         "runs": runs,
         "merged_source": src,
     }
@@ -2507,23 +2420,18 @@ def restrict_terms(df: DataFrame, terms: list[str]) -> DataFrame:
 
 
 def load_segments(spark: SparkSession, index_dir: str, meta: dict) -> DataFrame:
-    """Union of the base + generation segment sets, each tagged with its
-    encode-time avgdl (``_avgdl_enc``) so the query kernel can apply the
-    drift-safe block bound.  Separate per-root loads (not a multi-path
-    read): sibling partitioned roots trip Spark's directory-structure
-    inference, and each root needs its own literal column anyway."""
+    """Union of the base + generation segment sets, each row tagged with
+    its root (``_root``) for the kernel's root-scoped tombstone
+    exclusion.  Separate per-root loads (not a multi-path read): sibling
+    partitioned roots trip Spark's directory-structure inference, and
+    each root needs its own literal column anyway."""
     frames = [
         spark.read.parquet(f"{index_dir}/segments")
-        .withColumn(
-            "_avgdl_enc",
-            F.lit(float(meta.get("base", {}).get("avgdl_enc", meta["avgdl"]))),
-        )
         .withColumn("_root", F.lit("base"))
     ]
     for g in meta.get("generations", []):
         frames.append(
             spark.read.parquet(f"{index_dir}/generations/{g['id']}/segments")
-            .withColumn("_avgdl_enc", F.lit(float(g["avgdl_enc"])))
             .withColumn("_root", F.lit(g["id"]))
         )
     return _union_frames(frames)

@@ -1,4 +1,4 @@
-"""Fast BM25 top-k over posting segments: one block-max kernel
+"""Fast BM25 top-k over posting segments: one MaxScore kernel
 (:func:`_score_shard`) with a bounded top-k selection, fed one of two
 ways.
 
@@ -30,18 +30,24 @@ shard-per-bucket design):
    ``repartition`` of the *matched rows only* — equal keys stay whole,
    and every shard holds the complete postings of its documents, so
    scoring is shard-local.
-3. Inside the task, a vectorized MaxScore/block-max kernel scores each
-   query against the shard's matched posting lists:
+3. Inside the task, a vectorized MaxScore kernel scores each query
+   against the shard's matched posting lists:
 
-   * terms processed in descending upper-bound (block-max) order,
-     exact scores accumulated with numpy;
+   * each (shard, term) list gets one upper bound, computed at query
+     time from the postings themselves: ``idf · s(max tf, dl_min)``,
+     where ``dl_min`` is the shortest doc length of the shard's bucket
+     (BM25 rises with tf and falls with dl, and every posting is scored
+     with a length from that same map, so the bound is admissible at
+     any avgdl — segments store no maxima);
+   * terms processed in descending upper-bound order, exact scores
+     accumulated with numpy;
    * once the running top-k threshold θ (k-th best partial — a lower
      bound of the k-th best final score) exceeds the remaining terms'
      upper-bound sum, docs outside the accumulator can no longer reach
-     the top-k, so remaining lists are pruned: only blocks whose
-     ``[first_doc, last_doc]`` range (the block's first and last
-     docID) intersects the accumulated candidate set are scored, and
-     their postings are filtered to accumulated docs;
+     the top-k, so remaining lists are pruned: only blocks of
+     :data:`BLOCK_SIZE` postings whose ``[first_doc, last_doc]`` range
+     intersects the accumulated candidate set are scored, and their
+     postings are filtered to accumulated docs;
    * block scores are cached per shard across the query batch — a
      term's block is scored at most once per task;
    * a bounded selection (``np.partition`` / ``np.lexsort``) maintains
@@ -61,12 +67,11 @@ accumulation, keeping the top-k threshold θ admissible.
 
 Incremental generations (round 4): the scan is the UNION of the base
 segment set and every committed delta generation
-(``builder.load_segments``), each row tagged with its set's encode-time
-avgdl.  Exact scores always use the CURRENT global stats (N/avgdl from
+(``builder.load_segments``), each row tagged with its root.  Exact
+scores and the bounds alike use the CURRENT global stats (N/avgdl from
 ``_meta.json``, df summed lazily across sets), so results are
-rank-identical to a from-scratch rebuild; pruning bounds stay
-admissible under avgdl drift via the per-block (tf_max, dl_min)
-fallback (see the comment in :func:`_seg_rows`).
+rank-identical to a from-scratch rebuild however far avgdl moved since
+a set was written.
 
 Rank-identity contract vs the exact oracle
 (:mod:`docinsight_spark.operators.query`): same formula, same
@@ -114,17 +119,23 @@ from docinsight_spark.index.builder import (
     restrict_terms,
     tombstone_root_dirs,
 )
-from docinsight_spark.index.codec import block_starts
 
 
 def _load_meta(index_dir: str) -> dict:
     return fsio.read_json(f"{index_dir}/_meta.json")
 
 
+# Postings per skip block: block ``bi`` of a segment row is
+# ``docs[starts[bi]:starts[bi + 1]]`` and its skip range is its first
+# and last docID, sliced from the sorted arrays at query time.
+BLOCK_SIZE = 128
+
+
 class _SegRow:
     """One (shard, term) posting segment: block slices of the stored
     ``docs`` / ``tfs`` arrays, scored lazily and cached across the query
-    batch.
+    batch.  ``upper`` is the row's MaxScore bound, set by
+    :func:`_score_shard` for the call's statistics.
 
     Two score tiers: per-block (selective queries score only blocks
     overlapping the accumulated candidate set) and whole-row (once any
@@ -133,17 +144,17 @@ class _SegRow:
     on hot terms: ~100 blocks × 200 queries of dict hits and per-block
     searchsorted)."""
 
-    __slots__ = ("term", "df", "docs", "tfs", "bn", "starts", "upper",
+    __slots__ = ("term", "df", "docs", "tfs", "starts", "upper",
                  "root", "_scores", "_full")
 
-    def __init__(self, term, df, docs, tfs, bn, upper, root: str = "base"):
+    def __init__(self, term, df, docs, tfs, root: str = "base"):
         self.term = term
         self.df = float(df)
         self.docs = np.asarray(docs, np.int64)
         self.tfs = np.asarray(tfs)
-        self.bn = np.asarray(bn)
-        self.starts = block_starts(self.bn)
-        self.upper = upper
+        n = len(self.docs)
+        self.starts = np.append(np.arange(0, n, BLOCK_SIZE), n)
+        self.upper: float | None = None
         # physical root (base / generation id) this segment row belongs
         # to — tombstone exclusion is ROOT-scoped so a doc re-ingested
         # after a delete (live copy in a newer root) still scores
@@ -152,7 +163,7 @@ class _SegRow:
         self._full: tuple[np.ndarray, np.ndarray] | None = None
 
     def blocks_overlapping(self, doc_filter: np.ndarray | None) -> np.ndarray:
-        nb = len(self.bn)
+        nb = len(self.starts) - 1
         if doc_filter is None or nb == 0:
             return np.arange(nb)
         # skip ranges [first_doc, last_doc] straight from the sorted docs
@@ -193,8 +204,13 @@ def _score_shard(
     excl_of=None,
     require_all: bool = False,
     neg_map: dict[int, list[str]] | None = None,
+    dl_min: float = 0.0,
 ) -> list[tuple[int, int, float]]:
-    """``excl_of``: optional callable root → sorted np.ndarray of
+    """``dl_of``: docIDs → their doc lengths; ``dl_min``: a length no
+    scored doc is shorter than (the shard's shortest doc; 0 always
+    holds, at the cost of a looser bound).
+
+    ``excl_of``: optional callable root → sorted np.ndarray of
     tombstoned docIDs for that root (or None) — exclusion is per
     segment row's root, not global by docID, so a resurrected doc's
     live copy (newer root, no marker) keeps scoring while its dead
@@ -220,20 +236,26 @@ def _score_shard(
     term_rows: dict[str, list[_SegRow]] = {}
     for r in rows:
         term_rows.setdefault(r.term, []).append(r)
-    # Upper bounds are inflated by a hair: stored block maxima are
-    # float32 (can round below the true float64 max) and the idf
-    # multiplication order differs from the exact scorer's — a bound
-    # one ulp under a real score would wrongly prune it.
+
+    def bm25(tf, dl, df: float):
+        idf = np.log((n_docs - df + 0.5) / (df + 0.5) + 1.0)
+        return idf * tf * (k1 + 1.0) / (tf + k1 * (1.0 - b + b * dl / avgdl))
+
+    def scorer(docs: np.ndarray, tfs: np.ndarray, df: float) -> np.ndarray:
+        return bm25(tfs.astype(np.float64), dl_of(docs), df)
+
+    # MaxScore bound per row: the score rises with tf and falls with dl,
+    # and no posting is scored at a length below dl_min, so
+    # bm25(max tf, dl_min) bounds the row at the current avgdl.  Inflated
+    # by a hair: rounding the numerator and denominator apart can lift a
+    # real score an ulp over the same formula at (max tf, dl_min), and a
+    # bound under a real score would wrongly prune it.
+    for r in rows:
+        r.upper = float(bm25(float(r.tfs.max(initial=0)), dl_min, r.df))
     term_upper = {
         t: max(r.upper for r in rs) * (1.0 + 1e-6) + 1e-12
         for t, rs in term_rows.items()
     }
-
-    def scorer(docs: np.ndarray, tfs: np.ndarray, df: float) -> np.ndarray:
-        dl = dl_of(docs)
-        idf = np.log((n_docs - df + 0.5) / (df + 0.5) + 1.0)
-        tf = tfs.astype(np.float64)
-        return idf * tf * (k1 + 1.0) / (tf + k1 * (1.0 - b + b * dl / avgdl))
 
     def gather(term: str, doc_filter: np.ndarray | None):
         ds, ss = [], []
@@ -262,8 +284,7 @@ def _score_shard(
             if excl is not None and len(d):
                 # tombstone exclusion: this root's deleted copies never
                 # enter the accumulator (bounds stay admissible —
-                # dropping docs only lowers true scores below the
-                # stored maxima)
+                # dropping docs only removes scores under the bound)
                 keep = (
                     np.searchsorted(excl, d, side="right")
                     - np.searchsorted(excl, d, side="left")
@@ -373,41 +394,18 @@ def _score_shard(
     return out
 
 
-def _seg_rows(
-    cols, n_docs: int, avgdl: float, k1: float, b: float
-) -> Iterator[tuple[tuple[int, int], _SegRow]]:
+def _seg_rows(cols) -> Iterator[tuple[tuple[int, int], _SegRow]]:
     """((doc_bucket, doc_sub), :class:`_SegRow`) per segment row of a
     batch — a pandas frame or a dict of numpy columns — carrying the
-    segment columns plus ``df``, ``_avgdl_enc`` and ``_root``: the one
-    row builder behind both feeds."""
-    bks, subs, terms, dfs, encs, rts, docs, tfs, bns, mxs, tfms, dlms = (
+    segment columns plus ``df`` and ``_root``: the one row builder
+    behind both feeds."""
+    bks, subs, terms, dfs, rts, docs, tfs = (
         np.asarray(cols[c]) for c in (
-            "doc_bucket", "doc_sub", "term", "df", "_avgdl_enc", "_root",
-            "docs", "tfs", "bn", "max_score", "tf_max", "dl_min",
+            "doc_bucket", "doc_sub", "term", "df", "_root", "docs", "tfs",
         )
     )
     for i in range(len(terms)):
-        mx = np.asarray(mxs[i], np.float32)
-        df_i = float(dfs[i])
-        idf_i = float(np.log((n_docs - df_i + 0.5) / (df_i + 0.5) + 1.0))
-        # Drift-safe upper bound: stored block maxima bake in the
-        # segment set's encode-time avgdl.  The tf-normalized score is
-        # increasing in avgdl, so when the corpus has grown past it
-        # (avgdl > _avgdl_enc) the stored maxima may UNDER-bound —
-        # recompute an admissible bound from (tf_max, dl_min) under the
-        # current avgdl (score is increasing in tf, decreasing in dl).
-        # When avgdl ≤ encode-time, stored maxima over-bound (admissible)
-        # and the min of the two bounds keeps pruning tight.
-        if len(mx):
-            tfm = np.asarray(tfms[i], np.float64)
-            dlm = np.asarray(dlms[i], np.float64)
-            bound = tfm * (k1 + 1.0) / (tfm + k1 * (1.0 - b + b * dlm / avgdl))
-            if avgdl <= float(encs[i]) * (1.0 + 1e-12):
-                bound = np.minimum(bound, mx.astype(np.float64))
-            upper_i = idf_i * float(bound.max())
-        else:
-            upper_i = 0.0
-        row = _SegRow(terms[i], df_i, docs[i], tfs[i], bns[i], upper_i, root=rts[i])
+        row = _SegRow(terms[i], dfs[i], docs[i], tfs[i], root=rts[i])
         yield (int(bks[i]), int(subs[i])), row
 
 
@@ -493,6 +491,7 @@ def _score_shards(
                 rows, qmap, n_docs, avgdl, k1, b, k, dl_of,
                 excl_of=stats.excl_of(bucket),
                 require_all=require_all, neg_map=neg_map,
+                dl_min=float(ds_dl.min()) if len(ds_dl) else 0.0,
             )
         )
     return out
@@ -847,8 +846,7 @@ def wand_search(
     if int(meta.get("version", 0)) < 5:
         raise ValueError(
             "index was built by an older engine version (segments lack the "
-            "plain docs/tfs arrays, the drift-safe (tf_max, dl_min) block "
-            "bounds and/or carried idf-baked block maxima); rebuild the index"
+            "plain docs/tfs arrays); rebuild the index"
         )
     if _qmap is None:
         _qmap = _batch_terms(queries, meta)
@@ -1014,12 +1012,11 @@ def _wave_local_topk(
         return spark.createDataFrame([], "query_id long, docID long, score double")
     seg = restrict_terms(base, all_terms)
     tfil = restrict_terms(tstats, all_terms)
-    # Segments store idf-independent block maxima; df (→ idf) joins back
-    # in-plan: tfil is pruned to the query's terms (term-sorted files →
-    # row-group skipping), so the broadcast is bounded by |query terms|,
-    # never the vocabulary — and no extra driver round-trip job runs per
-    # search call.  A segment term absent from term_stats (corruption)
-    # drops out here.
+    # df (→ idf) joins the segment rows in-plan: tfil is pruned to the
+    # query's terms (term-sorted files → row-group skipping), so the
+    # broadcast is bounded by |query terms|, never the vocabulary — and
+    # no extra driver round-trip job runs per search call.  A segment
+    # term absent from term_stats (corruption) drops out here.
     seg = seg.join(F.broadcast(tfil), "term")
     bc = spark.sparkContext.broadcast((qmap, neg_qmap))
 
@@ -1027,7 +1024,7 @@ def _wave_local_topk(
         qmap_bc, neg_bc = bc.value
         by_shard: dict[tuple[int, int], list[_SegRow]] = {}
         for pdf in batches:
-            for key, row in _seg_rows(pdf, n_docs, avgdl, k1, b):
+            for key, row in _seg_rows(pdf):
                 by_shard.setdefault(key, []).append(row)
         out = _score_shards(
             by_shard, _ShardStats(dl_roots, tomb_dirs or {}), qmap_bc, neg_bc,
@@ -1054,10 +1051,14 @@ def _wave_local_topk(
 # times its query count.  The kernel walks every query's rows, and with
 # one row group per shard file (the writer's layout below the row-group
 # size) each query's terms hit nearly all of them.  Measured on 4 vCPUs
-# at 4x2 and 32x2 shards, the driver costs about 20 ms per MB of that
-# product (one query over 1 MB: 77 ms; 500 queries over 4 MB: 37 s,
-# against 19 s distributed), so 16 MiB keeps a driver call under the
-# distributed feed's ~0.8 s fixed cost whatever the cluster's size.
+# at 4x2 and 32x2 shards, the driver costs about 15-20 ms per MB of that
+# product (one query over 1 MB: 77 ms).  With segments of docs / tfs
+# arrays only, a batch at 20k files and 32x2 shards reads 2.35 MB (2.86
+# MB with the stored block maxima); batches of 40 / 200 / 500 OR
+# queries took 1.7 / 7.3-8.8 / 16-19 s on the driver against 2.3-2.9 /
+# 3.7 / 6.7-6.9 s distributed, 15-18 ms per MB.  So 16 MiB keeps a
+# driver call under the distributed feed's ~0.8 s fixed cost whatever
+# the cluster's size.
 # The phrase / NEAR driver feed (``phrase._driver_phrase``) takes the same
 # budget over the merged postings: at 32x2 shards and 20k files every
 # phrase reads all 4.4 MB of them, and the driver cost 17-28 ms per MB of
@@ -1065,7 +1066,7 @@ def _wave_local_topk(
 # 3.6 / 15.4 s, against 1.10 / 1.71 / 3.6 / 22.9 s on the Spark plan).
 DRIVER_FEED_MAX_BYTES = 16 << 20
 
-_SEG_COLUMNS = ["doc_sub", "term", "docs", "tfs", "bn", "max_score", "tf_max", "dl_min"]
+_SEG_COLUMNS = ["doc_sub", "term", "docs", "tfs"]
 
 
 class _Part(NamedTuple):
@@ -1153,24 +1154,23 @@ class _LocalIndex:
         return self._postings
 
     def parts(self) -> tuple[list[_Part], list[_Part]]:
-        """(segment files keyed ``(doc_bucket, root, avgdl_enc)``, df
-        files keyed ``(df column, sign)``)."""
+        """(segment files keyed ``(doc_bucket, root)``, df files keyed
+        ``(df column, sign)``)."""
         if self._parts is None:
             d, meta = self.index_dir, self.meta
-            roots = [(d, "base", meta.get("base", {}).get("avgdl_enc", meta["avgdl"]))]
-            roots += [
-                (f"{d}/generations/{g['id']}", g["id"], g["avgdl_enc"])
+            roots = [(d, "base")] + [
+                (f"{d}/generations/{g['id']}", g["id"])
                 for g in meta.get("generations", [])
             ]
-            dfs = [(f"{r}/term_stats", ("df", 1)) for r, _, _ in roots] + [
+            dfs = [(f"{r}/term_stats", ("df", 1)) for r, _ in roots] + [
                 (f"{d}/tombstones/{t['id']}/term_stats_neg/root={rid}", ("df_neg", -1))
                 for t in meta.get("tombstones", [])
                 for rid in t.get("per_root", {})
             ]
             self._parts = (
                 [
-                    _Part(f, md, (int(_dir_value(f, "doc_bucket")), root, float(enc)), rgs)
-                    for r, root, enc in roots
+                    _Part(f, md, (int(_dir_value(f, "doc_bucket")), root), rgs)
+                    for r, root in roots
                     for f, (md, rgs) in _read_footers(f"{r}/segments", _term_ranges)
                 ],
                 [
@@ -1237,13 +1237,13 @@ def _driver_topk(
     for p, ids in seg_rgs:
         t = local.read(p, ids, _SEG_COLUMNS, keep_df)
         n = t.num_rows
-        bucket, root, enc = p.key
+        bucket, root = p.key
         cols = {c: t.column(c).to_numpy(zero_copy_only=False) for c in _SEG_COLUMNS}
         cols.update(
             doc_bucket=np.full(n, bucket), df=np.array([df[x] for x in cols["term"]]),
-            _avgdl_enc=np.full(n, enc), _root=np.full(n, root, object),
+            _root=np.full(n, root, object),
         )
-        for key, row in _seg_rows(cols, n_docs, avgdl, k1, b):
+        for key, row in _seg_rows(cols):
             by_shard.setdefault(key, []).append(row)
     return _score_shards(
         by_shard, local.stats, qmap, neg_qmap, n_docs, avgdl, k1, b, k, require_all
@@ -1415,7 +1415,7 @@ def dictionary_search(
 ) -> DataFrame:
     """(query_id, rank, docID, score) — top-k BM25 over each pattern's
     expansion set (score = Σ per-term BM25 over the expanded terms, each
-    with its own df), via the block-max fast path.  ``mode`` is any
+    with its own df), via the WAND fast path.  ``mode`` is any
     :func:`expand_dictionary` mode: prefix / contains / regex.
 
     Prefix and contains patterns expand on the driver

@@ -107,5 +107,5 @@ def refresh(builder: IndexBuilder) -> str | None:
     (:meth:`IndexBuilder.refresh_delta`) — the base segments are never
     re-merged or re-encoded, so refresh cost tracks the delta size, not
     the corpus size.  Periodically call :meth:`IndexBuilder.compact` to
-    fold small/drifted generations."""
+    fold small generations."""
     return builder.refresh_delta()

@@ -86,7 +86,7 @@ def test_cli_ingest_and_compact(spark, cli_env, capsys):
     assert out["status"] == "ingested" and out["generation"] == "gen0001"
     assert cli_main(["compact", "--index", idx]) == 0
     out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert out["status"] == "noop"  # one gen, no drift: nothing to fold
+    assert out["status"] == "noop"  # one gen: nothing to fold
     assert cli_main(["compact", "--index", idx, "--force"]) == 0
     out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert out["status"] == "compacted" and out["generations"] == [out["generation"]]

@@ -49,7 +49,7 @@ def test_segment_scan_prunes_terms_and_columns(spark, small_index):
     # min/max stats — segments are written sorted by term)
     assert_pushed_filter(seg, "term")
     # a projection that drops the posting arrays must not read them
-    slim = seg.select("term", "n")
+    slim = seg.select("term", "doc_sub")
     p = plan_text(slim)
     read_lines = [l for l in p.splitlines() if "ReadSchema" in l]
     assert read_lines and all(

@@ -274,21 +274,12 @@ def test_resurrection_with_changed_content(spark, tmp_path):
 def test_score_shard_root_scoped_exclusion():
     """Kernel unit: the same docID in two roots with a marker on one —
     only that root's copy is excluded from the accumulator."""
-    from docinsight_spark.index.codec import encode_postings
     from docinsight_spark.index.wand import _SegRow, _score_shard
 
     k1, b, avgdl = 1.2, 0.75, 10.0
 
     def seg_row(root: str, docs, tfs):
-        docs = np.asarray(docs, np.int64)
-        tf = np.asarray(tfs, np.float64)
-        dl = np.full(len(docs), avgdl)
-        sc = tf * (k1 + 1.0) / (tf + k1 * (1.0 - b + b * dl / avgdl))
-        seg_docs, seg_tfs, meta = encode_postings(
-            docs, np.asarray(tfs, np.int64), sc.astype(np.float32),
-            block_size=4, dls=dl.astype(np.int64),
-        )
-        return _SegRow("t", 3.0, seg_docs, seg_tfs, meta.n, 10.0, root=root)
+        return _SegRow("t", 3.0, docs, np.asarray(tfs, np.int64), root=root)
 
     rows = [seg_row("base", [1, 2], [3, 1]), seg_row("gen0002", [2], [5])]
 

@@ -2,10 +2,12 @@
 stay exact (pure-Python, no Spark session needed)."""
 
 import math
+from unittest import mock
 
 import numpy as np
+import pytest
 
-from docinsight_spark.index.codec import encode_postings
+from docinsight_spark.index import wand
 from docinsight_spark.index.wand import _SegRow, _score_shard
 
 K1, B = 1.2, 0.75
@@ -18,19 +20,20 @@ def bm25(tf, df, dl):
 
 
 def make_row(term, doc_tf: dict[int, int], df=None, block_size=4):
+    """A segment row of ``doc_tf``'s postings, split into blocks of
+    ``block_size`` (small, so short lists still have many blocks)."""
     docs = np.array(sorted(doc_tf), dtype=np.int64)
     tfs = np.array([doc_tf[d] for d in docs], dtype=np.int64)
     df = df if df is not None else len(docs)
-    scores = np.array([bm25(t, df, AVGDL) for t in tfs], dtype=np.float32)
-    seg_docs, seg_tfs, m = encode_postings(docs, tfs, scores, block_size=block_size)
-    return _SegRow(term, df, seg_docs, seg_tfs, m.n, float(scores.max()))
+    with mock.patch.object(wand, "BLOCK_SIZE", block_size):
+        return _SegRow(term, df, docs, tfs)
 
 
 def dl_of(docs):
     return np.full(len(docs), AVGDL)
 
 
-def brute_force(rows, terms, k):
+def brute_force(rows, terms, k, dl=lambda doc: AVGDL):
     acc = {}
     by_term = {}
     for r in rows:
@@ -38,7 +41,7 @@ def brute_force(rows, terms, k):
     for t in set(terms):
         for r in by_term.get(t, []):
             for doc, f in zip(r.docs, r.tfs):
-                acc[doc] = acc.get(doc, 0.0) + bm25(f, r.df, AVGDL)
+                acc[doc] = acc.get(doc, 0.0) + bm25(f, r.df, dl(doc))
     ranked = sorted(acc.items(), key=lambda x: (-x[1], x[0]))[:k]
     return ranked
 
@@ -50,12 +53,13 @@ def test_pruning_triggers_and_is_exact():
     rare = make_row("rare", {10: 5, 20: 4, 30: 3}, df=3)
     hot = make_row("hot", {d: 1 for d in range(0, 400, 2)}, df=200)
     rows = [rare, hot]
-    # sanity: pruning condition reachable — θ after rare > upper(hot)
-    theta_after_rare = bm25(4, 3, AVGDL)  # 2nd best of rare (k=2)
-    assert theta_after_rare > hot.upper
     got = _score_shard(
         rows, {0: ["rare", "hot"]}, N_DOCS, AVGDL, K1, B, 2, dl_of
     )
+    # sanity: pruning condition reachable — θ after rare > upper(hot),
+    # the bound the kernel computed for this call
+    theta_after_rare = bm25(4, 3, AVGDL)  # 2nd best of rare (k=2)
+    assert theta_after_rare > hot.upper
     want = brute_force(rows, ["rare", "hot"], 2)
     assert [(d, round(s, 9)) for (_, d, s) in got] == [
         (d, round(s, 9)) for d, s in want
@@ -69,7 +73,7 @@ def test_pruning_triggers_and_is_exact():
         if any(blk[0] <= d <= blk[-1] for d in (10, 20, 30))
     }
     assert scored_hot_blocks == overlapping
-    assert len(scored_hot_blocks) < len(hot.bn)  # skipping happened
+    assert len(scored_hot_blocks) < len(hot.starts) - 1  # skipping happened
 
 
 def test_no_pruning_small_theta_still_exact():
@@ -113,15 +117,53 @@ from hypothesis import strategies as st
     ),
     st.integers(min_value=1, max_value=15),  # k
     st.integers(min_value=2, max_value=8),   # block size
+    st.lists(  # doc length of each docID 0..500
+        st.integers(min_value=1, max_value=400), min_size=501, max_size=501,
+    ),
 )
-def test_kernel_matches_brute_force_property(term_lists, k, block_size):
+def test_kernel_matches_brute_force_property(term_lists, k, block_size, dls):
+    """Exact top-k at varied doc lengths, with every row's query-time
+    bound at or above each score it produced: at one shared length the
+    bound is exact, so only varied lengths can catch an inadmissible
+    one."""
     rows = [
         make_row(f"t{i}", dtf, block_size=block_size)
         for i, dtf in enumerate(term_lists)
     ]
     terms = [r.term for r in rows]
-    got = _score_shard(rows, {0: terms}, N_DOCS, AVGDL, K1, B, k, dl_of)
-    want = brute_force(rows, terms, k)
+    lengths = np.asarray(dls, np.float64)
+    # the tightest admissible dl_min: the shortest doc any row holds
+    dl_min = float(min(lengths[r.docs].min() for r in rows))
+    got = _score_shard(
+        rows, {0: terms}, N_DOCS, AVGDL, K1, B, k,
+        lambda docs: lengths[docs], dl_min=dl_min,
+    )
+    want = brute_force(rows, terms, k, dl=lambda doc: lengths[doc])
     assert [(d, round(s, 9)) for (_, d, s) in got] == [
         (d, round(s, 9)) for d, s in want
     ]
+    for r in rows:
+        scored = [r._full[1]] if r._full is not None else list(r._scores.values())
+        for s in scored:
+            assert float(s.max()) <= r.upper
+
+
+def test_score_shards_bounds_at_the_buckets_shortest_doc():
+    """Each row's bound is taken at the shortest doc length of its
+    bucket's map — the tightest length every posting is scored at."""
+    from docinsight_spark.index.wand import _score_shards
+
+    lengths = {0: (np.array([1, 2, 3], np.int64), np.array([80.0, 20.0, 60.0]))}
+
+    class Stats:
+        def dl(self, bucket):
+            return lengths[bucket]
+
+        def excl_of(self, bucket):
+            return None
+
+    row = make_row("t", {1: 2, 3: 5})
+    _score_shards(
+        {(0, 0): [row]}, Stats(), {0: ["t"]}, None, N_DOCS, AVGDL, K1, B, 10, False
+    )
+    assert row.upper == pytest.approx(bm25(5, 2, 20.0), rel=1e-12)
